@@ -183,8 +183,7 @@ object IncrementalAgg {
     val stateBounds = stateBounds0.select(
       (groupCols.map(col) ++ boundAliases.map(a => col(a).as(s"__sb_$a"))): _*)
     val dj = dPlan.join(stateBounds, groupCols, "left").localCheckpoint(true)
-    val d = dj.select((groupCols ++
-      dj.columns.filter(_.startsWith("__d"))).map(col): _*)
+    val d = dj.select(dPlan.columns.map(col): _*)
 
     // merge join: candidates for every aggregate; groups at count zero
     // drop out before any recompute can be owed for them

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis._
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Events, Multimodal, Sampling, Similarity}
+import graft.storage.SessionMemo
 import graft.tables.Tables
 
 /** The training-data-pipeline query set: deduplication, similarity
@@ -22,47 +23,29 @@ object Pipeline {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
 
+  private val MemoNamespace = "pipeline"
+
   /** Session-scoped memo of expensive pair DataFrames: d7 clusters over
     * d3's pairs and s5 over s2's — without sharing, each cluster query
     * re-executes the full shingle/LSH pipeline of its pair producer
-    * (VERDICT r1 #4). Keyed by sessionUUID so a stale session's cached
-    * plans are never resurrected.
+    * (VERDICT r1 #4). Valid while the fixture `table` is unchanged
+    * ([[SessionMemo]]).
     */
-  private val pairMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  private def memo(spark: SparkSession, key: String)
-                  (build: => DataFrame): DataFrame = {
-    // weak session key: exact identity (no hash-collision cross-session
-    // hits) and entries — with their cached plans — become collectable
-    // when the session does
-    val m = pairMemo.synchronized {
-      var cur = pairMemo.get(spark)
-      if (cur == null) {
-        cur = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        pairMemo.put(spark, cur)
-      }
-      cur
-    }
-    m.getOrElseUpdate(key, {
+  private def memo(spark: SparkSession, name: String, dir: String, table: String)
+                  (build: => DataFrame): DataFrame =
+    SessionMemo(spark, MemoNamespace, Seq(name, dir), Seq(Tables.path(dir, table))) {
       val df = build.cache()
       df.count() // materialize: consumers with multi-branch plans would
                  // otherwise race to compute the cache several times
       df
-    })
-  }
+    }
 
   /** Evict this session's memoized pair/vector frames, unpersisting
     * their cached partitions. A long-lived session that walks many data
-    * dirs (or rebuilds fixtures) should call this between corpora — the
-    * WeakHashMap alone only frees the cache when the whole session is
-    * collected.
+    * dirs should call this between corpora. Fixture relations
+    * ([[Tables.load]]) stay memoized.
     */
-  def clearMemo(spark: SparkSession): Unit = {
-    val m = pairMemo.synchronized(Option(pairMemo.remove(spark)))
-    m.foreach(_.values.foreach(df => df.unpersist()))
-  }
+  def clearMemo(spark: SparkSession): Unit = SessionMemo.clear(spark, MemoNamespace)
 
   // ---- deduplication ----
 
@@ -79,7 +62,7 @@ object Pipeline {
     * shingling + grouping pass instead of re-exploding the corpus each.
     */
   private def docVectors(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"shv:$dir") {
+    memo(spark, "shv", dir, "documents") {
       Dedup.shingleVectors(docs(spark, dir), "doc_id", "text", n = 3)
     }
 
@@ -87,7 +70,7 @@ object Pipeline {
     * inverted index). Memoized: d7 clusters over the same pairs.
     */
   def d3NgramPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"d3:$dir") {
+    memo(spark, "d3", dir, "documents") {
       Dedup.ngramJaccardPairsFrom(docVectors(spark, dir), num = 4, den = 5)
     }
 
@@ -178,7 +161,7 @@ object Pipeline {
     * Memoized: s5 clusters over the same pairs.
     */
   def s2LshAnn(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"s2:$dir") {
+    memo(spark, "s2", dir, "embeddings") {
       Similarity.lshNearDupPairs(emb(spark, dir), "vec_id", "embedding",
         threshold = 0.4)
     }

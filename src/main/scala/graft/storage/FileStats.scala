@@ -38,11 +38,21 @@ object FileStats {
   val SidecarName = "_graft_stats"
 
   /** Parquet files under `dir` (recursive) via the [[TableFs]] facade
-    * — local nio or the object-store FS, resolved per path.
+    * — local nio or the object-store FS, resolved per path. Files under
+    * a hidden segment are skipped, as Spark's file index skips them: a
+    * leftover `_temporary` attempt is not table data.
     */
   private def parquetFiles(dir: String): Seq[String] =
-    TableFs.forPath(dir).listFiles(dir)
-      .collect { case (p, _) if p.endsWith(".parquet") => p }
+    TableFs.forPath(dir).listFiles(dir).collect {
+      case (p, _) if p.endsWith(".parquet") &&
+          !relTo(dir, p).split('/').exists(hidden) => p
+    }
+
+  /** Spark's hidden-path rule: `.x`, and `_x` unless it is a
+    * `_col=value` partition dir.
+    */
+  private def hidden(segment: String): Boolean =
+    segment.startsWith(".") || (segment.startsWith("_") && !segment.contains("="))
 
   /** Path of `p` relative to root `dir`, scheme-independent: both are
     * reduced to their URI path components first (a `graftos://` root

@@ -408,23 +408,13 @@ object IcebergExport {
     * same shape TieredTable's own readParquet presents.
     */
   private def rawRead(session: SparkSession, table: TieredTable,
-                      files: Seq[String]): DataFrame = {
-    // session-scoped relation memo (TieredTable.lakeMemo scaladoc):
+                      files: Seq[String]): DataFrame =
     // the mergeSchema inference below runs a distributed footer job
     // per multi-file dir set, and export calls this repeatedly over
     // immutable snapshot dirs
-    if (TieredTable.lakeMemoBypassed) return rawReadFresh(session, table, files)
-    TieredTable.localStamp(files) match {
-      case None => rawReadFresh(session, table, files)
-      case Some(stamp) =>
-        val key = TieredTable.memoKey(
-          "iceraw", table.tablePath,
-          table.historicalPartitionCols.mkString(","),
-          files.mkString("\n"), stamp)
-        TieredTable.lakeMemoFor(session)
-          .getOrElseUpdate(key, rawReadFresh(session, table, files))
-    }
-  }
+    SessionMemo(session, "iceberg-raw", Seq(table.tablePath,
+        table.historicalPartitionCols.mkString(","), files.mkString("\n")),
+      files)(rawReadFresh(session, table, files))
 
   private def rawReadFresh(session: SparkSession, table: TieredTable,
                            files: Seq[String]): DataFrame = {
@@ -1772,7 +1762,15 @@ object IcebergExport {
 
     val mpath = s"$mdir/v${"%05d".format(version)}.metadata.json"
     metaFs.writeString(mpath, toJson(metadata))
-    metaFs.writeString(s"$mdir/version-hint.text", version.toString)
+    // publish the hint atomically: an in-place local overwrite is seen
+    // empty by a concurrent readTable ("no version-hint.text"); a rename
+    // over it is not. Object-store PUTs are atomic already.
+    val hint = s"$mdir/version-hint.text"
+    if (metaFs eq LocalTableFs) {
+      val tmp = s"$mdir/.version-hint.text.${UUID.randomUUID}.tmp"
+      metaFs.writeString(tmp, version.toString)
+      metaFs.move(tmp, hint)
+    } else metaFs.writeString(hint, version.toString)
 
     // GC artifacts of snapshots no longer retained (vacuum/expire ran
     // since the last export) — Iceberg expire_snapshots semantics: the
@@ -1854,16 +1852,12 @@ object IcebergExport {
     val mpath = s"$mdir/v${"%05d".format(version)}.metadata.json"
     val md = JsonMethods.parse(fsFor(mpath).readString(mpath).getOrElse(
       throw new java.io.FileNotFoundException(mpath)))
-    if (TieredTable.lakeMemoBypassed)
-      return readFromMetadata(spark, md, asOfSnapshotId, keepDataFiles)
-    // Session-scoped relation memo (TieredTable.lakeMemo scaladoc): the
-    // exported chain below this metadata version is immutable EXCEPT
+    // The exported chain below this metadata version is immutable EXCEPT
     // the manifest list, which attachDeletionVectors rewrites in place
-    // without bumping the version — so the resolved snapshot's
-    // manifest-list stamp (length+mtime) keys the memo alongside the
-    // version. Everything downstream (manifest avro walk, scan
-    // planning, delete-application joins, analysis) is reused; every
-    // action still scans parquet/puffin. Non-local chains bypass.
+    // without bumping the version — so the resolved snapshot's manifest
+    // list is an input alongside the metadata file. Everything
+    // downstream (manifest avro walk, scan planning, delete-application
+    // joins, analysis) is reused; every action still scans parquet/puffin.
     val listPath =
       try {
         val currentId = asOfSnapshotId.getOrElse(
@@ -1871,23 +1865,15 @@ object IcebergExport {
         jsonAt(md, "snapshots").asInstanceOf[org.json4s.JArray].arr
           .find(s => jLong(jsonAt(s, "snapshot-id")) == currentId)
           .map(s => jsonAt(s, "manifest-list")) match {
-          case Some(org.json4s.JString(p)) => p
-          case _ => null
+          case Some(org.json4s.JString(p)) => Some(p)
+          case _ => None
         }
-      } catch { case scala.util.control.NonFatal(_) => null }
-    val stamp =
-      if (listPath == null) None
-      else TieredTable.localStamp(Seq(mpath, listPath))
-    stamp match {
-      case None => readFromMetadata(spark, md, asOfSnapshotId, keepDataFiles)
-      case Some(st) =>
-        val key = TieredTable.memoKey(
-          "ice", tablePath, version.toString,
-          asOfSnapshotId.map(_.toString).getOrElse("-"),
-          keepDataFiles.map(_.toSeq.sorted.mkString("\n")).getOrElse("-"),
-          keepDataFiles.isDefined.toString, st)
-        TieredTable.lakeMemoFor(spark).getOrElseUpdate(key,
-          readFromMetadata(spark, md, asOfSnapshotId, keepDataFiles))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    SessionMemo(spark, "iceberg", Seq(tablePath,
+        asOfSnapshotId.map(_.toString).getOrElse("-"),
+        keepDataFiles.map(_.toSeq.sorted.mkString("\n")).getOrElse("-"),
+        keepDataFiles.isDefined.toString), mpath +: listPath.toSeq) {
+      readFromMetadata(spark, md, asOfSnapshotId, keepDataFiles)
     }
   }
 

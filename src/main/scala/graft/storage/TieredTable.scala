@@ -2322,32 +2322,23 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
   private def appendColMap(line: String): Unit =
     meta.put("COLMAP", meta.get("COLMAP").getOrElse("") + line + "\n")
 
+  /** [[readParquetFresh]] behind the session memo ([[SessionMemo]]):
+    * snapshot/segment dirs are immutable once committed, so the listing,
+    * the mergeSchema footer job and the analysis happen once per (table
+    * state, dir list) instead of once per query call.
+    */
+  private def readParquet(files: Seq[String]): DataFrame =
+    SessionMemo(spark, "lake", Seq(tablePath,
+        historicalPartitionCols.mkString(","),
+        meta.get("COLMAP").getOrElse(""), files.mkString("\n")), files) {
+      readParquetFresh(files)
+    }
+
   /** Multi-file parquet read with schema evolution: later files may add
     * columns; older rows surface nulls there (mergeSchema), and the
     * column mapping presents everything through the current declared
     * names ([[applyColumnMap]]).
     */
-  /** [[readParquetFresh]] behind the session-scoped relation memo
-    * (companion scaladoc): snapshot/segment dirs are immutable once
-    * committed, so the resolved relation for an exact dir list is
-    * reusable for as long as the freshness stamp holds — the listing,
-    * the mergeSchema footer job, and the analysis happen once per
-    * (table state, dir list) instead of once per query call.
-    */
-  private def readParquet(files: Seq[String]): DataFrame = {
-    if (TieredTable.lakeMemoBypassed) return readParquetFresh(files)
-    TieredTable.localStamp(files) match {
-      case None => readParquetFresh(files)
-      case Some(stamp) =>
-        val key = TieredTable.memoKey(
-          "scan", tablePath, historicalPartitionCols.mkString(","),
-          meta.get("COLMAP").getOrElse(""),
-          files.mkString("\n"), stamp)
-        TieredTable.lakeMemoFor(spark)
-          .getOrElseUpdate(key, readParquetFresh(files))
-    }
-  }
-
   private def readParquetFresh(files: Seq[String]): DataFrame = applyColumnMap {
     // discovery keys on EVERY column that was ever a layout column: a
     // table whose spec dropped to unpartitioned still has live hive
@@ -2727,73 +2718,6 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
 }
 
 object TieredTable {
-
-  /** Session-scoped memo of resolved lake-scan RELATIONS (logical plans
-    * only, never data) — the [[graft.tables.Tables]] fixture memo
-    * applied to the lakehouse read side (optimization guide §1.2/§6):
-    * every `spark.read.parquet` over a snapshot's dirs re-pays a
-    * driver-side listing plus (under `mergeSchema`) a distributed
-    * footer schema-merge job, and a suite that reads the same immutable
-    * snapshot hundreds of times repeats that work per call. The
-    * memoized object is an UNMATERIALIZED DataFrame — every action
-    * still scans the parquet files. Keyed weakly by session; inside,
-    * keyed by a SHA-256 of (table path, layout columns, column-map
-    * state, exact dir list, per-dir length+mtime freshness stamp), so
-    * any commit, compaction, schema evolution, or in-place rebuild of
-    * the same path produces a different key — staleness-free by
-    * construction, no invalidation hook needed. Non-local paths (the
-    * object-store scheme) bypass the memo entirely.
-    */
-  private val lakeMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  /** `GRAFT_NO_LAKE_MEMO=1` bypass — keeps the memo's effect
-    * A/B-measurable under identical host conditions (the
-    * GRAFT_NO_REL_MEMO discipline).
-    */
-  private[graft] def lakeMemoBypassed: Boolean =
-    sys.env.contains("GRAFT_NO_LAKE_MEMO")
-
-  private[graft] def lakeMemoFor(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, DataFrame] =
-    lakeMemo.synchronized {
-      var cur = lakeMemo.get(spark)
-      if (cur == null) {
-        cur = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        lakeMemo.put(spark, cur)
-      }
-      cur
-    }
-
-  /** Freshness stamp for LOCAL paths: `<length>:<mtime>` per path. A
-    * dir's mtime bumps on any child create/delete/rename, so a
-    * same-path rebuild (tests) or an appended artifact invalidates the
-    * key. None when any path is non-local or absent — the caller
-    * bypasses the memo (object-store tables keep today's fresh-read
-    * behavior).
-    */
-  private[graft] def localStamp(paths: Seq[String]): Option[String] = {
-    val sb = new StringBuilder
-    paths.foreach { raw =>
-      val p = if (raw.startsWith("file:")) normalizePath(raw) else raw
-      if (!p.startsWith("/")) return None
-      val f = new java.io.File(p)
-      if (!f.exists()) return None
-      sb.append(f.length()).append(':').append(f.lastModified()).append(';')
-    }
-    Some(sb.toString)
-  }
-
-  /** Collision-safe memo key: SHA-256 over NUL-separated parts. */
-  private[graft] def memoKey(parts: String*): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    parts.foreach { p =>
-      md.update(p.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.update(0.toByte)
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
 
   /** The reserved bucket-layout column of a `bucketBy` merge-on-read
     * table — engine-internal like `__seq`, never surfaced by a read.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.storage.SessionMemo
+
 /** Loaders for the driver-provided parquet fixtures (TESTDATA.md).
   *
   * Every query in the engine addresses tables through this registry so the
@@ -18,6 +20,8 @@ object Tables {
 
   /** Batch snapshot read of a fixture table. Plain parquet: Catalyst gets
     * predicate pushdown + column pruning + vectorized reads for free.
+    * The relation is resolved once per session and fixture file state
+    * ([[SessionMemo]]).
     *
     * `events.ts` arrives in whatever physical type the fixture
     * generator chose, so normalize every variant to one session-facing
@@ -31,65 +35,18 @@ object Tables {
     *    reinterprets the same wall-clock instant bit-for-bit (and keeps
     *    `unix_micros`/range-frame arithmetic, which reject NTZ, working).
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (sys.env.contains("GRAFT_NO_REL_MEMO")) return freshLoad(spark, dir, name)
-    val m = relMemo.synchronized {
-      var cur = relMemo.get(spark)
-      if (cur == null) {
-        cur = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        relMemo.put(spark, cur)
-      }
-      cur
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo(spark, "tables", Seq(dir, name), Seq(path(dir, name))) {
+      val df = spark.read.parquet(path(dir, name))
+      if (name == "events" && df.schema("ts").dataType == LongType)
+        df.withColumn("ts", timestamp_micros(expr("CAST(ts div 1000 AS BIGINT)")))
+      else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
+        df.withColumn("ts", col("ts").cast(TimestampType))
+      else df
     }
-    m.getOrElseUpdate(s"$dir/$name", freshLoad(spark, dir, name))
-  }
 
-  /** The unmemoized load: one listing + footer schema read per call.
-    * Kept callable (GRAFT_NO_REL_MEMO=1) so the memo's effect stays
-    * measurable A/B under identical host conditions.
-    */
-  private def freshLoad(spark: SparkSession, dir: String,
-                        name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("CAST(ts div 1000 AS BIGINT)")))
-    else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
-      df.withColumn("ts", col("ts").cast(TimestampType))
-    else df
-  }
-
-  /** Session-scoped memo of the fixture RELATIONS (logical plans, never
-    * data): `spark.read.parquet` pays a driver-side file listing +
-    * footer schema read on every call, and a suite that runs hundreds
-    * of queries re-reads the same immutable fixture footers thousands
-    * of times (guide §1.2: remove work you don't need before tuning
-    * what remains). The memoized object is an UNMATERIALIZED DataFrame
-    * — every action still scans the parquet files; only the relation
-    * resolution (listing, schema, analysis) is reused, exactly what a
-    * catalog-registered table gives a long-lived session. Keyed weakly
-    * by session so a stopped session's plans are collectable; keyed by
-    * (dir, name) inside, so different scale factors stay independent.
-    * The fixtures are immutable by contract (TESTDATA.md); callers
-    * that rewrite a fixture dir in place must call [[dropMemo]].
-    */
-  private val relMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  /** Evict memoized relations for `dir` (all of them when None) in
-    * every live session — for callers that regenerate fixture files
-    * under a previously-loaded path.
-    */
-  def dropMemo(dir: Option[String] = None): Unit = relMemo.synchronized {
-    import scala.jdk.CollectionConverters.CollectionHasAsScala
-    relMemo.values.asScala.foreach { m =>
-      dir match {
-        case None => m.clear()
-        case Some(d) => m.keys.filter(_.startsWith(d + "/"))
-          .foreach(m.remove)
-      }
-    }
-  }
+  /** The parquet file or dir a fixture table is read from. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Register all fixture tables as temp views so `spark.sql` works too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

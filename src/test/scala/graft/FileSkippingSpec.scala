@@ -47,6 +47,19 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     assert(t.readColdWhere(none).schema == t.readCold().schema)
   }
 
+  test("footer row counts skip files under hidden paths, as Spark's reader does") {
+    val dir = Files.createTempDirectory("graft-footer").toString + "/t"
+    (1L to 5L).toDF("id").coalesce(1).write.parquet(dir)
+    val part = Files.list(Paths.get(dir)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    // leftovers of a failed attempt and a hidden file: not table data
+    Files.createDirectories(Paths.get(s"$dir/_temporary/0"))
+    Files.copy(Paths.get(part), Paths.get(s"$dir/_temporary/0/part.parquet"))
+    Files.copy(Paths.get(part), Paths.get(s"$dir/.stray.parquet"))
+    assert(spark.read.parquet(dir).count() == 5)
+    assert(FileStats.footerRows(dir).contains(5L))
+  }
+
   test("string / date / decimal domains prune; timestamps stay conservative") {
     val t = tmpTable()
     def batch(tag: String, day: String, price: String) =

@@ -47,6 +47,34 @@ class IcebergExportSpec extends AnyFunSuite with SparkSpec {
     assert(viaIceberg == viaGraft && viaIceberg.size == 5)
   }
 
+  test("readTable never fails while another thread re-exports") {
+    val t = freshTable()
+    IcebergExport.export(t)
+    @volatile var exporting = true
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val reader = new Thread(() =>
+      while (exporting) {
+        try {
+          IcebergExport.readTable(spark, t.tablePath)
+          reads.incrementAndGet()
+        } catch { case e: Throwable => failures.add(e) }
+      })
+    reader.start()
+    try for (i <- 1 to 30) {
+      t.commitAppend(Seq((100L + i, s"x$i")).toDF("id", "v"))
+      IcebergExport.export(t)
+    } finally {
+      exporting = false
+      reader.join()
+    }
+    val failed = failures.size
+    assert(failed == 0, s"$failed of ${reads.get + failed} reads failed, " +
+      s"first: ${failures.peek}")
+    assert(reads.get > 30)
+    assert(IcebergExport.readTable(spark, t.tablePath).count() == 35)
+  }
+
   test("manifest avro files carry the spec's reserved field-ids and key-value metadata") {
     import org.apache.avro.file.DataFileReader
     import org.apache.avro.generic.{GenericDatumReader, GenericRecord}

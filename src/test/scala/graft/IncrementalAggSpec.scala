@@ -233,4 +233,25 @@ class IncrementalAggSpec extends AnyFunSuite with SparkSpec {
       sys.error("insert-only delta must not read the base"))
     assert(fullRows(s3).head == ("a", 12L, 2L, 3L, 9L, math.rint(6.0 * 1e9)))
   }
+
+  test("a group column named like a delta accumulator (__dept) merges once") {
+    val dir = Files.createTempDirectory("graft-ivm-dept").toString
+    val t = TieredTable(spark, s"$dir/t", pk = Seq("k"))
+    val g = Seq("__dept")
+    t.commitUpsert(Seq((1, "a", 5L), (2, "a", 9L), (3, "b", 1L))
+      .toDF("k", "__dept", "v"))
+    val (c1, boot) = t.changelogSince(0L, Seq("k"))
+    val s1 = IncrementalAgg.applyDeltaFull(
+      IncrementalAgg.rebuildFull(boot.limit(0), g, fullSpec),
+      boot, g, fullSpec, t.readColdAsOf(c1)).localCheckpoint(true)
+    // an update retracts b's only value; a gains a new minimum
+    t.commitUpsert(Seq((3, "b", 4L), (4, "a", 2L)).toDF("k", "__dept", "v"))
+    val (c2, delta) = t.changelogSince(c1, Seq("k"))
+    val s2 = IncrementalAgg.applyDeltaFull(s1, delta, g, fullSpec,
+      t.readColdAsOf(c2))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      fullRows(df.withColumnRenamed("__dept", "g"))
+    assert(rows(s2) == rows(IncrementalAgg.rebuildFull(t.readCold(), g, fullSpec)))
+    assert(rows(s2).map(_._1) == Seq("a", "b"))
+  }
 }
