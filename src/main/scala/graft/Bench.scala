@@ -1,32 +1,93 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
+
+import scala.collection.immutable.{ListMap, TreeMap}
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Times the registry's queries: `runMain graft.Bench [q1,q2,…]`.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
+  * Every query's full record goes to `bench_queries.json` in the cwd;
+  * stdout carries the setup line, the per-query chunks, the pass
+  * spread and, last, the summary.
+  */
 object Bench {
-  /** The full per-query JSON line (first; may be head-truncated by
-    * bounded tail capture — the summary line is the parse-safe one).
-    * Doubles render via Double.toString — locale-independent by spec.
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The timed passes. A query that threw in any pass is in `failed`
+    * with its error and has no time: it is in no pass total and not in
+    * `best`, which holds each other query's lowest-wall pass.
     */
-  def perQueryLine(results: Map[String, Double], sfDir: String): String = {
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+  final case class Outcome(passes: Seq[Map[String, Double]],
+                           best: Map[String, Measure.Sample],
+                           failed: Map[String, String]) {
+    def times: Map[String, Double] = best.map { case (k, s) => k -> s.wallS }
   }
+
+  /** The registry's queries named by a comma-separated list of names or
+    * ids (the name up to its first `_`, e.g. `q7`); all of them for
+    * None or `all`.
+    */
+  def select(names: Option[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries.toSeq
+    def keys(name: String) = Set(name, name.takeWhile(_ != '_'))
+    names.filter(_ != "all").fold(all) { list =>
+      val want = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val picked = all.filter { case (n, _) => keys(n).exists(want) }
+      val unknown = want -- picked.flatMap { case (n, _) => keys(n) }
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+      picked
+    }
+  }
+
+  /** `passes` timed passes over `queries`, each result computed whole
+    * ([[Measure.rows]]). Memoized frames are evicted before every pass,
+    * so each pays the query's real dataflow.
+    */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+          passes: Int): Outcome = {
+    val runs = (1 to passes).map { _ =>
+      graft.queries.Pipeline.clearMemo(spark)
+      queries.map { case (name, fn) =>
+        name -> Measure(spark)(Measure.rows(fn(spark, sfDir)))
+      }
+    }
+    val failed = runs.flatten.collect { case (name, (Failure(e), _)) =>
+      name -> describe(e) }.toMap
+    val ok = runs.map(_.collect {
+      case (name, (_, s)) if !failed.contains(name) => name -> s
+    }.toMap)
+    Outcome(ok.map(_.map { case (k, s) => k -> s.wallS }),
+      ok.head.keys.map(k => k -> ok.map(_(k)).minBy(_.wallS)).toMap, failed)
+  }
+
+  /** Every query's record: its best wall (`queries`), that pass's
+    * sample, and the failed queries' errors.
+    */
+  def perQueryLine(results: Map[String, Double], sfDir: String,
+                   samples: Map[String, Measure.Sample] = Map.empty,
+                   failed: Map[String, String] = Map.empty): String =
+    Measure.line("metric" -> "total", "value" -> results.values.sum,
+      "unit" -> "sec", "n" -> results.size, "queries" -> TreeMap.from(results),
+      "samples" -> TreeMap.from(samples), "failed" -> TreeMap.from(failed),
+      "sf" -> sfDir)
 
   /** The short trailing summary line — the DRIVER-PARSE CONTRACT (the
     * machine-read perf signal; a malformed line cost rounds 1-4 their
     * bench grade). Must stay one line, short enough to survive any
-    * bounded tail capture, and strict JSON. Locale.ROOT because the
-    * f-interpolator would use the default locale, and a comma decimal
-    * separator silently breaks the JSON. Spec-guarded: BenchFormatSpec
-    * parses both lines with a real JSON parser.
+    * bounded tail capture, and strict JSON. Spec-guarded: BenchFormatSpec
+    * parses it with a real JSON parser.
     */
-  def summaryLine(results: Map[String, Double], sfDir: String): String = {
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val maxQ = if (results.nonEmpty) results.values.max else 0.0
-    String.format(java.util.Locale.ROOT,
-      """{"metric":"total","value":%.3f,"unit":"sec","n":%d,"max":%.3f,"sf":"%s"}""",
-      Double.box(total), Int.box(results.size), Double.box(maxQ), sfDir)
-  }
+  def summaryLine(results: Map[String, Double], sfDir: String,
+                  failed: Int = 0): String =
+    Measure.line("metric" -> "total", "value" -> results.values.sum,
+      "unit" -> "sec", "n" -> results.size,
+      "max" -> (if (results.nonEmpty) results.values.max else 0.0),
+      "failed" -> failed, "sf" -> sfDir)
 
   /** The per-query map sliced into short (≤ ~1 KB) standalone JSON
     * lines — the answer to head-truncating tail capture (VERDICT r5:
@@ -40,28 +101,9 @@ object Bench {
                         sfDir: String): Seq[String] = {
     val groups = results.toSeq.sortBy(_._1).grouped(12).toSeq
     groups.zipWithIndex.map { case (g, i) =>
-      val qs = g.map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-          Double.box(v))
-      }.mkString("{", ",", "}")
-      s"""{"metric":"queries_part","part":${i + 1},"parts":${groups.size},"queries":$qs,"sf":"$sfDir"}"""
+      Measure.line("metric" -> "queries_part", "part" -> (i + 1),
+        "parts" -> groups.size, "queries" -> ListMap.from(g), "sf" -> sfDir)
     }
-  }
-
-  /** The FULL per-query map as one strict-JSON line with
-    * `"metric":"queries"` — printed LATE (just before the summary) so a
-    * bounded tail capture carries it whole whenever it fits (VERDICT
-    * r13 item 2: the comparator ingested neither the head-printed full
-    * line nor the `queries_part` chunks, leaving PERF_r13.per_query
-    * empty). Addition-only: the head line, the parts lines, and the
-    * trailing summary are unchanged byte-for-byte.
-    */
-  def queriesLine(results: Map[String, Double], sfDir: String): String = {
-    val qs = results.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-        Double.box(v))
-    }.mkString("{", ",", "}")
-    s"""{"metric":"queries","n":${results.size},"queries":$qs,"sf":"$sfDir"}"""
   }
 
   /** Pass-to-pass spread line: every timed pass's total, so the
@@ -72,140 +114,55 @@ object Bench {
     * the summary so it never displaces the parse contract's trailing
     * line.
     */
-  def spreadLine(passes: Seq[Map[String, Double]], sfDir: String): String = {
-    val fields = passes.zipWithIndex.map { case (p, i) =>
-      String.format(java.util.Locale.ROOT, """"pass%d":%.3f""",
-        Int.box(i + 1), Double.box(p.values.sum))
-    }.mkString(",")
-    s"""{"metric":"pass_spread",$fields,"unit":"sec","sf":"$sfDir"}"""
+  def spreadLine(passes: Seq[Map[String, Double]], sfDir: String): String =
+    Measure.line(("metric" -> "pass_spread") +: passes.zipWithIndex.map {
+      case (p, i) => s"pass${i + 1}" -> p.values.sum
+    } :+ ("unit" -> "sec") :+ ("sf" -> sfDir): _*)
+
+  private def describe(e: Throwable) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+
+  /** Writes `text` to `path` whole or not at all: a sibling temp file,
+    * then an atomic rename over the target.
+    */
+  private def writeAtomically(path: Path, text: String): Unit = {
+    val tmp = path.resolveSibling(s".${path.getFileName}.${UUID.randomUUID}.tmp")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pin: events.ts normalization (Tables.load) reinterprets
-      // TIMESTAMP_NTZ through the session timezone — benched plans must
-      // compute the same instants as the correctness-gated Verify run
-      // on any host
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the SQL row-level rules (MERGE lowering, Flink dialect hooks)
-      // — q14b drives MERGE ... NOT MATCHED BY SOURCE through SQL
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // storage-partitioned joins (k4): co-partitioned DSv2 scans
-      // report KeyGroupedPartitioning and join without exchanges
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // bucketed staging (k3) writes catalog tables — keep the
-      // warehouse out of the repo dir; the warmup pass stages them so
-      // the timed pass measures the join, not the ingest shuffle
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Export-carrying lakehouse fixtures staged FIRST, with their wall
-    // times reported as a separate metric line — the setup/read split
-    // (VERDICT r10 item 4): the timed passes below measure READS; the
-    // one-off build+export cost stays visible here instead of
-    // inflating whichever query touches the fixture first.
-    val setup =
-      try graft.queries.Lakehouse.stageLakehouseExports(spark, sfDir)
-      catch { case e: Throwable =>
-        Seq(("staging", 0.0,
-          Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")))
-      }
-    if (setup.nonEmpty) {
-      def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
-        .replace("\"", "\\\"").replaceAll("[\\r\\n\\t]", " ") + "\""
-      val qs = setup.map { case (k, v, _) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-          Double.box(v))
-      }.mkString("{", ",", "}")
-      // failed fixture builds are first-class output: a missing error
-      // field here means every export really landed
-      val errs = setup.collect { case (k, _, Some(e)) =>
-        "\"" + k + "\":" + jstr(e)
-      }
-      val errField =
-        if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
-      println(s"""{"metric":"export_setup","queries":$qs$errField,"sf":"$sfDir"}""")
-    }
+    val queries = select(args.headOption)
+    val spark = GraftSession.local("graft-bench")
+    // Lakehouse fixtures staged FIRST, their cost reported as its own
+    // line — the setup/read split (VERDICT r10 item 4): the timed passes
+    // below measure READS.
+    val setup = graft.queries.Lakehouse.stageLakehouseExports(spark, sfDir)
+    println(Measure.line("metric" -> "export_setup",
+      "queries" -> ListMap.from(setup.map { case (k, (_, s)) => k -> s.wallS }),
+      "errors" -> ListMap.from(setup.collect { case (k, (Failure(e), _)) =>
+        k -> describe(e) }),
+      "sf" -> sfDir))
     // Untimed warmup at the TARGET sf: compiles + JITs every query's
-    // generated code and primes the page cache — the timed loop then
-    // measures steady-state execution, not first-query JVM warmup
+    // generated code and primes the page cache — the timed passes then
+    // measure steady-state execution, not first-query JVM warmup
     // (observed: a generate+aggregate plan's first compile costs ~5 s
-    // that vanishes on the second run). Memoized pair/vector frames
-    // are evicted afterwards so the timed pass still pays each query's
-    // real dataflow, not a cache hit.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count()
-      catch { case _: Throwable => }
-    }
-    graft.queries.Pipeline.clearMemo(spark)
-    // Stage the tiered demo fixture for the TARGET dir untimed: building
-    // it is test-data preparation (the equivalent of the parquet fixtures
-    // already on disk), not query work — otherwise whichever lakehouse
-    // query runs first pays a one-off fixture write in its measurement.
-    try graft.queries.Lakehouse.demoTable(spark, sfDir)
-    catch { case _: Throwable => }
-    try graft.queries.Lakehouse.demoTablePartitioned(spark, sfDir)
-    catch { case _: Throwable => }
-    try graft.queries.Lakehouse.demoTableByDate(spark, sfDir)
-    catch { case _: Throwable => }
-    try graft.queries.Lakehouse.demoMergedCustomer(spark, sfDir)
-    catch { case _: Throwable => }
-    try graft.queries.Lakehouse.demoRolledBack(spark, sfDir)
-    catch { case _: Throwable => }
-    try graft.queries.Lakehouse.demoTableBloom(spark, sfDir)
-    catch { case _: Throwable => }
+    // that vanishes on the second run).
+    queries.foreach { case (_, fn) => Try(Measure.rows(fn(spark, sfDir))) }
     // THREE timed passes, min per query: a single pass is one sample,
     // and one descheduled run on a loaded host fakes a regression
     // (VERDICT r7: +31 % phantom concentrated in the memory-bandwidth-
     // bound similarity family; VERDICT r9: a 19 % pass spread made a
-    // t7 regression unattributable). Min-of-N is the standard noise
-    // floor estimator for wall-clock microbenching — the third pass
-    // costs ~1 min and halves the odds that BOTH samples of a query
-    // land on a descheduled slice. Memoized frames are evicted between
-    // passes so each pays the real dataflow.
-    def timedPass(): Map[String, Double] = SparkEntry.queries.map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-    }
-    val passes = (1 to 3).map { i =>
-      if (i > 1) graft.queries.Pipeline.clearMemo(spark)
-      timedPass()
-    }
-    val results = passes.head.keys
-      .map(k => k -> passes.map(_(k)).min).toMap
-    println(perQueryLine(results, sfDir))
-    // Persist the full per-query line to a FILE as well — stdout tail
-    // buffers clip the ~3 KB line's head, but a file survives whole, so
-    // every timing stays attributable to its query (VERDICT r5 item 3).
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_queries.json"),
-      (perQueryLine(results, sfDir) + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(_) => }
-    // ...and as short standalone chunks, so even a tail-only capture of
-    // stdout reassembles the complete map from whole lines.
-    chunkedQueryLines(results, sfDir).foreach(println)
-    println(spreadLine(passes, sfDir))
-    // Full per-query map ONCE MORE, near the tail, as its own metric
-    // line — the driver's comparator reads per-query timings from here
-    // (the head-printed copy is clipped by bounded tail captures).
-    println(queriesLine(results, sfDir))
-    // The per-query line above is ~3 KB; harnesses that keep only a
-    // bounded tail of stdout truncate its head and fail to parse it.
-    // Emit a short, self-contained total-only line LAST so the end of
-    // the output always carries a parseable summary.
-    println(summaryLine(results, sfDir))
-    spark.stop()
+    // t7 regression unattributable).
+    val out = run(spark, sfDir, queries, passes = 3)
+    val times = out.times
+    chunkedQueryLines(times, sfDir).foreach(println)
+    println(spreadLine(out.passes, sfDir))
+    println(summaryLine(times, sfDir, out.failed.size))
+    // the one full per-query carrier: a file survives whole where stdout
+    // tail buffers clip long lines (VERDICT r5 item 3)
+    try writeAtomically(Paths.get("bench_queries.json"),
+      perQueryLine(times, sfDir, out.best, out.failed) + "\n")
+    finally spark.stop()
   }
 }

@@ -21,17 +21,7 @@ import graft.streaming.{Datagen, DemoPipeline, StatementSet}
 object Demo {
   def main(args: Array[String]): Unit = {
     val runSecs = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.catalog.graft", "graft.plans.GraftTableCatalog")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-demo")
     run(spark, runSecs)
     spark.stop()
     println("[demo] done")

@@ -13,7 +13,7 @@ import graft.plans.{StreamingInsertSql, TieredCatalog}
   * reference pays: enrichment write + tiering rewrite + metadata
   * export.
   *
-  *   SPARK_GRAFT_ORDERS=1000000 SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_ORDERS=1000000 \
   *     sbt "runMain graft.PipelineStress"
   *
   * Prints one JSON line; the numbers land in SCALING.md.
@@ -74,25 +74,20 @@ object PipelineStress {
       |  `nation_name` STRING, `revenue` DECIMAL(25, 2),
       |  PRIMARY KEY (`nation_name`) NOT ENFORCED)""".stripMargin)
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
     // phase 1: bounded faker loads (generator + append/upsert commits)
-    val (_, loadSec) = timed {
+    val (load, loadM) = Measure(spark) {
       sql(s"""EXECUTE STATEMENT SET BEGIN
         |  INSERT INTO graft.$db.nation SELECT * FROM ps_source_nation;
         |  INSERT INTO graft.$db.customer SELECT * FROM ps_source_customer;
         |  INSERT INTO graft.$db.orders SELECT * FROM ps_source_order;
         |END""".stripMargin)
     }
+    load.get
 
     // phase 2: temporal-join enrichment INTO the datalake table —
     // the measured time includes the tier rewrite and the incremental
     // Iceberg export the datalake flag turns on
-    val (_, enrichSec) = timed {
+    val (enrich, enrichM) = Measure(spark) {
       sql(s"""EXECUTE STATEMENT SET BEGIN
         |  INSERT INTO graft.$db.enriched
         |    SELECT o.order_key, o.cust_key, o.total_price,
@@ -107,9 +102,10 @@ object PipelineStress {
       q.processAllAvailable()
       sql(s"STOP STREAMING INSERT INTO graft.$db.enriched")
     }
+    enrich.get
 
     // phase 3: continuously-maintained revenue (streaming agg → upsert)
-    val (_, revenueSec) = timed {
+    val (revenue, revenueM) = Measure(spark) {
       sql(s"""EXECUTE STATEMENT SET BEGIN
         |  INSERT INTO graft.$db.revenue
         |    SELECT nation_name, SUM(total_price) AS revenue
@@ -119,6 +115,7 @@ object PipelineStress {
       q.processAllAvailable()
       sql(s"STOP STREAMING INSERT INTO graft.$db.revenue")
     }
+    revenue.get
 
     val enrichedRows =
       sql(s"SELECT COUNT(*) FROM graft.$db.enriched").head().getLong(0)
@@ -130,34 +127,21 @@ object PipelineStress {
     val icebergRows =
       graft.storage.IcebergExport.readTable(spark, entry.path).count()
 
-    Result(nOrders, loadSec, enrichSec, revenueSec, enrichedRows,
+    Result(nOrders, loadM.wallS, enrichM.wallS, revenueM.wallS, enrichedRows,
       revenueGroups, coldRows, icebergRows)
   }
 
   def main(args: Array[String]): Unit = {
     val nOrders = sys.env.getOrElse("SPARK_GRAFT_ORDERS", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.catalog.graft", "graft.plans.GraftTableCatalog")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-pipeline-stress")
     val wh = java.nio.file.Files.createTempDirectory("graft-pswh").toString
     val r = run(spark, nOrders, warehouse = Some(wh))
-    println(
-      f"""{"metric":"pipeline_stress","orders":${r.orders},""" +
-      f""""load_s":${r.loadSec}%.2f,"enrich_s":${r.enrichSec}%.2f,""" +
-      f""""enrich_rows_per_s":${r.enrichedRows / r.enrichSec}%.0f,""" +
-      f""""revenue_s":${r.revenueSec}%.2f,""" +
-      s""""enriched_rows":${r.enrichedRows},""" +
-      s""""revenue_groups":${r.revenueGroups},""" +
-      s""""cold_rows":${r.coldRows},"iceberg_rows":${r.icebergRows}}""")
+    println(Measure.line("metric" -> "pipeline_stress", "orders" -> r.orders,
+      "load_s" -> r.loadSec, "enrich_s" -> r.enrichSec,
+      "enrich_rows_per_s" -> r.enrichedRows / r.enrichSec,
+      "revenue_s" -> r.revenueSec, "enriched_rows" -> r.enrichedRows,
+      "revenue_groups" -> r.revenueGroups, "cold_rows" -> r.coldRows,
+      "iceberg_rows" -> r.icebergRows))
     spark.stop()
   }
 }

@@ -1,132 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Optimization-round measurement harness (guide §1): dumps
-  * `.explain("formatted")` for declared queries to plans/<tag>/, and/or
-  * times individual queries with the same count() action the bench uses
-  * plus a noop-sink variant (guide §1.4) so the computation is timed
-  * without the count short-circuit.
+import scala.util.Failure
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Dumps `.explain("formatted")` of the selected queries to
+  * plans/<tag>/, over the fixtures Bench stages. Per-query timings and
+  * executor counters come from `graft.Bench [q1,q2,…]`.
   *
-  * Usage: runMain graft.PlanDump <tag> [plan|time|both] [q1,q2,...|all]
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as Bench).
+  * Usage: runMain graft.PlanDump <tag> [q1,q2,…|all]
+  * Env: SPARK_GRAFT_SF_DIR (same contract as Bench).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val tag = if (args.nonEmpty) args(0) else "r13"
-    val mode = if (args.length > 1) args(1) else "plan"
-    val want: Option[Set[String]] =
-      if (args.length > 2 && args(2) != "all") Some(args(2).split(",").toSet)
-      else None
+    require(args.nonEmpty, "usage: PlanDump <tag> [q1,q2,…|all]")
+    val queries = Bench.select(args.lift(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-plan-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try graft.queries.Lakehouse.stageLakehouseExports(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"stage: $e") }
-    Seq[(String, (SparkSession, String) => Any)](
-      ("demoTable", graft.queries.Lakehouse.demoTable _),
-      ("demoTablePartitioned", graft.queries.Lakehouse.demoTablePartitioned _),
-      ("demoTableByDate", graft.queries.Lakehouse.demoTableByDate _),
-      ("demoMergedCustomer", graft.queries.Lakehouse.demoMergedCustomer _),
-      ("demoRolledBack", graft.queries.Lakehouse.demoRolledBack _),
-      ("demoTableBloom", graft.queries.Lakehouse.demoTableBloom _)
-    ).foreach { case (n, f) =>
-      try f(spark, sfDir) catch { case e: Throwable =>
-        System.err.println(s"$n: $e") }
+    val spark = GraftSession.local("graft-plandump")
+    graft.queries.Lakehouse.stageLakehouseExports(spark, sfDir).foreach {
+      case (k, (Failure(e), _)) => System.err.println(s"$k: $e")
+      case _ =>
     }
-    val qs = SparkEntry.queries.filter { case (n, _) =>
-      want.forall(_.contains(n)) }
-    val outDir = java.nio.file.Paths.get(s"plans/$tag")
-    java.nio.file.Files.createDirectories(outDir)
-    if (mode == "plan" || mode == "both") {
-      qs.foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(outDir.resolve(s"${name}.txt"),
-            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        } catch { case e: Throwable =>
-          System.err.println(s"plan $name: $e") }
-      }
-      println(s"plans written to $outDir")
+    val outDir = Paths.get(s"plans/${args(0)}")
+    Files.createDirectories(outDir)
+    queries.foreach { case (name, fn) =>
+      try Files.writeString(outDir.resolve(s"$name.txt"),
+        fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+      catch { case NonFatal(e) => System.err.println(s"plan $name: $e") }
     }
-    if (mode == "time" || mode == "both") {
-      // task-metric attribution (§1.1/§7.1 without a UI): per wall-clock
-      // window, sum executor run time / shuffle bytes across completed
-      // tasks — wall ≫ taskTime/cores means driver/scheduling overhead,
-      // wall ≈ taskTime/cores means genuine compute.
-      val taskTime = new java.util.concurrent.atomic.AtomicLong
-      val shufRead = new java.util.concurrent.atomic.AtomicLong
-      val shufWrite = new java.util.concurrent.atomic.AtomicLong
-      val nTasks = new java.util.concurrent.atomic.AtomicLong
-      val nJobs = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              taskTime.addAndGet(m.executorRunTime)
-              shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-              shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-              nTasks.incrementAndGet()
-            }
-          }
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            nJobs.incrementAndGet()
-        })
-      // warmup identical to Bench
-      qs.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => } }
-      graft.queries.Pipeline.clearMemo(spark)
-      def pass(action: String): Map[String, (Double, Long, Long, Long, Long, Long)] =
-        qs.map { case (name, fn) =>
-          spark.sparkContext.setJobDescription(s"$name [$action]")
-          val (t0, tt0, sr0, sw0, nt0, nj0) = (System.nanoTime(),
-            taskTime.get, shufRead.get, shufWrite.get, nTasks.get, nJobs.get)
-          try {
-            val df = fn(spark, sfDir)
-            if (action == "noop")
-              df.write.format("noop").mode("overwrite").save()
-            else df.count()
-          } catch { case _: Throwable => }
-          spark.sparkContext.setJobDescription(null)
-          name -> ((System.nanoTime() - t0) / 1e9, taskTime.get - tt0,
-            shufRead.get - sr0, shufWrite.get - sw0, nTasks.get - nt0,
-            nJobs.get - nj0)
-        }.toMap
-      // GRAFT_PLANDUMP_ACTION=noop times the noop sink (guide §1.4 —
-      // computes every column, no count short-circuit) instead of the
-      // bench's count() action; default stays count so numbers remain
-      // comparable with Bench's.
-      val action = sys.env.getOrElse("GRAFT_PLANDUMP_ACTION", "count")
-      val counts = (1 to 3).map { _ =>
-        graft.queries.Pipeline.clearMemo(spark); pass(action) }
-      val best = counts.head.keys.map { k =>
-        k -> counts.map(_(k)).minBy(_._1) }.toMap
-      best.toSeq.sortBy(-_._2._1).foreach {
-        case (k, (w, tt, sr, sw, nt, nj)) =>
-          println(f"$w%8.3f wall  ${tt / 1e3}%8.2f task-s  " +
-            f"${sr / 1e6}%7.1f shufR-MB ${sw / 1e6}%7.1f shufW-MB " +
-            f"$nt%5d tasks $nj%3d jobs  $k")
-      }
-      println(f"TOTAL ${best.values.map(_._1).sum}%8.3f over ${best.size} queries")
-    }
+    println(s"plans written to $outDir")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** 100× scale harness behind SCALING.md's deep-corpus rows — the
@@ -19,59 +18,20 @@ import org.apache.spark.sql.functions._
   *    .planesFor]] keeps bucket occupancy bounded as n grows (s2).
   *
   * `SPARK_GRAFT_SF_DIR` (default sf0.1), `SPARK_GRAFT_COPIES`
-  * (default 100), `SPARK_GRAFT_CPUS` (default 32). Prints one JSON
-  * line per measurement plus a trailing summary.
+  * (default 100). Prints one JSON line per measurement plus a trailing
+  * summary.
   */
 object Scale100 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def line(fields: (String, Any)*): Unit =
-      println(fields.map { case (k, v) =>
-        "\"" + k + "\":" + (v match {
-          case s: String => "\"" + s + "\""
-          case d: Double => String.format(java.util.Locale.ROOT, "%.3f",
-            Double.box(d))
-          case x => x.toString
-        })
-      }.mkString("{", ",", "}"))
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = GraftSession.local("graft-scale100")
 
     // SPARK_GRAFT_ONLY=docs|vectors|lake|text reruns one section in
     // isolation (iterating on one measurement must not re-pay the
     // others' ~15 min)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
     def want(tag: String): Boolean = only.forall(_ == tag)
-
-    // shuffle-byte attribution for the sections that report it
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
 
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -96,32 +56,30 @@ object Scale100 {
       .groupBy(col("sig")).agg(count(lit(1)).as("size"))
       .agg(max(col("size")), expr("percentile_approx(size, 0.99)"),
         avg(col("size")), count(lit(1))).head()
-    line("metric" -> "d4_bucket_histogram", "copies" -> copies,
+    println(Measure.line("metric" -> "d4_bucket_histogram", "copies" -> copies,
       "docs" -> nDocs * copies,
       "max_bucket" -> bandSizes.getLong(0),
       "p99_bucket" -> bandSizes.getLong(1),
       "mean_bucket" -> bandSizes.getDouble(2),
-      "n_buckets" -> bandSizes.getLong(3))
+      "n_buckets" -> bandSizes.getLong(3)))
 
-    val (d4Pairs, d4Sec) = timed {
+    val (d4Pairs, d4) = Measure(spark)(Measure.rows(
       graft.operators.Dedup.minhashLshPairsFrom(vec, k = 16, bands = 4,
-        num = 4, den = 5).count()
-    }
-    line("metric" -> "d4_lsh_100x", "sec" -> d4Sec, "pairs" -> d4Pairs,
-      "pairs_per_sec" -> (d4Pairs / d4Sec))
+        num = 4, den = 5)))
+    println(Measure.line("metric" -> "d4_lsh_100x", "sec" -> d4.wallS,
+      "pairs" -> d4Pairs.get, "pairs_per_sec" -> (d4Pairs.get / d4.wallS)))
 
     // d10: a 1% delta probed against the standing persisted band index
     val corpusV = vec.filter(col("id") % 100 =!= 0)
     val deltaV = vec.filter(col("id") % 100 === 0)
     val cBands = graft.operators.Dedup.lshBands(corpusV, k = 16, bands = 4)
       .localCheckpoint(true) // standing index, staged untimed
-    val (d10Pairs, d10Sec) = timed {
+    val (d10Pairs, d10) = Measure(spark)(Measure.rows(
       graft.operators.Dedup.incrementalLshPairs(corpusV, deltaV,
         k = 16, bands = 4, num = 4, den = 5,
-        corpusBands = Some(cBands)).count()
-    }
-    line("metric" -> "d10_incr_indexed_100x", "sec" -> d10Sec,
-      "pairs" -> d10Pairs, "pairs_per_sec" -> (d10Pairs / d10Sec))
+        corpusBands = Some(cBands))))
+    println(Measure.line("metric" -> "d10_incr_indexed_100x", "sec" -> d10.wallS,
+      "pairs" -> d10Pairs.get, "pairs_per_sec" -> (d10Pairs.get / d10.wallS)))
     }
 
     if (want("text")) {
@@ -137,7 +95,7 @@ object Scale100 {
     val widened = (0 until copies).map { k =>
       docs.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
         concat(col("text"), lit(s" shard$k")).as("text"))
-    }.reduce(_.union(_)).repartition(cpus.toInt * 2).localCheckpoint(true)
+    }.reduce(_.union(_)).repartition(GraftSession.cpus * 2).localCheckpoint(true)
     val nW = widened.count()
 
     // t8 (tf-idf top-5 keywords)
@@ -149,23 +107,21 @@ object Scale100 {
     // frequency bounds the worst key of the score join's shuffle
     val dfStats = dfreq.agg(max(col("df")), expr("percentile_approx(df, 0.99)"),
       count(lit(1))).head()
-    line("metric" -> "t8_df_histogram", "copies" -> copies, "docs" -> nW,
+    println(Measure.line("metric" -> "t8_df_histogram", "copies" -> copies, "docs" -> nW,
       "max_df" -> dfStats.getLong(0), "p99_df" -> dfStats.getLong(1),
-      "n_words" -> dfStats.getLong(2))
-    val (sr0, sw0) = (shufRead.get, shufWrite.get)
-    val (t8Rows, t8Sec) = timed {
+      "n_words" -> dfStats.getLong(2)))
+    val (t8Rows, t8) = Measure(spark) {
       val scored = tf.join(dfreq, Seq("word"))
         .withColumn("score", col("tf") * lit(nW.toDouble) / col("df"))
       val topk = udaf(new graft.functions.TopKStrAgg(5))
-      scored.groupBy(col("doc_id"))
+      Measure.rows(scored.groupBy(col("doc_id"))
         .agg(topk(col("score"), col("word")).as("kw"))
-        .select(col("doc_id"), posexplode(col("kw")))
-        .count()
+        .select(col("doc_id"), posexplode(col("kw"))))
     }
-    line("metric" -> "t8_tfidf_100x", "copies" -> copies, "docs" -> nW,
-      "sec" -> t8Sec, "rows" -> t8Rows,
-      "shuffle_read_mb" -> ((shufRead.get - sr0) / 1e6),
-      "shuffle_write_mb" -> ((shufWrite.get - sw0) / 1e6))
+    println(Measure.line("metric" -> "t8_tfidf_100x", "copies" -> copies, "docs" -> nW,
+      "sec" -> t8.wallS, "rows" -> t8Rows.get,
+      "shuffle_read_mb" -> (t8.shuffleReadBytes / 1e6),
+      "shuffle_write_mb" -> (t8.shuffleWriteBytes / 1e6)))
 
     // t9 (bigram-LM fluency proxy)
     val bi = {
@@ -176,21 +132,19 @@ object Scale100 {
     val docBi = widened.select(col("doc_id"), explode(bi).as("bh"))
     val biStats = docBi.groupBy(col("bh")).agg(count(lit(1)).as("cnt"))
       .agg(max(col("cnt")), count(lit(1))).head()
-    line("metric" -> "t9_bigram_histogram", "copies" -> copies,
+    println(Measure.line("metric" -> "t9_bigram_histogram", "copies" -> copies,
       "docs" -> nW, "max_bigram_count" -> biStats.getLong(0),
-      "n_bigrams" -> biStats.getLong(1))
-    val (sr1, sw1) = (shufRead.get, shufWrite.get)
-    val (t9Rows, t9Sec) = timed {
+      "n_bigrams" -> biStats.getLong(1)))
+    val (t9Rows, t9) = Measure(spark) {
       val counts = docBi.groupBy(col("bh")).agg(count(lit(1)).as("cnt"))
-      docBi.join(counts, Seq("bh"))
+      Measure.rows(docBi.join(counts, Seq("bh"))
         .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"), sum(col("cnt")).as("fluency_sum"))
-        .count()
+        .agg(count(lit(1)).as("n_bigrams"), sum(col("cnt")).as("fluency_sum")))
     }
-    line("metric" -> "t9_bigram_100x", "copies" -> copies, "docs" -> nW,
-      "sec" -> t9Sec, "rows" -> t9Rows,
-      "shuffle_read_mb" -> ((shufRead.get - sr1) / 1e6),
-      "shuffle_write_mb" -> ((shufWrite.get - sw1) / 1e6))
+    println(Measure.line("metric" -> "t9_bigram_100x", "copies" -> copies, "docs" -> nW,
+      "sec" -> t9.wallS, "rows" -> t9Rows.get,
+      "shuffle_read_mb" -> (t9.shuffleReadBytes / 1e6),
+      "shuffle_write_mb" -> (t9.shuffleWriteBytes / 1e6)))
     }
 
     if (want("vectors")) {
@@ -215,17 +169,16 @@ object Scale100 {
       .lshBucketSizes(deep, "vec_id", "embedding")
       .agg(max(col("size")), expr("percentile_approx(size, 0.99)"),
         avg(col("size")), count(lit(1))).head()
-    line("metric" -> "s2_bucket_histogram", "copies" -> copies,
+    println(Measure.line("metric" -> "s2_bucket_histogram", "copies" -> copies,
       "vectors" -> nVec * copies, "planes" -> planes,
       "max_bucket" -> occ.getLong(0), "p99_bucket" -> occ.getLong(1),
-      "mean_bucket" -> occ.getDouble(2), "n_buckets" -> occ.getLong(3))
+      "mean_bucket" -> occ.getDouble(2), "n_buckets" -> occ.getLong(3)))
 
-    val (s2Pairs, s2Sec) = timed {
+    val (s2Pairs, s2) = Measure(spark)(Measure.rows(
       graft.operators.Similarity.lshNearDupPairs(deep, "vec_id",
-        "embedding", threshold = 0.4).count()
-    }
-    line("metric" -> "s2_lsh_100x", "sec" -> s2Sec, "pairs" -> s2Pairs,
-      "pairs_per_sec" -> (s2Pairs / s2Sec))
+        "embedding", threshold = 0.4)))
+    println(Measure.line("metric" -> "s2_lsh_100x", "sec" -> s2.wallS,
+      "pairs" -> s2Pairs.get, "pairs_per_sec" -> (s2Pairs.get / s2.wallS)))
 
     // ---- s4 IVF at 100× — the production ANN shape for 100 TB:
     // broadcast centroids, map-side argmax assignment, cell-confined
@@ -259,7 +212,7 @@ object Scale100 {
       // the assignment (corpus × centroids argmax) is the INDEX BUILD —
       // once per corpus, amortized over every query batch that follows;
       // timed separately so the probe economics read honestly below
-      val (cellOcc, asgSec) = timed {
+      val (cellOcc, asg) = Measure(spark) {
         v.join(broadcast(cents))
           .withColumn("cos",
             Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
@@ -269,11 +222,11 @@ object Scale100 {
           .agg(max(col("size")), expr("percentile_approx(size, 0.99)"),
             avg(col("size")), count(lit(1))).head()
       }
-      line("metric" -> "s4_cell_histogram", "copies" -> copies,
+      println(Measure.line("metric" -> "s4_cell_histogram", "copies" -> copies,
         "vectors" -> nVec * copies, "centroids" -> nC,
-        "assign_sec" -> asgSec,
-        "max_cell" -> cellOcc.getLong(0), "p99_cell" -> cellOcc.getLong(1),
-        "mean_cell" -> cellOcc.getDouble(2), "n_cells" -> cellOcc.getLong(3))
+        "assign_sec" -> asg.wallS,
+        "max_cell" -> cellOcc.get.getLong(0), "p99_cell" -> cellOcc.get.getLong(1),
+        "mean_cell" -> cellOcc.get.getDouble(2), "n_cells" -> cellOcc.get.getLong(3)))
 
       // query-count sweep: brute force scales linearly with the query
       // batch (every query scores the FULL corpus) while one-shot IVF
@@ -286,23 +239,23 @@ object Scale100 {
         // construction, which reads as free recall
         val queries = emb.filter(col("vec_id") >= 1000 &&
           col("vec_id") < 1000 + nq)
-        val (ivfRes, ivfSec) = timed {
+        val (ivfRes, ivf) = Measure(spark) {
           Similarity.ivfKnn(queries, deepNear, "vec_id", "embedding",
             k = kNN, nCentroids = nC, nprobe = nprobe)
             .localCheckpoint(true)
         }
-        val (bruteRes, bruteSec) = timed {
+        val (bruteRes, brute) = Measure(spark) {
           Similarity.knnBrute(queries, deepNear, "vec_id", "embedding",
             k = kNN).localCheckpoint(true)
         }
-        val hits = ivfRes.select(col("query_id"), col("neighbor_id"))
-          .intersect(bruteRes.select(col("query_id"), col("neighbor_id")))
+        val hits = ivfRes.get.select(col("query_id"), col("neighbor_id"))
+          .intersect(bruteRes.get.select(col("query_id"), col("neighbor_id")))
           .count()
-        val total = bruteRes.count()
-        line("metric" -> s"s4_ivf_100x_q$nq", "queries" -> nq,
-          "sec" -> ivfSec, "brute_sec" -> bruteSec, "nprobe" -> nprobe,
+        val total = bruteRes.get.count()
+        println(Measure.line("metric" -> s"s4_ivf_100x_q$nq", "queries" -> nq,
+          "sec" -> ivf.wallS, "brute_sec" -> brute.wallS, "nprobe" -> nprobe,
           "recall_at_10" -> (hits.toDouble / total),
-          "speedup_vs_brute" -> (bruteSec / ivfSec))
+          "speedup_vs_brute" -> (brute.wallS / ivf.wallS)))
       }
     }
     }
@@ -336,7 +289,7 @@ object Scale100 {
       for (fv <- Seq(2, 3)) {
         val t = TieredTable(spark, s"$root/t$fv", pk = Seq("okey", "pt"),
           mergeOnRead = true, partitionBy = Seq("pt"))
-        val (_, buildSec) = timed {
+        val (built, build) = Measure(spark) {
           t.commitUpsert(wide.repartition(col("pt")))            // seq 1
           (1 to waves).foreach { w =>                            // seq 2..10
             t.commitUpsert(wide
@@ -346,16 +299,19 @@ object Scale100 {
           }
           IcebergExport.export(t, fv)
         }
+        built.get
         val df = IcebergExport.readTable(spark, t.tablePath)
-        val (rows, readSec) = timed { df.count() }
+        // read before execution: an executed adaptive root prints its
+        // initial and its final plan, so every scan would count twice
         val plan = df.queryExecution.executedPlan.toString
+        val (rows, read) = Measure(spark)(Measure.rows(df))
         val scans = "FileScan parquet".r.findAllIn(plan).size
         val bcastJoins = "BroadcastHashJoin".r.findAllIn(plan).size
-        line("metric" -> s"lakehouse_mor_100x_v$fv",
-          "groups" -> (waves + 1) * 128, "rows" -> rows,
+        println(Measure.line("metric" -> s"lakehouse_mor_100x_v$fv",
+          "groups" -> (waves + 1) * 128, "rows" -> rows.get,
           "base_rows" -> nOrd * copies,
-          "build_export_sec" -> buildSec, "read_sec" -> readSec,
-          "parquet_scans" -> scans, "broadcast_joins" -> bcastJoins)
+          "build_export_sec" -> build.wallS, "read_sec" -> read.wallS,
+          "parquet_scans" -> scans, "broadcast_joins" -> bcastJoins))
         // v2: one data scan + one eq-delete scan. v3: the delete side
         // is DV decode in executors (no parquet scan), so ONE scan.
         val wantScans = if (fv == 2) 2 else 1
@@ -367,8 +323,8 @@ object Scale100 {
     }
     }
 
-    line("metric" -> "scale100_done", "copies" -> copies,
-      "docs" -> nDocs * copies, "vectors" -> nVec * copies)
+    println(Measure.line("metric" -> "scale100_done", "copies" -> copies,
+      "docs" -> nDocs * copies, "vectors" -> nVec * copies))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up stress harness behind SCALING.md's measured numbers: the
@@ -12,24 +14,13 @@ import org.apache.spark.sql.functions._
   * see whether runtime tracks corpus size or output size.
   *
   * `SPARK_GRAFT_SF_DIR` (default sf0.1), `SPARK_GRAFT_COPIES`
-  * (default 10), `SPARK_GRAFT_CPUS` (default 32).
+  * (default 10).
   */
 object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // same instants as Verify
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // merge-on-read SQL reads resolve in the analyzer (the
-      // mor_resolve_* comparison below drives them through spark.sql)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-stress")
 
     val base = graft.tables.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -39,24 +30,23 @@ object Stress {
         concat(col("text"), lit(s" shard$k")).as("text"))
     }.reduce(_.union(_)).localCheckpoint(true) // isolate input build from timings
 
-    def time(name: String)(f: => DataFrame): (String, Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = f.count()
-      (name, (System.nanoTime() - t0) / 1e9, rows)
-    }
-
     val vec = graft.operators.Dedup.shingleVectors(widened, "doc_id", "text", n = 3)
       .localCheckpoint(true) // shared substrate, like Pipeline's memo
-    val results = Seq(
-      time("d3_pairs") {
+    /** Wall time and rows of `df`, computed whole. */
+    def record(df: => DataFrame) = {
+      val (rows, m) = Measure(spark)(Measure.rows(df))
+      ListMap("sec" -> m.wallS, "rows" -> rows.get)
+    }
+    val results = ListMap(
+      "d3_pairs" -> record {
         graft.operators.Dedup.ngramJaccardPairsFrom(vec, num = 4, den = 5) },
-      time("d4_lsh") {
+      "d4_lsh" -> record {
         graft.operators.Dedup.minhashLshPairsFrom(vec, k = 16, bands = 4,
           num = 4, den = 5) },
-      time("d6_simhash_pairs") {
+      "d6_simhash_pairs" -> record {
         graft.operators.Dedup.simhashPairs(widened, "doc_id", "text",
           width = 48, maxDist = 3) },
-      time("d8_chunk_dedup") {
+      "d8_chunk_dedup" -> record {
         graft.operators.Dedup.chunkDedup(widened, "doc_id", "text",
           chunkTokens = 16) },
       // d10's O(Δ) claim, measured against d4_lsh's full recompute on
@@ -67,7 +57,7 @@ object Stress {
       // recomputed from the vector index (no persisted band table), and
       // the production shape probing a PERSISTED band index (built
       // untimed below — on disk it is maintenance state, not query work)
-      time("d10_incremental") {
+      "d10_incremental" -> record {
         graft.operators.Dedup.incrementalLshPairs(
           corpusVectors = vec.filter(col("id") % 10 =!= 0),
           deltaVectors = vec.filter(col("id") % 10 === 0),
@@ -76,7 +66,7 @@ object Stress {
         val cBands = graft.operators.Dedup
           .lshBands(vec.filter(col("id") % 10 =!= 0), k = 16, bands = 4)
           .localCheckpoint(true) // the standing index, staged untimed
-        time("d10_incr_indexed") {
+        "d10_incr_indexed" -> record {
           graft.operators.Dedup.incrementalLshPairs(
             corpusVectors = vec.filter(col("id") % 10 =!= 0),
             deltaVectors = vec.filter(col("id") % 10 === 0),
@@ -87,10 +77,10 @@ object Stress {
       // explode (c13's shape) and shard-local FFD (c14's) — both
       // should scale linearly in the corpus; the prefix sum's only
       // coordination is B driver rows, FFD's is none
-      time("c13_pack_chunks") {
+      "c13_pack_chunks" -> record {
         graft.operators.Packing.packChunks(widened,
           size(split(col("text"), " ")), chunkLen = 256L, buckets = 32) },
-      time("c14_pack_bins") {
+      "c14_pack_bins" -> record {
         graft.operators.Packing.packBinsFFD(widened,
           size(split(col("text"), " ")), binLen = 512L, shards = 32) },
     ) ++ {
@@ -114,8 +104,6 @@ object Stress {
           pk = Seq("doc_id"), mergeOnRead = true, bucketBy = buckets)
         s"graft.stress.$nm"
       }
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[graft.plans.GraftTableCatalog].getName)
       val defName = build("mor_def", 0)
       val bukName = build("mor_buk", 32)
       def exchanges(sql: String): Int =
@@ -127,16 +115,14 @@ object Stress {
         "bucketed and default layouts must resolve identically")
       // in these two rows the "rows" field is the EXCHANGE COUNT of
       // the resolved read's plan — the structural claim under test
-      def measure(nm: String, table: String): (String, Double, Long) = {
-        val t0 = System.nanoTime()
-        spark.sql(q(table)).head().getLong(0)
-        (nm, (System.nanoTime() - t0) / 1e9, exchanges(q(table)).toLong)
+      def resolve(table: String) = {
+        val (sum, m) = Measure(spark)(spark.sql(q(table)).head())
+        sum.get
+        ListMap("sec" -> m.wallS, "rows" -> exchanges(q(table)))
       }
-      Seq(measure("mor_resolve_default_exch", defName),
-        measure("mor_resolve_bucketed_exch", bukName))
+      ListMap("mor_resolve_default_exch" -> resolve(defName),
+        "mor_resolve_bucketed_exch" -> resolve(bukName))
     }
-    val qs = results.map { case (k, sec, rows) =>
-      s""""$k":{"sec":$sec,"rows":$rows}""" }.mkString("{", ",", "}")
 
     // File-skipping stress: orders committed in half-year bands (the
     // time-ingested layout), then a one-band range query through
@@ -157,43 +143,35 @@ object Stress {
     }
     val cond = d >= lit("1997-01-01").cast("date") &&
       d < lit("1997-07-01").cast("date")
-    def q13At(name: String, nCopies: Int): String = {
+    def q13At(name: String, nCopies: Int) = {
       val t = new graft.storage.TieredTable(spark, s"$skipDir/$name")
       for (k <- 0 until nCopies; b <- bands)
         t.commitAppend(orders.filter(b)
           .withColumn("o_orderkey", col("o_orderkey") + lit(k * 100000000L))
           .coalesce(1))
-      val tPlan0 = System.nanoTime()
-      val (kept, total) = t.skippingCounts(cond)
-      val planSec = (System.nanoTime() - tPlan0) / 1e9
-      val tFull0 = System.nanoTime()
-      val fullRows = t.readCold().filter(cond).count()
-      val fullSec = (System.nanoTime() - tFull0) / 1e9
-      val tSkip0 = System.nanoTime()
-      val skipRows = t.readColdWhere(cond).count()
-      val skipSec = (System.nanoTime() - tSkip0) / 1e9
-      require(fullRows == skipRows, "skipping changed an answer")
-      s""""q13_skip_${nCopies}x":{"files_kept":$kept,"files_total":$total,""" +
-        s""""plan_sec":$planSec,"full_sec":$fullSec,"skip_sec":$skipSec,""" +
-        s""""rows":$skipRows}"""
+      val (counts, plan) = Measure(spark)(t.skippingCounts(cond))
+      val (kept, total) = counts.get
+      val (fullRows, full) = Measure(spark)(Measure.rows(t.readCold().filter(cond)))
+      val (skipRows, skip) = Measure(spark)(Measure.rows(t.readColdWhere(cond)))
+      require(fullRows.get == skipRows.get, "skipping changed an answer")
+      s"q13_skip_${nCopies}x" -> ListMap("files_kept" -> kept,
+        "files_total" -> total, "plan_sec" -> plan.wallS,
+        "full_sec" -> full.wallS, "skip_sec" -> skip.wallS,
+        "rows" -> skipRows.get)
     }
-    val q13Json = q13At("orders_1x", 1) + "," + q13At("orders_Nx", copies)
+    val q13 = Seq(q13At("orders_1x", 1), q13At("orders_Nx", copies))
 
     // q16 metadata-only aggregate at copies×: COUNT/MIN/MAX answered
     // from the sidecars — files OPENED must stay 0 as file count grows.
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.plans.GraftTableCatalog].getName)
     graft.plans.TieredCatalog.register("stress", "orders_nx",
       s"$skipDir/orders_Nx")
-    val tAgg0 = System.nanoTime()
-    val agg = spark.sql(
+    val (agg, aggM) = Measure(spark)(spark.sql(
       """SELECT COUNT(*) AS cnt, MIN(o_orderkey) AS mn, MAX(o_orderkey) AS mx
-        |FROM graft.stress.orders_nx""".stripMargin).collect()(0)
-    val aggSec = (System.nanoTime() - tAgg0) / 1e9
+        |FROM graft.stress.orders_nx""".stripMargin).collect()(0))
     val (aggOpened, aggTotal) = graft.storage.FileStats
       .lastSkipFor("stress.orders_nx").getOrElse((-1, -1))
-    val q16Json = s""""q16_meta_agg_${copies}x":{"files_opened":$aggOpened,""" +
-      s""""files_total":$aggTotal,"sec":$aggSec,"cnt":${agg.getLong(0)}}"""
+    val q16 = s"q16_meta_agg_${copies}x" -> ListMap("files_opened" -> aggOpened,
+      "files_total" -> aggTotal, "sec" -> aggM.wallS, "cnt" -> agg.get.getLong(0))
 
     // q17 bloom point lookup at (3·copies) key-scattered files: every
     // file spans the whole key range (min/max useless); the bloom must
@@ -205,14 +183,13 @@ object Stress {
       tb.commitAppend(orders
         .filter(pmod(col("o_orderkey"), lit(nBloomFiles)) === i).coalesce(1))
     val probe = col("o_orderkey") === 7L
-    val tBloom0 = System.nanoTime()
-    val (bKept, bTotal) = tb.skippingCounts(probe)
-    val bloomPlanSec = (System.nanoTime() - tBloom0) / 1e9
+    val (bCounts, bloomPlan) = Measure(spark)(tb.skippingCounts(probe))
+    val (bKept, bTotal) = bCounts.get
     val bloomRows = tb.readColdWhere(probe).count()
     require(bloomRows == orders.filter(probe).count(),
       "bloom skipping changed an answer")
-    val q17Json = s""""q17_bloom_${copies}x":{"files_kept":$bKept,""" +
-      s""""files_total":$bTotal,"plan_sec":$bloomPlanSec,"rows":$bloomRows}"""
+    val q17 = s"q17_bloom_${copies}x" -> ListMap("files_kept" -> bKept,
+      "files_total" -> bTotal, "plan_sec" -> bloomPlan.wallS, "rows" -> bloomRows)
 
     // Storage-partitioned join at copies×: two tiered tables
     // Hive-partitioned on the same key, joined on (partition key, row
@@ -231,7 +208,7 @@ object Stress {
       // one task per partition-value group at this scale)
       .withColumn("pp", pmod(col("k"), lit(32)).cast("string"))
       .localCheckpoint(true)
-    val spjJson = {
+    val spj = {
       Seq("a", "b").foreach { s =>
         val t = new graft.storage.TieredTable(spark, s"$skipDir/spj_$s",
           partitionBy = Seq("pp"))
@@ -240,33 +217,31 @@ object Stress {
           s"$skipDir/spj_$s", partitionBy = Seq("pp"))
       }
       def run(on: Boolean): (Double, Int, Long) = {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", on.toString)
-        spark.conf.set(
-          "spark.sql.sources.v2.bucketing.pushPartValues.enabled", on.toString)
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition",
-          (!on).toString)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // exchange counting reads the plan pre-execution; AQE's
-        // adaptive root would hide it
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val confs = Seq(
+          "spark.sql.sources.v2.bucketing.enabled" -> on.toString,
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> on.toString,
+          "spark.sql.requireAllClusterKeysForCoPartition" -> (!on).toString,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          // exchange counting reads the plan pre-execution; AQE's
+          // adaptive root would hide it
+          "spark.sql.adaptive.enabled" -> "false")
+        val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           val j = spark.table("graft.stress.spj_a")
             .select(col("pp"), col("k"), col("o_custkey").as("ca"))
             .join(spark.table("graft.stress.spj_b")
               .select(col("pp"), col("k"), col("o_custkey").as("cb")),
               Seq("pp", "k"))
-          val t0 = System.nanoTime()
-          val rows = j.count()
-          val sec = (System.nanoTime() - t0) / 1e9
+          val (rows, m) = Measure(spark)(Measure.rows(j))
           val ex = j.queryExecution.executedPlan.collect {
             case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
           }.size
-          (sec, ex, rows)
-        } finally Seq("spark.sql.sources.v2.bucketing.enabled",
-          "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-          "spark.sql.requireAllClusterKeysForCoPartition",
-          "spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.enabled").foreach(spark.conf.unset)
+          (m.wallS, ex, rows.get)
+        } finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
       }
       // warm BOTH paths once (codegen + OS page cache for the freshly
       // written tables) before timing — whichever leg runs first would
@@ -275,9 +250,9 @@ object Stress {
       val (onSec, onEx, onRows) = run(on = true)
       val (offSec, offEx, offRows) = run(on = false)
       require(onRows == offRows, "SPJ changed an answer")
-      s""""spj_join_${copies}x":{"rows":$onRows,"spj_sec":$onSec,""" +
-        s""""spj_exchanges":$onEx,"shuffle_sec":$offSec,""" +
-        s""""shuffle_exchanges":$offEx}"""
+      s"spj_join_${copies}x" -> ListMap("rows" -> onRows, "spj_sec" -> onSec,
+        "spj_exchanges" -> onEx, "shuffle_sec" -> offSec,
+        "shuffle_exchanges" -> offEx)
     }
 
     // Iceberg-export latency curve: a table accumulating snapshots,
@@ -295,13 +270,10 @@ object Stress {
     val expTimes = (1 to 60).flatMap { i =>
       te.commitAppend(expDelta.withColumn("o_orderkey",
         col("o_orderkey") + lit(i * 1000000000L)))
-      val t0 = System.nanoTime()
-      graft.storage.IcebergExport.export(te)
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (expCheck(i)) Some(i -> sec) else None
+      val (exported, m) = Measure(spark)(graft.storage.IcebergExport.export(te))
+      exported.get
+      if (expCheck(i)) Some(s"snapshots_$i" -> m.wallS) else None
     }
-    val expJson = s""""iceberg_export_curve":{""" + expTimes.map {
-      case (i, s) => s""""snapshots_$i":$s""" }.mkString(",") + "}"
 
     // q18b's dirty-group MIN/MAX repair vs full rebuild, on a
     // DELETE-HEAVY changelog built adversarially: every deleted row is
@@ -310,7 +282,7 @@ object Stress {
     // |base ∩ dirty|), the semi-join-pruned recompute) against the
     // O(|base|) rebuild it replaces. The claim is the repair stays a
     // fraction of the rebuild even when EVERY delete dirties a group.
-    val ivmJson = {
+    val ivm = {
       import graft.operators.IncrementalAgg
       val orders10 = (0 until copies).map { k =>
         orders.select(
@@ -334,30 +306,25 @@ object Stress {
       val delta = victims.withColumn("op", lit("-D"))
         .localCheckpoint(true)
       val deletes = delta.count()
-      def clock(f: => DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val rows = f.count()
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }
-      // warm both paths (codegen + page cache), then time
-      clock(IncrementalAgg.applyDeltaFull(state, delta, Seq("g"), spec,
-        orders10))
       val remaining = orders10.join(
         victims.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
-      clock(IncrementalAgg.rebuildFull(remaining, Seq("g"), spec))
-      val (repairSec, repairRows) = clock(
-        IncrementalAgg.applyDeltaFull(state, delta, Seq("g"), spec,
-          orders10))
-      val (rebuildSec, rebuildRows) = clock(
-        IncrementalAgg.rebuildFull(remaining, Seq("g"), spec))
-      require(repairRows == rebuildRows, "IVM repair changed the group set")
-      s""""ivm_repair_${copies}x":{"base_rows":${orders10.count()},""" +
-        s""""groups":$repairRows,"deletes":$deletes,""" +
-        s""""repair_sec":$repairSec,"rebuild_sec":$rebuildSec}"""
+      // warm both paths (codegen + page cache), then time
+      record(IncrementalAgg.applyDeltaFull(state, delta, Seq("g"), spec,
+        orders10))
+      record(IncrementalAgg.rebuildFull(remaining, Seq("g"), spec))
+      val repair = record(
+        IncrementalAgg.applyDeltaFull(state, delta, Seq("g"), spec, orders10))
+      val rebuild = record(IncrementalAgg.rebuildFull(remaining, Seq("g"), spec))
+      require(repair("rows") == rebuild("rows"),
+        "IVM repair changed the group set")
+      s"ivm_repair_${copies}x" -> ListMap("base_rows" -> orders10.count(),
+        "groups" -> repair("rows"), "deletes" -> deletes,
+        "repair_sec" -> repair("sec"), "rebuild_sec" -> rebuild("sec"))
     }
 
-    println(s"""{"metric":"stress","docs":${n * copies},"copies":$copies,""" +
-      s""""results":$qs,$q13Json,$q16Json,$q17Json,$spjJson,$expJson,$ivmJson}""")
+    println(Measure.line(Seq("metric" -> "stress", "docs" -> n * copies,
+      "copies" -> copies, "results" -> results) ++ q13 ++ Seq(q16, q17, spj,
+      "iceberg_export_curve" -> ListMap.from(expTimes), ivm): _*))
     spark.stop()
   }
 }

@@ -405,8 +405,6 @@ object Dedup {
       i += 1
     }
     } finally edgesP.unpersist()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"connectedComponents: $i rounds, converged=$converged")
     labels
   }
 

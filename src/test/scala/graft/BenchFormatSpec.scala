@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * perf signal — this spec makes the format a tested invariant instead
   * of a hope.
   */
-class BenchFormatSpec extends AnyFunSuite {
+class BenchFormatSpec extends AnyFunSuite with SparkSpec {
   import org.json4s._
   import org.json4s.jackson.JsonMethods.parse
 
@@ -79,27 +79,6 @@ class BenchFormatSpec extends AnyFunSuite {
     assert((j \ "sf") == JString("/data/sf0.1"))
   }
 
-  test("queries line is one strict-JSON line carrying the full map") {
-    val line = Bench.queriesLine(results, "/data/sf0.1")
-    assert(!line.contains("\n"))
-    val j = parse(line)
-    assert((j \ "metric") == JString("queries"))
-    assert((j \ "sf") == JString("/data/sf0.1"))
-    val JInt(n) = j \ "n"
-    assert(n == 3)
-    val JObject(qs) = j \ "queries"
-    val m = qs.map { case (k, v) => k -> v.asInstanceOf[JDouble].num }.toMap
-    assert(m.keySet == results.keySet)
-    for ((k, v) <- results) assert(math.abs(m(k) - v) < 5e-4, s"$k drifted")
-    // locale-independence: same rendering discipline as the parts lines
-    val saved = java.util.Locale.getDefault
-    try {
-      java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      val JObject(qs2) = parse(Bench.queriesLine(results, "/d")) \ "queries"
-      assert(qs2.nonEmpty)
-    } finally java.util.Locale.setDefault(saved)
-  }
-
   test("per-query line parses and agrees with the summary") {
     val line = Bench.perQueryLine(results, "/d")
     val j = parse(line)
@@ -111,5 +90,31 @@ class BenchFormatSpec extends AnyFunSuite {
     assert((parse(Bench.summaryLine(Map.empty, "/d")) \ "n") == JInt(0))
     val JDouble(z) = parse(Bench.perQueryLine(Map.empty, "/d")) \ "value"
     assert(z == 0.0)
+  }
+
+  test("a pass over two queries, one of which throws, gives failed = 1 " +
+      "and a total that excludes the failed query") {
+    var calls = 0
+    val queries: Seq[(String, Bench.Query)] = Seq(
+      "ok" -> ((s, _) => s.range(10).toDF("id")),
+      // throws in the second pass only
+      "flaky" -> { (s, _) =>
+        calls += 1
+        if (calls == 2) throw new IllegalStateException("boom")
+        s.range(5).toDF("id")
+      })
+    val out = Bench.run(spark, "/unused", queries, passes = 2)
+    assert(out.failed.keySet == Set("flaky") && out.failed("flaky").contains("boom"))
+    assert(out.best.keySet == Set("ok"))
+    assert(out.passes.size == 2 && out.passes.forall(_.keySet == Set("ok")))
+    val summary = parse(Bench.summaryLine(out.times, "/d", out.failed.size))
+    assert((summary \ "failed") == JInt(1) && (summary \ "n") == JInt(1))
+    val JDouble(total) = summary \ "value"
+    assert(math.abs(total - out.best("ok").wallS) < 5e-4)
+    // the full carrier keeps the error and the kept pass's sample
+    val full = parse(Bench.perQueryLine(out.times, "/d", out.best, out.failed))
+    assert((full \ "failed" \ "flaky").isInstanceOf[JString])
+    assert((full \ "samples" \ "ok" \ "jobs") == JInt(out.best("ok").jobs))
+    assert((full \ "queries" \ "flaky") == JNothing)
   }
 }

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,17 +20,8 @@ class SessionMemoSpec extends AnyFunSuite with SparkSpec {
 
   /** Spark jobs started while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, m) = Measure(spark)(body)
+    (out.get, m.jobs.toInt)
   }
 
   /** `read` twice: the second is a hit that runs no job and returns the
@@ -146,8 +134,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkSpec {
 object SessionMemoStopCheck {
   val Ok = "stopped-session entries dropped"
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+  private def session(): SparkSession = GraftSession.local("graft-memo-stop", cpus = 1)
 
   def main(args: Array[String]): Unit = {
     val dir = Files.createTempDirectory("graft-memo-stop").toString
