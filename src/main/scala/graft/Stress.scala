@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftScanMetrics}
 import org.apache.spark.sql.functions._
 
 /** Scale-up stress harness behind SCALING.md's measured numbers: the
@@ -143,21 +143,26 @@ object Stress {
     }
     val cond = d >= lit("1997-01-01").cast("date") &&
       d < lit("1997-07-01").cast("date")
+    // the files a scan kept and listed, as the scan reported them
+    def files(df: DataFrame, kept: String = "files_kept") = {
+      val m = GraftScanMetrics.of(df)
+      ListMap(kept -> m(GraftScanMetrics.Kept), "files_total" -> m(GraftScanMetrics.Total))
+    }
     def q13At(name: String, nCopies: Int) = {
       val t = new graft.storage.TieredTable(spark, s"$skipDir/$name")
       for (k <- 0 until nCopies; b <- bands)
         t.commitAppend(orders.filter(b)
           .withColumn("o_orderkey", col("o_orderkey") + lit(k * 100000000L))
           .coalesce(1))
-      val (counts, plan) = Measure(spark)(t.skippingCounts(cond))
-      val (kept, total) = counts.get
+      // planning builds the scan: one listing, the sidecar reads, the pruning
+      val skipDf = t.readColdWhere(cond)
+      val (_, plan) = Measure(spark)(skipDf.queryExecution.executedPlan)
       val (fullRows, full) = Measure(spark)(Measure.rows(t.readCold().filter(cond)))
-      val (skipRows, skip) = Measure(spark)(Measure.rows(t.readColdWhere(cond)))
+      val (skipRows, skip) = Measure(spark)(Measure.rows(skipDf))
       require(fullRows.get == skipRows.get, "skipping changed an answer")
-      s"q13_skip_${nCopies}x" -> ListMap("files_kept" -> kept,
-        "files_total" -> total, "plan_sec" -> plan.wallS,
+      s"q13_skip_${nCopies}x" -> (files(skipDf) ++ ListMap("plan_sec" -> plan.wallS,
         "full_sec" -> full.wallS, "skip_sec" -> skip.wallS,
-        "rows" -> skipRows.get)
+        "rows" -> skipRows.get))
     }
     val q13 = Seq(q13At("orders_1x", 1), q13At("orders_Nx", copies))
 
@@ -165,13 +170,12 @@ object Stress {
     // from the sidecars — files OPENED must stay 0 as file count grows.
     graft.plans.TieredCatalog.register("stress", "orders_nx",
       s"$skipDir/orders_Nx")
-    val (agg, aggM) = Measure(spark)(spark.sql(
+    val aggDf = spark.sql(
       """SELECT COUNT(*) AS cnt, MIN(o_orderkey) AS mn, MAX(o_orderkey) AS mx
-        |FROM graft.stress.orders_nx""".stripMargin).collect()(0))
-    val (aggOpened, aggTotal) = graft.storage.FileStats
-      .lastSkipFor("stress.orders_nx").getOrElse((-1, -1))
-    val q16 = s"q16_meta_agg_${copies}x" -> ListMap("files_opened" -> aggOpened,
-      "files_total" -> aggTotal, "sec" -> aggM.wallS, "cnt" -> agg.get.getLong(0))
+        |FROM graft.stress.orders_nx""".stripMargin)
+    val (agg, aggM) = Measure(spark)(aggDf.collect()(0))
+    val q16 = s"q16_meta_agg_${copies}x" -> (files(aggDf, "files_opened") ++
+      ListMap("sec" -> aggM.wallS, "cnt" -> agg.get.getLong(0)))
 
     // q17 bloom point lookup at (3·copies) key-scattered files: every
     // file spans the whole key range (min/max useless); the bloom must
@@ -183,13 +187,13 @@ object Stress {
       tb.commitAppend(orders
         .filter(pmod(col("o_orderkey"), lit(nBloomFiles)) === i).coalesce(1))
     val probe = col("o_orderkey") === 7L
-    val (bCounts, bloomPlan) = Measure(spark)(tb.skippingCounts(probe))
-    val (bKept, bTotal) = bCounts.get
-    val bloomRows = tb.readColdWhere(probe).count()
+    val bloomDf = tb.readColdWhere(probe)
+    val (_, bloomPlan) = Measure(spark)(bloomDf.queryExecution.executedPlan)
+    val bloomRows = Measure.rows(bloomDf)
     require(bloomRows == orders.filter(probe).count(),
       "bloom skipping changed an answer")
-    val q17 = s"q17_bloom_${copies}x" -> ListMap("files_kept" -> bKept,
-      "files_total" -> bTotal, "plan_sec" -> bloomPlan.wallS, "rows" -> bloomRows)
+    val q17 = s"q17_bloom_${copies}x" -> (files(bloomDf) ++
+      ListMap("plan_sec" -> bloomPlan.wallS, "rows" -> bloomRows))
 
     // Storage-partitioned join at copies×: two tiered tables
     // Hive-partitioned on the same key, joined on (partition key, row

@@ -762,7 +762,8 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
                      t: TieredTable, entry: TieredCatalog.Entry,
                      readFilesOverride: Option[Seq[String]] = None,
                      resolveOverride: Option[() => org.apache.spark.sql.DataFrame] = None,
-                     rawVersions: Boolean = false)
+                     rawVersions: Boolean = false,
+                     schemaOverride: Option[StructType] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -878,9 +879,10 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
   private[plans] def catalogEntry: TieredCatalog.Entry = entry
 
   /** Declared schema persisted by CREATE TABLE, if any — lets an empty
-    * table resolve for reads and INSERT column checking.
+    * table resolve for reads and INSERT column checking. A
+    * `schemaOverride` ([[TieredSqlTable.coldRead]]) takes its place.
     */
-  private val declared: Option[StructType] = {
+  private val declared: Option[StructType] = schemaOverride.orElse {
     val d = graft.storage.TableFs.forPath(entry.path)
       .readString(s"${entry.path}/meta/SCHEMA").map(StructType.fromDDL)
     // raw-version twin: the declared schema (CREATE TABLE's) never
@@ -1151,7 +1153,6 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
         case ((root, tbl), i) =>
           val opts = new CaseInsensitiveStringMap(
             (readOpts.asScala ++ Map("basePath" -> partBase(root))).asJava)
-          // per-root metric name: children record independently
           new org.apache.spark.sql.GraftSkippingScanBuilder(spark,
             s"$tableName#$i", Seq(root), schema(), opts,
             tbl.newScanBuilder(options), layoutCols,
@@ -1355,6 +1356,20 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
 object TieredSqlTable {
   import org.apache.spark.sql.{functions => F}
   import org.apache.spark.sql.sources._
+
+  /** A snapshot's cold `files` read with `schema` through the same
+    * DSv2 scan as SQL reads — how [[TieredTable.readColdWhere]] prunes
+    * files. It applies no merge-on-read resolution or column mapping.
+    */
+  def coldRead(spark: SparkSession, t: TieredTable, files: Seq[String],
+               schema: StructType): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new TieredSqlTable(t.tablePath, spark, t,
+          TieredCatalog.Entry(t.tablePath, t.pk, mergeOnRead = false,
+            t.partitionBy, t.bloomCols),
+          readFilesOverride = Some(files), schemaOverride = Some(schema)),
+          None, None))
 
   /** Within-batch last-write-wins by ARRIVAL ORDER — the PK-sink
     * contract every SQL write applies before committing: a batch that

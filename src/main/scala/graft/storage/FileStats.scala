@@ -79,17 +79,6 @@ object FileStats {
     }
   }
 
-  /** Last skip decision per table name — observability for specs and
-    * operators (how many files did the last SQL scan actually open?).
-    */
-  private val lastSkip =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
-
-  def recordSkip(table: String, kept: Int, total: Int): Unit =
-    lastSkip.put(table, (kept, total))
-
-  def lastSkipFor(table: String): Option[(Int, Int)] = lastSkip.get(table)
-
   /** Stats for one column of one file. `tag` fixes the comparison
     * domain: long | double | string | date | ts | decimal:<scale> |
     * none (= unusable, always keep). min/max are canonical strings in
@@ -392,12 +381,9 @@ object FileStats {
   /** One entry per data file: (absolute path, range stats, blooms). */
   type FileEntry = (String, Map[String, ColStat], Map[String, java.util.BitSet])
 
-  /** List every data file under `roots` with its stats AND bloom
-    * sidecar content — ONE filesystem walk + sidecar parse. Callers
-    * that plan repeatedly over the same roots (a scan builder's
-    * pushdown negotiation calls in several hooks) should call this
-    * once and reuse the listing: at 100 TB the per-plan cost must be
-    * one walk, not one per hook.
+  /** Every data file under `roots` with its stats AND bloom sidecar
+    * content — ONE filesystem walk + sidecar parse, which the skipping
+    * scan builder shares across its pushdown hooks.
     */
   def listWithSidecars(roots: Seq[String]): Seq[FileEntry] =
     roots.flatMap { r =>
@@ -412,23 +398,6 @@ object FileStats {
         }
       }
     }
-
-  /** The file paths under `roots` that might hold a row matching ALL
-    * `filters`, plus the total file count. Both prune layers apply —
-    * min/max range boxes and (where built) per-column blooms; every
-    * unknown case keeps the file.
-    */
-  def prune(roots: Seq[String], filters: Seq[Filter]): (Seq[String], Int) =
-    pruneListed(listWithSidecars(roots), filters)
-
-  /** [[prune]] over a pre-computed [[listWithSidecars]] listing. */
-  def pruneListed(all: Seq[FileEntry], filters: Seq[Filter]): (Seq[String], Int) = {
-    val kept = all.collect {
-      case (f, stats, blooms) if filters.forall(fl =>
-        mayMatch(stats, fl) && bloomMayMatch(blooms, fl)) => f
-    }
-    (kept, all.size)
-  }
 
   /** Can any row of a file with these stats satisfy the filter?
     * (false ⇒ the file is provably irrelevant and safe to skip).

@@ -2,7 +2,7 @@ package graft.storage
 
 import java.io.OutputStream
 import java.net.InetSocketAddress
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -71,9 +71,11 @@ class IcebergRestCatalogServer {
     */
   private val commitLock = new Object
 
+  // request threads: non-daemon, so stop() must shut them down
+  val executor: ExecutorService = Executors.newFixedThreadPool(4)
   val server: HttpServer = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    s.setExecutor(Executors.newFixedThreadPool(4))
+    s.setExecutor(executor)
     s.createContext("/", (ex: HttpExchange) => handle(ex))
     s.start()
     s
@@ -81,7 +83,7 @@ class IcebergRestCatalogServer {
 
   def port: Int = server.getAddress.getPort
   def url: String = s"http://127.0.0.1:$port"
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); executor.shutdown() }
 
   /** Point `ns.table` at a metadata.json location (idempotent swap —
     * the catalog commit).

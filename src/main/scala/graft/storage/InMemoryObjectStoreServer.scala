@@ -2,7 +2,7 @@ package graft.storage
 
 import java.io.OutputStream
 import java.net.InetSocketAddress
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -42,9 +42,11 @@ class InMemoryObjectStoreServer(listPageSize: Int = 1000) {
   val multipartCompletes = new AtomicLong(0)
   val listPagesServed = new AtomicLong(0)
 
+  // request threads: non-daemon, so stop() must shut them down
+  val executor: ExecutorService = Executors.newFixedThreadPool(8)
   val server: HttpServer = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    s.setExecutor(Executors.newFixedThreadPool(8))
+    s.setExecutor(executor)
     s.createContext("/", (ex: HttpExchange) => handle(ex))
     s.start()
     s
@@ -52,7 +54,7 @@ class InMemoryObjectStoreServer(listPageSize: Int = 1000) {
 
   def port: Int = server.getAddress.getPort
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); executor.shutdown() }
 
   /** Keys currently held under a prefix — introspection for specs. */
   def keysUnder(prefix: String): Seq[String] = {

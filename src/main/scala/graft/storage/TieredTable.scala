@@ -2378,61 +2378,31 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       else resolveVersions(raw)
   }
 
-  /** Cold read with manifest-level FILE SKIPPING: translate `cond`'s
-    * conjuncts to data-source filters, drop every file whose footer
-    * min/max stats prove it can hold no matching row, and scan only
-    * the survivors (the predicate is still applied in full — pruning
-    * is a strict optimization, never a semantics change).
+  /** Cold read with manifest-level FILE SKIPPING: `readCold()
+    * .filter(cond)` through the catalog's scan
+    * ([[org.apache.spark.sql.GraftSkippingScanBuilder]], the one
+    * file-pruning path), which skips every file whose stats or blooms
+    * prove it holds no matching row — per root on a partitioned table —
+    * and reports `files_kept` / `files_total` on its scan node. The
+    * predicate still applies in full: pruning never changes an answer.
     *
     * At 100 TB this is the difference between planning over O(matching
     * files) and O(table files): a range query on a sorted/clustered
-    * column opens only the files whose [min,max] intersect it, before
-    * parquet footers are even fetched by the scan.
+    * column opens only the files whose [min,max] intersect it.
     *
     * Falls back to `readCold().filter(cond)` — same answer, no
-    * skipping — for (a) partitioned tables (directory pruning already
-    * serves that layout), and (b) merge-on-read PK tables: a key's
-    * winning version can live in a file the predicate would prune, so
-    * last-write-wins must resolve BEFORE the filter.
+    * skipping — for (a) merge-on-read PK tables: a key's winning
+    * version can live in a file the predicate would prune, so
+    * last-write-wins must resolve BEFORE the filter; and (b) tables
+    * whose column mapping renames or drops a column: only the API read
+    * applies the mapping.
     */
   def readColdWhere(cond: org.apache.spark.sql.Column): DataFrame = {
-    // historical cols: a post-DROP unpartitioned table still has hive
-    // vintages whose values live in dir names — the plain pruned read
-    // below would null them out
-    if (historicalPartitionCols.nonEmpty || (pk.nonEmpty && mergeOnRead))
-      return readCold().filter(cond)
-    val s = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no snapshot in $tablePath"))
     val base = readCold()
-    val filters = org.apache.spark.sql.GraftSqlBridge.translateConjuncts(base, cond)
-    if (filters.isEmpty) return base.filter(cond)
-    val (kept, _) = FileStats.prune(s.files, filters)
-    if (kept.isEmpty) emptyLike(base.schema).filter(cond)
-    else {
-      val pruned = spark.read.option("mergeSchema", "true").parquet(kept: _*)
-      // schema-evolved tables: a pruned-away file may be the only one
-      // carrying a late column — pad with typed nulls so the result
-      // schema equals the full read's
-      val padded =
-        if (pruned.columns.toSeq == base.columns.toSeq) pruned
-        else pruned.select(base.schema.fields.map { f =>
-          if (pruned.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*)
-      padded.filter(cond)
-    }
-  }
-
-  /** (kept, total) cold-tier file counts under `cond`'s skipping
-    * decision — observability for specs and scan planning.
-    */
-  def skippingCounts(cond: org.apache.spark.sql.Column): (Int, Int) = {
-    val s = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no snapshot in $tablePath"))
-    val filters =
-      org.apache.spark.sql.GraftSqlBridge.translateConjuncts(readCold(), cond)
-    val (kept, total) = FileStats.prune(s.files, filters)
-    (kept.size, total)
+    val mapped = colMapOps().exists(op => op._1 == "rename" || op._1 == "drop")
+    if ((pk.nonEmpty && mergeOnRead) || mapped) base.filter(cond)
+    else graft.plans.TieredSqlTable.coldRead(spark, this, coldFiles, base.schema)
+      .filter(cond)
   }
 
   /** Time travel: the cold tier as of a specific committed snapshot

@@ -92,7 +92,7 @@ class GraftCompositeScanBuilder(builders: Seq[ScanBuilder],
 class GraftCompositeScan(children: Seq[Scan],
     streamFactory: Option[String =>
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None)
-    extends Scan with Batch
+    extends Scan with Batch with GraftFileCounts
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning {
   override def readSchema(): StructType = children.head.readSchema()
@@ -207,6 +207,9 @@ class GraftCompositeScan(children: Seq[Scan],
       case s: SupportsRuntimeV2Filtering => s.filter(predicates)
       case _ =>
     }
+
+  /** The children's per-root file counts, summed. */
+  def fileCounts: Seq[Long] = GraftScanMetrics.sum(children)
 }
 
 case class GraftCompositePartition(child: Int, inner: InputPartition)

@@ -5,10 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -17,19 +20,20 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.storage.FileStats
 import graft.storage.FileStats.ColStat
 
-/** Scan builder adding MANIFEST-LEVEL FILE SKIPPING to the SQL read
-  * path of an (unpartitioned) tiered table: pushed filters are
-  * translated to data-source filters and checked against each file's
-  * `_graft_stats` footer min/max sidecar; files that provably hold no
-  * matching row are dropped from the scan's file list before Spark
-  * ever opens them. The surviving scan is a stock vectorized
-  * [[ParquetTable]] scan — same pushdown, same column pruning — over
-  * fewer files; correctness never depends on the skip (the pushed
-  * predicates are still evaluated).
+/** Scan builder adding MANIFEST-LEVEL FILE SKIPPING to a tiered
+  * table's reads — SQL scans through the catalog and the API's
+  * [[graft.storage.TieredTable.readColdWhere]] alike: pushed filters
+  * are translated to data-source filters and checked against each
+  * file's `_graft_stats` footer min/max and bloom sidecars; files that
+  * provably hold no matching row are dropped from the scan's file list
+  * before Spark ever opens them. The surviving scan is a stock
+  * vectorized [[ParquetTable]] scan — same pushdown, same column
+  * pruning — over fewer files; correctness never depends on the skip
+  * (the pushed predicates are still evaluated).
   *
-  * This is the DSv2 face of [[graft.storage.TieredTable.readColdWhere]]
-  * — Iceberg's planFiles() bounds-filtering step, done here at scan
-  * build time from one sidecar read per directory.
+  * This is the engine's one file-pruning path — Iceberg's planFiles()
+  * bounds-filtering step, done at scan build time from one sidecar
+  * read per directory.
   */
 class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
                                roots: Seq[String], fullSchema: StructType,
@@ -231,22 +235,19 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
   override def build(): Scan = {
     aggResult match {
       case Some((schema, values)) =>
-        FileStats.recordSkip(tableName, 0, listed.size)
-        return new GraftMetadataAggScan(tableName, schema, values)
+        return new GraftMetadataAggScan(tableName, schema, values, listed.size)
       case None =>
     }
     val sourceFilters = pushedExprs.flatMap(e =>
       DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false))
-    val (kept, total) = FileStats.pruneListed(listed, sourceFilters)
-    FileStats.recordSkip(tableName, kept.size, total)
-    val keptSet = kept.toSet
+    // partition layout is left to the parquet scan's own pruning
     val keptEntries =
-      if (kept.size == total) listed else listed.filter(e => keptSet(e._1))
+      listed.filter(GraftSkippingScanBuilder.mayHold(_, sourceFilters, Nil))
     val staticScan =
-      if (sourceFilters.isEmpty || kept.size == total) inner.build()
-      else buildOver(kept)
+      if (keptEntries.size == listed.size) inner.build()
+      else buildOver(keptEntries.map(_._1))
     new GraftRuntimeScan(spark, tableName, options, fullSchema,
-      keptEntries, staticScan, pushedExprs, required, partitionCols,
+      listed.size, keptEntries, staticScan, pushedExprs, required, partitionCols,
       buildOver, streamFactory)
   }
 
@@ -273,6 +274,17 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
     }
     b.build()
   }
+}
+
+object GraftSkippingScanBuilder {
+  /** May the file hold a row matching every filter? Its stats, blooms
+    * and `partitionCols` path segments decide; unknown keeps it.
+    */
+  def mayHold(e: FileStats.FileEntry, filters: Seq[sources.Filter],
+              partitionCols: Seq[String]): Boolean =
+    filters.forall(f => FileStats.mayMatch(e._2, f) &&
+      FileStats.bloomMayMatch(e._3, f) &&
+      GraftPartitionPathFilter.mayMatch(e._1, partitionCols, f))
 }
 
 /** The scan a [[GraftSkippingScanBuilder]] actually returns: the
@@ -304,6 +316,7 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
 class GraftRuntimeScan(spark: SparkSession, tableName: String,
                        options: CaseInsensitiveStringMap,
                        fullSchema: StructType,
+                       filesTotal: Int,
                        keptEntries: Seq[FileStats.FileEntry],
                        staticScan: Scan,
                        pushedExprs: Seq[Expression],
@@ -312,7 +325,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
                        rebuild: Seq[String] => Scan,
                        streamFactory: Option[String =>
                          org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None)
-    extends Scan with Batch
+    extends Scan with Batch with GraftFileCounts
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning {
 
@@ -331,11 +344,11 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
 
   override def readSchema(): StructType = staticScan.readSchema()
 
-  override def description(): String = {
-    val rt = runtimeEntries.fold("")(e =>
-      s", runtime-kept ${e.size}/${keptEntries.size}")
-    s"GraftRuntimeScan($tableName$rt) ${staticScan.description()}"
-  }
+  override def description(): String =
+    s"GraftRuntimeScan($tableName) ${staticScan.description()}"
+
+  def fileCounts: Seq[Long] = Seq(filesTotal, keptEntries.size,
+    runtimeEntries.getOrElse(keptEntries).size)
 
   // ---- statistics ----
 
@@ -394,13 +407,8 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
     val v1 = org.apache.spark.sql.internal.connector.PredicateUtils
       .toV1(predicates).toSeq
     if (v1.isEmpty) return
-    val survivors = keptEntries.filter { case (path, stats, blooms) =>
-      v1.forall(f => FileStats.mayMatch(stats, f) &&
-        FileStats.bloomMayMatch(blooms, f) &&
-        GraftPartitionPathFilter.mayMatch(path, partitionCols, f))
-    }
-    FileStats.recordSkip(s"$tableName@runtime", survivors.size,
-      keptEntries.size)
+    val survivors =
+      keptEntries.filter(GraftSkippingScanBuilder.mayHold(_, v1, partitionCols))
     if (survivors.size < keptEntries.size) runtimeEntries = Some(survivors)
   }
 
@@ -655,9 +663,12 @@ object GraftPartitionPathFilter {
 
 /** One-row scan serving a fully-pushed-down aggregate straight from
   * the stats sidecars — the "answer COUNT(*) from manifests" path.
+  * Of its `filesTotal` files it keeps (opens) none.
   */
 class GraftMetadataAggScan(tableName: String, schema: StructType,
-                           values: Seq[Any]) extends Scan with Batch {
+                           values: Seq[Any], filesTotal: Int)
+    extends Scan with Batch with GraftFileCounts {
+  def fileCounts: Seq[Long] = Seq(filesTotal, 0, 0)
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -681,4 +692,54 @@ class GraftAggReaderFactory extends PartitionReaderFactory {
           p.asInstanceOf[GraftAggPartition].values.toArray)
       override def close(): Unit = ()
     }
+}
+
+/** The skip report of a graft file scan, carried by DSv2's driver-
+  * metric channel onto the executed plan's scan node: `files_total`
+  * (files under the scan's roots), `files_kept` (left by stats and
+  * bloom pruning at build) and `files_runtime_kept` (left after
+  * runtime filters; `files_kept` when none arrived).
+  */
+object GraftScanMetrics {
+  val Total = "files_total"
+  val Kept = "files_kept"
+  val RuntimeKept = "files_runtime_kept"
+  val Names = Seq(Total, Kept, RuntimeKept)
+
+  /** The file counts of the graft scans among `scans`, summed (empty
+    * when there are none).
+    */
+  def sum(scans: Seq[Scan]): Seq[Long] =
+    scans.collect { case c: GraftFileCounts => c.fileCounts }.transpose.map(_.sum)
+
+  /** The summed report of every scan in `df`'s physical plan; runtime
+    * filters count only once the plan ran.
+    */
+  def of(df: DataFrame): Map[String, Long] =
+    Names.zip(sum(new AdaptiveSparkPlanHelper {}.collect(
+      df.queryExecution.executedPlan) { case b: BatchScanExec => b.scan })).toMap
+}
+
+/** A scan reporting `fileCounts` (in `GraftScanMetrics.Names` order). */
+trait GraftFileCounts extends Scan {
+  def fileCounts: Seq[Long]
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    GraftScanMetrics.Names.map(new GraftFileCountMetric(_)).toArray
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    GraftScanMetrics.Names.zip(fileCounts).map { case (n, v) =>
+      new CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }: CustomTaskMetric
+    }.toArray
+}
+
+/** A summed file count. Spark re-creates a custom metric from its class
+  * name with no arguments only to sum task values, so one class serves
+  * every name.
+  */
+class GraftFileCountMetric(n: String) extends CustomSumMetric {
+  def this() = this(GraftScanMetrics.Total)
+  override def name(): String = n
+  override def description(): String = n.replace('_', ' ')
 }

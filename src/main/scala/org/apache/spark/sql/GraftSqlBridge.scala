@@ -21,33 +21,6 @@ object GraftSqlBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Resolve a predicate Column against `df`, split the OPTIMIZED
-    * filter condition into conjuncts, and translate each to a
-    * data-source [[org.apache.spark.sql.sources.Filter]]. Running the
-    * analyzer/optimizer first matters: a bare Column is an unresolved
-    * ColumnNode tree (no Catalyst comparisons to match on), and the
-    * optimizer folds literal casts and adds inferred IsNotNull
-    * conjuncts — the same predicate form a real scan would see pushed
-    * down. Conjuncts with no translation are silently dropped —
-    * callers use the result only to PRUNE (skip files), never to
-    * replace the full predicate, so dropping a conjunct is always
-    * safe.
-    */
-  def translateConjuncts(df: Dataset[Row],
-                         c: Column): Seq[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter}
-    def split(e: Expression): Seq[Expression] = e match {
-      case CatalystAnd(l, r) => split(l) ++ split(r)
-      case other => Seq(other)
-    }
-    val optimized = df.filter(c).queryExecution.optimizedPlan
-    val conds = optimized.collect { case LogicalFilter(cond, _) => cond }
-    conds.flatMap(split).flatMap(e =>
-      org.apache.spark.sql.execution.datasources.DataSourceStrategy
-        .translateFilter(e, supportNestedPredicatePushdown = false))
-  }
-
   /** Register a custom expression as a session-scoped SQL function. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

@@ -3,14 +3,21 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
+
+import org.apache.spark.sql.GraftScanMetrics
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 import graft.storage.{FileStats, TieredTable}
 
 /** Manifest-level file skipping: footer min/max stats collected at
   * commit into the `_graft_stats` sidecar, pruned at read. The
   * invariant under test everywhere: readColdWhere ≡ readCold().filter
-  * — pruning may only ever REMOVE work, never change an answer.
+  * — pruning may only ever REMOVE work, never change an answer. File
+  * counts come from the scan's own skip report ([[GraftScanMetrics]]).
   */
 class FileSkippingSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -20,10 +27,23 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     new TieredTable(spark, s"$dir/t", pk, mergeOnRead)
   }
 
-  private def sameAnswer(t: TieredTable, cond: org.apache.spark.sql.Column): Unit = {
+  /** (files_kept, files_total) of the scans in `df`'s plan; -1 when
+    * no graft scan reported.
+    */
+  private def skips(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val m = GraftScanMetrics.of(df)
+    (m.getOrElse(GraftScanMetrics.Kept, -1L), m.getOrElse(GraftScanMetrics.Total, -1L))
+  }
+
+  /** Asserts readColdWhere ≡ readCold().filter on `cond`; returns the
+    * pruned read's (files_kept, files_total).
+    */
+  private def sameAnswer(t: TieredTable, cond: org.apache.spark.sql.Column): (Long, Long) = {
     val full = t.readCold().filter(cond).collect().map(_.toSeq).sortBy(_.toString)
-    val pruned = t.readColdWhere(cond).collect().map(_.toSeq).sortBy(_.toString)
+    val where = t.readColdWhere(cond)
+    val pruned = where.collect().map(_.toSeq).sortBy(_.toString)
     assert(pruned.toSeq == full.toSeq)
+    skips(where)
   }
 
   test("disjoint-range commits: equality predicate opens one file") {
@@ -32,17 +52,15 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
       t.commitAppend(((b * 100) until (b * 100 + 100)).map(_.toLong)
         .toDF("id").coalesce(1))
     val cond = col("id") === 150L
-    val (kept, total) = t.skippingCounts(cond)
+    val (kept, total) = sameAnswer(t, cond)
     assert(total == 4)
     assert(kept == 1, "only the file whose [min,max] contains 150 survives")
-    sameAnswer(t, cond)
     // a range predicate spanning two commits keeps exactly those two
     val range = col("id") >= 150L && col("id") < 250L
-    assert(t.skippingCounts(range)._1 == 2)
-    sameAnswer(t, range)
+    assert(sameAnswer(t, range)._1 == 2)
     // an out-of-domain predicate keeps nothing and returns empty
     val none = col("id") > 10000L
-    assert(t.skippingCounts(none)._1 == 0)
+    assert(sameAnswer(t, none)._1 == 0)
     assert(t.readColdWhere(none).count() == 0)
     assert(t.readColdWhere(none).schema == t.readCold().schema)
   }
@@ -72,18 +90,14 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     t.commitAppend(batch("apple", "2024-01-01", "10.50"))
     t.commitAppend(batch("mango", "2024-06-01", "20.75"))
     t.commitAppend(batch("zebra", "2024-12-01", "30.99"))
-    assert(t.skippingCounts(col("name").startsWith("ma"))._1 == 1)
-    sameAnswer(t, col("name").startsWith("ma"))
-    assert(t.skippingCounts(col("d") > lit("2024-07-01").cast("date"))._1 == 1)
-    sameAnswer(t, col("d") > lit("2024-07-01").cast("date"))
+    assert(sameAnswer(t, col("name").startsWith("ma"))._1 == 1)
+    assert(sameAnswer(t, col("d") > lit("2024-07-01").cast("date"))._1 == 1)
     val pCond = col("p") === lit("20.75").cast("decimal(15,2)")
-    assert(t.skippingCounts(pCond)._1 == 1)
-    sameAnswer(t, pCond)
+    assert(sameAnswer(t, pCond)._1 == 1)
     // Spark writes INT96 timestamps by default → no usable stats →
     // every file kept, answer still exact
     val tsCond = col("ts") > lit("2024-07-01").cast("timestamp")
-    assert(t.skippingCounts(tsCond)._1 == 3)
-    sameAnswer(t, tsCond)
+    assert(sameAnswer(t, tsCond)._1 == 3)
   }
 
   test("conjunctions intersect skips; disjunctions union them") {
@@ -91,9 +105,8 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     for (b <- 0 until 3)
       t.commitAppend((0 until 10).map(i => (b * 10L + i, b.toLong))
         .toDF("id", "grp").coalesce(1))
-    assert(t.skippingCounts(col("id") < 10L && col("grp") === 0L)._1 == 1)
-    assert(t.skippingCounts(col("id") < 10L || col("id") > 25L)._1 == 2)
-    sameAnswer(t, col("id") < 10L || col("id") > 25L)
+    assert(sameAnswer(t, col("id") < 10L && col("grp") === 0L)._1 == 1)
+    assert(sameAnswer(t, col("id") < 10L || col("id") > 25L)._1 == 2)
   }
 
   test("null accounting: IsNull opens only files that hold nulls") {
@@ -102,10 +115,8 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
       .toDF("id", "v").coalesce(1))
     t.commitAppend(Seq((3L, Some("z")), (4L, None: Option[String]))
       .toDF("id", "v").coalesce(1))
-    assert(t.skippingCounts(col("v").isNull)._1 == 1)
-    sameAnswer(t, col("v").isNull)
-    assert(t.skippingCounts(col("v").isNotNull)._1 == 2)
-    sameAnswer(t, col("v").isNotNull)
+    assert(sameAnswer(t, col("v").isNull)._1 == 1)
+    assert(sameAnswer(t, col("v").isNotNull)._1 == 2)
   }
 
   test("missing sidecar means no skipping, never a wrong answer") {
@@ -118,10 +129,9 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     // id=2 lives in the now-statless file: it is kept conservatively,
     // while the second file ([100,200], stats intact) prunes away
     val cond = col("id") === 2L
-    val (kept, total) = t.skippingCounts(cond)
+    val (kept, total) = sameAnswer(t, cond)
     assert(total == 2 && kept == 1,
       "statless file is kept; the out-of-range file still prunes")
-    sameAnswer(t, cond)
   }
 
   test("tier() and compact() carry sidecars through") {
@@ -129,10 +139,10 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     t.appendLog(Seq(1L, 2L, 3L).toDF("id").coalesce(1))
     t.tier()
     t.commitAppend(Seq(100L, 200L).toDF("id").coalesce(1))
-    assert(t.skippingCounts(col("id") === 100L)._1 == 1)
+    assert(sameAnswer(t, col("id") === 100L)._1 == 1)
     t.compact(sortBy = Seq("id"))
     // post-compact: one dir, stats refreshed for the rewritten files
-    val (kept, total) = t.skippingCounts(col("id") > 1000L)
+    val (kept, _) = sameAnswer(t, col("id") > 1000L)
     assert(kept == 0)
     sameAnswer(t, col("id") === 2L)
   }
@@ -141,10 +151,9 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     val t = graft.queries.Lakehouse.demoTableByDate(spark, "/root/testdata/sf0.001")
     val cond = col("o_orderdate").between(
       lit("1997-06-01").cast("date"), lit("1998-06-01").cast("date"))
-    val (kept, total) = t.skippingCounts(cond)
+    val (kept, total) = sameAnswer(t, cond)
     assert(total == 3 && kept == 1,
       s"expected 1/3 files after date skipping, got $kept/$total")
-    sameAnswer(t, cond)
   }
 
   test("merge-on-read PK tables resolve versions before filtering") {
@@ -167,25 +176,36 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
         .toDF("id").coalesce(1))
     graft.plans.TieredCatalog.register("skipdb", "banded", t.tablePath)
     try {
-      val one = spark.sql(
+      val oneDf = spark.sql(
         "SELECT SUM(id) AS s FROM graft.skipdb.banded WHERE id BETWEEN 150 AND 160")
-        .head().getLong(0)
-      assert(one == (150L to 160L).sum)
-      assert(FileStats.lastSkipFor("skipdb.banded")
-        .contains((1, 4)), "the range scan opened 1 of 4 files")
+      assert(oneDf.collect().head.getLong(0) == (150L to 160L).sum)
+      assert(skips(oneDf) == ((1L, 4L)), "the range scan opened 1 of 4 files")
+      // the executed scan node carries the same report as SQL metrics
+      val node = new AdaptiveSparkPlanHelper {}
+        .collect(oneDf.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      assert(node.map(_.metrics(GraftScanMetrics.Kept).value) == Seq(1L))
+      assert(node.map(_.metrics(GraftScanMetrics.Total).value) == Seq(4L))
+      // and the SQL listener aggregates it (Spark re-creates the metric
+      // class by name to sum it)
+      val keptId = node.head.metrics(GraftScanMetrics.Kept).id
+      val store = spark.sharedState.statusStore
+      eventually(timeout(Span(10, Seconds))) {
+        val run = store.executionsList()
+          .filter(_.metrics.exists(_.accumulatorId == keptId))
+        assert(run.nonEmpty &&
+          store.executionMetrics(run.last.executionId).get(keptId).contains("1"))
+      }
       // predicate-free scans skip nothing and read everything
-      val full = spark.sql("SELECT SUM(id) AS s FROM graft.skipdb.banded")
-        .head().getLong(0)
-      assert(full == (0L until 400L).sum)
-      assert(FileStats.lastSkipFor("skipdb.banded").exists(_._1 == 4))
+      val fullDf = spark.sql("SELECT SUM(id) AS s FROM graft.skipdb.banded")
+      assert(fullDf.collect().head.getLong(0) == (0L until 400L).sum)
+      assert(skips(fullDf)._1 == 4)
       // hot-tail rows live in log segments with their own sidecars —
       // the union scan prunes them by the same stats
       t.appendLog(Seq(1000L, 1001L).toDF("id").coalesce(1))
-      val hot = spark.sql(
+      val hotDf = spark.sql(
         "SELECT COUNT(*) AS c FROM graft.skipdb.banded WHERE id >= 1000")
-        .head().getLong(0)
-      assert(hot == 2L)
-      assert(FileStats.lastSkipFor("skipdb.banded").contains((1, 5)),
+      assert(hotDf.collect().head.getLong(0) == 2L)
+      assert(skips(hotDf) == ((1L, 5L)),
         "only the hot segment survives an out-of-cold-range predicate")
     } finally graft.plans.TieredCatalog.unregister("skipdb", "banded")
   }
@@ -199,8 +219,8 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     // pre-zorder baseline is a single file — recluster into 4 z-range files
     t.compactZOrder(Seq("x", "y"), nFiles = 4, bits = 5)
     assert(t.currentSnapshot.get.op == "zorder")
-    val (kx, total) = t.skippingCounts(col("x") < 8L)
-    val (ky, _) = t.skippingCounts(col("y") < 8L)
+    val (kx, total) = sameAnswer(t, col("x") < 8L)
+    val (ky, _) = sameAnswer(t, col("y") < 8L)
     assert(total >= 4)
     assert(kx < total, s"x-range should prune ($kx/$total)")
     assert(ky < total, s"y-range should prune too ($ky/$total) — the z-curve property")
@@ -219,24 +239,20 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
       t.commitAppend((0 until 100).map(i => (i.toLong * 4 + b, s"u${i * 4 + b}"))
         .toDF("id", "name").coalesce(1))
     val probe = col("id") === 202L // lives only in commit b=2
-    val (kept, total) = t.skippingCounts(probe)
+    val (kept, total) = sameAnswer(t, probe)
     assert(total == 4 && kept == 1,
       s"bloom should isolate the one file holding 202 ($kept/$total)")
-    sameAnswer(t, probe)
     // string equality probes use the same machinery
-    assert(t.skippingCounts(col("name") === "u203")._1 == 1)
-    sameAnswer(t, col("name") === "u203")
+    assert(sameAnswer(t, col("name") === "u203")._1 == 1)
     // a value no file holds: usually 0 files (false positives allowed,
     // never false negatives — the answer stays exact)
     val missing = t.readColdWhere(col("id") === 999999L)
     assert(missing.count() == 0)
     // IN-lists union the per-value verdicts
     val inProbe = col("id").isin(202L, 203L)
-    assert(t.skippingCounts(inProbe)._1 == 2)
-    sameAnswer(t, inProbe)
+    assert(sameAnswer(t, inProbe)._1 == 2)
     // range predicates are NOT bloom-decidable and fall back to stats
-    assert(t.skippingCounts(col("id") > 2L)._1 == 4)
-    sameAnswer(t, col("id") > 2L)
+    assert(sameAnswer(t, col("id") > 2L)._1 == 4)
   }
 
   test("bloom skipping survives a table path with spaces (URI percent-encoding)") {
@@ -247,10 +263,9 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     for (b <- 0 until 4)
       t.commitAppend((0 until 100).map(i => i.toLong * 4 + b)
         .toDF("id").coalesce(1))
-    val (kept, total) = t.skippingCounts(col("id") === 202L)
+    val (kept, total) = sameAnswer(t, col("id") === 202L)
     assert(total == 4 && kept == 1,
       s"bloom must still prune under an encoded path ($kept/$total)")
-    sameAnswer(t, col("id") === 202L)
   }
 
   test("SQL DDL: bloom-columns property makes INSERTs write blooms and scans skip") {
@@ -262,15 +277,14 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
         spark.sql(s"""INSERT INTO graft.skipdb.bl
           SELECT id * 4 + $b AS id, concat('u', id * 4 + $b) AS name
           FROM range(100)""")
-      val got = spark.sql(
-        "SELECT name FROM graft.skipdb.bl WHERE id = 202").collect()
+      val lookup = spark.sql("SELECT name FROM graft.skipdb.bl WHERE id = 202")
+      val got = lookup.collect()
       assert(got.map(_.getString(0)).toSeq == Seq("u202"))
       // file count per insert tracks write parallelism; the invariant
       // is that the point lookup opens exactly ONE of them
-      assert(FileStats.lastSkipFor("skipdb.bl").exists(
-          s => s._1 == 1 && s._2 >= 3),
-        s"the SQL point lookup should open 1 bloom-guarded file, " +
-          s"got ${FileStats.lastSkipFor("skipdb.bl")}")
+      val (kept, total) = skips(lookup)
+      assert(kept == 1 && total >= 3,
+        s"the SQL point lookup should open 1 bloom-guarded file, got $kept/$total")
     } finally spark.sql("DROP TABLE graft.skipdb.bl")
   }
 
@@ -353,7 +367,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     // only the bloom can isolate a real key's file
     val t = graft.queries.Lakehouse.demoTableBloom(spark, dir)
     val k = t.readCold().agg(min(col("o_orderkey"))).head().getLong(0)
-    val (kept, total) = t.skippingCounts(col("o_orderkey") === k)
+    val (kept, total) = sameAnswer(t, col("o_orderkey") === k)
     assert(total == 3 && kept == 1,
       s"bloom should isolate key $k's file, got $kept/$total")
   }
@@ -371,14 +385,14 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
       partitionBy = Seq("grp"))
     try {
       // id range hits commit 2 only; partition filter narrows to grp=a
-      val r = spark.sql(
+      val rDf = spark.sql(
         """SELECT COUNT(*) AS c FROM graft.skipdb.pt
-          |WHERE grp = 'a' AND id >= 1000""".stripMargin).head().getLong(0)
-      assert(r == 50L)
-      val childSkips = (0 until 2).flatMap(i =>
-        FileStats.lastSkipFor(s"skipdb.pt#$i"))
-      assert(childSkips.exists(s => s._1 < s._2),
-        s"stats should prune the out-of-range commit's root, got $childSkips")
+          |WHERE grp = 'a' AND id >= 1000""".stripMargin)
+      assert(rDf.collect().head.getLong(0) == 50L)
+      // the composite scan reports the sum over its per-root scans
+      val (kept, total) = skips(rDf)
+      assert(kept < total,
+        s"stats should prune the out-of-range commit's root, got $kept/$total")
       // metadata aggregates on a partitioned table still answer
       // correctly: COUNT(*) is file-derivable, MIN(grp) is not
       val agg = spark.sql(
@@ -389,6 +403,20 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
         .contains("GraftMetadataAggScan"),
         "MIN(partition column) must not be served from file stats")
     } finally graft.plans.TieredCatalog.unregister("skipdb", "pt")
+  }
+
+  test("partitioned API tables prune per root through readColdWhere") {
+    val dir = Files.createTempDirectory("graft-ptw").toString
+    val t = new TieredTable(spark, s"$dir/t", partitionBy = Seq("grp"))
+    // four commits with disjoint id ranges, one file per partition each
+    for (b <- 0 until 4)
+      t.commitAppend((0 until 100).map(i =>
+        (b * 1000L + i, if (i % 2 == 0) "a" else "b")).toDF("id", "grp")
+        .repartition(1))
+    val (kept, total) = sameAnswer(t, col("id") >= 3000L)
+    assert(total == 8 && kept == 2,
+      s"only the last commit's two files hold ids >= 3000, got $kept/$total")
+    assert(sameAnswer(t, col("grp") === "a" && col("id") < 1000L)._1 == 2)
   }
 
   test("schema evolution: pruned-away late column comes back as typed null") {

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.TieredCatalog
-import graft.storage.{FileStats, TieredTable}
+import graft.storage.TieredTable
 
 /** The two planner faces a 100 TB table must present (r9):
   *
@@ -123,9 +123,9 @@ class RuntimeScanSpec extends AnyFunSuite with SparkSpec {
       val after = partitions(scan)
       assert(after < before,
         s"sidecar range check must drop the other commits ($after/$before)")
-      assert(FileStats.lastSkipFor("rtsdb.data@runtime")
-        .exists { case (k, n) => k == 1 && n == 3 },
-        s"runtime skip metric: ${FileStats.lastSkipFor("rtsdb.data@runtime")}")
+      val report = scan.reportDriverMetrics().map(m => m.name -> m.value).toMap
+      assert(report("files_runtime_kept") == 1 && report("files_kept") == 3,
+        s"runtime skip metric: $report")
     } finally TieredCatalog.unregister("rtsdb", "data")
   }
 

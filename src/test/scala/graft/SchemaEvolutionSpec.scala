@@ -40,6 +40,12 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSpec {
     val asOf1 = t.readColdAsOf(1L)
     assert(asOf1.columns.toSeq == Seq("id", "name"))
     assert(asOf1.select("name").as[String].collect().toSet == Set("x", "y"))
+    // file-skipping reads apply the mapping too: the old files' data
+    // surfaces under the new name, and predicates on it match
+    assert(t.readColdWhere(col("id") === 1L).select("id", "name")
+      .as[(Long, String)].collect().toSeq == Seq((1L, "x")))
+    assert(t.readColdWhere(col("name") === "x").select("id").as[Long]
+      .collect().toSeq == Seq(1L))
     // mixed vintages: files written AFTER the rename carry the new name
     // natively; one read coalesces both generations
     t.commitAppend(Seq((4L, "w")).toDF("id", "name"))
