@@ -1008,21 +1008,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
               org.apache.spark.sql.execution.datasources.v2
                 .DataSourceV2Relation.create(twin, None, None))
             if (!raw.columns.contains(t.SeqCol)) t.readUnion()
-            else {
-              // bucketed layout: window ALSO by the bucket column —
-              // semantically identical (the bucket is a function of
-              // the PK) but it lets the key-grouped scan SATISFY the
-              // window's clustering, so the resolution plans with no
-              // exchange (the zero-shuffle MoR read)
-              val keys =
-                if (t.bucketBy > 0 && raw.columns.contains(t.BucketCol))
-                  t.BucketCol +: entry.pk
-                else entry.pk
-              val r = graft.operators.Upsert.latestByKey(raw, keys,
-                Seq(org.apache.spark.sql.functions.col(t.SeqCol).desc))
-                .drop(t.SeqCol)
-              if (t.bucketBy > 0) r.drop(t.BucketCol) else r
-            }
+            else t.resolveVersions(raw)
           }
         Some(resolved)
       }

@@ -199,12 +199,6 @@ object IcebergExport {
         s"got $other")
   }
 
-  /** Hive-layout `%xx` path unescaping (the inverse of the escaping
-    * Spark applies writing `col=value/` directories).
-    */
-  private def unescapePathName(s: String): String =
-    PartitionPaths.unescape(s)
-
   /** The `col=value` partition values of one data file, parsed from its
     * path segments under the snapshot dir. `None` = the Hive null
     * partition. Every partition column must appear — a partitioned
@@ -223,7 +217,7 @@ object IcebergExport {
       val seg = segs.reverse.find(_.startsWith(pre)).getOrElse(
         throw new IllegalStateException(
           s"partition segment $c=... missing in $filePath"))
-      val raw = unescapePathName(seg.substring(pre.length))
+      val raw = PartitionPaths.unescape(seg.substring(pre.length))
       if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw)
     }
   }
@@ -239,14 +233,6 @@ object IcebergExport {
       Integer.valueOf(java.time.LocalDate.parse(raw).toEpochDay.toInt)
     case other => throw new IllegalArgumentException(s"unsupported $other")
   }
-
-  private def metadataDir(table: TieredTable): String =
-    s"${table.tablePath}/metadata"
-
-  /** Facade for a metadata path — java.nio locally, the object-store
-    * FS for `graftos://` tables ([[TableFs.forPath]]).
-    */
-  private def fsFor(path: String): TableFs = TableFs.forPath(path)
 
   /** Spark type → Iceberg schema-JSON type string (primitives) or
     * nested object. Field-ids are assigned depth-first starting from
@@ -519,12 +505,12 @@ object IcebergExport {
     try records.foreach(writer.append)
     finally writer.close()
     val bytes = buf.toByteArray
-    fsFor(path).writeBytes(path, bytes)
+    TableFs.forPath(path).writeBytes(path, bytes)
     bytes.length.toLong
   }
 
   private[graft] def readAvro(path: String): (Seq[GenericRecord], Map[String, String]) = {
-    val bytes = fsFor(path).readBytes(path).getOrElse(
+    val bytes = TableFs.forPath(path).readBytes(path).getOrElse(
       throw new java.io.FileNotFoundException(path))
     val reader = new DataFileReader[GenericRecord](
       new org.apache.avro.file.SeekableByteArrayInput(bytes),
@@ -560,7 +546,7 @@ object IcebergExport {
     import org.apache.avro.generic.GenericData
     import org.json4s.jackson.JsonMethods
     val mdir = s"$tablePath/metadata"
-    val fs = fsFor(mdir)
+    val fs = TableFs.forPath(mdir)
     val version = currentVersion(mdir).getOrElse(
       throw new IllegalStateException(
         s"$tablePath has no Iceberg export to attach deletion vectors to"))
@@ -658,7 +644,7 @@ object IcebergExport {
   private def loadExportState(mdir: String): Option[ExportState] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val body = fsFor(mdir).readString(s"$mdir/export-state.json")
+    val body = TableFs.forPath(mdir).readString(s"$mdir/export-state.json")
       .getOrElse(return None)
     try {
       val md = JsonMethods.parse(body)
@@ -676,7 +662,7 @@ object IcebergExport {
   }
 
   private def saveExportState(mdir: String, st: ExportState): Unit =
-    fsFor(mdir).writeString(s"$mdir/export-state.json", toJson(Map(
+    TableFs.forPath(mdir).writeString(s"$mdir/export-state.json", toJson(Map(
       "head" -> st.head,
       "retained" -> st.retained,
       "schemas" -> st.schemas.map { case (k, v) => k.toString -> v },
@@ -689,7 +675,7 @@ object IcebergExport {
   private def loadDirStats(mdir: String): Map[String, Seq[FileStat]] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val body = fsFor(mdir).readString(s"$mdir/dir-stats.json")
+    val body = TableFs.forPath(mdir).readString(s"$mdir/dir-stats.json")
       .getOrElse(return Map.empty)
     def ob(v: JValue): Option[Array[Byte]] = v match {
       case JString(s) => Some(java.util.Base64.getDecoder.decode(s))
@@ -724,15 +710,7 @@ object IcebergExport {
         })
       }
     }
-    fsFor(mdir).writeString(s"$mdir/dir-stats.json", toJson(obj))
-  }
-
-  /** Depth-first delete — eqdel entries are directories (hive-layout
-    * when partitioned), so the GC needs more than deleteIfExists.
-    */
-  private def deleteRecursively(p: String): Unit = {
-    fsFor(p).deleteRecursively(p)
-    ()
+    TableFs.forPath(mdir).writeString(s"$mdir/dir-stats.json", toJson(obj))
   }
 
   /** Export the table's retained snapshot history as an Iceberg v2
@@ -819,8 +797,8 @@ object IcebergExport {
     val head = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(
         s"no snapshot to export in ${table.tablePath}"))
-    val mdir = metadataDir(table)
-    val metaFs = fsFor(mdir)
+    val mdir = s"${table.tablePath}/metadata"
+    val metaFs = TableFs.forPath(mdir)
     metaFs.mkdirs(mdir)
 
     // merge-on-read deltas resolve via equality-delete files below.
@@ -1318,7 +1296,7 @@ object IcebergExport {
     // §1.2 step 1 — the first export of an n-snapshot MoR table
     // otherwise runs n sequential jobs, snapshot k re-scanning all k
     // of its dirs: O(n²) dir scans total, measured +60 % on the v3
-    // Scale100 export). One pass reads every dir ONCE, derives each
+    // export at 100×). One pass reads every dir ONCE, derives each
     // row's NEXT version sequence with a per-key window, and a row is
     // DV-deleted at snapshot s exactly when that next version is
     // visible at s (next_seq ≤ max dir-seq of s) — the same strict-`>`
@@ -1796,7 +1774,7 @@ object IcebergExport {
           val id = num.toLong
           val live =
             if (kind == "eqdel-") retainedSeqs(id) else retainedIds(id)
-          if (!live) deleteRecursively(s"$mdir/$name") // eqdel entries are dirs
+          if (!live) metaFs.deleteRecursively(s"$mdir/$name") // eqdel entries are dirs
         case _ =>
       }
     }
@@ -1820,7 +1798,7 @@ object IcebergExport {
   }
 
   private def currentVersion(mdir: String): Option[Int] =
-    fsFor(mdir).readString(s"$mdir/version-hint.text")
+    TableFs.forPath(mdir).readString(s"$mdir/version-hint.text")
       .flatMap(_.trim.toIntOption)
 
   // ---- the independent reader (the in-suite "second engine") ----
@@ -1850,7 +1828,7 @@ object IcebergExport {
     val version = currentVersion(mdir).getOrElse(
       throw new IllegalStateException(s"no version-hint.text under $mdir"))
     val mpath = s"$mdir/v${"%05d".format(version)}.metadata.json"
-    val md = JsonMethods.parse(fsFor(mpath).readString(mpath).getOrElse(
+    val md = JsonMethods.parse(TableFs.forPath(mpath).readString(mpath).getOrElse(
       throw new java.io.FileNotFoundException(mpath)))
     // The exported chain below this metadata version is immutable EXCEPT
     // the manifest list, which attachDeletionVectors rewrites in place
@@ -2380,7 +2358,7 @@ object IcebergExport {
     val version = currentVersion(mdir).getOrElse(
       throw new IllegalStateException(s"no version-hint.text under $mdir"))
     val mpath = s"$mdir/v${"%05d".format(version)}.metadata.json"
-    val md = JsonMethods.parse(fsFor(mpath).readString(mpath).getOrElse(
+    val md = JsonMethods.parse(TableFs.forPath(mpath).readString(mpath).getOrElse(
       throw new java.io.FileNotFoundException(mpath)))
     val curSchemaId = jLong(jsonAt(md, "current-schema-id"))
     val fieldId = jsonAt(md, "schemas").asInstanceOf[org.json4s.JArray]

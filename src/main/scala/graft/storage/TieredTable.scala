@@ -1018,7 +1018,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         dirs.flatMap { d =>
           val children = fs.listNames(d).filter(_.startsWith(c + "="))
           val bad = children.filterNot(ch =>
-            TieredTable.unescapePathName(ch.drop(c.length + 1)) == v)
+            PartitionPaths.unescape(ch.drop(c.length + 1)) == v)
           if (bad.nonEmpty) {
             fs.deleteRecursively(out)
             throw new IllegalArgumentException(
@@ -1047,7 +1047,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       .takeWhile(s => partitionBy.exists(c => s.startsWith(c + "=")))
       .map { s =>
         val c = partitionBy.find(c0 => s.startsWith(c0 + "=")).get
-        c -> TieredTable.unescapePathName(s.drop(c.length + 1))
+        c -> PartitionPaths.unescape(s.drop(c.length + 1))
       }.toMap
   }
 
@@ -1068,7 +1068,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       val (c, v) = target.find { case (c0, _) => !bound.contains(c0) }.get
       fs.listNames(entry).filter(_.startsWith(c + "=")).flatMap { ch =>
         val full = s"$entry/$ch"
-        if (TieredTable.unescapePathName(ch.drop(c.length + 1)) == v)
+        if (PartitionPaths.unescape(ch.drop(c.length + 1)) == v)
           keptOutsideTarget(full, target)
         else Seq(full)
       }
@@ -2363,19 +2363,22 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
 
   /** Last-write-wins over the raw version files, internals stripped:
     * the winner per PK by `__seq` desc, with the engine's `__seq` and
-    * (for a bucketed layout) `__bucket` columns never surfacing.
+    * (for a bucketed layout) `__bucket` columns never surfacing. A raw
+    * frame that carries `__bucket` is windowed by it too: the bucket is
+    * a function of the PK, so the answer is the same, and a key-grouped
+    * scan (the catalog's) then satisfies the window's clustering with no
+    * exchange.
     */
-  private def resolveVersions(raw: DataFrame): DataFrame = {
-    val r = Upsert.latestByKey(raw, pk, Seq(col(SeqCol).desc)).drop(SeqCol)
+  private[graft] def resolveVersions(raw: DataFrame): DataFrame = {
+    val keys =
+      if (bucketBy > 0 && raw.columns.contains(BucketCol)) BucketCol +: pk else pk
+    val r = Upsert.latestByKey(raw, keys, Seq(col(SeqCol).desc)).drop(SeqCol)
     if (bucketBy > 0) r.drop(BucketCol) else r
   }
 
   def readCold(): DataFrame = currentSnapshot match {
     case None => throw new IllegalStateException(s"no snapshot in $tablePath")
-    case Some(s) =>
-      val raw = readParquet(s.files)
-      if (pk.isEmpty || !mergeOnRead) raw
-      else resolveVersions(raw)
+    case Some(s) => readColdOf(s)
   }
 
   /** Cold read with manifest-level FILE SKIPPING: `readCold()
@@ -2422,8 +2425,11 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     */
   def readResolved(s: Snapshot): DataFrame = readColdOf(s)
 
-  /** [[readColdAsOf]] for a Snapshot IN HAND — what lets the change
-    * feed compute a commit's delta before its manifest publishes.
+  /** The one cold read of a snapshot: its files, with last-write-wins
+    * applied on a merge-on-read PK table. [[readCold]], [[readColdAsOf]]
+    * and [[readUnion]]'s cold leg read through it, and so does the
+    * change feed, which computes a commit's delta from a Snapshot in
+    * hand before its manifest publishes.
     */
   private def readColdOf(s: Snapshot): DataFrame = {
     val raw = readParquet(s.files)
@@ -2620,11 +2626,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     val hot =
       if (hotSegs.isEmpty) None
       else Some(readParquet(hotSegs.map(segPath(_))))
-    val cold = snap.map { s =>
-      val raw = readParquet(s.files)
-      if (pk.isEmpty || !mergeOnRead) raw
-      else resolveVersions(raw)
-    }
+    val cold = snap.map(readColdOf)
     (cold, hot) match {
       // allowMissingColumns: a column added mid-stream is null for the
       // tier that predates it
@@ -2750,14 +2752,6 @@ object TieredTable {
     * [[TieredTable.changeFeedHorizon]]).
     */
   private[storage] val ChangesHorizonKey = "changes-horizon"
-
-  /** Hive path-name unescape (`%2F` → `/`), the inverse of the
-    * escaping Spark's partitioned writer applies to `col=value`
-    * directory names — partition-dir comparisons must happen in the
-    * UNescaped value domain.
-    */
-  private[storage] def unescapePathName(s: String): String =
-    PartitionPaths.unescape(s)
 
   def apply(spark: SparkSession, path: String, pk: Seq[String] = Nil,
             mergeOnRead: Boolean = false,
