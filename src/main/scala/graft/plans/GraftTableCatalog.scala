@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.storage.TieredTable
+import graft.storage.{SessionMemo, TieredTable}
 
 /** A DataSource-V2 [[TableCatalog]] exposing tiered tables under a
   * three-level namespace (the reference's `catalog.database.table`,
@@ -161,12 +161,7 @@ class GraftTableCatalog extends TableCatalog
       case VersionSuffix(n, v) => (n, s"v$v") // time travel: VERSION AS OF
       case n => (n, "union")
     }
-    val e = TieredCatalog.lookup(db, base)
-      .getOrElse(throw new NoSuchTableException(
-        Seq(catName, db, ident.name)))
-    val t = TieredTable(spark, e.path, e.pk, e.mergeOnRead, e.partitionBy,
-      e.bloomCols, changeDataFeed = e.changeDataFeed, sortBy = e.sortBy,
-      bucketBy = bucketHint(e))
+    val (t, e) = tiered(db, base, ident.name)
     mode match {
       case "snapshots" =>
         new SnapshotsTable(ident.toString,
@@ -307,14 +302,14 @@ class GraftTableCatalog extends TableCatalog
         // view, substituted at analysis by [[GraftMorReadRule]]
         if (e.mergeOnRead)
           new GraftResolvedTable(ident.toString, () => t.readCold())
-        else parquet(spark, ident.toString, t.coldFiles)
+        else snapshotRead(spark, ident.toString, t, e, t.coldFiles)
       case v if v.startsWith("v") =>
         val id = v.drop(1).toLong
         val snap = t.snapshot(id).getOrElse(
           throw new NoSuchTableException(Seq(catName, db, ident.name)))
         if (e.mergeOnRead)
           new GraftResolvedTable(ident.toString, () => t.readColdAsOf(id))
-        else parquet(spark, ident.toString, snap.files)
+        else snapshotRead(spark, ident.toString, t, e, snap.files)
       case _ =>
         // Iceberg's `spark.wap.branch` READ semantics: while
         // `spark.graft.wap.branch` is set and THIS table has the
@@ -346,7 +341,7 @@ class GraftTableCatalog extends TableCatalog
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     val spark = SparkSession.active
-    val t = tiered(ident)
+    val (t, e) = tiered(ident)
     // numeric → snapshot id; anything else → a snapshot TAG, then a
     // staged WAP commit, then a BRANCH (fork parent + its appends) —
     // Iceberg's `VERSION AS OF 'name'` ref resolution
@@ -360,7 +355,7 @@ class GraftTableCatalog extends TableCatalog
     if (t.mergeOnRead)
       new GraftResolvedTable(s"${ident.toString}@v$version",
         () => t.readResolved(snap))
-    else parquet(spark, s"${ident.toString}@v$version", snap.files)
+    else snapshotRead(spark, s"${ident.toString}@v$version", t, e, snap.files)
   }
 
   /** SQL time travel, `… TIMESTAMP AS OF <ts>`: the latest snapshot
@@ -368,7 +363,7 @@ class GraftTableCatalog extends TableCatalog
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val spark = SparkSession.active
-    val t = tiered(ident)
+    val (t, e) = tiered(ident)
     val id = (1L to t.latestSnapshotId).flatMap(t.snapshot)
       .filter(_.committedAt * 1000L <= timestampMicros)
       .map(_.id).maxOption.getOrElse(
@@ -378,22 +373,27 @@ class GraftTableCatalog extends TableCatalog
     if (t.mergeOnRead)
       new GraftResolvedTable(s"${ident.toString}@t$timestampMicros",
         () => t.readColdAsOf(id))
-    else parquet(spark, s"${ident.toString}@t$timestampMicros",
+    else snapshotRead(spark, s"${ident.toString}@t$timestampMicros", t, e,
       t.snapshot(id).get.files)
   }
 
-  /** The TieredTable behind a BASE table identifier (no suffix modes).
-    * Merge-on-read callers get their file lists resolved through
-    * [[GraftResolvedTable]] — never as a raw scan.
+  /** The TieredTable and registry entry behind a BASE table identifier
+    * (no suffix modes). Merge-on-read callers get their file lists
+    * resolved through [[GraftResolvedTable]] — never as a raw scan.
     */
-  private def tiered(ident: Identifier): TieredTable = {
-    val db = ident.namespace().mkString(".")
-    val e = TieredCatalog.lookup(db, ident.name)
-      .getOrElse(throw new NoSuchTableException(
-        Seq(catName, db, ident.name)))
-    TieredTable(SparkSession.active, e.path, e.pk, e.mergeOnRead,
-      e.partitionBy, changeDataFeed = e.changeDataFeed, sortBy = e.sortBy,
-      bucketBy = bucketHint(e))
+  private def tiered(ident: Identifier): (TieredTable, TieredCatalog.Entry) =
+    tiered(ident.namespace().mkString("."), ident.name, ident.name)
+
+  /** The registered table `db`.`base`; `shown` is the name a miss
+    * reports.
+    */
+  private def tiered(db: String, base: String, shown: String)
+      : (TieredTable, TieredCatalog.Entry) = {
+    val e = TieredCatalog.lookup(db, base)
+      .getOrElse(throw new NoSuchTableException(Seq(catName, db, shown)))
+    (TieredTable(SparkSession.active, e.path, e.pk, e.mergeOnRead,
+      e.partitionBy, e.bloomCols, changeDataFeed = e.changeDataFeed,
+      sortBy = e.sortBy, bucketBy = bucketHint(e)), e)
   }
 
   /** The companion's bucket-layout hint from a registry entry: a known
@@ -407,15 +407,18 @@ class GraftTableCatalog extends TableCatalog
     else if (e.bucketBy == 0) -1
     else 0
 
-  private def parquet(spark: SparkSession, name: String,
-                      paths: Seq[String]): Table =
-    // mergeSchema so SQL reads of union/cold/time-travel paths agree
-    // with the API's readUnion/readCold on schema-evolved tables —
-    // without it the scan picks one file's footer schema and silently
-    // omits later-added columns.
-    ParquetTable(name, spark,
-      new CaseInsensitiveStringMap(Map("mergeSchema" -> "true").asJava),
-      paths, None, classOf[ParquetFileFormat])
+  /** A committed snapshot's `files` (time travel, `$cold`) as a
+    * read-only relation: the base table's scan over those files — per-
+    * root planning on a partitioned table, file skipping, scan metrics,
+    * the memoized file schema merged over every file — and no write,
+    * delete or row-level verb, which would reach the live table.
+    */
+  private def snapshotRead(spark: SparkSession, name: String, t: TieredTable,
+                           e: TieredCatalog.Entry, files: Seq[String]): Table =
+    new GraftSnapshotTable(new TieredSqlTable(name, spark, t, e,
+      readFilesOverride = Some(files),
+      schemaOverride = Option.when(files.nonEmpty)(TieredSqlTable.fileSchema(
+        spark, files, TieredSqlTable.layoutCols(t)))))
 
   /** `CREATE TABLE graft.<db>.<t> (cols) [TBLPROPERTIES (...)]` — the
     * reference workload's DDL verb (README.md:139-171). Supported
@@ -904,11 +907,31 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
   // streaming sink keep operating on the real table
   private val paths = readFilesOverride.getOrElse(t.unionPaths)
 
-  private val readOpts =
-    new CaseInsensitiveStringMap(Map("mergeSchema" -> "true").asJava)
+  private val readOpts = TieredSqlTable.options(TieredSqlTable.ReadOpts)
+
+  /** LAYOUT columns of the on-disk Hive dirs ([[TieredSqlTable.layoutCols]]). */
+  private val layoutCols: Seq[String] = TieredSqlTable.layoutCols(t)
+
+  /** Read options of one root of a PARTITIONED table: its own
+    * partition-discovery base ([[TieredSqlTable.rootOptions]]).
+    */
+  private def rootOpts(p: String): CaseInsensitiveStringMap =
+    TieredSqlTable.options(TieredSqlTable.rootOptions(p, layoutCols))
+
+  /** The schema every parquet table below reads with: the declared one,
+    * else the files' own, inferred once per state of the read roots
+    * ([[TieredSqlTable.fileSchema]]) — so planning a repeat read never
+    * opens a footer.
+    */
+  private lazy val readSchema: StructType = declared.getOrElse {
+    if (paths.isEmpty) throw new IllegalStateException(
+      s"empty table $tableName has no persisted schema")
+    TieredSqlTable.fileSchema(spark, paths, layoutCols)
+  }
 
   private lazy val inner =
-    ParquetTable(tableName, spark, readOpts, paths, declared,
+    ParquetTable(tableName, spark, readOpts, paths,
+      if (paths.isEmpty) declared else Some(readSchema),
       classOf[ParquetFileFormat])
 
   /** Per-root parquet tables for PARTITIONED tables: Spark cannot run
@@ -917,33 +940,9 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
     * becomes its own child table and scans are concatenated by
     * [[org.apache.spark.sql.GraftCompositeScanBuilder]].
     */
-  /** Partition-discovery base of a union-path entry: a `col=value`
-    * SUBDIR entry (kept partition of a partition-scoped overwrite)
-    * anchors at its snapshot root so the bound partition columns still
-    * surface; a plain dir entry is its own base.
-    */
-  /** LAYOUT columns of the on-disk Hive dirs: the user's PARTITIONED
-    * BY, or the engine's reserved bucket column when the table is a
-    * bucketed merge-on-read layout ('write.bucket-by').
-    */
-  private val layoutCols: Seq[String] =
-    if (t.bucketBy > 0) Seq(t.BucketCol)
-    // HISTORICAL cols, not just the current spec's: a DROP PARTITION
-    // FIELD leaves live pre-drop hive dirs whose values exist only in
-    // `col=value` names — per-root discovery (and subdir-ref base
-    // stripping) must still recognize them even when the current spec
-    // is narrower (or empty, where the single multi-root scan would
-    // die on "conflicting directory structures")
-    else t.historicalPartitionCols
-
-  private def partBase(p: String): String =
-    graft.storage.PartitionPaths.base(p, layoutCols)
-
   private lazy val partRoots = paths.map(p =>
-    ParquetTable(tableName, spark,
-      new CaseInsensitiveStringMap(
-        (readOpts.asScala ++ Map("basePath" -> partBase(p))).asJava),
-      Seq(p), declared, classOf[ParquetFileFormat]))
+    ParquetTable(tableName, spark, rootOpts(p), Seq(p), Some(readSchema),
+      classOf[ParquetFileFormat]))
 
   override def name(): String = tableName
 
@@ -954,25 +953,15 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
     * wrong slots. Reads are unaffected — scan output is reconciled to
     * the relation schema by NAME (V2ScanRelationPushDown projects).
     */
-  override def schema(): StructType = {
-    val base = declared.getOrElse {
-      if (paths.isEmpty) throw new IllegalStateException(
-        s"empty table $tableName has no persisted schema")
-      // partitioned tables can't run partition discovery across several
-      // Hive roots in one scan — read the schema from one root (they
-      // share the layout; cross-root schema evolution needs a declared
-      // schema via CREATE TABLE)
-      if (layoutCols.isEmpty) inner.schema else partRoots.head.schema
-    }
+  override def schema(): StructType =
     // merge-on-read: the SQL face is the RESOLVED view — the internal
     // version-sequence and bucket-layout columns never surface (an
     // API-registered table infers its schema from the delta parquet,
     // which carries them)
     if (entry.mergeOnRead && !rawVersions)
-      StructType(base.filterNot(f =>
+      StructType(readSchema.filterNot(f =>
         f.name == t.SeqCol || (t.bucketBy > 0 && f.name == t.BucketCol)))
-    else base
-  }
+    else readSchema
 
   /** Merge-on-read resolution target, consumed by
     * [[GraftMorReadRule]]: the last-write-wins view this relation's
@@ -1087,8 +1076,8 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
       : org.apache.spark.sql.connector.read.Scan = {
     val s = schema()
     val scans = dirs.map { d =>
-      val opts = new CaseInsensitiveStringMap(
-        (readOpts.asScala ++ Map("basePath" -> d)).asJava)
+      val opts = TieredSqlTable.options(
+        TieredSqlTable.ReadOpts + ("basePath" -> d))
       ParquetTable(tableName, spark, opts, Seq(d), Some(s),
         classOf[ParquetFileFormat])
         .newScanBuilder(opts).build()
@@ -1137,10 +1126,8 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
       // discovery alive when a root's scan is rebuilt over a file list
       val wrapped = paths.zip(partRoots).zipWithIndex.map {
         case ((root, tbl), i) =>
-          val opts = new CaseInsensitiveStringMap(
-            (readOpts.asScala ++ Map("basePath" -> partBase(root))).asJava)
           new org.apache.spark.sql.GraftSkippingScanBuilder(spark,
-            s"$tableName#$i", Seq(root), schema(), opts,
+            s"$tableName#$i", Seq(root), schema(), rootOpts(root),
             tbl.newScanBuilder(options), layoutCols,
             streamFactory = Some(_ => logTailStream(options)))
       }
@@ -1342,6 +1329,57 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
 object TieredSqlTable {
   import org.apache.spark.sql.{functions => F}
   import org.apache.spark.sql.sources._
+
+  /** Every catalog parquet read merges the footers of its files, so SQL
+    * reads of union, cold and time-travel paths agree with the API's
+    * reads on schema-evolved tables.
+    */
+  val ReadOpts: Map[String, String] = Map("mergeSchema" -> "true")
+
+  def options(m: Map[String, String]): CaseInsensitiveStringMap =
+    new CaseInsensitiveStringMap(m.asJava)
+
+  /** LAYOUT columns of `t`'s on-disk Hive dirs: the engine's reserved
+    * bucket column for a bucketed merge-on-read layout
+    * ('write.bucket-by'), else every column that was EVER a partition
+    * column — a DROP PARTITION FIELD leaves live pre-drop hive dirs
+    * whose values exist only in `col=value` names, and per-root
+    * discovery (and subdir-ref base stripping) must still recognize
+    * them even when the current spec is narrower or empty.
+    */
+  def layoutCols(t: TieredTable): Seq[String] =
+    if (t.bucketBy > 0) Seq(t.BucketCol) else t.historicalPartitionCols
+
+  /** Read options of one root of a Hive-layout table: the root is its
+    * own partition-discovery base, except a `col=value` SUBDIR entry
+    * (kept partition of a partition-scoped overwrite), which anchors at
+    * its snapshot root so the bound partition columns still surface.
+    */
+  def rootOptions(root: String, layout: Seq[String]): Map[String, String] =
+    ReadOpts + ("basePath" -> graft.storage.PartitionPaths.base(root, layout))
+
+  /** The file schema of parquet `roots` as the catalog reads them, with
+    * `layout` their Hive layout columns: all footers merged for a flat
+    * table; for a Hive layout each root discovered from its own base
+    * and the roots merged by name in root order, so a column only some
+    * roots carry still surfaces (as nulls in the others). Each
+    * inference is a footer job; it runs once per state of its roots
+    * and read options ([[SessionMemo]]), and its result is what the
+    * catalog's parquet tables take as their user-specified schema.
+    */
+  def fileSchema(spark: SparkSession, roots: Seq[String],
+                 layout: Seq[String]): StructType = {
+    def infer(rs: Seq[String], opts: Map[String, String]): StructType =
+      SessionMemo(spark, "schema",
+        rs ++ opts.toSeq.sorted.map { case (k, v) => s"$k=$v" }, rs) {
+        ParquetTable(rs.mkString(","), spark, options(opts), rs, None,
+          classOf[ParquetFileFormat]).schema
+      }
+    if (layout.isEmpty) infer(roots, ReadOpts)
+    else roots.map(r => infer(Seq(r), rootOptions(r, layout))).reduce { (a, b) =>
+      StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))
+    }
+  }
 
   /** A snapshot's cold `files` read with `schema` through the same
     * DSv2 scan as SQL reads — how [[TieredTable.readColdWhere]] prunes
@@ -1679,6 +1717,21 @@ class SnapshotsReaderFactory extends PartitionReaderFactory {
       }
       override def close(): Unit = ()
     }
+}
+
+/** A committed snapshot's files as a read-only relation (time travel
+  * and `$cold` on a table without merge-on-read): scans plan through the
+  * base table's [[TieredSqlTable]]; writes, deletes and row-level verbs
+  * have no way in.
+  */
+class GraftSnapshotTable(read: TieredSqlTable) extends Table with SupportsRead {
+  override def name(): String = read.name()
+  override def schema(): StructType = read.schema()
+  override def partitioning(): Array[Transform] = read.partitioning()
+  override def capabilities(): util.Set[TableCapability] =
+    Set(TableCapability.BATCH_READ).asJava
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    read.newScanBuilder(options)
 }
 
 /** Read-only DSv2 face of a RESOLVED merge-on-read view — SQL time

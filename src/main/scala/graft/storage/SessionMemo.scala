@@ -5,18 +5,20 @@ import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The one session-scoped memo of resolved relations: fixture loads
   * ([[graft.tables.Tables]]), lake scans ([[TieredTable]]), Iceberg
-  * reads ([[IcebergExport]]) and the materialized pair frames of
-  * [[graft.queries.Pipeline]]. Re-resolving a relation re-pays the
-  * driver-side listing, the footer schema read (a distributed job under
-  * `mergeSchema`) and the analysis; a session that reads the same
-  * tables hundreds of times pays it once per input state instead.
-  * Values are logical plans except where the caller itself cached them,
-  * so every action still scans the files.
+  * reads ([[IcebergExport]]), the materialized pair frames of
+  * [[graft.queries.Pipeline]], and the file schemas the SQL catalog's
+  * parquet tables read with ([[graft.plans.TieredSqlTable]]).
+  * Re-resolving a relation re-pays the driver-side listing, the footer
+  * schema read (a distributed job under `mergeSchema`) and the
+  * analysis; a session that reads the same tables hundreds of times
+  * pays it once per input state instead. Relation values are logical
+  * plans except where the caller itself cached them, so every action
+  * still scans the files.
   *
   * One freshness rule: an entry is valid while every input it was
   * derived from stats the same — path, size, nanosecond mtime and file
@@ -29,15 +31,15 @@ import org.apache.spark.storage.StorageLevel
 object SessionMemo {
 
   /** Entries across all sessions. Peak live entries measured with no
-    * bound: 986 over the full test suite (one session, 1,034 builds) and
-    * 21 over a `lake_read` benchmark run. 1024 holds either run whole, so
-    * neither evicts; a longer session is bounded here instead of growing
-    * with every commit.
+    * bound, file schemas included: 1,326 over the full test suite (516
+    * tests, one session) and 26 over a `lake_read` benchmark run. 2048
+    * holds either run whole, so neither evicts; a longer session is
+    * bounded here instead of growing with every commit.
     */
-  val Capacity = 1024
+  val Capacity = 2048
 
   private case class Key(spark: SparkSession, namespace: String, parts: Seq[String])
-  private case class Entry(stamp: Seq[Any], value: DataFrame)
+  private case class Entry(stamp: Seq[Any], value: AnyRef)
 
   // access order: iteration starts at the least recently used entry
   private val entries = new java.util.LinkedHashMap[Key, Entry](64, 0.75f, true) {
@@ -58,8 +60,8 @@ object SessionMemo {
   /** The value for (`namespace`, `keyParts`) in `spark`, built by `build`
     * unless an entry stamped with the current state of `inputs` exists.
     */
-  def apply(spark: SparkSession, namespace: String, keyParts: Seq[String],
-            inputs: Seq[String])(build: => DataFrame): DataFrame =
+  def apply[V <: AnyRef](spark: SparkSession, namespace: String, keyParts: Seq[String],
+                         inputs: Seq[String])(build: => V): V =
     stampOf(inputs) match {
       case None => build
       case Some(stamp) =>
@@ -71,13 +73,13 @@ object SessionMemo {
         cached match {
           case Some(e) =>
             hitCount.incrementAndGet()
-            e.value
+            e.value.asInstanceOf[V]
           case None =>
             missCount.incrementAndGet()
-            val df = build
-            entries.synchronized(Option(entries.put(key, Entry(stamp, df))))
+            val v = build
+            entries.synchronized(Option(entries.put(key, Entry(stamp, v))))
               .foreach(release)
-            df
+            v
         }
     }
 
@@ -94,8 +96,10 @@ object SessionMemo {
   private def dropStopped(): Unit =
     entries.keySet.removeIf(_.spark.sparkContext.isStopped)
 
-  private def release(e: Entry): Unit =
-    if (e.value.storageLevel != StorageLevel.NONE) e.value.unpersist()
+  private def release(e: Entry): Unit = e.value match {
+    case ds: Dataset[_] if ds.storageLevel != StorageLevel.NONE => ds.unpersist()
+    case _ =>
+  }
 
   /** Per input: (path, size, mtime ns, file key); None when any input is
     * non-local or absent.

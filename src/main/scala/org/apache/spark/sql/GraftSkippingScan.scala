@@ -457,56 +457,59 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
         partitionCols.forall(visible)
       }
 
-  /** Entries grouped by typed partition key (raw segment strings as the
-    * group key — [[InternalRow]] has no value equality); None when any
-    * file can't prove its key.
+  /** Distinct partition keys among the entries, told apart by their raw
+    * `col=value` segments ([[InternalRow]] has no value equality); None
+    * when any file can't prove its typed key.
     */
-  private def keyedGroups(entries: Seq[FileStats.FileEntry])
-      : Option[Seq[(InternalRow, Seq[String])]] = {
-    val groups = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[String], (InternalRow, scala.collection.mutable.Buffer[String])]
-    entries.foreach { case (path, _, _) =>
-      val raw = partitionCols.map(c =>
-        GraftPartitionPathFilter.segmentOf(path, c).getOrElse(return None))
-      groups.get(raw) match {
-        case Some((_, files)) => files += path
-        case None =>
-          val key = GraftPartitionKeys.typedKey(raw, partitionCols,
-            fullSchema).getOrElse(return None)
-          groups(raw) = (key, scala.collection.mutable.Buffer(path))
-      }
-    }
-    Some(groups.values.map { case (k, fs) => (k, fs.toSeq) }.toSeq)
+  private def keyCount(entries: Seq[FileStats.FileEntry]): Option[Int] = {
+    val raws = entries.map(e => rawKey(e._1)).distinct
+    if (raws.forall(_.flatMap(GraftPartitionKeys.typedKey(_, partitionCols,
+        fullSchema)).isDefined)) Some(raws.size)
+    else None
+  }
+
+  /** The file's `col=value` segment per partition column, in order. */
+  private def rawKey(path: String): Option[Seq[String]] = {
+    val segs = partitionCols.map(GraftPartitionPathFilter.segmentOf(path, _))
+    if (segs.forall(_.isDefined)) Some(segs.flatten) else None
   }
 
   override def outputPartitioning(): Partitioning =
-    if (spjUsable) keyedGroups(keptEntries) match {
-      case Some(groups) if groups.nonEmpty =>
+    if (spjUsable) keyCount(keptEntries) match {
+      case Some(n) if n > 0 =>
         new KeyGroupedPartitioning(
           partitionCols.map(c => Expressions.identity(c):
             org.apache.spark.sql.connector.expressions.Expression).toArray,
-          groups.size)
+          n)
       case _ => new UnknownPartitioning(0)
     } else new UnknownPartitioning(0)
 
   override def toBatch: Batch = this
+
+  /** The current scan's own splits. Key-grouped (SPJ): each file split
+    * is cut by partition key, so every split holds one key's files and
+    * carries that key's typed value for Spark's partition grouping — no
+    * per-key scan is built, and the current scan's reader factory
+    * serves every split ([[GraftKeyedReaderFactory]] unwraps the key).
+    * A file whose key can't be proved leaves the splits unkeyed.
+    */
   override def planInputPartitions(): Array[InputPartition] = {
-    if (spjUsable) {
-      val entries = runtimeEntries.getOrElse(keptEntries)
-      keyedGroups(entries) match {
-        case Some(groups) if groups.nonEmpty =>
-          // one rebuilt child scan per key: every wrapped split carries
-          // the group's typed key for Spark's partition grouping (the
-          // per-group reader parameters are identical, so one factory
-          // serves them all — see createReaderFactory)
-          return groups.flatMap { case (key, files) =>
-            rebuild(files).toBatch.planInputPartitions()
-              .map(GraftKeyedPartition(key, _))
-          }.toArray
-        case _ =>
-      }
+    val splits = currentScan.toBatch.planInputPartitions()
+    if (!spjUsable) return splits
+    val keyed = splits.toSeq.flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+        val raws = fp.files.toSeq.map(f => rawKey(f.toPath.toString))
+        raws.distinct.map { raw =>
+          val key = raw.flatMap(GraftPartitionKeys.typedKey(_, partitionCols,
+            fullSchema)).getOrElse(return splits)
+          (key, fp.files.toSeq.zip(raws).collect { case (f, `raw`) => f })
+        }
+      case _ => return splits
     }
-    currentScan.toBatch.planInputPartitions()
+    keyed.zipWithIndex.map { case ((key, files), i) =>
+      GraftKeyedPartition(key,
+        org.apache.spark.sql.execution.datasources.FilePartition(i, files.toArray))
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     GraftKeyedReaderFactory(currentScan.toBatch.createReaderFactory())

@@ -1,0 +1,200 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftCompositeKeyedPartition, GraftKeyedPartition,
+  GraftRuntimeScan, GraftTestV2, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, TableCatalog}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory,
+  Scan, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.TieredCatalog
+import graft.storage.{FileStats, SessionMemo, TieredTable}
+
+/** How the SQL catalog plans scans from what the session already knows:
+  * snapshot reads of a partitioned table plan per root; a repeat read of
+  * an unchanged table infers no file schema again (no footer job); and
+  * key-grouped scans split their own file splits by key.
+  */
+class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
+  import spark.implicits._
+
+  private def sorted(df: DataFrame): Seq[Row] =
+    df.select("id", "k").collect().toSeq.sortBy(_.getLong(0))
+
+  /** A log table partitioned by `k`, tiered twice: snapshot 2 has two
+    * Hive-layout roots.
+    */
+  private def tieredTwice(path: String): TieredTable = {
+    val t = TieredTable(spark, path, partitionBy = Seq("k"))
+    t.appendLog((0L until 100L).map(i => (i, s"k${i % 4}")).toDF("id", "k"))
+    t.tier()
+    t.appendLog((100L until 200L).map(i => (i, s"k${i % 4}")).toDF("id", "k"))
+    t.tier()
+    t
+  }
+
+  test("partitioned time travel over two snapshot roots: every SQL form " +
+       "equals readColdAsOf") {
+    val dir = Files.createTempDirectory("graft-plan-tt").toString
+    val t = tieredTwice(s"$dir/p")
+    assert(t.snapshot(2L).get.files.size == 2)
+    TieredCatalog.register("plandb", "p", t.tablePath, partitionBy = Seq("k"))
+    try {
+      val want = sorted(t.readColdAsOf(2L))
+      assert(want.size == 200)
+      val ts = java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
+        .format(java.time.Instant.ofEpochMilli(t.snapshot(2L).get.committedAt))
+      Seq(
+        "VERSION AS OF 2" -> spark.sql("SELECT * FROM graft.plandb.p VERSION AS OF 2"),
+        "TIMESTAMP AS OF" ->
+          spark.sql(s"SELECT * FROM graft.plandb.p TIMESTAMP AS OF '$ts'"),
+        "p$cold" -> spark.table("graft.plandb.`p$cold`"),
+        "p__cold" -> spark.table("graft.plandb.p__cold"),
+        "p__v2" -> spark.table("graft.plandb.p__v2")
+      ).foreach { case (form, df) =>
+        assert(sorted(df) == want, s"$form differs from readColdAsOf(2)")
+      }
+      // a snapshot read is read-only: a write through it would reach
+      // the live table
+      intercept[Exception](spark.sql(
+        "INSERT INTO graft.plandb.p__v2 VALUES (999, 'k0')"))
+      assert(t.readColdAsOf(2L).count() == 200)
+    } finally TieredCatalog.unregister("plandb", "p")
+  }
+
+  /** Analysis plus physical planning of `df`, run twice: the second must
+    * start no Spark job (no footer read, no listing job).
+    */
+  private def assertNoJobsOnRepeat(what: String)(df: => DataFrame): Unit = {
+    def plan(): Unit = df.queryExecution.executedPlan
+    plan()
+    val (out, m) = Measure(spark)(plan())
+    out.get
+    assert(m.jobs == 0, s"$what: a repeat analysis and planning ran ${m.jobs} job(s)")
+  }
+
+  test("repeat reads of an unchanged table run no footer job; an added " +
+       "column shows on the next read") {
+    val dir = Files.createTempDirectory("graft-plan-jobs").toString
+    val plain = TieredTable(spark, s"$dir/plain")
+    plain.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+    plain.commitAppend(Seq((3L, "c")).toDF("id", "k"))
+    val part = tieredTwice(s"$dir/part")
+    val mor = TieredTable(spark, s"$dir/mor", pk = Seq("id"), mergeOnRead = true)
+    mor.commitUpsert(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+    mor.commitUpsert(Seq((2L, "c")).toDF("id", "k"))
+    TieredCatalog.register("plandb", "plain", plain.tablePath)
+    TieredCatalog.register("plandb", "part", part.tablePath, partitionBy = Seq("k"))
+    TieredCatalog.register("plandb", "mor", mor.tablePath, pk = Seq("id"),
+      mergeOnRead = true)
+    try {
+      assertNoJobsOnRepeat("plain")(spark.table("graft.plandb.plain"))
+      assertNoJobsOnRepeat("partitioned")(
+        spark.sql("SELECT k, COUNT(*) FROM graft.plandb.part GROUP BY k"))
+      assertNoJobsOnRepeat("merge-on-read")(spark.table("graft.plandb.mor"))
+      assertNoJobsOnRepeat("VERSION AS OF")(
+        spark.sql("SELECT * FROM graft.plandb.part VERSION AS OF 1"))
+      assert(spark.table("graft.plandb.mor").count() == 2)
+
+      val misses = SessionMemo.misses
+      plain.commitAppend(Seq((4L, "d", 40L)).toDF("id", "k", "extra"))
+      val after = spark.table("graft.plandb.plain")
+      assert(after.columns.toSeq == Seq("id", "k", "extra"))
+      assert(after.where("extra = 40").count() == 1)
+      assert(SessionMemo.misses > misses)
+    } finally Seq("plain", "part", "mor").foreach(TieredCatalog.unregister("plandb", _))
+  }
+
+  private def v2Scan(name: String): Scan = {
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[TableCatalog]
+    cat.loadTable(Identifier.of(Array("plandb"), name)).asInstanceOf[SupportsRead]
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+  }
+
+  private def local(p: String): String = new Path(p).toUri.getPath
+
+  /** (key, files) per split; fails on an unkeyed split. */
+  private def keyedSplits(scan: Scan): Seq[(String, Seq[String])] =
+    scan.toBatch.planInputPartitions().toSeq.map { p =>
+      def keyed(q: InputPartition): GraftKeyedPartition = q match {
+        case k: GraftKeyedPartition => k
+        case GraftCompositeKeyedPartition(_, inner) => keyed(inner)
+        case other => fail(s"unkeyed split $other")
+      }
+      val k = keyed(p)
+      (k.partitionKey().getUTF8String(0).toString,
+        k.inner.asInstanceOf[FilePartition].files.toSeq.map(f => local(f.toPath.toString)))
+    }
+
+  /** Every split holds files of exactly its own key, and the splits
+    * together hold exactly `want`.
+    */
+  private def assertKeyedSplits(scan: Scan, want: Seq[String]): Unit = {
+    val splits = keyedSplits(scan)
+    splits.foreach { case (key, files) =>
+      assert(files.nonEmpty)
+      assert(files.forall(_.contains(s"/k=$key/")), s"split of $key holds $files")
+    }
+    assert(splits.flatMap(_._2).sorted == want.map(local).sorted)
+  }
+
+  test("key-grouped planning splits the scan's own file splits by key, " +
+       "before and after a runtime filter") {
+    val dir = Files.createTempDirectory("graft-plan-keyed").toString
+    val t = TieredTable(spark, s"$dir/t", partitionBy = Seq("k"))
+    // several files per key and root
+    for (c <- 0 until 2)
+      t.commitAppend((0L until 240L).map(i => (c * 1000 + i, s"k${i % 4}"))
+        .toDF("id", "k").repartition(6))
+    TieredCatalog.register("plandb", "keyed", t.tablePath, partitionBy = Seq("k"))
+    try {
+      val files = FileStats.listWithSidecars(t.unionPaths).map(_._1)
+      assert(files.size > 4)
+      assertKeyedSplits(v2Scan("keyed"), files)
+
+      val scan = v2Scan("keyed")
+      scan.asInstanceOf[SupportsRuntimeV2Filtering].filter(Array(
+        GraftTestV2.inPredicate("k", Seq("k1", "k3").map(v =>
+          (UTF8String.fromString(v), StringType)))))
+      assertKeyedSplits(scan, files.filter(f => f.contains("/k=k1/") || f.contains("/k=k3/")))
+    } finally TieredCatalog.unregister("plandb", "keyed")
+  }
+
+  test("a file split holding several keys is cut into one split per key") {
+    // Spark's file packing may put files of different partition
+    // directories into one split; the keyed scan must still hand each
+    // key its own split
+    val files = Seq("k0", "k1", "k0", "k2").zipWithIndex.map { case (k, i) =>
+      s"/t/snap-1/k=$k/part-$i.parquet" }
+    def pf(p: String) = PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(p), 0L, 10L, Array.empty[String], 0L, 10L)
+    val mixed = new Scan with Batch {
+      override def readSchema(): StructType = new StructType().add("k", StringType)
+      override def toBatch: Batch = this
+      override def planInputPartitions(): Array[InputPartition] =
+        Array(FilePartition(0, files.take(3).map(pf).toArray),
+          FilePartition(1, files.drop(3).map(pf).toArray))
+      override def createReaderFactory(): PartitionReaderFactory =
+        throw new UnsupportedOperationException
+    }
+    val entries = files.map(f => (f, Map.empty[String, FileStats.ColStat],
+      Map.empty[String, java.util.BitSet]))
+    val scan = new GraftRuntimeScan(spark, "mixed", CaseInsensitiveStringMap.empty(),
+      mixed.readSchema(), entries.size, entries, mixed, Nil, None, Seq("k"),
+      _ => fail("no per-key scan is built"))
+    assert(keyedSplits(scan).map { case (k, fs) => k -> fs.size }.sorted ==
+      Seq("k0" -> 2, "k1" -> 1, "k2" -> 1))
+    assertKeyedSplits(scan, files)
+  }
+}
