@@ -391,10 +391,11 @@ object Scale {
         "repair_sec" -> repairSec, "rebuild_sec" -> rebuildSec)
     }
 
-    /** t8 tf-idf and t9 bigram-LM over [[widened]]: every shard adds one
-      * distinct token, so the vocabulary grows with the corpus. The
-      * shapes are exactly t8_tfidf's and t9_bigram_lm's dataflow, so the
-      * measured exchanges are the declared queries'.
+    /** t8 tf-idf, t9 bigram-LM and t6 repetition over [[widened]]: every
+      * shard adds one distinct token, so the vocabulary grows with the
+      * corpus. The shapes are exactly t8_tfidf's and t9_bigram_lm's
+      * dataflow, so the measured exchanges are the declared queries', and
+      * t6 runs the query's own columns.
       */
     private def text(): Unit = {
       import graft.functions.TextFunctions.{hash60, tokens}
@@ -440,6 +441,9 @@ object Scale {
       emit("metric" -> s"t9_bigram$x", "docs" -> nDocs, "sec" -> t9.wallS,
         "rows" -> t9Rows.get, "shuffle_read_mb" -> mb(t9.shuffleReadBytes),
         "shuffle_write_mb" -> mb(t9.shuffleWriteBytes))
+
+      // t6's repetition score: map-side, one distinct-window count per doc
+      rows(s"t6_repetition$x")(graft.queries.Pipeline.repetition(docs))
     }
 
     /** The embeddings at copies×, shard k ≥ 1 perturbed by `noise(k)`, a

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Column-level text primitives shared by the dedup / text-analysis
-  * operators. Everything here is a composition of codegen'd built-ins —
-  * no UDFs — so the hot paths stay inside WholeStageCodegen, and every
+  * operators. Everything here is a composition of codegen'd built-ins
+  * or one of graft's codegen'd expressions
+  * ([[graft.functions.expressions]]) — no UDFs — so the hot paths stay
+  * inside WholeStageCodegen, and every
   * function has an exact DuckDB-SQL equivalent for the oracle.
   */
 object TextFunctions {
@@ -29,10 +31,6 @@ object TextFunctions {
   def seededHash(i: Int, s: Column): Column =
     hash60(concat(lit(i.toString), lit(":"), s))
 
-  /** Distinct word n-gram shingles of a token array; empty for docs with
-    * fewer than n tokens. 1-based `slice`; `sequence` guarded so it never
-    * descends.
-    */
   /** Sorted distinct [[hash60]] values of the n-gram shingles of a token
     * array — the codegen'd fused form of
     * `sort_array(array_distinct(transform(shingles(toks, n), hash60)))`
@@ -45,10 +43,25 @@ object TextFunctions {
       graft.functions.expressions.ShingleHashes(
         org.apache.spark.sql.GraftSqlBridge.expression(toks), n))
 
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-    .otherwise(array().cast("array<string>"))
+  /** Number of distinct word n-gram windows (`concat_ws(" ", …)` of n
+    * consecutive tokens) of a token array, as a long; 0 for a null array
+    * or one with fewer than n tokens
+    * ([[graft.functions.expressions.DistinctWindows]]: exact, no window
+    * string built).
+    */
+  def distinctWindows(toks: Column, n: Int): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      graft.functions.expressions.DistinctWindows(
+        org.apache.spark.sql.GraftSqlBridge.expression(toks), n))
+
+  /** Size of the intersection of two ascending, distinct `array<bigint>`
+    * sets, as a long — `size(array_intersect(a, b))` without building
+    * the intersection
+    * ([[graft.functions.expressions.SortedIntersectSize]]).
+    */
+  def sortedIntersectSize(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      graft.functions.expressions.SortedIntersectSize(
+        org.apache.spark.sql.GraftSqlBridge.expression(a),
+        org.apache.spark.sql.GraftSqlBridge.expression(b)))
 }

@@ -80,9 +80,7 @@ object ShingleHashes {
       bytes(i) = if (u == null) null else u.getBytes
       i += 1
     }
-    val seen = new java.util.HashSet[java.lang.Long]()
     val out = new Array[Long](len - n + 1)
-    var m = 0
     i = 0
     while (i <= len - n) {
       md.reset()
@@ -104,11 +102,17 @@ object ShingleHashes {
       var b = 0
       while (b < 8) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
       v >>>= 4
-      if (seen.add(v)) { out(m) = v; m += 1 }
+      out(i) = v
       i += 1
     }
-    val trimmed = java.util.Arrays.copyOf(out, m)
-    java.util.Arrays.sort(trimmed)
-    new GenericArrayData(trimmed)
+    // ascending, then adjacent duplicates dropped: the distinct set
+    java.util.Arrays.sort(out)
+    var m = if (out.length == 0) 0 else 1
+    i = 1
+    while (i < out.length) {
+      if (out(i) != out(m - 1)) { out(m) = out(i); m += 1 }
+      i += 1
+    }
+    new GenericArrayData(if (m == out.length) out else java.util.Arrays.copyOf(out, m))
   }
 }

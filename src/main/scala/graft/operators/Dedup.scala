@@ -130,9 +130,12 @@ object Dedup {
 
   /** Exact-Jaccard verification of explicit candidate pairs: two
     * id-joins pull both docs' full sorted sets next to the pair; the
-    * true intersection is a single O(|A|+|B|) array op — no expansion
-    * join, cost ∝ candidate volume, never Σ_shingle df². Threshold
-    * compare is integer-exact: inter·den ≥ union·num.
+    * true intersection is one O(|A|+|B|) merge count
+    * ([[graft.functions.expressions.SortedIntersectSize]], no array
+    * built per pair) — no expansion join, cost ∝ candidate volume, never
+    * Σ_shingle df². Threshold compare is integer-exact: inter·den ≥
+    * union·num. PRECONDITION: `shs` is ascending and distinct, as
+    * [[shingleVectors]] builds it.
     */
   private def verifyPairs(cand: DataFrame, byDoc: DataFrame,
                           num: Int, den: Int): DataFrame = {
@@ -141,7 +144,7 @@ object Dedup {
     val b = byDoc.select(col("id").as("b_id"), col("shs").as("sb"),
       col("n_sh").as("nb"))
     cand.join(a, Seq("a_id")).join(b, Seq("b_id"))
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+      .withColumn("inter", sortedIntersectSize(col("sa"), col("sb")))
       .withColumn("un", col("na") + col("nb") - col("inter"))
       .filter(col("inter") * den >= col("un") * num)
       .select(col("a_id"), col("b_id"), col("inter"), col("un").as("union_sz"))

@@ -35,7 +35,10 @@ object Similarity {
         org.apache.spark.sql.GraftSqlBridge.expression(a),
         org.apache.spark.sql.GraftSqlBridge.expression(b)))
 
-  def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
+  /** An `array<float>` vector widened to `array<double>` — a codegen'd
+    * cast; float→double widening is exact.
+    */
+  def toDouble(v: Column): Column = v.cast("array<double>")
 
   def l2norm(v: Column): Column = sqrt(dot(v, v))
 
@@ -173,7 +176,7 @@ object Similarity {
 
   /** Smallest hyperplane count p ≥ 4 whose 2^p buckets per table keep
     * the EXPECTED bucket size (n / 2^p) at or under `maxBucket` — the
-    * per-bucket join is the quadratic piece of the LSH family, so the
+    * per-bucket pair walk is the quadratic piece of the LSH family, so the
     * plane count must grow with the corpus or a fixed default (16
     * buckets) turns into an O(n²/16) skew bomb at 100 TB. The recall
     * trade: each extra plane roughly halves a true pair's per-table
@@ -218,24 +221,15 @@ object Similarity {
     * to skip the count or to pin a geometry for reproducibility.
     *
     * Scale: shuffle carries (bucket, id, vec) × tables — O(n·L), never
-    * O(n²); the per-bucket join is the only quadratic piece and bucket
+    * O(n²); the per-bucket pair walk is the only quadratic piece and bucket
     * sizes shrink geometrically in `planes`.
     */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                       threshold: Double, planes: Int = 0,
                       tables: Int = 8, dim: Int = 64): DataFrame = {
     val p = if (planes > 0) planes else planesFor(sizeForPlanes(df))
-    val sig = lshBuckets(df, idCol, vecCol, p, tables, dim)
-    firstCollisionOnly(
-      sig.select(col("id").as("a_id"), col("v").as("va"), col("nrm").as("na"),
-          col("bucket"), col("tbl"), col("bks").as("a_bks"))
-        .join(sig.select(col("id").as("b_id"), col("v").as("vb"),
-            col("nrm").as("nb"), col("bucket"), col("bks").as("b_bks")),
-          Seq("bucket"))
-        .filter(col("a_id") < col("b_id")), tables)
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id"), col("b_id"))
+    bucketPairs(lshBuckets(df, idCol, vecCol, p, tables, dim), threshold,
+      cross = false)
   }
 
   /** The plane count [[lshNearDupPairs]] would derive for `df` —
@@ -247,7 +241,7 @@ object Similarity {
   /** Per-(table, bucket) occupancy of the sign-LSH geometry
     * [[lshNearDupPairs]] uses on `df`: (bucket, size) rows. The
     * histogram SCALING.md's 100× rows report — max bucket size bounds
-    * the per-bucket quadratic join.
+    * the per-bucket quadratic pair walk.
     */
   def lshBucketSizes(df: DataFrame, idCol: String, vecCol: String,
                      planes: Int = 0, tables: Int = 8,
@@ -257,42 +251,21 @@ object Similarity {
       .groupBy(col("bucket")).agg(count(lit(1)).as("size"))
   }
 
-  /** Keep each candidate pair ONLY in its first colliding hash table:
-    * the joined row at table `tbl` survives iff no earlier table also
-    * bucketed the pair together. The check is a FLAT boolean over the
-    * per-row long signature arrays both sides already carry — a static
-    * OR of `tables-1` integer comparisons, fully inside whole-stage
-    * codegen, zero per-row allocation (the higher-order
-    * `exists(zip_with(slice…))` spelling measured ~0.5 s slower on
-    * the dense-bucket s2 corpus). This makes the candidate set
-    * EXACTLY the distinct pairs, so the final `.distinct()` — a full
-    * extra exchange of the surviving pairs (r8 verdict #4's s13
-    * finding) — disappears, and duplicate cosine evaluations with it.
-    */
-  private def firstCollisionOnly(joined: DataFrame, tables: Int): DataFrame =
-    if (tables <= 1) joined
-    else joined.filter(!(0 until tables - 1).map { t =>
-      (col("tbl") > t) &&
-        (element_at(col("a_bks"), t + 1) === element_at(col("b_bks"), t + 1))
-    }.reduce(_ || _))
-
-  /** (id, v, nrm, bucket, tbl, bks) with one row per (vector, hash
-    * table) — the shared signature step of the sign-LSH family. `bks`
-    * carries the row's full signature as an array of per-table bit
-    * LONGS and `tbl` the 0-based table index of the exploded `bucket`
-    * (the "t:bits" join key), so a downstream pair join can dedup
-    * candidates map-side with integer compares
-    * ([[firstCollisionOnly]]).
+  /** (id, v, bks, tbl, bucket) with one row per (vector, hash table) —
+    * the shared signature step of the sign-LSH family. `v` is the vector
+    * as stored (it is widened only to project it), `bks` the row's full
+    * signature as an array of per-table bit LONGS, `tbl` the 0-based
+    * table index of the exploded `bucket` ("t:bits").
     */
   private def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
                          planes: Int, tables: Int, dim: Int): DataFrame = {
-    val v = Scale.widen(df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v")))
-      .withColumn("nrm", l2norm(col("v")))
+    val v = Scale.widen(df.select(col(idCol).as("id"), col(vecCol).as("v")))
+      .withColumn("vd", toDouble(col("v")))
     val bitsCols = (0 until tables).map { t =>
       (0 until planes).map { p =>
         val seed = t * planes + p
         val signs = typedLit((0 until dim).map(planeSign(seed, _)))
-        val proj = dot(col("v"), signs)
+        val proj = dot(col("vd"), signs)
         when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
       }.reduce((a, b) => a + b)
     }
@@ -300,6 +273,26 @@ object Similarity {
       .withColumn("tbl", explode(array((0 until tables).map(lit): _*)))
       .withColumn("bucket",
         concat_ws(":", col("tbl"), element_at(col("bks"), col("tbl") + 1)))
+      .drop("vd")
+  }
+
+  /** The verified pairs of every bucket of `sig` ([[lshBuckets]] rows,
+    * plus an int `side` in the cross form): one group per (table,
+    * bucket) whose members go through the
+    * [[graft.functions.expressions.LshBucketPairs]] generator — id
+    * order (or side), first colliding table, exact cosine. The exchange
+    * carries each (vector, table) once with its stored float vector;
+    * pairs never materialize as joined rows.
+    */
+  private def bucketPairs(sig: DataFrame, threshold: Double,
+                          cross: Boolean): DataFrame = {
+    val fields = Seq(col("id"), col("v"), col("bks")) ++
+      (if (cross) Seq(col("side")) else Nil)
+    val grouped = sig.groupBy(col("tbl"), col("bucket"))
+      .agg(collect_list(struct(fields: _*)).as("members"))
+    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+    grouped.select(column(graft.functions.expressions.LshBucketPairs(
+      expression(col("tbl")), expression(col("members")), threshold, cross)))
   }
 
   /** CROSS-CORPUS sign-LSH similarity join: pairs (a_id, b_id) with
@@ -319,17 +312,9 @@ object Similarity {
                     tables: Int = 8, dim: Int = 64): DataFrame = {
     val p = if (planes > 0) planes
             else planesFor(sizeForPlanes(a) + sizeForPlanes(b))
-    val sa = lshBuckets(a, idCol, vecCol, p, tables, dim)
-    val sb = lshBuckets(b, idCol, vecCol, p, tables, dim)
-    firstCollisionOnly(
-      sa.select(col("id").as("a_id"), col("v").as("va"), col("nrm").as("na"),
-          col("bucket"), col("tbl"), col("bks").as("a_bks"))
-        .join(sb.select(col("id").as("b_id"), col("v").as("vb"),
-            col("nrm").as("nb"), col("bucket"), col("bks").as("b_bks")),
-          Seq("bucket")), tables)
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id"), col("b_id"))
+    val sa = lshBuckets(a, idCol, vecCol, p, tables, dim).withColumn("side", lit(0))
+    val sb = lshBuckets(b, idCol, vecCol, p, tables, dim).withColumn("side", lit(1))
+    bucketPairs(sa.unionByName(sb), threshold, cross = true)
   }
 
   /** IVF (inverted-file) approximate top-k: the corpus is coarse-

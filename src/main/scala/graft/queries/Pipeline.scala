@@ -604,11 +604,18 @@ object Pipeline {
     * High repetition is the classic low-quality / generated-text signal.
     * Pure map-side projection — scales with scan bandwidth.
     */
-  def t6Repetition(spark: SparkSession, dir: String): DataFrame = {
+  def t6Repetition(spark: SparkSession, dir: String): DataFrame =
+    repetition(docs(spark, dir))
+
+  /** [[t6Repetition]] over any (doc_id, text) frame: n_windows,
+    * n_distinct (one codegen'd distinct-window count per row, no
+    * window strings) and rep_bp.
+    */
+  def repetition(docs: DataFrame): DataFrame = {
     val t = tokens(col("text"))
-    docs(spark, dir).select(col("doc_id"),
+    docs.select(col("doc_id"),
         greatest(size(t) - 4, lit(0)).cast("long").as("n_windows"),
-        size(shingles(t, 5)).cast("long").as("n_distinct"))
+        distinctWindows(t, 5).as("n_distinct"))
       .withColumn("rep_bp", when(col("n_windows") > 0,
           expr("((n_windows - n_distinct) * 10000) DIV n_windows"))
         .otherwise(0L))

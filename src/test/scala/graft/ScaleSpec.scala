@@ -26,6 +26,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
       "c13_pack_chunks", "c14_pack_bins", "mor_resolve", "q13_skip",
       "q16_meta_agg", "q17_bloom", "spj_join", "ivm_repair",
       "t8_df_histogram", "t8_tfidf", "t9_bigram_histogram", "t9_bigram",
+      "t6_repetition",
       "s2_bucket_histogram", "s2_lsh", "s4_cell_histogram", "s4_ivf_q50",
       "s4_ivf_q500", "lakehouse_mor_v2", "lakehouse_mor_v3").map(_ + "_2x") ++
       Seq("q13_skip_1x", "iceberg_export_curve")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.CorpusKernelSpec.shingles
 import graft.functions.TextAnalysis._
 import graft.functions.TextFunctions._
 
@@ -64,14 +65,8 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
       (2L, "one two three four five six seven"), // all windows distinct
       (3L, "tiny doc") // fewer than 5 tokens → 0 windows
     ).toDF("doc_id", "text")
-    // mirror the query shape over an in-memory frame
-    val t = tokens(col("text"))
-    val got = docs.select(col("doc_id"),
-        greatest(size(t) - 4, lit(0)).cast("long").as("n_windows"),
-        size(shingles(t, 5)).cast("long").as("n_distinct"))
-      .withColumn("rep_bp", when(col("n_windows") > 0,
-          expr("((n_windows - n_distinct) * 10000) DIV n_windows"))
-        .otherwise(0L))
+    // the t6 query's own columns over an in-memory frame
+    val got = graft.queries.Pipeline.repetition(docs)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     // doc 1: 11 windows over a period-5 cycle → 5 distinct
