@@ -3,826 +3,136 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.functions.col
 
-import graft.plans.TieredCatalog
-import graft.streaming.{Datagen, DemoPipeline, StatementSet}
+import graft.plans.{FlinkScript, StreamingInsertSql, TieredCatalog}
+import graft.sources.FakerSource
+import graft.storage.{IcebergExport, TieredTable}
 
-/** End-to-end wall-clock run of the reference workload
-  * (/root/reference/README.md:104-318): bounded dim upserts, rate-
-  * limited order ingest (10 rows/s), continuous enrichment with
-  * per-trigger tiering, continuously-maintained revenue, then the batch
-  * analytics from both engine roles — Flink-role (hot ∪ cold) counts
-  * exceed Trino-role (cold only) counts while ingest is in flight,
-  * the demo's signature observation (README.md:316).
+/** The reference workload end to end, from the reference's own SQL
+  * (its README.md:104-318): the faker-source DDL and the
+  * README walkthrough run verbatim through [[FlinkScript]] — five Fluss
+  * tables, the bounded loads, the temporal-join enrichment into a
+  * datalake table and the continuously-maintained revenue — then the
+  * batch analytics in both engine roles: Flink (hot ∪ cold, by name)
+  * and Trino (the exported Iceberg metadata alone, through
+  * [[IcebergExport.readTable]]).
   *
-  *   sbt "runMain graft.Demo [seconds]"
+  *   sbt "runMain graft.Demo [orders]"
+  *
+  * `orders` (default 10000, the reference's own) replaces the script's
+  * `'number-of-rows'` for `source_order`; dims keep the reference's
+  * sizes (200 customers over 20 keys, 100 nations over 19). Prints one
+  * JSON line; the volume numbers land in SCALING.md.
   */
 object Demo {
-  def main(args: Array[String]): Unit = {
-    val runSecs = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = GraftSession.local("graft-demo")
-    run(spark, runSecs)
-    spark.stop()
-    println("[demo] done")
+
+  /** What one run observed, for the printed line and for checks. */
+  final case class Result(orders: Long, loadS: Double, drainS: Double,
+                          enrichedRows: Long, maxIngestTs: java.sql.Timestamp,
+                          coldRows: Long, icebergRows: Long, revenueGroups: Long,
+                          flinkTop5: Seq[(String, java.math.BigDecimal)],
+                          trinoTop5: Seq[(String, java.math.BigDecimal)],
+                          revenueSnapshots: Long) {
+    def line: String = Measure.line("metric" -> "demo", "orders" -> orders,
+      "load_s" -> loadS, "drain_s" -> drainS,
+      "enrich_rows_per_s" -> enrichedRows / drainS,
+      "enriched_rows" -> enrichedRows, "cold_rows" -> coldRows,
+      "iceberg_rows" -> icebergRows, "revenue_groups" -> revenueGroups,
+      "top5" -> scala.collection.immutable.ListMap(
+        flinkTop5.map { case (n, v) => n -> v.toPlainString }: _*),
+      "trino_top5_equal" -> (trinoTop5 == flinkTop5))
   }
 
-  /** The demo body, returning every report line — so DemoSpec checks
-    * the walkthrough's observable claims instead of eyeballs on stdout
-    * (VERDICT r5 item 10).
+  def main(args: Array[String]): Unit = {
+    val orders = args.headOption.map(_.toLong).getOrElse(10000L)
+    val spark = GraftSession.local("graft-demo")
+    try run(spark, orders,
+      Files.createTempDirectory("graft-demo").toString)
+    finally spark.stop()
+  }
+
+  /** Runs the reference pipeline with `orders` generated orders and its
+    * warehouse at `warehouse` (a local directory or an object-store
+    * URL), prints the result line, then calls `check` while the
+    * pipeline's tables are still registered (the streams stopped, the
+    * session in batch mode). Every table, faker source and the current
+    * catalog and warehouse are restored afterwards, whatever happened.
     */
-  def run(spark: SparkSession, runSecs: Int): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    def say(line: String): Unit = { out += line; println(line) }
-
-    val base = Files.createTempDirectory("graft-demo").toString
-    val p = new DemoPipeline(spark, s"$base/tables")
-    say(s"[demo] tables at $base/tables")
-
-    // 1. bounded dim ingest (README.md:213-214)
-    p.loadDims()
-    say(s"[demo] dims loaded: customer=${p.customer.readCold().count()} " +
-      s"nation=${p.nation.readCold().count()} (PK last-write-wins applied)")
-
-    // 2. the statement set (README.md:211-216): ingest + enrichment,
-    //    5s triggers = the freshness SLA scaled down from 30s.
-    //    Enrichment streams FROM the orders table's own log — the
-    //    reference's lineage (enriched = INSERT..SELECT FROM
-    //    fluss_order) — not from a second independent source.
-    val orders = Datagen.orderStream(spark, rowsPerSecond = 10)
-    val set = StatementSet()
-      .add(p.startIngest(orders, s"$base/ckpt",
-        Trigger.ProcessingTime("5 seconds")))
-      .add(p.startEnrichment(
-        p.orders.readStreamLog(Datagen.orderStream(spark).schema),
-        s"$base/ckpt", Trigger.ProcessingTime("5 seconds")))
-    set.run()
-    // wait for the FIRST enriched snapshot, not a fixed sleep — the
-    // revenue stream reads the enriched table's cold tier, which only
-    // exists after the first tiering commit lands
-    val firstBy = System.currentTimeMillis() + math.max(runSecs, 30) * 1000L
-    while (p.enriched.latestSnapshotId == 0L &&
-      System.currentTimeMillis() < firstBy) Thread.sleep(100)
-    Thread.sleep(runSecs * 1000L / 2)
-
-    // 3. revenue aggregation starts once enriched data exists
-    val revQ = p.startRevenue(s"$base/ckpt", Trigger.ProcessingTime("5 seconds"))
-    // same first-snapshot wait as the enrichment above: under host
-    // load a 5 s trigger may not have committed before the batch reads
-    // below, and an empty PK table has no schema to read yet
-    val revBy = System.currentTimeMillis() + math.max(runSecs, 30) * 1000L
-    while (p.revenue.latestSnapshotId == 0L &&
-      System.currentTimeMillis() < revBy) Thread.sleep(100)
-    Thread.sleep(runSecs * 1000L / 2)
-
-    // 4. batch analytics through the SQL catalog, both roles
-    TieredCatalog.register("fluss", "enriched_orders", s"$base/tables/enriched_orders")
-    TieredCatalog.register("fluss", "nation_revenue", s"$base/tables/nation_revenue",
-      pk = Seq("nation_name"))
-    val hotCold = spark.sql(
-      "SELECT COUNT(*) FROM graft.fluss.enriched_orders").head().getLong(0)
-    val coldOnly = spark.sql(
-      "SELECT COUNT(*) FROM graft.fluss.enriched_orders__cold").head().getLong(0)
-    say(s"[demo] Flink-role count (hot∪cold) = $hotCold")
-    say(s"[demo] Trino-role count (cold only) = $coldOnly")
-    say(f"[demo] invariant hot∪cold ≥ cold: ${hotCold >= coldOnly}")
-    say("[demo] top nations by continuously-maintained revenue:")
-    spark.sql(
-      """SELECT nation_name, revenue FROM graft.fluss.nation_revenue
-        |ORDER BY revenue DESC, nation_name LIMIT 5""".stripMargin)
-      .collect().foreach(r => say(s"[demo]   ${r.getString(0)}: ${r.getDecimal(1)}"))
-    say("[demo] snapshot history (graft.fluss.enriched_orders__snapshots):")
-    spark.sql(
-      """SELECT snapshot_id, operation, rows_added, tiered_seg
-        |FROM graft.fluss.enriched_orders__snapshots ORDER BY snapshot_id""".stripMargin)
-      .collect().take(10)
-      .foreach(r => say(s"[demo]   $r"))
-
-    // 5. the reference's temporal-join SQL, verbatim shape
-    //    (README.md:236-238), through the parser extension
-    TieredCatalog.register("fluss", "customer", s"$base/tables/fluss_customer",
-      pk = Seq("cust_key"))
-    val enriched = spark.sql(
-      """SELECT COUNT(*) FROM graft.fluss.enriched_orders o
-        |LEFT JOIN graft.fluss.customer FOR SYSTEM_TIME AS OF o.proctime AS c
-        |  ON o.cust_key = c.cust_key""".stripMargin).head().getLong(0)
-    say(s"[demo] FOR SYSTEM_TIME AS OF join over the stream output: $enriched rows")
-    // 6. SQL time travel to the first committed snapshot
-    val firstSnap = spark.sql(
-      """SELECT MIN(snapshot_id) FROM graft.fluss.enriched_orders__snapshots""")
-      .head().getLong(0)
-    val thenCount = spark.sql(
-      s"SELECT COUNT(*) FROM graft.fluss.enriched_orders VERSION AS OF $firstSnap")
-      .head().getLong(0)
-    say(s"[demo] VERSION AS OF $firstSnap count = $thenCount (now: $hotCold)")
-
-    // 7. round-trippable DDL (reference README.md:116-122)
-    say("[demo] SHOW CREATE TABLE graft.fluss.nation_revenue:")
-    spark.sql("SHOW CREATE TABLE graft.fluss.nation_revenue")
-      .head().getString(0).linesIterator
-      .foreach(l => say(s"[demo]   $l"))
-
-    // 8. the changelog surface: what changed in nation_revenue between
-    //    its first and latest snapshot, as +I/-U/+U/-D rows (the Fluss
-    //    upsert-changelog contract, README.md:153-169)
-    val revSnaps = TieredCatalog.lookup("fluss", "nation_revenue")
-      .map(e => graft.storage.TieredTable(spark, e.path, e.pk)).get
-    if (revSnaps.latestSnapshotId > 1L) {
-      val ops = spark.sql(
-        s"""SELECT op, COUNT(*) AS n
-           |FROM graft_changes('fluss.nation_revenue', 1,
-           |                   ${revSnaps.latestSnapshotId})
-           |GROUP BY op ORDER BY op""".stripMargin)
-        .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
-      say(s"[demo] graft_changes over nation_revenue: ${ops.mkString(" ")}")
-    }
-
-    // 9. a continuously-maintained MV following that changelog by
-    //    cursor — the reference's always-fresh aggregate without a
-    //    standing stream job: order counts per nation key, maintained
-    //    from enriched_orders' CDC
-    val mvState = graft.storage.TieredTable(spark, s"$base/tables/mv_state")
-    val mv = new graft.operators.MaterializedView(
-      p.enriched, mvState, keyCols = Seq("order_key"),
-      groupCols = Seq("nation_name"), valCol = "order_key",
-      sumCol = "key_sum", cntCol = "n_orders")
-    mv.refresh()
-    say(s"[demo] MV (orders per nation) cursor=${mv.cursor}, " +
-      s"groups=${mv.view().count()}; refresh again applied=" +
-      s"${mv.refresh()} (already current)")
-
-    set.stopAll(); graft.streaming.StatementSet.stopGracefully(revQ)
-
-    // 10. the cold tier as an Apache-Iceberg-v2 table: export the
-    //     metadata chain and re-read PURELY through it — the
-    //     Trino-reads-the-tier interop (README.md:257-292)
-    val demoMloc = graft.storage.IcebergExport.export(p.enriched)
-    val iceCount = graft.storage.IcebergExport
-      .readTable(spark, p.enriched.tablePath).count()
-    say(s"[demo] Iceberg-exported cold tier reads $iceCount rows " +
-      s"(TieredTable cold: ${p.enriched.readCold().count()})")
-    // 10b. the same table DISCOVERED by name over the Iceberg REST
-    //      catalog protocol (the reference's iceberg-rest service on
-    //      8181, docker-compose.yml:127-133) — url + name, no paths
-    val restCat = new graft.storage.IcebergRestCatalogServer
+  def run(spark: SparkSession, orders: Long, warehouse: String,
+          check: Result => Unit = _ => ()): Result = {
+    val prevCatalog = spark.sessionState.catalogManager.currentCatalog.name
+    val prevWarehouse = TieredCatalog.warehouse
+    TieredCatalog.warehouse = warehouse
     try {
-      restCat.register("fluss", "enriched_orders", demoMloc)
-      val viaRest = graft.storage.IcebergRestClient
-        .loadTable(spark, restCat.url, "fluss", "enriched_orders").count()
-      say(s"[demo] REST-catalog read (url+name only): $viaRest rows, " +
-        s"tables=${graft.storage.IcebergRestClient
-          .listTables(restCat.url, "fluss").mkString(",")}")
-    } finally restCat.stop()
-
-    // 11. change data feed: a CDF table's commits publish op-tagged
-    //     change files; the MV maintenance loop runs as an ORDINARY
-    //     StreamingQuery with its cursor in the Spark checkpoint
-    import spark.implicits._
-    val cdfSrc = graft.storage.TieredTable(spark, s"$base/tables/cdf_src",
-      changeDataFeed = true)
-    cdfSrc.commitAppend(Seq(("ASIA", 10L), ("EMEA", 5L)).toDF("region", "amount"))
-    val cdfState = graft.storage.TieredTable(spark, s"$base/tables/cdf_state")
-    val smv = new graft.operators.MaterializedView(cdfSrc, cdfState,
-      keyCols = Seq("region"), groupCols = Seq("region"),
-      valCol = "amount", sumCol = "sum_amount", cntCol = "n")
-    val sq = smv.startStream(s"$base/ckpt/cdf-mv", intervalMs = 200L)
-    try {
-      sq.processAllAvailable()
-      cdfSrc.commitAppend(Seq(("ASIA", 7L)).toDF("region", "amount"))
-      sq.processAllAvailable()
-    } finally sq.stop()
-    val asia = smv.view().filter($"region" === "ASIA")
-      .select("sum_amount").as[Long].head()
-    say(s"[demo] streaming-MV over the change feed: ASIA sum=$asia " +
-      "(exactly-once, cursor in the Spark checkpoint)")
-
-    // 12. schema evolution: metadata-only RENAME — history included
-    cdfSrc.renameColumn("amount", "amount_usd")
-    val renamedAsOf1 = cdfSrc.readColdAsOf(1L).columns.mkString(",")
-    say(s"[demo] after RENAME amount->amount_usd, snapshot 1 reads as: " +
-      renamedAsOf1)
-
-    // 13. merge-on-read PK tier through Iceberg EQUALITY DELETES: each
-    //     upsert delta exports as data files + a PK delete file at its
-    //     sequence; the external reader resolves last-write-wins purely
-    //     from the v2 sequence rules (no graft code in the read)
-    val morT = graft.storage.TieredTable(spark, s"$base/tables/mor_accounts",
-      pk = Seq("acct"), mergeOnRead = true)
-    morT.commitUpsert(Seq((1L, 100L), (2L, 200L)).toDF("acct", "balance"))
-    morT.commitUpsert(Seq((2L, 250L), (3L, 300L)).toDF("acct", "balance"))
-    graft.storage.IcebergExport.export(morT)
-    val morRows = graft.storage.IcebergExport
-      .readTable(spark, morT.tablePath)
-      .orderBy("acct").as[(Long, Long)].collect().toSeq
-    say(s"[demo] merge-on-read tier via Iceberg equality deletes: " +
-      morRows.map { case (k, b) => s"$k->$b" }.mkString(", "))
-
-    // 13b. the SAME merge-on-read table through PLAIN SQL (r9): the
-    //      analyzer substitutes the resolved last-write-wins plan for
-    //      the relation — SELECT, time travel, and row-level verbs all
-    //      work on a table whose files hold every version of a key
-    graft.plans.TieredCatalog.register("fluss", "mor_accounts",
-      morT.tablePath, pk = Seq("acct"), mergeOnRead = true)
-    spark.sql(
-      "UPDATE graft.fluss.mor_accounts SET balance = balance + 5 WHERE acct = 3")
-    val morSql = spark.sql(
-      "SELECT acct, balance FROM graft.fluss.mor_accounts ORDER BY acct")
-      .collect().map(r => s"${r.getLong(0)}->${r.getLong(1)}").mkString(", ")
-    val morV1 = spark.sql(
-      "SELECT COUNT(*) FROM graft.fluss.mor_accounts VERSION AS OF 1")
-      .head().getLong(0)
-    say(s"[demo] merge-on-read through SQL: [$morSql]; VERSION AS OF 1 " +
-      s"resolves $morV1 row(s)")
-
-    // 14. INCREMENTAL re-export: another upsert, then export again —
-    //     only the new delta's footers are opened (sidecar caches) and
-    //     the prior manifests are reused byte-for-byte
-    val m1 = java.nio.file.Paths.get(morT.tablePath,
-      "metadata", "manifest-000001.avro")
-    val m1Bytes = java.nio.file.Files.readAllBytes(m1)
-    val opensBefore = graft.storage.IcebergExport.footerOpens.get()
-    morT.commitUpsert(Seq((1L, 150L)).toDF("acct", "balance"))
-    graft.storage.IcebergExport.export(morT)
-    val opened = graft.storage.IcebergExport.footerOpens.get() - opensBefore
-    val reused = java.util.Arrays.equals(
-      java.nio.file.Files.readAllBytes(m1), m1Bytes)
-    say(s"[demo] incremental re-export: footers opened=$opened " +
-      s"(new delta + its delete file only), prefix manifest reused " +
-      s"byte-for-byte=$reused")
-
-    // 15. PARTITIONED merge-on-read export: partition-scoped equality
-    //     deletes (partition col ∈ PK — keys never change partitions)
-    val pmor = graft.storage.TieredTable(spark, s"$base/tables/pmor_accounts",
-      pk = Seq("region", "acct"), mergeOnRead = true,
-      partitionBy = Seq("region"))
-    pmor.commitUpsert(Seq(("eu", 1L, 10L), ("us", 1L, 20L))
-      .toDF("region", "acct", "balance"))
-    pmor.commitUpsert(Seq(("eu", 1L, 11L), ("us", 2L, 30L))
-      .toDF("region", "acct", "balance"))
-    graft.storage.IcebergExport.export(pmor)
-    val pmorRows = graft.storage.IcebergExport
-      .readTable(spark, pmor.tablePath)
-      .orderBy("region", "acct")
-      .select("region", "acct", "balance").as[(String, Long, Long)]
-      .collect().toSeq
-    say(s"[demo] partitioned merge-on-read via partition-scoped " +
-      s"deletes: ${pmorRows.map { case (r, k, b) => s"$r/$k->$b" }.mkString(", ")}")
-
-    // 16. continuous MV from PURE SQL over a CDF table's change feed —
-    //     the reference's continuous INSERT-INTO-SELECT as DDL. A
-    //     fresh source: cdf_src's step-12 rename left pre-rename
-    //     change files, which the stream's rename guard refuses until
-    //     vacuum (by design — a bootstrapping consumer would read
-    //     NULLs there)
-    val sqlSrc = graft.storage.TieredTable(spark,
-      s"$base/tables/cdf_sql_src", changeDataFeed = true)
-    sqlSrc.commitAppend(Seq(("ASIA", 10L), ("EMEA", 5L), ("ASIA", 7L))
-      .toDF("region", "amount_usd"))
-    TieredCatalog.register("fluss", "cdf_sql_src", s"$base/tables/cdf_sql_src",
-      changeDataFeed = true)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW graft.fluss.region_totals
-         |OPTIONS('path'='$base/tables/region_totals',
-         |        'checkpoint'='$base/ckpt/region-totals')
-         |AS SELECT region, SUM(amount_usd) AS total, COUNT(*) AS n
-         |FROM graft.fluss.cdf_sql_src GROUP BY region""".stripMargin)
-    graft.plans.MaterializedViewSql.query("fluss", "region_totals")
-      .get.processAllAvailable()
-    val sqlMv = spark.sql(
-      """SELECT region, total FROM graft.fluss.region_totals
-        |ORDER BY region""".stripMargin)
-      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(" ")
-    spark.sql("DROP MATERIALIZED VIEW graft.fluss.region_totals")
-    say(s"[demo] CREATE MATERIALIZED VIEW (pure SQL, change-feed " +
-      s"maintained): $sqlMv")
-
-    // 17. SQL maintenance procedures — the Trino/Spark
-    //     `CALL iceberg.system.*` surface over the same verbs
-    spark.sql("CALL graft.system.compact('fluss.cdf_sql_src')")
-    spark.sql("CALL graft.system.vacuum('fluss.cdf_sql_src', 1)")
-    val snapOps = spark.sql(
-      """SELECT operation FROM graft.fluss.cdf_sql_src__snapshots
-        |ORDER BY snapshot_id""".stripMargin)
-      .collect().map(_.getString(0)).mkString(",")
-    say(s"[demo] CALL graft.system.compact + vacuum: retained ops = $snapOps")
-
-    // 18. the OBJECT-STORE data plane: the same table protocol against
-    //     an in-process HTTP object store — parquet, markers, and
-    //     metadata all bucket-resident, no local files, no renames
-    graft.storage.DemoObjectStore.withStore { fsUrl =>
-      val ost = graft.storage.TieredTable(spark, s"$fsUrl/demo_t")
-      ost.appendLog(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-      ost.tier()
-      ost.appendLog(Seq((3L, "c")).toDF("id", "v"))
-      say(s"[demo] object-store table at $fsUrl/demo_t: " +
-        s"cold=${ost.readCold().count()} union=${ost.readUnion().count()} " +
-        "(zero local-disk files)")
-    }
-
-    // 19. the SQL DML triangle on a PK table: UPDATE and MERGE INTO
-    //     lower onto the same copy-on-write verbs DELETE already uses
-    //     (RowLevelSql) — no Scala API in sight
-    val dmlT = graft.storage.TieredTable(spark, s"$base/tables/dml_accounts",
-      pk = Seq("acct"))
-    dmlT.commitUpsert(Seq((1L, 100L), (2L, 200L), (3L, 300L))
-      .toDF("acct", "balance"))
-    TieredCatalog.register("fluss", "dml_accounts",
-      s"$base/tables/dml_accounts", pk = Seq("acct"))
-    spark.sql(
-      "UPDATE graft.fluss.dml_accounts SET balance = balance + 1 WHERE acct = 1")
-    spark.sql(
-      """MERGE INTO graft.fluss.dml_accounts t
-        |USING (SELECT * FROM VALUES (2L, 999L, 'upd'), (3L, 0L, 'del'),
-        |       (4L, 400L, 'new') AS v(acct, balance, op)) s
-        |ON t.acct = s.acct
-        |WHEN MATCHED AND s.op = 'del' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET balance = s.balance
-        |WHEN NOT MATCHED THEN INSERT (acct, balance) VALUES (s.acct, s.balance)
-        |""".stripMargin)
-    spark.sql("DELETE FROM graft.fluss.dml_accounts WHERE acct = 4")
-    val dmlRows = spark.sql(
-      "SELECT acct, balance FROM graft.fluss.dml_accounts ORDER BY acct")
-      .collect().map(r => s"${r.getLong(0)}->${r.getLong(1)}").mkString(", ")
-    say(s"[demo] SQL UPDATE + MERGE INTO + DELETE: $dmlRows")
-
-    // 21(run early as 19b). SQL DDL in the bucket + the durable
-    //     catalog: CREATE a table whose WAREHOUSE is the object store,
-    //     upsert via SQL, wipe the in-memory registry, read again —
-    //     recovery resolves from bucket objects alone
-    graft.storage.DemoObjectStore.withStore { fsUrl =>
-      val prevWh = TieredCatalog.warehouse
-      TieredCatalog.warehouse = fsUrl
-      try {
-        spark.sql("""CREATE TABLE graft.osd.kv (
-          |`id` BIGINT NOT NULL, `v` STRING,
-          |PRIMARY KEY (`id`) NOT ENFORCED)""".stripMargin)
-        spark.sql("INSERT INTO graft.osd.kv SELECT * FROM VALUES " +
-          "(1L, 'x'), (2L, 'z') AS t(id, v)")
-        spark.sql("INSERT INTO graft.osd.kv SELECT * FROM VALUES " +
-          "(1L, 'y') AS t(id, v)")
-        TieredCatalog.unregister("osd", "kv")
-        val rows = spark.sql("SELECT id, v FROM graft.osd.kv ORDER BY id")
-          .collect().map(r => s"${r.getLong(0)}->${r.getString(1)}")
-          .mkString(", ")
-        say(s"[demo] bucket-warehouse SQL, durable catalog across a " +
-          s"registry wipe: $rows")
-        spark.sql("DROP TABLE graft.osd.kv")
-      } finally TieredCatalog.warehouse = prevWh
-    }
-
-    // 19c. FULL-vocabulary incremental view maintenance (q18b's
-    //      machinery): SUM/COUNT plus MIN/MAX/AVG carried across a
-    //      changelog with retractions — the dirty-group repair
-    //      re-aggregates ONLY the groups whose bound a retraction
-    //      touched
-    {
-      import graft.operators.IncrementalAgg
-      val fvSrc = graft.storage.TieredTable(spark, s"$base/tables/fv_src",
-        pk = Seq("id"))
-      fvSrc.commitUpsert(Seq((1L, "a", 10L), (2L, "a", 99L), (3L, "b", 5L))
-        .toDF("id", "grp", "v"))
-      val spec = IncrementalAgg.AggSpec(
-        sums = Seq("v" -> "sum_v"), cntCol = "n",
-        mins = Seq("v" -> "min_v"), maxs = Seq("v" -> "max_v"),
-        avgs = Seq("v" -> "avg_v"))
-      val st1 = IncrementalAgg.rebuildFull(
-        fvSrc.readColdAsOf(1L).select($"grp", $"v"), Seq("grp"), spec)
-      // delete the current max of group a — NOT self-maintainable
-      fvSrc.deleteWhere($"id" === 2L)
-      val delta = fvSrc.incrementalRead(1L, 2L, Seq("id"))
-        .select($"grp", $"v", $"op")
-      val st2 = IncrementalAgg.applyDeltaFull(st1, delta, Seq("grp"), spec,
-        fvSrc.readColdAsOf(2L).select($"grp", $"v"))
-      val aRow = st2.filter($"grp" === "a")
-        .select("sum_v", "n", "min_v", "max_v").as[(Long, Long, Long, Long)]
-        .head()
-      say(s"[demo] full-vocab incremental MV after deleting group a's " +
-        s"max: sum/n/min/max = $aRow (the stale-bound bug would still " +
-        "say max=99)")
-    }
-
-    // 19d. partition-scoped INSERT OVERWRITE — the daily-backfill verb:
-    //      one partition replaced by metadata surgery, untouched
-    //      partitions kept by subdir reference, history time-travelable
-    {
-      val powDir = s"$base/tables/pow_events"
-      spark.sql("DROP TABLE IF EXISTS graft.fluss.pow_events")
-      spark.sql(s"""CREATE TABLE graft.fluss.pow_events
-        |(id BIGINT, day STRING, v BIGINT)
-        |PARTITIONED BY (day) TBLPROPERTIES ('path'='$powDir')""".stripMargin)
-      spark.sql("INSERT INTO graft.fluss.pow_events VALUES " +
-        "(1, 'd0', 10), (2, 'd1', 20), (3, 'd2', 30)")
-      spark.sql("CALL graft.system.tier('fluss.pow_events')")
-      spark.sql("INSERT OVERWRITE graft.fluss.pow_events " +
-        "PARTITION (day = 'd1') SELECT 9L, 99L")
-      val powNow = spark.sql(
-        "SELECT id, day FROM graft.fluss.pow_events ORDER BY id")
-        .collect().map(r => s"${r.getLong(0)}@${r.getString(1)}")
-        .mkString(", ")
-      val powWas = spark.sql(
-        "SELECT COUNT(*) FROM graft.fluss.pow_events VERSION AS OF 1")
-        .head().getLong(0)
-      say(s"[demo] INSERT OVERWRITE PARTITION (day='d1'): now [$powNow]; " +
-        s"snapshot 1 still reads $powWas rows")
-      spark.sql("DROP TABLE graft.fluss.pow_events")
-    }
-
-    // 19e. the REST catalog as COMMIT AUTHORITY: the export job
-    //      proposes, the catalog arbitrates — a stale-state commit
-    //      409s instead of silently winning
-    {
-      val rc = new graft.storage.IcebergRestCatalogServer
-      try {
-        val arbT = graft.storage.TieredTable(spark, s"$base/tables/arb",
-          pk = Seq("k"))
-        arbT.commitUpsert(Seq((1L, "x")).toDF("k", "v"))
-        val loc1 = graft.storage.IcebergExport
-          .exportAndPublish(arbT, rc.url, "fluss", "arb")
-        arbT.commitUpsert(Seq((2L, "y")).toDF("k", "v"))
-        graft.storage.IcebergExport.exportAndPublish(arbT, rc.url, "fluss", "arb")
-        val lost =
-          try { graft.storage.IcebergRestClient.commitTable(rc.url, "fluss",
-            "arb", loc1, expectedSnapshotId = Some(1L)); "accepted?!" }
-          catch { case _: graft.storage.IcebergRestClient.CommitFailedException =>
-            "409 CommitFailed" }
-        val arbRows = graft.storage.IcebergRestClient
-          .loadTable(spark, rc.url, "fluss", "arb").count()
-        say(s"[demo] REST commit arbitration: 2 commits published, " +
-          s"catalog serves $arbRows rows; a stale committer got $lost")
-      } finally rc.stop()
-    }
-
-    // 19f. the DSv2 change-feed source: the Delta/Iceberg spelling —
-    //      readStream.table on t$changes with offsets in the checkpoint
-    {
-      val cfDir = s"$base/tables/cf_demo"
-      val cfT = graft.storage.TieredTable(spark, cfDir,
-        changeDataFeed = true)
-      TieredCatalog.register("fluss", "cf_demo", cfDir,
-        changeDataFeed = true)
-      cfT.commitAppend(Seq((1L, "a")).toDF("id", "v"))
-      val seen = new java.util.concurrent.atomic.AtomicLong(0)
-      val cq = spark.readStream.table("graft.fluss.`cf_demo$changes`")
-        .writeStream.option("checkpointLocation", s"$base/ckpt/cf-demo")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.addAndGet(b.count()); (): Unit }
-        .start()
-      try {
-        cq.processAllAvailable()
-        cfT.commitAppend(Seq((2L, "b")).toDF("id", "v"))
-        cq.processAllAvailable()
-      } finally cq.stop()
-      say(s"[demo] readStream.table(cf_demo$$changes): ${seen.get()} " +
-        "change rows via snapshot-id offsets in the Spark checkpoint")
-    }
-
-    // 19g. the DSv2 LOG-TAIL stream — one name, both runtime modes:
-    //      spark.read.table = batch union, spark.readStream.table =
-    //      hot-tail stream with segment-id offsets (r9)
-    {
-      val ltDir = s"$base/tables/logtail_demo"
-      val ltT = graft.storage.TieredTable(spark, ltDir)
-      TieredCatalog.register("fluss", "logtail_demo", ltDir)
-      ltT.appendLog(Seq((1L, "a")).toDF("id", "v"))
-      val seen = new java.util.concurrent.atomic.AtomicLong(0)
-      val lq = spark.readStream.table("graft.fluss.logtail_demo")
-        .writeStream.option("checkpointLocation", s"$base/ckpt/logtail-demo")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.addAndGet(b.count()); (): Unit }
-        .start()
-      try {
-        lq.processAllAvailable()
-        ltT.appendLog(Seq((2L, "b")).toDF("id", "v"))
-        lq.processAllAvailable()
-      } finally lq.stop()
-      val batchRows = spark.read.table("graft.fluss.logtail_demo").count()
-      say(s"[demo] runtime-mode switch on ONE name: readStream.table " +
-        s"streamed ${seen.get()} rows (segment-id offsets), read.table " +
-        s"batch-reads $batchRows")
-
-      // ...and the WRITE half (r9): stream the same table into a graft
-      // sink with writeStream.toTable — epochs commit exactly-once as
-      // tagged segments by zero-copy file move
-      val sinkDir = s"$base/tables/logtail_sink"
-      graft.storage.TieredTable(spark, sinkDir) // init storage layout
-      graft.storage.TableFs.forPath(sinkDir)
-        .writeString(s"$sinkDir/meta/SCHEMA", "id BIGINT, v STRING")
-      TieredCatalog.register("fluss", "logtail_sink", sinkDir)
-      val wq = spark.readStream.table("graft.fluss.logtail_demo")
-        .writeStream.option("checkpointLocation", s"$base/ckpt/logtail-sink")
-        .toTable("graft.fluss.logtail_sink")
-      try wq.processAllAvailable() finally wq.stop()
-      val sunk = spark.read.table("graft.fluss.logtail_sink").count()
-      say(s"[demo] writeStream.toTable: $sunk rows committed exactly-once " +
-        "as epoch-tagged segments (zero-copy file move)")
-    }
-
-    // 19h. planner-visible statistics + dynamic partition pruning (r9):
-    //      the tiered table reports exact sidecar row counts (so it
-    //      broadcasts with no hint) and prunes files at EXECUTION time
-    //      from a filtered dim join's keys
-    {
-      val dppDir = s"$base/tables/dpp_demo"
-      val dppT = graft.storage.TieredTable(spark, dppDir,
-        partitionBy = Seq("day"))
-      TieredCatalog.register("fluss", "dpp_demo", dppDir,
-        partitionBy = Seq("day"))
-      dppT.commitAppend((0 until 300).map(i => (i.toLong, s"d${i % 3}"))
-        .toDF("id", "day"))
-      // the filtering side must be a real scan with its own selective
-      // predicate — the shape DPP plans against (a LocalRelation dim
-      // fails the pruning-benefit heuristic)
-      Seq(("d1", "keep"), ("d9", "no")).toDF("day", "tag")
-        .write.parquet(s"$base/tables/dpp_dim")
-      val dim = spark.read.parquet(s"$base/tables/dpp_dim")
-        .filter(org.apache.spark.sql.functions.col("tag") === "keep")
-      val joined = spark.table("graft.fluss.dpp_demo").join(dim, "day")
-      val n = joined.count()
-      val dpp = joined.queryExecution.executedPlan.toString
-        .contains("dynamicpruning")
-      say(s"[demo] runtime file pruning: dim-filtered join read $n rows" +
-        s", DPP subquery planned=$dpp, stats-driven broadcast with no hint")
-    }
-
-    // 19i. storage-partitioned join (r9): two tables partitioned on
-    //      the join key report KeyGroupedPartitioning and join with
-    //      ZERO exchanges on either side — Iceberg's SPJ
-    {
-      val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        spark.conf.set(
-          "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        Seq("spj_a", "spj_b").foreach { n =>
-          val t = graft.storage.TieredTable(spark, s"$base/tables/$n",
-            partitionBy = Seq("day"))
-          t.appendLog((0 until 120).map(i => (i.toLong, s"d${i % 3}"))
-            .toDF("id", "day"))
-          TieredCatalog.register("fluss", n, s"$base/tables/$n",
-            partitionBy = Seq("day"))
-        }
-        val joined = spark.table("graft.fluss.spj_a")
-          .join(spark.table("graft.fluss.spj_b"), Seq("day", "id"))
-        val rows = joined.count()
-        val exchanges = joined.queryExecution.executedPlan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.size
-        say(s"[demo] storage-partitioned join: $rows rows, " +
-          s"$exchanges exchanges (key-grouped scans, shuffle-free)")
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      val sources = FlinkScript.referenceSqlClientScript.replace(
+        "'number-of-rows' = '10000'", s"'number-of-rows' = '$orders'")
+      require(sources.contains(s"'number-of-rows' = '$orders'"),
+        "the reference script no longer sizes source_order at 10000")
+      val (loaded, load) = Measure(spark) {
+        FlinkScript.run(spark, sources)
+        FlinkScript.run(spark, FlinkScript.referenceWalkthroughScript)
       }
-    }
+      loaded.get
+      // both continuous INSERTs read bounded upstream data: drain them
+      val (drained, drain) = Measure(spark) {
+        Seq("enriched_orders", "nation_revenue").foreach(t =>
+          StreamingInsertSql.query("", t).get.processAllAvailable())
+      }
+      drained.get
+      stopInserts(spark)
 
-    // 19j. catalog functions (r9): graft.system.* resolves from SQL
-    //      with no registration — DSv2 FunctionCatalog with
-    //      codegen-friendly magic-method bindings
-    {
-      val r = spark.sql(
-        """SELECT graft.system.hash60('demo') AS h,
-          |       graft.system.dot_product(array(1.0d, 2.0d),
-          |                                array(3.0d, 4.0d)) AS dp,
-          |       graft.system.bucket(16, 'demo') AS bk""".stripMargin)
-        .collect().head
-      say(s"[demo] catalog functions: hash60=${r.getLong(0)}, " +
-        s"dot_product=${r.getDouble(1)}, bucket=${r.getInt(2)} " +
-        "(graft.system.*, zero registration)")
-    }
+      // Step 5.2, the Flink batch session: the union read, by name
+      FlinkScript.run(spark, "SET 'execution.runtime-mode' = 'batch';")
+      def top5(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) -> r.getDecimal(1)).toSeq
+      val enriched =
+        spark.sql("SELECT COUNT(1) FROM enriched_orders").head().getLong(0)
+      val maxIngestTs = spark.sql("SELECT MAX(ingest_ts) FROM enriched_orders")
+        .head().getTimestamp(0)
+      val flinkTop5 = top5(spark.sql(
+        """SELECT nation_name, revenue
+          |FROM nation_revenue
+          |ORDER BY revenue DESC
+          |LIMIT 5""".stripMargin))
+      val revenueGroups =
+        spark.sql("SELECT COUNT(*) FROM nation_revenue").head().getLong(0)
 
-    // 19k'. sequence packing (r9): the corpus → training-batch step —
-    //      concat-and-split chunking (exact spans via the two-pass
-    //      distributed prefix sum) and boundary-preserving FFD bins
-    {
-      import spark.implicits._
-      val corpus = Seq((1L, "the quick brown fox"), (2L, "jumps over"),
-        (3L, "the lazy dog and naps")).toDF("doc_id", "text")
-      val toks = org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.split($"text", " "))
-      val chunks = graft.operators.Packing.packChunks(corpus, toks,
-        chunkLen = 5L, buckets = 2).orderBy("chunk_id", "doc_id")
-        .collect().map(r => s"c${r.getLong(0)}:d${r.getLong(1)}" +
-          s"[${r.getLong(2)},+${r.getLong(3)})").mkString(" ")
-      val bins = graft.operators.Packing.packBinsFFD(corpus, toks,
-        binLen = 6L, shards = 1)
-        .groupBy("bin").count().orderBy("bin")
-        .collect().map(r => s"b${r.getLong(0)}=${r.getLong(1)}docs")
-        .mkString(" ")
-      say(s"[demo] sequence packing: chunks $chunks; FFD bins $bins")
-    }
+      // Step 5.1, the Trino role: only the exported Iceberg metadata
+      def path(t: String) = TieredCatalog.lookup("", t).get.path
+      val cold = TieredTable(spark, path("enriched_orders")).readCold().count()
+      val iceberg =
+        IcebergExport.readTable(spark, path("enriched_orders")).count()
+      val trinoTop5 = top5(IcebergExport.readTable(spark, path("nation_revenue"))
+        .orderBy(col("revenue").desc, col("nation_name"))
+        .select("nation_name", "revenue").limit(5))
+      // `$snapshots`: Trino's double quotes in Spark's backtick spelling
+      val snapshots =
+        spark.sql("SELECT * FROM `nation_revenue$snapshots`").count()
 
-    // 19k''. bucketed merge-on-read (r9): hash(PK)-bucketed delta dirs
-    //      → the key-grouped scan satisfies the resolution window and
-    //      the full resolved read plans with ZERO exchanges
-    {
-      spark.sql("DROP TABLE IF EXISTS graft.fluss.mor_bucketed")
-      spark.sql(
-        s"""CREATE TABLE graft.fluss.mor_bucketed (k BIGINT, v BIGINT)
-           |TBLPROPERTIES ('primary-key' = 'k', 'merge-on-read' = 'true',
-           |  'write.bucket-by' = '4',
-           |  'path' = '$base/tables/mor_bucketed')""".stripMargin)
-      spark.sql(
-        "INSERT INTO graft.fluss.mor_bucketed SELECT id, id FROM range(0, 100)")
-      spark.sql(
-        "INSERT INTO graft.fluss.mor_bucketed SELECT id, id * 100 " +
-          "FROM range(0, 100, 9)")
-      val q = spark.sql("SELECT SUM(v) AS s FROM graft.fluss.mor_bucketed")
-      val exchanges = q.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange hashpartitioning"))
-      say(s"[demo] bucketed merge-on-read: resolved SUM=${q.head().getLong(0)} " +
-        s"with $exchanges exchanges (hash(PK)-bucketed deltas, " +
-        "key-grouped scan)")
-    }
-
-    // 19k. snapshot tags (r9): pin the current corpus state under a
-    //      name; later ingest and retention never disturb the pinned
-    //      read — the reproducible-training-run primitive
-    {
-      val tagDir = s"$base/tables/tag_demo"
-      val tt = graft.storage.TieredTable(spark, tagDir)
-      TieredCatalog.register("fluss", "tag_demo", tagDir)
-      tt.commitAppend(Seq((1L, "epoch0")).toDF("id", "v"))
-      spark.sql("CALL graft.system.create_tag('fluss.tag_demo', 'run-1')")
-      tt.commitAppend(Seq((2L, "epoch1")).toDF("id", "v"))
-      tt.vacuum(keepLast = 1) // retention respects the tag
-      val pinned = spark.sql(
-        "SELECT v FROM graft.fluss.tag_demo VERSION AS OF 'run-1'")
-        .as[String].collect().toSeq
-      val refs = spark.sql(
-        "SELECT name, snapshot_id FROM graft.fluss.`tag_demo$refs`")
-        .as[(String, Long)].collect().toSeq
-      say(s"[demo] snapshot tag: VERSION AS OF 'run-1' → ${pinned.mkString(",")} " +
-        s"after vacuum; refs=${refs.mkString(",")}")
-    }
-
-    // 19l. write-audit-publish (r9): stage a candidate batch invisibly
-    //      (spark.graft.wap.id + INSERT INTO), audit it through
-    //      VERSION AS OF, publish only on approval — the quality gate
-    //      between a pipeline and the corpus it feeds
-    {
-      val wapDir = s"$base/tables/wap_demo"
-      val wt = graft.storage.TieredTable(spark, wapDir)
-      TieredCatalog.register("fluss", "wap_demo", wapDir)
-      wt.commitAppend(Seq((1L, "corpus")).toDF("id", "v"))
-      spark.conf.set("spark.graft.wap.id", "batch-7")
-      try spark.sql("INSERT INTO graft.fluss.wap_demo VALUES (2, 'candidate')")
-      finally spark.conf.unset("spark.graft.wap.id")
-      val mainBefore = spark.table("graft.fluss.wap_demo").count()
-      val audit = spark.sql(
-        "SELECT count(*) FROM graft.fluss.wap_demo VERSION AS OF 'batch-7'")
-        .head().getLong(0)
-      spark.sql("CALL graft.system.publish_wap('fluss.wap_demo', 'batch-7')")
-      val mainAfter = spark.table("graft.fluss.wap_demo").count()
-      say(s"[demo] write-audit-publish: main=$mainBefore while staged, " +
-        s"audit view=$audit, published → main=$mainAfter")
-    }
-
-    // 19l2. branches (r9): the multi-batch WAP — a day of batches
-    //       accumulates on a branch, the audit gates once, the corpus
-    //       advances once (fast_forward = ONE published snapshot)
-    {
-      val brDir = s"$base/tables/branch_demo"
-      val bt = graft.storage.TieredTable(spark, brDir)
-      TieredCatalog.register("fluss", "branch_demo", brDir)
-      bt.commitAppend(Seq((1L, "corpus")).toDF("id", "v"))
-      spark.sql("CALL graft.system.create_branch('fluss.branch_demo', 'day1')")
-      spark.conf.set("spark.graft.wap.branch", "day1")
-      try {
-        spark.sql("INSERT INTO graft.fluss.branch_demo VALUES (2, 'b1')")
-        spark.sql("INSERT INTO graft.fluss.branch_demo VALUES (3, 'b2')")
-      } finally spark.conf.unset("spark.graft.wap.branch")
-      val branchN = spark.sql(
-        "SELECT count(*) FROM graft.fluss.branch_demo VERSION AS OF 'day1'")
-        .head().getLong(0)
-      spark.sql("CALL graft.system.fast_forward('fluss.branch_demo', 'day1')")
-      say(s"[demo] branch day1: audit view=$branchN, fast_forward → " +
-        s"main=${spark.table("graft.fluss.branch_demo").count()} in " +
-        s"${bt.latestSnapshotId} snapshots")
-    }
-
-    // 19l3. selective recovery + dim sync (r9): roll back past a bad
-    //       commit, cherry-pick the good one that followed; then one
-    //       by-source MERGE retires rows the source no longer carries
-    {
-      val cpDir = s"$base/tables/recover_demo"
-      val ct = graft.storage.TieredTable(spark, cpDir)
-      TieredCatalog.register("fluss", "recover_demo", cpDir)
-      ct.commitAppend(Seq((1L, "good")).toDF("id", "v"))   // snap 1
-      ct.commitAppend(Seq((2L, "BAD")).toDF("id", "v"))    // snap 2
-      ct.commitAppend(Seq((3L, "good2")).toDF("id", "v"))  // snap 3
-      spark.sql("CALL graft.system.rollback_to_snapshot('fluss.recover_demo', 1)")
-      spark.sql("CALL graft.system.cherrypick_snapshot('fluss.recover_demo', 3)")
-      val kept = spark.table("graft.fluss.recover_demo")
-        .select("v").as[String].collect().sorted.mkString(",")
-      // $history (r9): the rolled-past BAD commit is no longer a
-      // current-state ancestor; the rollback, its target, and the
-      // cherry-pick are
-      val nonAncestors = spark.sql(
-        """SELECT snapshot_id FROM graft.fluss.`recover_demo$history`
-          |WHERE NOT is_current_ancestor ORDER BY snapshot_id""".stripMargin)
-        .collect().map(_.getLong(0)).mkString(",")
-      say(s"[demo] $$history: non-ancestors after rollback = [$nonAncestors]")
-      spark.sql(
-        """MERGE INTO graft.fluss.recover_demo AS t
-          |USING (SELECT 1L AS id) AS s
-          |ON t.id = s.id
-          |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-      say(s"[demo] rollback+cherry-pick kept [$kept]; by-source MERGE → " +
-        s"${spark.table("graft.fluss.recover_demo").count()} row")
-    }
-
-    // 19l4. schema evolution, both verbs (r9): a type widens in place
-    //       (int→long, historical values exact), and one MERGE WITH
-    //       SCHEMA EVOLUTION teaches the corpus a new column
-    {
-      val evDir = s"$base/tables/evolve_demo"
-      val et = graft.storage.TieredTable(spark, evDir)
-      TieredCatalog.register("fluss", "evolve_demo", evDir)
-      et.commitAppend(Seq((1, "a"), (2147483647, "b")).toDF("n", "v"))
-      et.widenColumn("n", org.apache.spark.sql.types.LongType)
-      spark.sql(
-        """MERGE WITH SCHEMA EVOLUTION INTO graft.fluss.evolve_demo AS t
-          |USING (SELECT CAST(4000000000 AS BIGINT) AS n, 'c' AS v,
-          |              'fresh' AS quality) AS s
-          |ON t.n = s.n
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      val shape = spark.table("graft.fluss.evolve_demo").columns.mkString(",")
-      val maxN = spark.sql(
-        "SELECT max(n) FROM graft.fluss.evolve_demo").head().getLong(0)
-      say(s"[demo] evolution: widened n holds max=$maxN; " +
-        s"evolved shape=[$shape]")
-    }
-
-    // 19m. declared write sort order + $partitions (r9): ingest
-    //      clusters by the declared key (disjoint per-file ranges →
-    //      range scans open O(matching files)), and per-partition
-    //      accounting answers from sidecars without opening data
-    {
-      val soDir = s"$base/tables/sorted_demo"
-      val st = graft.storage.TieredTable(spark, soDir,
-        partitionBy = Seq("p"), sortBy = Seq("k"))
-      TieredCatalog.register("fluss", "sorted_demo", soDir,
-        partitionBy = Seq("p"), sortBy = Seq("k"))
-      st.commitAppend(spark.range(100)
-        .selectExpr("CAST(id % 2 AS STRING) AS p", "id * 37 % 100 AS k"))
-      val parts = spark.sql(
-        "SELECT partition, file_count, row_count FROM " +
-          "graft.fluss.`sorted_demo$partitions` ORDER BY partition")
-        .collect().map(r => s"${r.getString(0)}:${r.getLong(2)}")
-      say(s"[demo] sorted write + $$partitions: ${parts.mkString(" ")}")
-    }
-
-    // 20. THE REFERENCE SCRIPT, VERBATIM: the faker-source DDL
-    //     (sql-client.sql) and the README walkthrough run unchanged
-    //     through the Flink-dialect SQL surface — faker connector,
-    //     quoted SET, CREATE/USE CATALOG, PROCTIME computed column,
-    //     PK NOT ENFORCED, datalake properties, EXECUTE STATEMENT SET,
-    //     temporal-join enrichment, continuous revenue
-    val prevCat = spark.sessionState.catalogManager.currentCatalog.name
-    val prevWh = TieredCatalog.warehouse
-    TieredCatalog.warehouse = s"$base/flink_wh"
-    try {
-      graft.plans.FlinkScript.run(spark,
-        graft.plans.FlinkScript.referenceSqlClientScript)
-      graft.plans.FlinkScript.run(spark,
-        graft.plans.FlinkScript.referenceWalkthroughScript)
-      val qe = graft.plans.StreamingInsertSql.query("", "enriched_orders").get
-      val qr = graft.plans.StreamingInsertSql.query("", "nation_revenue").get
-      qe.processAllAvailable(); qr.processAllAvailable()
-      graft.plans.FlinkScript.run(spark,
-        "SET 'execution.runtime-mode' = 'batch';")
-      val n = spark.sql("SELECT COUNT(1) FROM enriched_orders")
-        .head().getLong(0)
-      val trino = graft.storage.IcebergExport.readTable(spark,
-        TieredCatalog.lookup("", "nation_revenue").get.path)
-        .orderBy(org.apache.spark.sql.functions.col("revenue").desc)
-        .select("nation_name").limit(1).head().getString(0)
-      say(s"[demo] reference script verbatim: enriched COUNT(1)=$n, " +
-        s"top nation via exported Iceberg (Trino role)=$trino")
-      spark.sql("STOP STREAMING INSERT INTO enriched_orders")
-      spark.sql("STOP STREAMING INSERT INTO nation_revenue")
+      val r = Result(orders, load.wallS, drain.wallS, enriched, maxIngestTs,
+        cold, iceberg, revenueGroups, flinkTop5, trinoTop5, snapshots)
+      println(r.line)
+      check(r)
+      r
     } finally {
-      spark.sessionState.catalogManager.setCurrentCatalog(prevCat)
-      TieredCatalog.warehouse = prevWh
-      graft.plans.FlinkScript.run(spark,
-        "SET 'execution.runtime-mode' = 'batch';")
+      try stopInserts(spark) catch { case _: Throwable => }
+      FlinkScript.run(spark, "SET 'execution.runtime-mode' = 'batch';")
+      spark.sessionState.catalogManager.setCurrentCatalog(prevCatalog)
+      TieredCatalog.warehouse = prevWarehouse
       Seq("fluss_order", "fluss_customer", "fluss_nation",
         "enriched_orders", "nation_revenue")
         .foreach(TieredCatalog.unregister("", _))
       Seq("source_order", "source_customer", "source_nation").foreach { v =>
         spark.catalog.dropTempView(v)
-        graft.sources.FakerSource.unregister(v)
+        FakerSource.unregister(v)
       }
     }
-
-    out.toSeq
   }
+
+  private def stopInserts(spark: SparkSession): Unit =
+    Seq("enriched_orders", "nation_revenue").foreach { t =>
+      if (StreamingInsertSql.query("", t).isDefined)
+        spark.sql(s"STOP STREAMING INSERT INTO $t")
+    }
 }

@@ -153,7 +153,7 @@ object TemporalJoinParser {
     * join. (The same collapse Flink applies to processing-time temporal
     * joins in batch runtime mode; streaming per-batch semantics come
     * from re-resolving the dim per micro-batch, see
-    * [[graft.streaming.DemoPipeline]].)
+    * [[StreamingInsertSql]].)
     *
     * Which attributes count as processing time (r8 advice — the old
     * any-table column-name check silently collapsed event-time AS OF

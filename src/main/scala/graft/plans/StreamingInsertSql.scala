@@ -75,8 +75,7 @@ import graft.streaming.StatementSet
   * keep resolving — registers in [[planOf]], and
   * `graft_stream_stmt(<id>)` splices it back through the parser,
   * re-ANALYZED at every call site. One `sql()` per micro-batch is
-  * driver-side planning cost only; at 100 TB the data path is
-  * identical to the hand-built pipeline ([[graft.streaming.DemoPipeline]]).
+  * driver-side planning cost only.
   */
 object StreamingInsertSql {
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * statements (/root/reference/flink/sql/sql-client.sql:1-48). This
   * compiles each `#{provider.method 'arg'…}` expression into a
   * DETERMINISTIC Spark Column keyed on the row id (xxhash64 of
-  * table:column:id, the [[graft.streaming.Datagen]] scheme), so batch
+  * table:column:id), so batch
   * and streaming runs over the same id range produce identical rows and
   * test assertions can recompute expected state exactly.
   *
@@ -91,15 +91,13 @@ object FakerSource {
   }
   def clear(): Unit = reg.clear()
 
-  /** Uniform [0, n) long, deterministic per (tag, id) — the Datagen
-    * hash-grid scheme.
-    */
+  /** Uniform [0, n) long, deterministic per (tag, id): a hash grid. */
   private def uniform(tag: String, id: Column, n: Long): Column =
     pmod(xxhash64(lit(tag), id), lit(n))
 
   /** Reproducibility anchor for date/time providers: faker's "past 100
     * days" is relative to the wall clock, which would make every run a
-    * different dataset — pinned instead, like [[graft.streaming.Datagen]].
+    * different dataset — pinned instead.
     */
   val AnchorDate = "2026-08-01"
 

@@ -203,8 +203,9 @@ class InMemoryObjectStoreServer(listPageSize: Int = 1000) {
   }
 }
 
-/** Scoped store for [[graft.Demo]]: start, hand the block a
-  * `graftos://` bucket root, stop.
+/** Scoped in-process object store: start, hand the block a
+  * `graftos://` bucket root, stop. The specs use it to run whole
+  * workloads with the warehouse in a bucket.
   */
 object DemoObjectStore {
   def withStore[A](f: String => A): A = {

@@ -2,17 +2,15 @@ package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Flink's `EXECUTE STATEMENT SET` shape (/root/reference/README.md:
   * 211-216): N INSERTs launched as one multi-sink job. Spark maps each
   * INSERT to its own [[StreamingQuery]]; this thin runner starts them
-  * together and waits on any/all.
+  * together, all or none.
   */
 class StatementSet {
   private val thunks = ArrayBuffer[() => StreamingQuery]()
-  private var started: Seq[StreamingQuery] = Nil
 
   /** Queue a statement (lazily — nothing starts until [[run]]). */
   def add(start: => StreamingQuery): this.type = {
@@ -21,7 +19,7 @@ class StatementSet {
 
   /** Start every queued statement concurrently. If one fails to start,
     * the already-started queries are stopped before rethrowing —
-    * otherwise they would keep running with no handle for [[stopAll]].
+    * otherwise they would keep running with no handle to stop them.
     */
   def run(): Seq[StreamingQuery] = {
     val acc = ArrayBuffer[StreamingQuery]()
@@ -31,33 +29,8 @@ class StatementSet {
         acc.foreach(q => try q.stop() catch { case _: Throwable => })
         throw e
     }
-    started = acc.toSeq
-    started
+    acc.toSeq
   }
-
-  def queries: Seq[StreamingQuery] = started
-
-  /** Block until every statement finishes (bounded sources) or
-    * `timeoutMs` elapses; returns true if all started AND terminated.
-    * The timeout is one shared deadline across the set (each query gets
-    * the time remaining, not a fresh window). False if [[run]] was
-    * never called — "nothing ran" is not "everything finished".
-    */
-  def awaitAll(timeoutMs: Long): Boolean = {
-    if (started.isEmpty) return false
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    started.forall { q =>
-      val leftMs = (deadline - System.nanoTime()) / 1000000L
-      // deadline spent: a query that already terminated still counts as
-      // done — only a query genuinely still running makes this a timeout.
-      // The 1 ms probe (not isActive) keeps failure semantics uniform:
-      // a query that died with an error throws it here, same as the
-      // in-budget path.
-      q.awaitTermination(math.max(leftMs, 1L))
-    }
-  }
-
-  def stopAll(): Unit = started.foreach(StatementSet.stopGracefully(_))
 }
 
 object StatementSet {

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stream-stream joins. The reference's Flink engine joins two
-  * changelogs either temporally (processing-time lookup — DemoPipeline's
-  * enrichment, SURVEY §2.J) or by event-time interval (Flink's
+  * changelogs either temporally (processing-time lookup — the
+  * `FOR SYSTEM_TIME AS OF` enrichment that [[graft.plans.StreamingInsertSql]]
+  * runs per micro-batch, SURVEY §2.J) or by event-time interval (Flink's
   * `l.ts BETWEEN r.ts - x AND r.ts + y` interval join); this is the
   * interval half, Spark-native: Structured Streaming's watermarked
   * stream-stream join, where the time-band condition doubles as the

@@ -233,4 +233,27 @@ class BucketedMorSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e2.getMessage.contains("mutually exclusive"))
   }
+
+  test("hash(PK)-bucketed deltas: the resolved SUM over 100 keys with " +
+      "every 9th updated plans with zero exchanges") {
+    val dir = Files.createTempDirectory("graft-bmor-sum").toString
+    spark.sql("DROP TABLE IF EXISTS graft.bmor.mor_bucketed")
+    spark.sql(
+      s"""CREATE TABLE graft.bmor.mor_bucketed (k BIGINT, v BIGINT)
+         |TBLPROPERTIES ('primary-key' = 'k', 'merge-on-read' = 'true',
+         |  'write.bucket-by' = '4',
+         |  'path' = '$dir/mor_bucketed')""".stripMargin)
+    spark.sql(
+      "INSERT INTO graft.bmor.mor_bucketed SELECT id, id FROM range(0, 100)")
+    spark.sql(
+      "INSERT INTO graft.bmor.mor_bucketed SELECT id, id * 100 " +
+        "FROM range(0, 100, 9)")
+    val q = spark.sql("SELECT SUM(v) AS s FROM graft.bmor.mor_bucketed")
+    val exchanges = q.queryExecution.executedPlan.toString
+      .linesIterator.count(_.contains("Exchange hashpartitioning"))
+    // 4950 + 99 * 594: the 12 updated keys sum to 594 before and
+    // 59400 after
+    assert(q.head().getLong(0) == 63756L)
+    assert(exchanges == 0, q.queryExecution.executedPlan.toString)
+  }
 }

@@ -166,6 +166,9 @@ class ObjectStoreSqlSpec extends AnyFunSuite with SparkSpec {
       TieredCatalog.unregister("os", "t")
       assert(spark.sql("SELECT COUNT(*) FROM graft.os.t")
         .head().getLong(0) == 2L)
+      assert(spark.sql("SELECT id, v FROM graft.os.t ORDER BY id")
+        .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b2")),
+        "the upsert's winners survive the registry wipe")
       assert(TieredCatalog.lookup("os", "t").get.pk == Seq("id"))
 
       // schema evolution writes back to the bucket

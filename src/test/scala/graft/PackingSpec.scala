@@ -102,4 +102,24 @@ class PackingSpec extends AnyFunSuite with SparkSpec {
         Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("refusing to truncate")))
   }
+
+  test("exact small fixture: 4+2+5 tokens into windows of 5, FFD bins " +
+      "of capacity 6") {
+    import spark.implicits._
+    val corpus = Seq((1L, "the quick brown fox"), (2L, "jumps over"),
+      (3L, "the lazy dog and naps")).toDF("doc_id", "text")
+    val toks = size(split($"text", " "))
+    val chunks = Packing.packChunks(corpus, toks, chunkLen = 5L, buckets = 2)
+      .orderBy("chunk_id", "doc_id")
+      .collect().map(r => s"c${r.getLong(0)}:d${r.getLong(1)}" +
+        s"[${r.getLong(2)},+${r.getLong(3)})").mkString(" ")
+    assert(chunks == "c0:d1[0,+4) c0:d2[0,+1) c1:d2[1,+1) c1:d3[0,+4) " +
+      "c2:d3[4,+1)")
+    // first-fit decreasing: 5 | 4+2
+    val bins = Packing.packBinsFFD(corpus, toks, binLen = 6L, shards = 1)
+      .groupBy("bin").count().orderBy("bin")
+      .collect().map(r => s"b${r.getLong(0)}=${r.getLong(1)}docs")
+      .mkString(" ")
+    assert(bins == "b0=1docs b1=2docs")
+  }
 }

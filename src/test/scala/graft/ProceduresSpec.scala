@@ -76,6 +76,13 @@ class ProceduresSpec extends AnyFunSuite with SparkSpec {
     assert(t.readCold().select("v").as[String].collect().toSet ==
       Set("good", "good2"),
       "the picked append lands; the rolled-back one stays out")
+    // $history: the rolled-past commits 2 (BAD) and 3 (its content
+    // re-applied by the pick) are off the current-state lineage
+    val nonAncestors = spark.sql(
+      """SELECT snapshot_id FROM graft.procdb.`cp$history`
+        |WHERE NOT is_current_ancestor ORDER BY snapshot_id""".stripMargin)
+      .collect().map(_.getLong(0)).toSeq
+    assert(nonAncestors == Seq(2L, 3L))
 
     // refusals: double-pick, rewrite-lineage snapshots, unknown ids
     val dup = intercept[Exception](t.cherrypick(3L))
@@ -94,5 +101,23 @@ class ProceduresSpec extends AnyFunSuite with SparkSpec {
     val e2 = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("CALL graft.system.compact('procdb.missing')"))
     assert(e2.getMessage.contains("unknown graft table"), e2.getMessage)
+  }
+
+  test("CALL compact then vacuum on a change-feed table retains only " +
+       "the compact snapshot") {
+    val dir = Files.createTempDirectory("graft-proc-cdf").toString
+    val t = TieredTable(spark, s"$dir/t", changeDataFeed = true)
+    graft.plans.TieredCatalog.register("procdb", "cdf_cv", s"$dir/t",
+      changeDataFeed = true)
+    t.commitAppend(Seq(("ASIA", 10L), ("EMEA", 5L), ("ASIA", 7L))
+      .toDF("region", "amount_usd"))
+    spark.sql("CALL graft.system.compact('procdb.cdf_cv')")
+    spark.sql("CALL graft.system.vacuum('procdb.cdf_cv', 1)")
+    val ops = spark.sql(
+      """SELECT operation FROM graft.procdb.cdf_cv__snapshots
+        |ORDER BY snapshot_id""".stripMargin)
+      .collect().map(_.getString(0)).mkString(",")
+    assert(ops == "compact")
+    assert(t.readCold().count() == 3L)
   }
 }

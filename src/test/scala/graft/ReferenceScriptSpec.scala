@@ -8,70 +8,69 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Upsert
-import graft.plans.{FlinkScript, StreamingInsertSql, TieredCatalog}
+import graft.plans.TieredCatalog
 import graft.sources.FakerSource
-import graft.storage.IcebergExport
 
-/** THE reference demo, end to end, from its own SQL: the faker source
-  * DDL (/root/reference/flink/sql/sql-client.sql:1-50) and the README
-  * walkthrough statements (README.md:104-316) run VERBATIM through
-  * `spark.sql` — catalog creation, Flink-dialect CREATE TABLEs
+/** THE reference demo, end to end, from its own SQL: [[Demo.run]] runs
+  * the faker source DDL (the reference's flink/sql/sql-client.sql:1-50)
+  * and the README walkthrough statements (README.md:104-316) VERBATIM
+  * through `spark.sql` — catalog creation, Flink-dialect CREATE TABLEs
   * (PROCTIME column, PK NOT ENFORCED, datalake properties), the
   * EXECUTE STATEMENT SET loads, the temporal-join enrichment INSERT,
   * the continuously-maintained revenue INSERT, and the batch union
-  * queries — then every produced table is checked against an
-  * independent recomputation from the deterministic generators.
+  * queries — and this spec checks the reference's observable claims
+  * against an independent recomputation from the deterministic
+  * generators, with the warehouse on local disk and in the bucket.
   *
   * The only local collapses, both documented where implemented:
   * `rows-per-second` pacing fast-forwards (bounded data identical) and
   * `SET 'execution.runtime-mode' = 'streaming'` is issued explicitly
   * (the Flink SQL client's implicit default for unbounded INSERTs).
   * The Trino session (README.md:257-293) is played by
-  * [[IcebergExport.readTable]] — the independent Iceberg-metadata
-  * reader — plus the `$snapshots` query in Spark spelling (backticks
-  * for Trino's double quotes).
+  * [[graft.storage.IcebergExport.readTable]] — the independent
+  * Iceberg-metadata reader — plus the `$snapshots` query in Spark
+  * spelling (backticks for Trino's double quotes).
   */
 class ReferenceScriptSpec extends AnyFunSuite with SparkSpec {
 
-  /** sql-client.sql verbatim (the faker sources + sink policy). */
-  private val sqlClientScript = FlinkScript.referenceSqlClientScript
+  /** The claims every warehouse must show, checked while the run's
+    * tables are live.
+    */
+  private def claims(r: Demo.Result): Unit = {
+    // all generated orders enrich (LEFT JOIN keeps unmatched)
+    assert(r.enrichedRows == 10000L)
+    assert(r.maxIngestTs != null)
+    // Flink role (hot ∪ cold) ≥ Trino role (cold only), README.md:316;
+    // datalake freshness collapsed to the trigger → fully tiered here
+    assert(r.enrichedRows >= r.coldRows)
+    assert(r.icebergRows == r.coldRows && r.coldRows == r.enrichedRows)
+    assert(r.trinoTop5 == r.flinkTop5)
+    assert(r.flinkTop5.size == 5)
+    assert(r.revenueSnapshots >= 1)
 
-  /** README.md steps 3-4 verbatim (catalog, tables, loads, pipeline). */
-  private val setupScript = FlinkScript.referenceWalkthroughScript
+    // nation_revenue == GROUP BY over the enriched table (nulls
+    // dropped by the PK NOT NULL sink policy)
+    val gotRevenue = spark.table("nation_revenue")
+      .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
+    val expRevenue = spark.table("enriched_orders")
+      .where(col("nation_name").isNotNull)
+      .groupBy("nation_name")
+      .agg(sum("total_price").cast("decimal(15,2)").as("revenue"))
+      .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
+    assert(gotRevenue == expRevenue)
+    assert(!gotRevenue.contains(null))
+    assert(r.revenueGroups == gotRevenue.size)
+  }
 
   test("the reference demo script runs verbatim, results match recomputation") {
     val wh = Files.createTempDirectory("graft-refscript").toString
-    val prevWarehouse = TieredCatalog.warehouse
-    val prevCatalog = spark.sessionState.catalogManager.currentCatalog.name
-    TieredCatalog.warehouse = wh
-    try {
-      FlinkScript.run(spark, sqlClientScript)
+    Demo.run(spark, 10000L, wh, r => {
+      claims(r)
       assert(spark.sql("SHOW CREATE TABLE source_customer").head()
         .getString(0).contains("'connector' = 'faker'"))
-      FlinkScript.run(spark, setupScript)
 
-      // let both continuous jobs drain (Flink: watch the web UI)
-      val qEnrich = StreamingInsertSql.query("", "enriched_orders").get
-      val qRevenue = StreamingInsertSql.query("", "nation_revenue").get
-      qEnrich.processAllAvailable()
-      qRevenue.processAllAvailable()
-
-      // -------- Step 5.2, Flink batch session verbatim: union queries
-      FlinkScript.run(spark,
-        """SET 'execution.runtime-mode' = 'batch';
-          |SET 'sql-client.execution.result-mode' = 'tableau';
-          |""".stripMargin)
-      val unionCount =
-        spark.sql("SELECT COUNT(1) FROM enriched_orders").head().getLong(0)
-      assert(unionCount == 10000L,
-        s"all 10000 generated orders enrich (LEFT JOIN keeps unmatched): " +
-          s"got $unionCount")
-      val maxTs = spark.sql("SELECT MAX(ingest_ts) FROM enriched_orders")
-        .head().getTimestamp(0)
-      assert(maxTs != null)
-
-      // -------- independent recomputation from the generators:
-      // latest-per-key dims (LWW on generation order) + the same joins
+      // independent recomputation from the generators: latest-per-key
+      // dims (LWW on generation order) + the same joins
       val seq = FakerSource.SeqCol
       def latest(src: String, key: String): DataFrame =
         Upsert.latestByKey(
@@ -90,103 +89,18 @@ class ReferenceScriptSpec extends AnyFunSuite with SparkSpec {
           "nation_name")
           .collect().map(_.mkString("|")).sorted.toSeq
       assert(keyOf(spark.table("enriched_orders")) == keyOf(expectEnriched))
-
-      // nation_revenue == GROUP BY over the enriched table (nulls
-      // dropped by the PK NOT NULL sink policy)
-      val gotRevenue = spark.table("nation_revenue")
-        .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-      val expRevenue = spark.table("enriched_orders")
-        .where(col("nation_name").isNotNull)
-        .groupBy("nation_name")
-        .agg(sum("total_price").cast("decimal(15,2)").as("revenue"))
-        .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-      assert(gotRevenue == expRevenue)
-      assert(!gotRevenue.contains(null))
-
-      // -------- Step 5.1, the Trino role: read ONLY the exported
-      // Iceberg metadata (independent reader; no TieredTable code)
-      val enrichedPath = TieredCatalog.lookup("", "enriched_orders").get.path
-      val revenuePath = TieredCatalog.lookup("", "nation_revenue").get.path
-      val trinoEnriched = IcebergExport.readTable(spark, enrichedPath)
-      // datalake freshness collapsed to the trigger → fully tiered here;
-      // in general Trino ≤ Flink union (README.md:316)
-      assert(trinoEnriched.count() == unionCount)
-      val trinoTop5 = IcebergExport.readTable(spark, revenuePath)
-        .orderBy(col("revenue").desc, col("nation_name"))
-        .select("nation_name", "revenue")
-        .collect().map(r => r.getString(0) -> r.getDecimal(1)).toSeq
-      val top5 = spark.sql(
-        """SELECT nation_name, revenue
-          |FROM nation_revenue
-          |ORDER BY revenue DESC
-          |LIMIT 5""".stripMargin)
-        .collect().map(r => r.getString(0) -> r.getDecimal(1)).toSeq
-      assert(trinoTop5.take(5) == top5)
-
-      // $snapshots — Trino's double quotes in Spark's backtick spelling
-      val snaps = spark.sql("SELECT * FROM `nation_revenue$snapshots`")
-      assert(snaps.count() >= 1)
-    } finally {
-      try {
-        spark.sql("STOP STREAMING INSERT INTO enriched_orders")
-        spark.sql("STOP STREAMING INSERT INTO nation_revenue")
-      } catch { case _: Throwable => }
-      FlinkScript.run(spark, "SET 'execution.runtime-mode' = 'batch';")
-      spark.sessionState.catalogManager.setCurrentCatalog(prevCatalog)
-      TieredCatalog.warehouse = prevWarehouse
-      Seq("fluss_order", "fluss_customer", "fluss_nation",
-        "enriched_orders", "nation_revenue")
-        .foreach(TieredCatalog.unregister("", _))
-      Seq("source_order", "source_customer", "source_nation").foreach { v =>
-        spark.catalog.dropTempView(v); FakerSource.unregister(v)
-      }
-    }
+    })
   }
 
   test("the same script runs with the warehouse in the BUCKET (MinIO role)") {
     graft.storage.DemoObjectStore.withStore { fsUrl =>
-      val prevWarehouse = TieredCatalog.warehouse
-      val prevCatalog = spark.sessionState.catalogManager.currentCatalog.name
-      TieredCatalog.warehouse = fsUrl
-      try {
-        FlinkScript.run(spark, sqlClientScript)
-        FlinkScript.run(spark, setupScript)
-        val qEnrich = StreamingInsertSql.query("", "enriched_orders").get
-        val qRevenue = StreamingInsertSql.query("", "nation_revenue").get
-        qEnrich.processAllAvailable()
-        qRevenue.processAllAvailable()
-        FlinkScript.run(spark, "SET 'execution.runtime-mode' = 'batch';")
-        assert(spark.sql("SELECT COUNT(1) FROM enriched_orders")
-          .head().getLong(0) == 10000L)
-        // the Trino role resolves the ENTIRE metadata chain from
+      Demo.run(spark, 10000L, fsUrl, r => {
+        claims(r)
+        // the Trino role resolved the ENTIRE metadata chain from
         // bucket objects (datalake export wrote into the bucket)
         val path = TieredCatalog.lookup("", "enriched_orders").get.path
         assert(path.startsWith("graftos://"), path)
-        assert(IcebergExport.readTable(spark, path).count() == 10000L)
-        // revenue matches the batch recomputation, same as locally
-        val got = spark.table("nation_revenue")
-          .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-        val exp = spark.table("enriched_orders")
-          .where(col("nation_name").isNotNull)
-          .groupBy("nation_name")
-          .agg(sum("total_price").cast("decimal(15,2)").as("revenue"))
-          .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-        assert(got == exp)
-      } finally {
-        try {
-          spark.sql("STOP STREAMING INSERT INTO enriched_orders")
-          spark.sql("STOP STREAMING INSERT INTO nation_revenue")
-        } catch { case _: Throwable => }
-        FlinkScript.run(spark, "SET 'execution.runtime-mode' = 'batch';")
-        spark.sessionState.catalogManager.setCurrentCatalog(prevCatalog)
-        TieredCatalog.warehouse = prevWarehouse
-        Seq("fluss_order", "fluss_customer", "fluss_nation",
-          "enriched_orders", "nation_revenue")
-          .foreach(TieredCatalog.unregister("", _))
-        Seq("source_order", "source_customer", "source_nation").foreach { v =>
-          spark.catalog.dropTempView(v); FakerSource.unregister(v)
-        }
-      }
+      })
     }
   }
 }

@@ -1,13 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.streaming.{Datagen, DemoPipeline, StatementSet}
 
 case class OrderEvent(order_key: Long, cust_key: Option[Int],
                       total_price: Double, order_date: java.sql.Date,
@@ -25,126 +20,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         1.0 + rnd.nextInt(999000) / 1000.0,
         java.sql.Date.valueOf("2026-08-01"), "low", s"Clerk${i % 4}")
     }
-  }
-
-  private def newPipeline(): (DemoPipeline, String) = {
-    val dir = Files.createTempDirectory("graft-demo").toString
-    (new DemoPipeline(spark, s"$dir/tables"), s"$dir/ckpt")
-  }
-
-  test("streaming enrichment converges to the batch answer") {
-    val (p, ckpt) = newPipeline()
-    p.loadDims()
-    val src = MemoryStream[OrderEvent]
-    val events = mkOrders(300)
-    src.addData(events.take(120))
-    val q = p.startEnrichment(src.toDF(), ckpt)
-    q.processAllAvailable()
-    src.addData(events.drop(120))
-    q.processAllAvailable()
-    q.stop()
-
-    // batch reference: same join over the same final dim state
-    val got = p.enriched.readUnion()
-    val batch = events.toDF()
-    val cust = p.customer.readCold()
-    val nat = p.nation.readCold()
-    val want = batch
-      .join(cust.withColumnRenamed("name", "cust_name"), Seq("cust_key"), "left")
-      .join(nat.withColumnRenamed("name", "nation_name"), Seq("nation_key"), "left")
-      .filter(col("cust_key").isNotNull)
-    assert(got.count() == want.count())
-    val gotSum = got.agg(sum(col("total_price"))).head().getDecimal(0)
-    val wantSum = want.agg(sum(col("total_price").cast(DecimalType(15, 2))))
-      .head().getDecimal(0)
-    assert(gotSum == wantSum)
-    // freshness: everything tiered within the trigger → empty hot tail
-    assert(p.enriched.readHot().count() == 0)
-    assert(p.enriched.readCold().count() == got.count())
-  }
-
-  test("continuous revenue agg equals batch GROUP BY on the final state") {
-    val (p, ckpt) = newPipeline()
-    p.loadDims()
-    val src = MemoryStream[OrderEvent]
-    val events = mkOrders(200)
-    src.addData(events.take(80))
-    val enrichQ = p.startEnrichment(src.toDF(), ckpt)
-    enrichQ.processAllAvailable()
-    val revQ = p.startRevenue(ckpt)
-    revQ.processAllAvailable()
-    src.addData(events.drop(80))
-    enrichQ.processAllAvailable()
-    revQ.processAllAvailable()
-    enrichQ.stop(); revQ.stop()
-
-    val want = p.enriched.readUnion()
-      .filter(col("nation_name").isNotNull)
-      .groupBy("nation_name")
-      .agg(sum(col("total_price")).cast(DecimalType(15, 2)).as("revenue"))
-    val got = p.revenue.readCold()
-    assert(got.count() == want.count())
-    val diff = got.as("g").join(want.as("w"), Seq("nation_name"))
-      .filter(col("g.revenue") =!= col("w.revenue"))
-    assert(diff.count() == 0, "every nation's revenue matches the batch answer")
-    // top-k runs over the maintained PK table
-    assert(p.topNations(5).count() <= 5)
-  }
-
-  test("replayed micro-batch tags are no-ops (exactly-once sinks)") {
-    val (p, _) = newPipeline()
-    p.loadDims()
-    val batch = Datagen.sourceOrder(spark, 50)
-    p.enrichBatch(batch, batchId = 7)
-    val n1 = p.enriched.readUnion().count()
-    val s1 = p.enriched.latestSnapshotId
-    p.enrichBatch(batch, batchId = 7) // crash-replay of the same batch
-    assert(p.enriched.readUnion().count() == n1, "no duplicated rows")
-    // replay may tier nothing new; no new log segment appears
-    assert(p.enriched.taggedSegment("enrich-7").isDefined)
-    assert(p.enriched.logSegments.size == 1)
-    assert(p.enriched.latestSnapshotId == s1)
-  }
-
-  test("statement set starts the multi-sink job together (README 211-216)") {
-    val (p, ckpt) = newPipeline()
-    p.loadDims()
-    val src1 = MemoryStream[OrderEvent]
-    val src2 = MemoryStream[OrderEvent]
-    src1.addData(mkOrders(10))
-    src2.addData(mkOrders(10))
-    val set = StatementSet()
-      .add(p.startIngest(src1.toDF(), s"$ckpt/a"))
-      .add(p.startEnrichment(src2.toDF(), s"$ckpt/b"))
-    val qs = set.run()
-    qs.foreach(_.processAllAvailable())
-    set.stopAll()
-    assert(p.orders.readUnion().count() == 10)
-    assert(p.enriched.readUnion().count() > 0)
-  }
-
-  test("restart from checkpoint resumes at the recorded offset, exactly once") {
-    val (p, ckpt) = newPipeline()
-    p.loadDims()
-    val events = mkOrders(100)
-    // replayable source: the orders table's own log (file stream source)
-    val df1 = events.take(60).toDF()
-    p.orders.appendLog(df1)
-    val q1 = p.startEnrichment(p.orders.readStreamLog(df1.schema), ckpt)
-    q1.processAllAvailable()
-    q1.stop()
-    val afterFirst = p.enriched.readUnion().count()
-    assert(afterFirst ==
-      df1.filter(col("cust_key").isNotNull).count())
-    // more data lands while the query is down
-    p.orders.appendLog(events.drop(60).toDF())
-    // a NEW query on the SAME checkpoint resumes from the recorded
-    // offsets: already-processed files are not re-read, nothing is lost
-    val q2 = p.startEnrichment(p.orders.readStreamLog(df1.schema), ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    assert(p.enriched.readUnion().count() ==
-      events.toDF().filter(col("cust_key").isNotNull).count())
   }
 
   test("streaming first-occurrence dedup drops dups within and across batches") {
@@ -279,14 +154,5 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val got = spark.table("ssj")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 100L)))
-  }
-
-  test("deterministic datagen: batch and re-run produce identical rows") {
-    val a = Datagen.sourceOrder(spark, 100).collect()
-    val b = Datagen.sourceOrder(spark, 100).collect()
-    assert(a.toSeq == b.toSeq)
-    val c = Datagen.sourceCustomer(spark, 200)
-    // ≤20 distinct keys over 200 rows → upsert dedup is load-bearing
-    assert(c.select("cust_key").distinct().count() <= 20)
   }
 }

@@ -629,4 +629,18 @@ class TieredTableSpec extends AnyFunSuite with SparkSpec {
       Seq("p_day=day1", "p_day=day2", "p_day=day3"))
   }
 
+  test("replayed micro-batch tags are no-ops (exactly-once sinks)") {
+    val t = tmpTable()
+    val batch = spark.range(50).select(col("id").as("order_key"),
+      (col("id") % 20).cast("int").as("cust_key"))
+    // one micro-batch of a datalake sink: tagged append, then tier
+    t.appendLog(batch, tag = Some("enrich-7")); t.tier()
+    val n1 = t.readUnion().count()
+    val s1 = t.latestSnapshotId
+    t.appendLog(batch, tag = Some("enrich-7")); t.tier() // crash-replay
+    assert(t.readUnion().count() == n1, "no duplicated rows")
+    assert(t.taggedSegment("enrich-7").isDefined)
+    assert(t.logSegments.size == 1)
+    assert(t.latestSnapshotId == s1)
+  }
 }

@@ -185,4 +185,20 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
       s"kept partitions must not vanish from the accounting: $rows")
     spark.sql(s"DROP TABLE graft.sorts.$name")
   }
+
+  test("declared sort order + $partitions: 100 rows over two partitions " +
+       "account 50 each") {
+    val dir = Files.createTempDirectory("graft-sorted-parts").toString
+    val t = TieredTable(spark, s"$dir/t", partitionBy = Seq("p"),
+      sortBy = Seq("k"))
+    TieredCatalog.register("sorts", "sorted_parts", s"$dir/t",
+      partitionBy = Seq("p"), sortBy = Seq("k"))
+    t.commitAppend(spark.range(100)
+      .selectExpr("CAST(id % 2 AS STRING) AS p", "id * 37 % 100 AS k"))
+    val parts = spark.sql(
+      "SELECT partition, file_count, row_count FROM " +
+        "graft.sorts.`sorted_parts$partitions` ORDER BY partition")
+      .collect().map(r => s"${r.getString(0)}:${r.getLong(2)}")
+    assert(parts.mkString(" ") == "p=0:50 p=1:50")
+  }
 }
