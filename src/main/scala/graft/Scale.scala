@@ -542,12 +542,11 @@ object Scale {
         val t = TieredTable(spark, s"$root/lake_v$fv", pk = Seq("okey", "pt"),
           mergeOnRead = true, partitionBy = Seq("pt"))
         val (built, build) = Measure(spark) {
-          t.commitUpsert(wide.repartition(col("pt")))            // seq 1
+          t.commitUpsert(wide)                                   // seq 1
           (1 to waves).foreach { w =>                            // seq 2..10
             t.commitUpsert(wide
               .filter(pmod(col("okey"), lit(50)) === w)
-              .withColumn("price", (col("price") + w).cast("decimal(15,2)"))
-              .repartition(col("pt")))
+              .withColumn("price", (col("price") + w).cast("decimal(15,2)")))
           }
           IcebergExport.export(t, fv)
         }

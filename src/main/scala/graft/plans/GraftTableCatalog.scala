@@ -1214,35 +1214,6 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
       }
       override def build(): V1Write = new TieredV1Write
 
-      /** WRITE-SIDE CLUSTERING (r9): a partitioned sink shuffles the
-        * incoming batch ONCE by its partition columns (and sorts
-        * within tasks) before the layout write, so each `col=value`
-        * dir is produced by the tasks that own its key instead of
-        * every task opening a file in every dir — at 100 TB ingest
-        * that is the difference between |partitions| files and
-        * |tasks|×|partitions| small files per commit, Iceberg's hash
-        * distribution-mode. Done HERE, inside the V1 insert, and not
-        * via `RequiresDistributionAndOrdering`: Spark's V1 fallback
-        * exec re-plans from `AppendData.analyzedQuery` — the
-        * pre-V2Writes original — so a declared write distribution is
-        * structurally ignored on this path (verified against the
-        * 4.1 strategy bytecode; the injected RebalancePartitions never
-        * executes). PK sinks skip it: commitUpsert's key dedup
-        * reshuffles anyway, and a pre-shuffle would just double the
-        * exchange. Opt out with
-        * `spark.graft.write.distributionMode=none` (skew stance: one
-        * giant partition value → one writer task).
-        */
-      private def clusterForLayout(data: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        import org.apache.spark.sql.functions.col
-        val on = entry.pk.isEmpty && entry.partitionBy.nonEmpty &&
-          spark.conf.get("spark.graft.write.distributionMode", "hash") != "none"
-        if (!on) data
-        else data.repartition(entry.partitionBy.map(col): _*)
-          .sortWithinPartitions(entry.partitionBy.map(col): _*)
-      }
-
       class TieredV1Write extends V1Write {
         /** Streaming face of the same sink (`writeStream.toTable`):
           * append/update epochs only — a continuously-truncating sink
@@ -1282,17 +1253,17 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
                     "conf is not stageable — only appends cherry-pick " +
                     "onto a moved head; unset it to overwrite directly")
                 wapId match {
-                  case Some(id) => t.stageAppend(clusterForLayout(data), id)
+                  case Some(id) => t.stageAppend(data, id)
                   // branch: multi-batch staging — every INSERT under the
                   // conf accumulates on the branch until fast_forward
                   case None =>
-                    t.appendToBranch(clusterForLayout(data), wapBranch.get)
+                    t.appendToBranch(data, wapBranch.get)
                 }
                 return
               }
               if (partOverwrite.isDefined) {
                 val batch =
-                  if (entry.pk.isEmpty) clusterForLayout(data)
+                  if (entry.pk.isEmpty) data
                   else TieredSqlTable.lwwByArrival(data, entry.pk)
                 t.commitOverwritePartitions(batch, partOverwrite.get)
               }
@@ -1308,7 +1279,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
                     "they would resurface over the replaced snapshot; " +
                     "tier() before INSERT OVERWRITE")
                 val batch =
-                  if (entry.pk.isEmpty) clusterForLayout(data)
+                  if (entry.pk.isEmpty) data
                   else TieredSqlTable.lwwByArrival(data, entry.pk)
                 t.commitOverwrite(batch)
               }
@@ -1318,7 +1289,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
               // copy-on-write and merge-on-read modes
               else if (entry.pk.nonEmpty)
                 t.commitUpsert(TieredSqlTable.lwwByArrival(data, entry.pk))
-              else t.appendLog(clusterForLayout(data))
+              else t.appendLog(data)
               (): Unit
             }
           }

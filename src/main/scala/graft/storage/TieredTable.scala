@@ -534,52 +534,16 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       fs.readString(s"${segPath(s)}/_TAG").exists(_.trim == tag)
     }
 
-  /** Append a batch to the hot log; returns the new segment id.
-    * Locally, writes go to a temp dir then atomic-rename into place so
-    * readers never see a partial segment; remotely (no rename), data
-    * writes straight to the final prefix and the `_SEG` marker —
-    * written last, one atomic object PUT — publishes it (a crashed
-    * append leaves a markerless, invisible prefix that the next append
-    * of the same id overwrites). With `tag` (e.g. "batch-7" from a
-    * streaming micro-batch) the append is exactly-once: a replayed
-    * batch whose tag already landed is skipped.
+  /** Append a batch to the hot log; returns the new segment id. The
+    * batch keeps the partition clustering but not the declared sort
+    * order: this is the latency path, and tier() converges the layout.
+    * An empty batch on a partitioned table lands no data file and
+    * publishes nothing (-1). With `tag` (e.g. "batch-7" from a streaming
+    * micro-batch) the append is exactly-once: a replayed batch whose tag
+    * already landed is skipped.
     */
-  def appendLog(df: DataFrame, tag: Option[String] = None): Long = withCommitLock {
-    tag.flatMap(taggedSegment) match {
-      case Some(existing) => return existing
-      case None =>
-    }
-    // floor at watermark+1: after vacuum() deletes tiered segments the
-    // directory may be empty, but reusing an id ≤ tieredSeg would park
-    // rows where every read filters them out — silent loss
-    val floor = math.max(
-      logSegments.lastOption.map(_ + 1).getOrElse(0L),
-      currentSnapshot.map(_.tieredSeg + 1).getOrElse(0L))
-    if (remote) {
-      // Cross-PROCESS id arbitration: locally the atomic rename makes
-      // the second writer of one segment id fail loudly, but a direct
-      // remote write has no such gate — two drivers picking the same
-      // id would interleave objects in one prefix. The segment id is
-      // therefore CLAIMED via the MetaStore conditional PUT (the same
-      // primitive the manifest commit rides); the loser advances to
-      // the next id. A claim whose writer died pre-marker leaves an
-      // id gap (harmless — every reader tolerates sparse segment ids)
-      // and invisible data objects; [[gcOrphans]] reclaims both under
-      // its writer-quiet contract.
-      var next = floor
-      while (!meta.putIfAbsent(f"segclaim-$next%06d", "")) next += 1
-      writeData(df, segPath(next))
-      tag.foreach(t => fs.writeString(s"${segPath(next)}/_TAG", t))
-      fs.writeString(s"${segPath(next)}/_SEG", "")
-      next
-    } else {
-      val tmp = s"$logDir/_tmp-seg-${"%06d".format(floor)}"
-      writeData(df, tmp)
-      tag.foreach(t => fs.writeString(s"$tmp/_TAG", t))
-      fs.move(tmp, segPath(floor))
-      floor
-    }
-  }
+  def appendLog(df: DataFrame, tag: Option[String] = None): Long =
+    publishSegment(tag)(writeData(df, _, order = Some(Nil)))
 
   /** Commit PRE-WRITTEN parquet files as one log segment — the DSv2
     * streaming sink's zero-copy path: executors already wrote the
@@ -592,124 +556,182 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * replayed tag the staged files are DROPPED (their bytes already
     * committed under the tag).
     */
-  def appendLogFiles(files: Seq[String], tag: Option[String] = None): Long =
-    withCommitLock {
-      require(partitionBy.isEmpty,
-        "appendLogFiles commits raw files — only a flat (unpartitioned) " +
-          "log table can take them without a layout pass")
-      require(pk.isEmpty,
-        "appendLogFiles skips key dedup — PK tables commit through " +
-          "commitUpsert")
-      tag.flatMap(taggedSegment) match {
-        case Some(existing) =>
-          files.foreach(fs.deleteFile)
-          return existing
-        case None =>
-      }
-      val floor = math.max(
-        logSegments.lastOption.map(_ + 1).getOrElse(0L),
-        currentSnapshot.map(_.tieredSeg + 1).getOrElse(0L))
-      def fileName(p: String) = p.substring(p.lastIndexOf('/') + 1)
-      if (remote) {
-        var next = floor
-        while (!meta.putIfAbsent(f"segclaim-$next%06d", "")) next += 1
-        files.foreach(f => fs.move(f, s"${segPath(next)}/${fileName(f)}"))
-        FileStats.writeSidecar(segPath(next))
-        if (bloomCols.nonEmpty)
-          FileStats.writeBloomSidecar(spark, segPath(next), bloomCols)
-        tag.foreach(t => fs.writeString(s"${segPath(next)}/_TAG", t))
-        fs.writeString(s"${segPath(next)}/_SEG", "")
-        next
-      } else {
-        val tmp = s"$logDir/_tmp-seg-${"%06d".format(floor)}"
-        fs.mkdirs(tmp)
-        files.foreach(f => fs.move(f, s"$tmp/${fileName(f)}"))
-        FileStats.writeSidecar(tmp)
-        if (bloomCols.nonEmpty)
-          FileStats.writeBloomSidecar(spark, tmp, bloomCols)
-        tag.foreach(t => fs.writeString(s"$tmp/_TAG", t))
-        fs.move(tmp, segPath(floor))
-        floor
-      }
+  def appendLogFiles(files: Seq[String], tag: Option[String] = None): Long = {
+    require(partitionBy.isEmpty,
+      "appendLogFiles commits raw files — only a flat (unpartitioned) " +
+        "log table can take them without a layout pass")
+    require(pk.isEmpty,
+      "appendLogFiles skips key dedup — PK tables commit through " +
+        "commitUpsert")
+    publishSegment(tag, files.foreach(fs.deleteFile)) { dir =>
+      fs.mkdirs(dir)
+      files.foreach(f => fs.move(f, s"$dir/${f.substring(f.lastIndexOf('/') + 1)}"))
+      writeSidecars(dir)
     }
+  }
+
+  /** The one segment publish: `land` fills a segment dir and returns its
+    * row count. Locally the dir is a temp dir that an atomic rename puts
+    * in place, so readers never see a partial segment. Remotely (no
+    * rename) data lands straight in the final prefix, and the `_SEG`
+    * marker — written last, one atomic object PUT — publishes it; a
+    * crashed append leaves a markerless, invisible prefix that the next
+    * append of the same id overwrites. The `_TAG` marker rides inside
+    * the dir and commits with it. A replayed tag runs `onReplay` and
+    * returns the segment it already landed in; a dir that holds no data
+    * file is dropped unpublished (-1).
+    */
+  private def publishSegment(tag: Option[String], onReplay: => Unit = ())
+                            (land: String => Long): Long = withCommitLock {
+    tag.flatMap(taggedSegment) match {
+      case Some(existing) => onReplay; return existing
+      case None =>
+    }
+    // floor at watermark+1: after vacuum() deletes tiered segments the
+    // directory may be empty, but reusing an id ≤ tieredSeg would park
+    // rows where every read filters them out — silent loss
+    val floor = math.max(
+      logSegments.lastOption.map(_ + 1).getOrElse(0L),
+      currentSnapshot.map(_.tieredSeg + 1).getOrElse(0L))
+    // Cross-PROCESS id arbitration remotely: locally the atomic rename
+    // makes the second writer of one segment id fail loudly, but a
+    // direct remote write has no such gate — two drivers picking the
+    // same id would interleave objects in one prefix. The segment id is
+    // therefore CLAIMED via the MetaStore conditional PUT (the same
+    // primitive the manifest commit rides); the loser advances to the
+    // next id. A claim whose writer died pre-marker leaves an id gap
+    // (harmless — every reader tolerates sparse segment ids) and
+    // invisible data objects; [[gcOrphans]] reclaims both under its
+    // writer-quiet contract.
+    var id = floor
+    if (remote) while (!meta.putIfAbsent(f"segclaim-$id%06d", "")) id += 1
+    val dir =
+      if (remote) segPath(id) else s"$logDir/_tmp-seg-${"%06d".format(id)}"
+    if (landed(dir, land(dir)).isEmpty) return -1L
+    tag.foreach(t => fs.writeString(s"$dir/_TAG", t))
+    if (remote) fs.writeString(s"$dir/_SEG", "")
+    else fs.move(dir, segPath(id))
+    id
+  }
 
   /** Serializes the read-modify-write of every mutating operation on
     * this table (segment-id allocation, prev-snapshot resolution, data
     * write, manifest swap) against concurrent writer threads.
     * Reentrant — commit paths compose.
     */
-  /** Row count of a just-written parquet dir from its FOOTERS — a
-    * metadata-only job, so each commit executes its input ONCE (count
-    * + write would run the whole upstream plan twice while holding the
-    * commit lock, and would disagree with the written data for
-    * nondeterministic inputs).
-    */
-  private def writtenRows(path: String): Long =
-    FileStats.footerRows(path)
-      .getOrElse(spark.read.parquet(path).count())
+  private def withCommitLock[A](f: => A): A =
+    // canonicalize the key: equivalent spellings of one directory
+    // (trailing slash, relative segments) must share the lock
+    TieredTable.lockFor(
+      if (remote) tablePath
+      else Paths.get(tablePath).toAbsolutePath.normalize.toString
+    ).synchronized(f)
 
-  /** The single data-write seam: when the table is partitioned, every
-    * write site (log segments, tier/append/rewrite snapshots, compact)
-    * lays files out Hive-style as `partCol=value/` directories, so a
-    * partition-filtered read prunes whole directories without touching
-    * a parquet footer — the coarse file-skipping level Iceberg's
-    * partition spec provides, and THE scan reducer at 100 TB (a
-    * day-partitioned table reads 1/365 of its files for a one-day
-    * query). Spark's parquet source treats each snapshot/segment dir
-    * as a base path, so partition columns come back as real columns
-    * and `PartitionFilters` land in the scan (plan-asserted in
-    * TieredTableSpec).
+  /** The one data-write seam: every write of table data — log segments,
+    * tier/append/rewrite snapshots, compaction, staged and branch
+    * appends — passes here, and this is the one place that decides its
+    * layout (Iceberg's `write.distribution-mode` plus sort order):
+    *
+    *  - partitioned: hash-cluster on `partitionBy` and sort each task on
+    *    `partitionBy ++ order`, so each `col=value` dir is written by the
+    *    one task that owns its value — one file per dir per commit
+    *    instead of one per (task × dir). Files land Hive-style under
+    *    `col=value/`, so a partition-filtered read prunes whole dirs
+    *    without touching a footer (each snapshot/segment dir is a
+    *    partition-discovery base path, see [[readParquetFresh]]);
+    *  - unpartitioned with an `order`: a global range sort (`nFiles` > 0
+    *    pins its width), so files carry disjoint key ranges and the
+    *    min/max sidecar prunes a range predicate to the matching files;
+    *  - otherwise the batch lands as it comes.
+    *
+    * `order` None is the declared `sortBy`, skipped for a batch that
+    * predates its columns (old segments tier without them); an explicit
+    * order wins over it — compaction's sort key and z-curve, and the
+    * hot append's none. `spark.graft.write.distributionMode=none` opts
+    * out of the layout step (one giant partition value would serialize
+    * into one writer task). The catalog's SQL sink cannot declare this
+    * through `RequiresDistributionAndOrdering` instead: Spark's V1
+    * fallback write re-plans from the pre-V2Writes query, so a declared
+    * distribution never executes there.
+    *
+    * Bucketed tables get `__bucket = hash(pk) mod N` stamped here
+    * (deterministic per key, so a key's versions share a bucket dir
+    * across all deltas and rewrites); the layout persists at
+    * meta/BUCKETS so later opens self-configure.
+    *
+    * Returns the written row count, exact: see [[writeSidecars]].
     */
-  /** Declared write sort order (Iceberg's `WRITE ORDERED BY`): every
-    * COLD write — append, tier, compact, overwrite, staged — clusters
-    * rows by `sortBy` before landing. Unpartitioned: a GLOBAL sort
-    * (range exchange, Iceberg's range distribution-mode), so files
-    * carry DISJOINT sort-key ranges and the min/max sidecars prune a
-    * range predicate to O(matching files). Partitioned: sort within
-    * the layout tasks (hash mode + local order — cross-file
-    * disjointness would need range-splitting each partition value).
-    * The hot log append stays unsorted (latency path); tiering
-    * converges layout, same stance as compaction. Skipped when the
-    * batch predates the column (schema evolution: old segments tier
-    * without it) and under `spark.graft.write.distributionMode=none`
-    * (one giant sort run → one writer task, same opt-out as
-    * clustering).
-    */
-  private def applySortOrder(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val on = sortBy.nonEmpty &&
-      sortBy.forall(c => df.columns.exists(_.equalsIgnoreCase(c))) &&
-      spark.conf.get("spark.graft.write.distributionMode", "hash") != "none"
-    if (!on) df
-    else if (partitionBy.isEmpty) df.orderBy(sortBy.map(col): _*)
-    else df.sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
-  }
-
-  private def writeData(df0: DataFrame, path: String): Unit = {
-    // bucket-layout stamping at the ONE write choke point: every data
-    // write of a bucketed table carries `__bucket = hash(pk) mod N`
-    // (deterministic per key, so a key's versions share a bucket dir
-    // across all deltas and rewrites); the layout persists at
-    // meta/BUCKETS so later opens self-configure
+  private def writeData(df0: DataFrame, path: String,
+                        order: Option[Seq[org.apache.spark.sql.Column]] = None,
+                        nFiles: Int = 0): Long = {
     val df1 =
       if (bucketBy > 0 && !df0.columns.contains(BucketCol)) {
         persistBucketMeta(df0.schema)
         df0.withColumn(BucketCol, bucketStamp(df0.schema))
       } else df0
-    val df = applySortOrder(df1)
+    val sortCols = order.getOrElse(
+      if (sortBy.forall(c => df1.columns.exists(_.equalsIgnoreCase(c))))
+        sortBy.map(col) else Nil)
+    val df =
+      if (spark.conf.get("spark.graft.write.distributionMode", "hash") == "none")
+        df1
+      else if (partitionBy.nonEmpty)
+        df1.repartition(partitionBy.map(col): _*)
+          .sortWithinPartitions(partitionBy.map(col) ++ sortCols: _*)
+      else if (sortCols.isEmpty) df1
+      else if (nFiles > 0)
+        df1.repartitionByRange(nFiles, sortCols: _*)
+          .sortWithinPartitions(sortCols: _*)
+      else df1.orderBy(sortCols: _*)
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
-    // per-file min/max/null stats sidecar, written INSIDE the dir before
-    // any atomic rename publishes it — data and skipping stats commit
-    // together (see FileStats; this is the Iceberg manifest-entry
-    // lower/upper-bounds analog)
-    FileStats.writeSidecar(path)
-    // opt-in per-file blooms for point-lookup columns whose values
-    // scatter across files (min/max boxes can't prune those)
-    if (bloomCols.nonEmpty)
-      FileStats.writeBloomSidecar(spark, path, bloomCols)
+    writeSidecars(path)
   }
+
+  /** Write the skipping sidecars of a just-written dir before anything
+    * publishes it, so data and stats commit together: per-file
+    * min/max/null stats (see FileStats; the Iceberg manifest-entry
+    * lower/upper-bounds analog) and the opt-in blooms for point-lookup
+    * columns whose values scatter across files. Returns the dir's row
+    * count from the same footer pass — one listing and one open per
+    * footer per commit, and the input plan runs once (count + write
+    * would run it twice under the commit lock, and disagree with the
+    * written data for a nondeterministic input). A footer that cannot
+    * be read falls back to a count, so the number stays exact.
+    */
+  private def writeSidecars(dir: String): Long = {
+    val rows = FileStats.writeSidecar(dir)
+      .getOrElse(spark.read.parquet(dir).count())
+    if (bloomCols.nonEmpty && rows > 0)
+      FileStats.writeBloomSidecar(spark, dir, bloomCols)
+    rows
+  }
+
+  /** `out` as file-list entries: none when the write landed no data
+    * file — a partitioned write of no rows, whose dir no reader could
+    * infer a schema from — and the empty dir is dropped.
+    */
+  private def landed(out: String, rows: Long): Seq[String] =
+    if (rows > 0 || partitionBy.isEmpty) Seq(out)
+    else { fs.deleteRecursively(out); Nil }
+
+  /** Commit the snapshot of a data write. An empty file list — a
+    * partitioned write that landed no file, and nothing kept — has no
+    * file to carry the schema, so no reader could open it: on a table
+    * with no snapshot yet nothing is committed and the empty state
+    * (id 0) comes back; a commit that would empty a partitioned table
+    * is refused.
+    */
+  private def commitData(s: Snapshot): Snapshot =
+    if (s.files.nonEmpty) { commitManifest(s); s }
+    else {
+      if (currentSnapshot.nonEmpty) throw new IllegalStateException(
+        s"'${s.op}' would leave partitioned table $tablePath with no " +
+          "data file, and an empty partitioned snapshot has no file to " +
+          "carry its schema — nothing committed")
+      s.copy(id = 0L)
+    }
 
   /** Validate-and-persist the bucket layout at the WRITE choke point,
     * once per instance. The layout is immutable: a caller-passed count
@@ -801,14 +823,6 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       case _ => pmod(hash(pk.map(col): _*), lit(bucketBy))
     }
 
-  private def withCommitLock[A](f: => A): A =
-    // canonicalize the key: equivalent spellings of one directory
-    // (trailing slash, relative segments) must share the lock
-    TieredTable.lockFor(
-      if (remote) tablePath
-      else Paths.get(tablePath).toAbsolutePath.normalize.toString
-    ).synchronized(f)
-
   // ---- tiering: hot → cold ----
 
   /** Tier all log segments past the current watermark (optionally only up
@@ -828,12 +842,10 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     // drop mid-stream columns, and vacuum() would make the loss permanent.
     val batch0 = readParquet(todo.map(segPath(_)))
     val batch = if (pk.nonEmpty && mergeOnRead) batch0.withColumn(SeqCol, lit(id)) else batch0
-    writeData(batch, out)
-    val rows = writtenRows(out)
-    val files = prev.map(_.files).getOrElse(Nil) :+ out
-    val s = Snapshot(id, "tier", rows, todo.max, files, System.currentTimeMillis())
-    commitManifest(s)
-    Some(s)
+    val rows = writeData(batch, out)
+    val files = prev.map(_.files).getOrElse(Nil) ++ landed(out, rows)
+    Some(commitData(
+      Snapshot(id, "tier", rows, todo.max, files, System.currentTimeMillis())))
   }
 
   /** Snapshot already committed under `tag`, if any. */
@@ -853,13 +865,10 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     val id = latestSnapshotId + 1
     val out = s"$dataDir/snap-${"%06d".format(id)}"
     val batch = if (pk.nonEmpty && mergeOnRead) df.withColumn(SeqCol, lit(id)) else df
-    writeData(batch, out)
-    val rows = writtenRows(out)
-    val s = Snapshot(id, op, rows, prev.map(_.tieredSeg).getOrElse(-1L),
-      prev.map(_.files).getOrElse(Nil) :+ out,
-      System.currentTimeMillis(), tag.getOrElse(""))
-    commitManifest(s)
-    s
+    val rows = writeData(batch, out)
+    commitData(Snapshot(id, op, rows, prev.map(_.tieredSeg).getOrElse(-1L),
+      prev.map(_.files).getOrElse(Nil) ++ landed(out, rows),
+      System.currentTimeMillis(), tag.getOrElse("")))
   }
 
   /** Upsert commit for PK tables.
@@ -1010,7 +1019,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
       val batch =
         if (pk.nonEmpty && mergeOnRead) df.withColumn(SeqCol, lit(id))
         else df
-      writeData(batch, out)
+      val rows = writeData(batch, out)
       // the written content must lie ENTIRELY inside the target
       // partitions — a metadata check on the produced directory tree
       // (never a data scan); violation deletes the staged dir and fails
@@ -1030,11 +1039,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         }
       }
       val keptDirs = prev.files.flatMap(keptOutsideTarget(_, partValues))
-      val rows = writtenRows(out)
-      val s = Snapshot(id, "overwrite-partition", rows, prev.tieredSeg,
-        keptDirs :+ out, System.currentTimeMillis(), tag.getOrElse(""))
-      commitManifest(s)
-      s
+      commitData(Snapshot(id, "overwrite-partition", rows, prev.tieredSeg,
+        keptDirs ++ landed(out, rows), System.currentTimeMillis(),
+        tag.getOrElse("")))
     }
 
   /** The partition binding a snapshot-file entry carries in its own
@@ -1090,12 +1097,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     val df = if (pk.nonEmpty && mergeOnRead && !df0.columns.contains(SeqCol))
       df0.withColumn(SeqCol, lit(id)) else df0
     val out = s"$dataDir/snap-${"%06d".format(id)}"
-    writeData(df, out)
-    val rows = writtenRows(out)
-    val s = Snapshot(id, op, rows, prev.map(_.tieredSeg).getOrElse(-1L),
-      Seq(out), System.currentTimeMillis(), tag.getOrElse(""))
-    commitManifest(s)
-    s
+    val rows = writeData(df, out)
+    commitData(Snapshot(id, op, rows, prev.map(_.tieredSeg).getOrElse(-1L),
+      landed(out, rows), System.currentTimeMillis(), tag.getOrElse("")))
   }
 
   /** SQL `MERGE INTO` semantics, copy-on-write: join the current cold
@@ -1236,12 +1240,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         else result
       val id = latestSnapshotId + 1
       val out = s"$dataDir/snap-${"%06d".format(id)}"
-      writeData(toWrite, out)
-      val rows = writtenRows(out)
-      val snap = Snapshot(id, "merge", rows, prev.tieredSeg,
-        Seq(out), System.currentTimeMillis())
-      commitManifest(snap)
-      Some(snap)
+      val rows = writeData(toWrite, out)
+      Some(commitData(Snapshot(id, "merge", rows, prev.tieredSeg,
+        landed(out, rows), System.currentTimeMillis())))
     }
 
   // ---- maintenance ----
@@ -1251,12 +1252,13 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * snapshots remain readable until [[vacuum]]. The small-files problem
     * is the classic lakehouse failure mode at high commit rates — a 30s
     * freshness SLA produces ~2.9k snapshots/day.
-    */
-  /** `sortBy`: optionally range-sort the rewrite on the given columns —
-    * sorted parquet carries tight per-row-group min/max stats, so later
-    * scans filtering on those columns skip whole row groups (the cheap
-    * form of data clustering; at cluster scale this is the Z-order/
-    * sort-compaction maintenance job).
+    *
+    * `sortBy`: optionally sort the rewrite on the given columns in place
+    * of the declared order — sorted parquet carries tight per-file and
+    * per-row-group min/max stats, so later scans filtering on those
+    * columns skip whole files and row groups (the cheap form of data
+    * clustering; at cluster scale this is the Z-order/sort-compaction
+    * maintenance job).
     */
   def compact(sortBy: Seq[String] = Nil): Option[Snapshot] = withCommitLock { currentSnapshot.map { prev =>
     val id = latestSnapshotId + 1
@@ -1270,16 +1272,13 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     // the rewrite would leave last-write-wins ties inside one file that
     // no sequence-number scheme (ours or an external reader's
     // equality-delete application) can break.
-    val all0 =
+    val all =
       if (pk.nonEmpty && mergeOnRead) readCold().withColumn(SeqCol, lit(0L))
       else readParquet(prev.files)
-    val all = if (sortBy.isEmpty) all0 else all0.sort(sortBy.map(col): _*)
-    writeData(all, out)
-    val rows = writtenRows(out)
-    val s = Snapshot(id, "compact", rows, prev.tieredSeg,
-      Seq(out), System.currentTimeMillis())
-    commitManifest(s)
-    s
+    val rows = writeData(all, out,
+      order = if (sortBy.isEmpty) None else Some(sortBy.map(col)))
+    commitData(Snapshot(id, "compact", rows, prev.tieredSeg,
+      landed(out, rows), System.currentTimeMillis()))
   } }
 
   /** Auto-compaction policy — the maintenance loop's "should I?" next
@@ -1371,21 +1370,13 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
           shiftright(r, b).bitwiseAND(lit(1L)) * lit(1L << (b * k + i))
         }
       }.reduce(_ + _)
-      val parts =
-        if (nFiles > 0) nFiles
-        else spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val clustered = all.withColumn("__z", z)
-        .repartitionByRange(parts, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop("__z")
       val id = latestSnapshotId + 1
       val out = s"$dataDir/snap-${"%06d".format(id)}"
-      writeData(clustered, out)
-      val rows = writtenRows(out)
-      val s = Snapshot(id, "zorder", rows, prev.tieredSeg,
-        Seq(out), System.currentTimeMillis())
-      commitManifest(s)
-      s
+      val rows = writeData(all, out, order = Some(Seq(z)),
+        nFiles = if (nFiles > 0) nFiles
+          else spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      commitData(Snapshot(id, "zorder", rows, prev.tieredSeg,
+        landed(out, rows), System.currentTimeMillis()))
     }
   }
 
@@ -1425,12 +1416,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         val toWrite =
           if (pk.nonEmpty && mergeOnRead) kept.withColumn(SeqCol, lit(0L))
           else kept
-        writeData(toWrite, out)
-        val rows = writtenRows(out)
-        val s = Snapshot(id, "delete", rows, watermark,
-          Seq(out), System.currentTimeMillis())
-        commitManifest(s)
-        Some(s)
+        val rows = writeData(toWrite, out)
+        Some(commitData(Snapshot(id, "delete", rows, watermark,
+          landed(out, rows), System.currentTimeMillis())))
       }
     }
 
@@ -1487,12 +1475,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         else updated
       val id = latestSnapshotId + 1
       val out = s"$dataDir/snap-${"%06d".format(id)}"
-      writeData(toWrite, out)
-      val rows = writtenRows(out)
-      val s = Snapshot(id, "update", rows, watermark,
-        Seq(out), System.currentTimeMillis())
-      commitManifest(s)
-      Some(s)
+      val rows = writeData(toWrite, out)
+      Some(commitData(Snapshot(id, "update", rows, watermark,
+        landed(out, rows), System.currentTimeMillis())))
     }
   }
 
@@ -1672,12 +1657,11 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     // the loser deletes its own private dir
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val out = s"$dataDir/wap-$wapId-$uuid"
-    writeData(df, out)
-    val rows = writtenRows(out)
+    val rows = writeData(df, out)
     val body =
       s"""parent=$latestSnapshotId
          |rows=$rows
-         |files=$out
+         |files=${landed(out, rows).mkString(",")}
          |stagedAt=${System.currentTimeMillis()}
          |""".stripMargin
     if (!meta.putIfAbsent(s"$WapKeyPrefix$wapId", body)) {
@@ -1807,9 +1791,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
         s"no branch '$name' on $tablePath — create_branch first"))
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val out = s"$dataDir/wap-br-$name-$uuid"
-    writeData(df, out)
-    writeBranchState(name, st.copy(rows = st.rows + writtenRows(out),
-      files = st.files :+ out))
+    val rows = writeData(df, out)
+    writeBranchState(name, st.copy(rows = st.rows + rows,
+      files = st.files ++ landed(out, rows)))
   }
 
   /** All branches as (name, forkedAtSnapshotId), sorted by name. */

@@ -75,7 +75,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     Files.copy(Paths.get(part), Paths.get(s"$dir/_temporary/0/part.parquet"))
     Files.copy(Paths.get(part), Paths.get(s"$dir/.stray.parquet"))
     assert(spark.read.parquet(dir).count() == 5)
-    assert(FileStats.footerRows(dir).contains(5L))
+    assert(FileStats.writeSidecar(dir).contains(5L))
   }
 
   test("string / date / decimal domains prune; timestamps stay conservative") {

@@ -13,9 +13,11 @@ import graft.storage.{FileStats, TieredTable}
   * rows by the declared columns. Unpartitioned → a GLOBAL range sort,
   * so files carry DISJOINT key ranges and the min/max sidecars prune
   * range predicates to O(matching files); partitioned → local order
-  * within the layout tasks. Also covers `$partitions` — the
-  * per-partition file/row/byte accounting served entirely from
-  * sidecars and listings (no data file opened).
+  * within the layout tasks. Hot log appends skip it, and an explicit
+  * maintenance layout (compaction's sort key, the z-curve) wins over
+  * it. Also covers `$partitions` — the per-partition file/row/byte
+  * accounting served entirely from sidecars and listings (no data file
+  * opened).
   */
 class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -80,24 +82,70 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** (min, max) of `c` per data file of the current snapshot's root,
+    * sorted.
+    */
+  private def boxes(t: TieredTable, c: String): Seq[(Long, Long)] =
+    FileStats.readSidecar(t.currentSnapshot.get.files.head).toSeq.flatMap {
+      case (_, cols) => cols.get(c).map(s =>
+        (s.min.get.toLong, s.max.get.toLong))
+    }.sorted
+
+  private def assertDisjoint(bounds: Seq[(Long, Long)]): Unit =
+    bounds.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) =>
+        assert(hi < lo2, s"file ranges must be disjoint, got $bounds")
+      case _ =>
+    }
+
   test("hot log appends stay unsorted; tier() converges the cold " +
        "layout to the declared order") {
     val dir = Files.createTempDirectory("graft-sort-tier").toString
     val t = TieredTable(spark, s"$dir/t", sortBy = Seq("k"))
-    t.appendLog(Seq(30L, 10L, 20L).toDF("k"))
+    val seg = t.appendLog(Seq(30L, 10L, 20L).toDF("k").coalesce(1))
     t.appendLog(Seq(3L, 1L, 2L).toDF("k"))
+    // the hot segment keeps arrival order: one input task, one file,
+    // no range sort on the latency path
+    val hot = spark.read.parquet(t.segmentDirPath(seg))
+    assert(hot.inputFiles.length == 1)
+    assert(hot.as[Long].collect().toSeq == Seq(30L, 10L, 20L))
     t.tier()
-    val root = t.currentSnapshot.get.files.head
-    val bounds = FileStats.readSidecar(root).toSeq.flatMap {
-      case (_, cols) => cols.get("k").map(s =>
-        (s.min.get.toLong, s.max.get.toLong))
-    }.sortBy(_._1)
-    bounds.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) => assert(hi < lo2)
-      case _ =>
-    }
+    assertDisjoint(boxes(t, "k"))
     assert(t.readCold().as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L, 3L, 10L, 20L, 30L))
+  }
+
+  test("an explicit maintenance layout beats the declared sort order: " +
+       "compact(sortBy) and the z-curve") {
+    val dir = Files.createTempDirectory("graft-sort-explicit").toString
+    // 400 rows: few enough that the range sampler takes every row, so
+    // the z-order file boxes are a function of the content alone
+    val data = spark.range(400)
+      .select((col("id") * 7919 % 400).as("k"), (col("id") * 263 % 400).as("x"))
+      .repartition(4)
+    val sorted = TieredTable(spark, s"$dir/sorted", sortBy = Seq("k"))
+    val plain = TieredTable(spark, s"$dir/plain")
+    Seq(sorted, plain).foreach(_.commitAppend(data))
+    // as in the unpartitioned test above: keep AQE from coalescing the
+    // toy range sort into one file
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try sorted.compact(sortBy = Seq("x"))
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val xs = boxes(sorted, "x")
+    assert(xs.size > 1, s"the x sort must still write in parallel: $xs")
+    assertDisjoint(xs)
+
+    Seq(sorted, plain).foreach(_.compactZOrder(Seq("k", "x"), nFiles = 8))
+    def zBoxes(t: TieredTable) =
+      FileStats.readSidecar(t.currentSnapshot.get.files.head).values.toSeq
+        .map { cols =>
+          def mm(c: String) = (cols(c).min.get.toLong, cols(c).max.get.toLong)
+          (mm("k"), mm("x"))
+        }.sorted
+    assert(zBoxes(sorted).size == 8)
+    assert(zBoxes(sorted) == zBoxes(plain),
+      "the declared order must not reshape the z-curve")
+    assert(sorted.readCold().count() == 400)
   }
 
   test("SQL DDL: 'write.sort-order' flows through CREATE TABLE, " +
