@@ -228,10 +228,10 @@ object Scale {
         Seq(kept -> m(GraftScanMetrics.Kept), "files_total" -> m(GraftScanMetrics.Total))
       }
       // q13: orders committed in half-year bands (the time-ingested
-      // layout), then a one-band range query through readColdWhere vs
-      // the full scan, at 1× (14 files) and at copies× (each copy
-      // commits its own bands with shifted keys): the skip RATIO holds
-      // as the file count grows
+      // layout), then a one-band range query through the pruning cold
+      // read, at 1× (14 files) and at copies× (each copy commits its own
+      // bands with shifted keys): the skip RATIO holds as the file count
+      // grows
       val d = col("o_orderdate")
       val bands = (0 until 14).map { i =>
         val lo = add_months(lit("1995-01-01").cast("date"), i * 6)
@@ -246,13 +246,15 @@ object Scale {
             .withColumn("o_orderkey", col("o_orderkey") + lit(k * 100000000L))
             .coalesce(1))
         // planning builds the scan: one listing, the sidecar reads, the pruning
-        val skipDf = t.readColdWhere(cond)
+        val skipDf = t.readCold().filter(cond)
         val (_, plan) = Measure(spark)(skipDf.queryExecution.executedPlan)
-        val (fullRows, fullSec) = timed(t.readCold().filter(cond))
         val (skipRows, skipSec) = timed(skipDf)
-        require(fullRows == skipRows, "skipping changed an answer")
+        // every copy holds the same dates, so the unpruned answer is n×
+        // the fixture's own
+        require(skipRows == n * orders.filter(cond).count(),
+          "skipping changed an answer")
         emit(Seq("metric" -> s"q13_skip_${n}x") ++ files(skipDf) ++ Seq(
-          "plan_sec" -> plan.wallS, "full_sec" -> fullSec, "skip_sec" -> skipSec,
+          "plan_sec" -> plan.wallS, "skip_sec" -> skipSec,
           "rows" -> skipRows): _*)
       }
       Seq(1, copies).distinct.foreach(q13)
@@ -275,7 +277,7 @@ object Scale {
         tb.commitAppend(orders
           .filter(pmod(col("o_orderkey"), lit(nFiles)) === i).coalesce(1))
       val probe = col("o_orderkey") === 7L
-      val bloomDf = tb.readColdWhere(probe)
+      val bloomDf = tb.readCold().filter(probe)
       val (_, bloomPlan) = Measure(spark)(bloomDf.queryExecution.executedPlan)
       val bloomRows = Measure.rows(bloomDf)
       require(bloomRows == orders.filter(probe).count(), "bloom skipping changed an answer")

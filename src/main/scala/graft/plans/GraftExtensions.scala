@@ -243,7 +243,7 @@ class TemporalJoinParser(delegate: ParserInterface) extends ParserInterface {
   * subtree; column pruning reaches through the dedup window, and a
   * filter stays ABOVE it — a key's winning version may live in a file
   * a pushed predicate would prune, so resolution must happen first
-  * (the same stance as `readColdWhere`'s merge-on-read fallback).
+  * (the API's `readCold().filter` keeps it above the window too).
   *
   * What is NOT substituted: write and row-level TARGETS. INSERT
   * commits upsert deltas through the table's own write path,
@@ -279,7 +279,7 @@ case class GraftMorReadRule(session: org.apache.spark.sql.SparkSession)
     plan.resolveOperatorsUp {
       case r: DataSourceV2Relation if !writeTargets.contains(r) =>
         r.table match {
-          case ts: TieredSqlTable if ts.isMorResolved =>
+          case ts: TieredSqlTable if ts.catalogEntry.mergeOnRead =>
             substitute(r, ts.morRead())
           case rt: GraftResolvedTable =>
             substitute(r, Some(rt.resolvedRead()))

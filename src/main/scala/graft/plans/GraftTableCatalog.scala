@@ -765,7 +765,6 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
                      t: TieredTable, entry: TieredCatalog.Entry,
                      readFilesOverride: Option[Seq[String]] = None,
                      resolveOverride: Option[() => org.apache.spark.sql.DataFrame] = None,
-                     rawVersions: Boolean = false,
                      schemaOverride: Option[StructType] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -885,22 +884,9 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
     * table resolve for reads and INSERT column checking. A
     * `schemaOverride` ([[TieredSqlTable.coldRead]]) takes its place.
     */
-  private val declared: Option[StructType] = schemaOverride.orElse {
-    val d = graft.storage.TableFs.forPath(entry.path)
-      .readString(s"${entry.path}/meta/SCHEMA").map(StructType.fromDDL)
-    // raw-version twin: the declared schema (CREATE TABLE's) never
-    // names the version-sequence column the data files carry — add it
-    // so the scan surfaces it for the resolution window
-    if (rawVersions)
-      d.map { s0 =>
-        val s1 = if (s0.fieldNames.contains(t.SeqCol)) s0
-          else s0.add(t.SeqCol, LongType, nullable = true)
-        if (t.bucketBy > 0 && !s1.fieldNames.contains(t.BucketCol))
-          s1.add(t.BucketCol, IntegerType, nullable = true)
-        else s1
-      }
-    else d
-  }
+  private val declared: Option[StructType] = schemaOverride.orElse(
+    graft.storage.TableFs.forPath(entry.path)
+      .readString(s"${entry.path}/meta/SCHEMA").map(StructType.fromDDL))
 
   // the READ side only: a branch view (spark.graft.wap.branch)
   // substitutes the branch's file list; writes, deletes, and the
@@ -958,7 +944,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
     // version-sequence and bucket-layout columns never surface (an
     // API-registered table infers its schema from the delta parquet,
     // which carries them)
-    if (entry.mergeOnRead && !rawVersions)
+    if (entry.mergeOnRead)
       StructType(readSchema.filterNot(f =>
         f.name == t.SeqCol || (t.bucketBy > 0 && f.name == t.BucketCol)))
     else readSchema
@@ -967,40 +953,25 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
     * [[GraftMorReadRule]]: the last-write-wins view this relation's
     * batch read must serve (None = no committed state yet → empty
     * relation). Time-travel/branch callers pass a snapshot-specific
-    * `resolveOverride`.
-    *
-    * The base read resolves over THIS CATALOG'S OWN DSv2 SCAN — a
-    * raw-version twin of this table under the dedup window — not a
-    * stock parquet read: the twin's [[org.apache.spark.sql.GraftSkippingScanBuilder]]
-    * keeps manifest-level file skipping (stats sidecars + blooms) and
-    * partition handling alive BELOW the window, so the PK point
-    * lookup that Catalyst pushes through the window prunes to
-    * O(files with the key) before any footer is opened — at 100 TB
-    * the difference between a key lookup and a table scan. Falls back
-    * to the API read (`readUnion`) for the shapes the scan twin can't
-    * serve: a hot log tail above the watermark (appendLog rows carry
-    * no version column) or a column-mapped un-converged layout.
+    * `resolveOverride`. The base read is the API's union read, whose
+    * cold leg resolves over this catalog's own DSv2 scan
+    * ([[TieredSqlTable.coldRead]]): file skipping (stats sidecars +
+    * blooms) and partition handling stay alive BELOW the dedup window,
+    * so the PK point lookup that Catalyst pushes through the window
+    * prunes to O(files with the key) before any footer is opened.
+    * A declared column no file carries yet (ADD COLUMN with no later
+    * write) reads as a typed NULL, as the scan of a keyless table
+    * answers it.
     */
-  private[plans] def isMorResolved: Boolean = entry.mergeOnRead && !rawVersions
   private[plans] def morRead(): Option[org.apache.spark.sql.DataFrame] =
     resolveOverride.map(f => Option(f())).getOrElse {
       if (t.currentSnapshot.isEmpty && t.logSegments.isEmpty) None
-      else {
-        val watermark = t.currentSnapshot.map(_.tieredSeg).getOrElse(-1L)
-        val hotTail = t.logSegments.exists(_ > watermark)
-        val resolved =
-          if (hotTail) t.readUnion()
-          else {
-            val twin = new TieredSqlTable(tableName, spark, t, entry,
-              readFilesOverride, rawVersions = true)
-            val raw = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-              org.apache.spark.sql.execution.datasources.v2
-                .DataSourceV2Relation.create(twin, None, None))
-            if (!raw.columns.contains(t.SeqCol)) t.readUnion()
-            else t.resolveVersions(raw)
-          }
-        Some(resolved)
-      }
+      else Some(t.readUnion())
+    }.map { df =>
+      val have = df.columns.map(_.toLowerCase).toSet
+      schema().fields.filterNot(f => have(f.name.toLowerCase))
+        .foldLeft(df)((d, f) => d.withColumn(f.name,
+          org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
     }
 
   override def capabilities(): util.Set[TableCapability] =
@@ -1090,7 +1061,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (entry.mergeOnRead && !rawVersions)
+    if (entry.mergeOnRead)
       // batch reads of a merge-on-read table never reach the scan: the
       // analyzer substitutes the resolved view (GraftMorReadRule). A
       // session without the graft extensions would otherwise scan raw
@@ -1352,12 +1323,15 @@ object TieredSqlTable {
     }
   }
 
-  /** A snapshot's cold `files` read with `schema` through the same
-    * DSv2 scan as SQL reads — how [[TieredTable.readColdWhere]] prunes
-    * files. It applies no merge-on-read resolution or column mapping.
+  /** Snapshot or segment `files` of `t` through the same DSv2 scan as
+    * SQL reads, with their memoized file schema ([[fileSchema]]) — the
+    * one reader of table files behind every API read ([[TieredTable]]'s
+    * `readParquet`) and the Iceberg export. It applies no merge-on-read
+    * resolution or column mapping.
     */
-  def coldRead(spark: SparkSession, t: TieredTable, files: Seq[String],
-               schema: StructType): org.apache.spark.sql.DataFrame =
+  def coldRead(spark: SparkSession, t: TieredTable,
+               files: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val schema = fileSchema(spark, files, layoutCols(t))
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(new TieredSqlTable(t.tablePath, spark, t,
@@ -1365,6 +1339,7 @@ object TieredSqlTable {
             t.partitionBy, t.bloomCols),
           readFilesOverride = Some(files), schemaOverride = Some(schema)),
           None, None))
+  }
 
   /** Within-batch last-write-wins by ARRIVAL ORDER — the PK-sink
     * contract every SQL write applies before committing: a batch that

@@ -314,8 +314,8 @@ object Lakehouse {
     */
   def q29SortedScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    demoTableSorted(spark, dir).readColdWhere(
-      col("o_orderkey").between(10000L, 20000L))
+    demoTableSorted(spark, dir).readCold()
+      .filter(col("o_orderkey").between(10000L, 20000L))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("cnt"),
         (sum(col("o_totalprice").cast(DecimalType(15, 2))) * 100)
@@ -1096,7 +1096,7 @@ object Lakehouse {
   }
 
   /** Q13 — manifest-level FILE SKIPPING: a one-year date-range query
-    * through [[TieredTable.readColdWhere]] on the date-clustered table.
+    * through [[TieredTable.readCold]] on the date-clustered table.
     * The footer-stats sidecar proves two of the three cold files cannot
     * hold a matching row, so the scan opens only the middle band
     * (skipping counts asserted in FileSkippingSpec); the oracle
@@ -1105,7 +1105,7 @@ object Lakehouse {
     */
   def q13FileSkipping(spark: SparkSession, dir: String): DataFrame =
     demoTableByDate(spark, dir)
-      .readColdWhere(col("o_orderdate").between(
+      .readCold().filter(col("o_orderdate").between(
         lit("1997-06-01").cast("date"), lit("1998-06-01").cast("date")))
       .agg(count(lit(1)).as("cnt"), sum(col("o_orderkey")).as("key_sum"))
 

@@ -17,6 +17,8 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.plans.TieredSqlTable
+
 /** Apache-Iceberg-v2 metadata EXPORT for a [[TieredTable]] cold tier —
   * the reference's core interop promise re-expressed: a second engine
   * reads the tiered data with its OWN Iceberg reader, zero graft code
@@ -385,39 +387,6 @@ object IcebergExport {
         Some(b.getBytes.clone())
       case _ => None
     }
-  }
-
-  /** Raw physical read of snapshot data dirs: mergeSchema, no column
-    * mapping. Partitioned tables read per root (one multi-root read
-    * sees "conflicting directory structures"); partition columns come
-    * back discovered and typed, appended after the data columns — the
-    * same shape TieredTable's own readParquet presents.
-    */
-  private def rawRead(session: SparkSession, table: TieredTable,
-                      files: Seq[String]): DataFrame =
-    // the mergeSchema inference below runs a distributed footer job
-    // per multi-file dir set, and export calls this repeatedly over
-    // immutable snapshot dirs
-    SessionMemo(session, "iceberg-raw", Seq(table.tablePath,
-        table.historicalPartitionCols.mkString(","), files.mkString("\n")),
-      files)(rawReadFresh(session, table, files))
-
-  private def rawReadFresh(session: SparkSession, table: TieredTable,
-                           files: Seq[String]): DataFrame = {
-    // HISTORICAL layout cols, not just the current spec's: after DROP
-    // PARTITION FIELD, pre-drop hive vintages carry values only in
-    // their `col=value` dir names — same rule as TieredTable.readParquet
-    val layout = table.historicalPartitionCols
-    if (layout.isEmpty)
-      session.read.option("mergeSchema", "true").parquet(files: _*)
-    else
-      // a `col=value` subdir entry anchors partition discovery at its
-      // snapshot root (basePath), same as TieredTable.readParquet
-      files.map { f =>
-        session.read.option("mergeSchema", "true")
-          .option("basePath", PartitionPaths.base(f, layout))
-          .parquet(f)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** One part file's manifest accounting: (path, rows, bytes,
@@ -882,7 +851,8 @@ object IcebergExport {
     }.toSet
     if (renamedAway.nonEmpty) {
       val session = table.readCold().sparkSession
-      val physical = rawRead(session, table, head.files).schema.fieldNames.toSet
+      val physical = TieredSqlTable.fileSchema(session, head.files,
+        TieredSqlTable.layoutCols(table)).fieldNames.toSet
       val stale = renamedAway.intersect(physical)
       require(stale.isEmpty,
         s"cannot export ${table.tablePath} as Iceberg: renamed-away " +
@@ -953,7 +923,11 @@ object IcebergExport {
     // described by the names its files actually contain (Iceberg's
     // per-snapshot schema-id exists for exactly this). After a rename
     // converges (compact), the head's raw schema equals the mapped one.
+    // The file schema comes from the catalog scan's memoized probe:
+    // footers merged, layout columns discovered from each snapshot
+    // root, no column mapping.
     val session = table.readCold().sparkSession
+    val layout = TieredSqlTable.layoutCols(table)
     // the internal merge-on-read version column never exports: external
     // readers project by name against the exported schema, and the
     // version information lives in manifest sequence numbers instead
@@ -998,9 +972,10 @@ object IcebergExport {
             val newDirs = s.files.filterNot(p.files.toSet)
             if (newDirs.isEmpty) Some(rawSchemaOf(p.id))
             else mergeStruct(rawSchemaOf(p.id),
-              stripSeq(rawRead(session, table, newDirs).schema))
+              stripSeq(TieredSqlTable.fileSchema(session, newDirs, layout)))
           })
-        .getOrElse(stripSeq(rawRead(session, table, s.files).schema))
+        .getOrElse(stripSeq(TieredSqlTable.fileSchema(session, s.files,
+          layout)))
       rawSchemaOf(s.id) = st
       Some(s)
     }
@@ -1103,7 +1078,7 @@ object IcebergExport {
         // grouped probe also short-circuits at the first offender.
         import org.apache.spark.sql.functions.lit
         def dupDirsOneJob(): Seq[String] = toCheck.map { dir =>
-          session.read.parquet(dir)
+          TieredSqlTable.coldRead(session, table, Seq(dir))
             .select((lit(dir).as("__eq_dir") +: table.pk.map(col)): _*)
         }.reduce(_.unionByName(_))
           .groupBy((org.apache.spark.sql.functions.col("__eq_dir") +:
@@ -1115,7 +1090,8 @@ object IcebergExport {
         // dirs whose PK column TYPES diverged (mid-history widen)
         // cannot union — fall back to the per-dir probe there
         def dupDirsPerDir(): Seq[String] = toCheck.filter { dir =>
-          val pkDf = session.read.parquet(dir).select(table.pk.map(col): _*)
+          val pkDf = TieredSqlTable.coldRead(session, table, Seq(dir))
+            .select(table.pk.map(col): _*)
           pkDf.count() != pkDf.distinct().count()
         }
         val offenders =
@@ -1172,7 +1148,7 @@ object IcebergExport {
             // distinct-keys set
             val keyCols = table.pk ++
               table.partitionBy.filterNot(table.pk.contains)
-            val keys = session.read.parquet(dir)
+            val keys = TieredSqlTable.coldRead(session, table, Seq(dir))
               .select(keyCols.map(col): _*).distinct()
             // scope via SHADOW partition columns (`__p_<col>=value/`
             // dirs): the spec requires delete-file rows to physically

@@ -8,11 +8,14 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** The one session-scoped memo of resolved relations: fixture loads
-  * ([[graft.tables.Tables]]), lake scans ([[TieredTable]]), Iceberg
-  * reads ([[IcebergExport]]), the materialized pair frames of
-  * [[graft.queries.Pipeline]], and the file schemas the SQL catalog's
-  * parquet tables read with ([[graft.plans.TieredSqlTable]]).
+/** The one session-scoped memo of resolved relations, one namespace
+  * each: fixture loads (`tables`, [[graft.tables.Tables]]), lake scans
+  * (`lake`, [[TieredTable]]'s reads of snapshot and segment dirs),
+  * Iceberg reads (`iceberg`, [[IcebergExport.readTable]]), the
+  * materialized pair frames (`pipeline`, [[graft.queries.Pipeline]]),
+  * and the file schemas every catalog scan reads with (`schema`,
+  * [[graft.plans.TieredSqlTable.fileSchema]]; the lake scans and the
+  * Iceberg export's schema probe take theirs from it too).
   * Re-resolving a relation re-pays the driver-side listing, the footer
   * schema read (a distributed job under `mergeSchema`) and the
   * analysis; a session that reads the same tables hundreds of times

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Upsert
+import graft.plans.TieredSqlTable
 
 /** A tiered lakehouse table: hot append log + cold columnar snapshots,
   * modeled on the reference's datalake-enabled Fluss tables
@@ -638,7 +639,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     *    instead of one per (task × dir). Files land Hive-style under
     *    `col=value/`, so a partition-filtered read prunes whole dirs
     *    without touching a footer (each snapshot/segment dir is a
-    *    partition-discovery base path, see [[readParquetFresh]]);
+    *    partition-discovery base path, see [[readParquet]]);
     *  - unpartitioned with an `order`: a global range sort (`nFiles` > 0
     *    pins its width), so files carry disjoint key ranges and the
     *    min/max sidecar prunes a range predicate to the matching files;
@@ -702,7 +703,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     */
   private def writeSidecars(dir: String): Long = {
     val rows = FileStats.writeSidecar(dir)
-      .getOrElse(spark.read.parquet(dir).count())
+      .getOrElse(readParquet(Seq(dir)).count())
     if (bloomCols.nonEmpty && rows > 0)
       FileStats.writeBloomSidecar(spark, dir, bloomCols)
     rows
@@ -1320,7 +1321,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * interleaved into one sort key; range-partitioning + in-partition
     * sort on that key gives every output file a TIGHT min/max box on
     * EVERY clustered column, so the footer-stats skipping
-    * ([[readColdWhere]] / the SQL scan) prunes files for predicates on
+    * (every cold read's scan) prunes files for predicates on
     * any of them — a lead-column linear sort only serves its first
     * column. This is the standing maintenance job that keeps
     * multi-dimensional point/range lookups sublinear at 100 TB.
@@ -2306,44 +2307,24 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
   private def appendColMap(line: String): Unit =
     meta.put("COLMAP", meta.get("COLMAP").getOrElse("") + line + "\n")
 
-  /** [[readParquetFresh]] behind the session memo ([[SessionMemo]]):
-    * snapshot/segment dirs are immutable once committed, so the listing,
-    * the mergeSchema footer job and the analysis happen once per (table
-    * state, dir list) instead of once per query call.
+  /** The one read of snapshot and segment dirs: the catalog's DSv2 scan
+    * ([[TieredSqlTable.coldRead]]) over `files`, with the file schema
+    * merged over every footer (later files may add columns, older rows
+    * surface nulls there) and the column mapping presenting everything
+    * through the current declared names ([[applyColumnMap]]). Filters
+    * push below the mapping into the scan, so every API read prunes
+    * files by stats and blooms — per root on a Hive layout — and reports
+    * `files_total` / `files_kept` on its scan node, as SQL reads do.
+    * Snapshot/segment dirs are immutable once committed, so the frame is
+    * memoized ([[SessionMemo]]): the schema job and the analysis happen
+    * once per (table state, dir list) instead of once per query call.
     */
   private def readParquet(files: Seq[String]): DataFrame =
     SessionMemo(spark, "lake", Seq(tablePath,
         historicalPartitionCols.mkString(","),
         meta.get("COLMAP").getOrElse(""), files.mkString("\n")), files) {
-      readParquetFresh(files)
+      applyColumnMap(TieredSqlTable.coldRead(spark, this, files))
     }
-
-  /** Multi-file parquet read with schema evolution: later files may add
-    * columns; older rows surface nulls there (mergeSchema), and the
-    * column mapping presents everything through the current declared
-    * names ([[applyColumnMap]]).
-    */
-  private def readParquetFresh(files: Seq[String]): DataFrame = applyColumnMap {
-    // discovery keys on EVERY column that was ever a layout column: a
-    // table whose spec dropped to unpartitioned still has live hive
-    // dirs whose values exist only in `col=value` names
-    val layout = historicalPartitionCols
-    if (layout.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(files: _*)
-    else
-      // partitioned tables: each snapshot/segment dir is its own
-      // partition-discovery base path — one multi-root read would see
-      // "conflicting directory structures". Filters push through the
-      // union into every branch, so partition pruning still applies
-      // per scan; the union is plan-width, not data movement.
-      // A `col=value` SUBDIR entry (partition-scoped overwrite keeps
-      // untouched partitions by reference) anchors discovery at its
-      // snapshot root via basePath, so the bound partition columns
-      // still surface as columns.
-      files.map(f => spark.read.option("mergeSchema", "true")
-          .option("basePath", PartitionPaths.base(f, layout)).parquet(f))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-  }
 
   /** Last-write-wins over the raw version files, internals stripped:
     * the winner per PK by `__seq` desc, with the engine's `__seq` and
@@ -2353,7 +2334,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * scan (the catalog's) then satisfies the window's clustering with no
     * exchange.
     */
-  private[graft] def resolveVersions(raw: DataFrame): DataFrame = {
+  private def resolveVersions(raw: DataFrame): DataFrame = {
     val keys =
       if (bucketBy > 0 && raw.columns.contains(BucketCol)) BucketCol +: pk else pk
     val r = Upsert.latestByKey(raw, keys, Seq(col(SeqCol).desc)).drop(SeqCol)
@@ -2363,33 +2344,6 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
   def readCold(): DataFrame = currentSnapshot match {
     case None => throw new IllegalStateException(s"no snapshot in $tablePath")
     case Some(s) => readColdOf(s)
-  }
-
-  /** Cold read with manifest-level FILE SKIPPING: `readCold()
-    * .filter(cond)` through the catalog's scan
-    * ([[org.apache.spark.sql.GraftSkippingScanBuilder]], the one
-    * file-pruning path), which skips every file whose stats or blooms
-    * prove it holds no matching row — per root on a partitioned table —
-    * and reports `files_kept` / `files_total` on its scan node. The
-    * predicate still applies in full: pruning never changes an answer.
-    *
-    * At 100 TB this is the difference between planning over O(matching
-    * files) and O(table files): a range query on a sorted/clustered
-    * column opens only the files whose [min,max] intersect it.
-    *
-    * Falls back to `readCold().filter(cond)` — same answer, no
-    * skipping — for (a) merge-on-read PK tables: a key's winning
-    * version can live in a file the predicate would prune, so
-    * last-write-wins must resolve BEFORE the filter; and (b) tables
-    * whose column mapping renames or drops a column: only the API read
-    * applies the mapping.
-    */
-  def readColdWhere(cond: org.apache.spark.sql.Column): DataFrame = {
-    val base = readCold()
-    val mapped = colMapOps().exists(op => op._1 == "rename" || op._1 == "drop")
-    if ((pk.nonEmpty && mergeOnRead) || mapped) base.filter(cond)
-    else graft.plans.TieredSqlTable.coldRead(spark, this, coldFiles, base.schema)
-      .filter(cond)
   }
 
   /** Time travel: the cold tier as of a specific committed snapshot
@@ -2551,9 +2505,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     *
     * `fromSnapshot = 0` bootstraps: the whole current snapshot arrives
     * as `+I` (no diff join — one scan). An unchanged table returns an
-    * EMPTY frame without reading data pages (one manifest read plus a
-    * footer for the schema), so idle polling stays cheap at any table
-    * size.
+    * EMPTY frame without reading data pages (one manifest read; the
+    * schema is the memoized cold read's), so idle polling stays cheap
+    * at any table size.
     */
   def changelogSince(fromSnapshot: Long,
                      keyCols: Seq[String]): (Long, DataFrame) = {
@@ -2590,12 +2544,9 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
   def readHot(): DataFrame = {
     val watermark = currentSnapshot.map(_.tieredSeg).getOrElse(-1L)
     val segs = logSegments.filter(_ > watermark)
-    if (segs.isEmpty) {
-      val schema = spark.read.parquet(
-        (currentSnapshot.map(_.files).getOrElse(Nil) ++
-          logSegments.map(segPath(_))).head).schema
-      emptyLike(StructType(schema.filterNot(_.name == SeqCol)))
-    } else readParquet(segs.map(segPath(_)))
+    if (segs.isEmpty)
+      emptyLike(StructType(readUnion().schema.filterNot(_.name == SeqCol)))
+    else readParquet(segs.map(segPath(_)))
   }
 
   /** The union read (Flink batch role): cold ∪ hot tail, exactly once per

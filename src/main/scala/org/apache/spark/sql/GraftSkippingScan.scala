@@ -21,8 +21,8 @@ import graft.storage.FileStats
 import graft.storage.FileStats.ColStat
 
 /** Scan builder adding MANIFEST-LEVEL FILE SKIPPING to a tiered
-  * table's reads — SQL scans through the catalog and the API's
-  * [[graft.storage.TieredTable.readColdWhere]] alike: pushed filters
+  * table's reads — SQL scans through the catalog and every
+  * [[graft.storage.TieredTable]] API read alike: pushed filters
   * are translated to data-source filters and checked against each
   * file's `_graft_stats` footer min/max and bloom sidecars; files that
   * provably hold no matching row are dropped from the scan's file list
@@ -511,8 +511,24 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
         org.apache.spark.sql.execution.datasources.FilePartition(i, files.toArray))
     }.toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftKeyedReaderFactory(currentScan.toBatch.createReaderFactory())
+
+  @volatile private var factory: (Scan, PartitionReaderFactory) = (null, null)
+
+  /** One reader factory per file-list state. The planner asks every
+    * `BatchScanExec` copy of this scan for one, and a parquet scan's
+    * factory broadcasts the whole Hadoop configuration each time it is
+    * made, so it is made once here, as a V1 file scan does per run.
+    */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val s = currentScan
+    val cached = factory
+    if (cached._1 eq s) cached._2
+    else {
+      val f = GraftKeyedReaderFactory(s.toBatch.createReaderFactory())
+      factory = (s, f)
+      f
+    }
+  }
 }
 
 /** Typed partition-key decoding from Hive `col=value` path segments —

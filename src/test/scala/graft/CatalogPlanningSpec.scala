@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftCompositeKeyedPartition, GraftKeyedPartition,
-  GraftRuntimeScan, GraftTestV2, Row}
+  GraftRuntimeScan, GraftScanMetrics, GraftTestV2, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, TableCatalog}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory,
@@ -196,5 +196,72 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
     assert(keyedSplits(scan).map { case (k, fs) => k -> fs.size }.sorted ==
       Seq("k0" -> 2, "k1" -> 1, "k2" -> 1))
     assertKeyedSplits(scan, files)
+  }
+
+  test("every API read and merge-on-read time travel scans through the " +
+       "catalog: no V1 file scan, and each reports files_total") {
+    val dir = Files.createTempDirectory("graft-plan-shape").toString
+    // flat keyless, two snapshots and a hot tail
+    val flat = TieredTable(spark, s"$dir/flat")
+    flat.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+    flat.commitAppend(Seq((3L, "c")).toDF("id", "k"))
+    flat.appendLog(Seq((4L, "d")).toDF("id", "k"))
+    // partitioned, two snapshots of two Hive-layout roots
+    val part = tieredTwice(s"$dir/part")
+    // bucketed merge-on-read, key 2 updated in snapshot 2
+    val bmor = TieredTable(spark, s"$dir/bmor", pk = Seq("id"),
+      mergeOnRead = true, bucketBy = 4)
+    bmor.commitUpsert(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+    bmor.commitUpsert(Seq((2L, "c")).toDF("id", "k"))
+    TieredCatalog.register("plandb", "shflat", flat.tablePath)
+    TieredCatalog.register("plandb", "shpart", part.tablePath, partitionBy = Seq("k"))
+    TieredCatalog.register("plandb", "shbmor", bmor.tablePath, pk = Seq("id"),
+      mergeOnRead = true)
+    def reads(name: String, t: TieredTable): Seq[(String, DataFrame)] = Seq(
+      "readCold" -> t.readCold(),
+      "readUnion" -> t.readUnion(),
+      "readColdAsOf(1)" -> t.readColdAsOf(1L),
+      "incrementalRead(1, 2)" -> t.incrementalRead(1L, 2L, Seq("id")),
+      "changelogSince(0)" -> t.changelogSince(0L, Seq("id"))._2,
+      "changelogSince(1)" -> t.changelogSince(1L, Seq("id"))._2,
+      "$cold" -> spark.table(s"graft.plandb.`$name$$cold`"),
+      "VERSION AS OF 1" -> spark.sql(s"SELECT * FROM graft.plandb.$name VERSION AS OF 1"))
+    try {
+      // readHot scans only where a hot tail exists; elsewhere it is an
+      // empty frame that reads no file
+      val all = reads("shflat", flat).map { case (r, df) => s"flat $r" -> df } ++
+        Seq("flat readHot" -> flat.readHot()) ++
+        reads("shpart", part).map { case (r, df) => s"partitioned $r" -> df } ++
+        reads("shbmor", bmor).map { case (r, df) => s"bucketed mor $r" -> df }
+      all.foreach { case (what, df) =>
+        df.collect()
+        val v1 = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+          .collect(df.queryExecution.executedPlan) {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+          }
+        assert(v1.isEmpty, s"$what plans a V1 file scan:\n${df.queryExecution.executedPlan}")
+        val total = GraftScanMetrics.of(df).get(GraftScanMetrics.Total)
+        assert(total.exists(_ > 0), s"$what reports no files_total")
+      }
+      // the merge-on-read reads still resolve last-write-wins
+      assert(bmor.readCold().select("id", "k").as[(Long, String)].collect().toSet ==
+        Set((1L, "a"), (2L, "c")))
+      assert(spark.sql("SELECT id, k FROM graft.plandb.shbmor VERSION AS OF 1")
+        .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+    } finally Seq("shflat", "shpart", "shbmor").foreach(TieredCatalog.unregister("plandb", _))
+  }
+
+  test("every plan copy of an API read's scan shares one reader factory, " +
+       "so the scan broadcasts its configuration once") {
+    val dir = Files.createTempDirectory("graft-factory").toString
+    val t = TieredTable(spark, s"$dir/t")
+    t.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(t.readCold().queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }
+    assert(scans.size == 1)
+    // each BatchScanExec copy makes its own factory from the same Scan
+    assert(scans.head.copy().readerFactory eq scans.head.readerFactory)
   }
 }

@@ -15,8 +15,9 @@ import graft.storage.{FileStats, TieredTable}
 
 /** Manifest-level file skipping: footer min/max stats collected at
   * commit into the `_graft_stats` sidecar, pruned at read. The
-  * invariant under test everywhere: readColdWhere ≡ readCold().filter
-  * — pruning may only ever REMOVE work, never change an answer. File
+  * invariant under test everywhere: readCold().filter answers exactly
+  * what the same filter gives over every row of the unpruned read —
+  * pruning may only ever REMOVE work, never change an answer. File
   * counts come from the scan's own skip report ([[GraftScanMetrics]]).
   */
 class FileSkippingSpec extends AnyFunSuite with SparkSpec {
@@ -35,12 +36,16 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     (m.getOrElse(GraftScanMetrics.Kept, -1L), m.getOrElse(GraftScanMetrics.Total, -1L))
   }
 
-  /** Asserts readColdWhere ≡ readCold().filter on `cond`; returns the
-    * pruned read's (files_kept, files_total).
+  /** Asserts readCold().filter(cond) equals `cond` applied to every
+    * collected row of the unfiltered read (a local relation, which
+    * cannot prune); returns the pruned read's (files_kept, files_total).
     */
   private def sameAnswer(t: TieredTable, cond: org.apache.spark.sql.Column): (Long, Long) = {
-    val full = t.readCold().filter(cond).collect().map(_.toSeq).sortBy(_.toString)
-    val where = t.readColdWhere(cond)
+    val all = t.readCold()
+    val full = spark.createDataFrame(
+        java.util.Arrays.asList(all.collect(): _*), all.schema)
+      .filter(cond).collect().map(_.toSeq).sortBy(_.toString)
+    val where = t.readCold().filter(cond)
     val pruned = where.collect().map(_.toSeq).sortBy(_.toString)
     assert(pruned.toSeq == full.toSeq)
     skips(where)
@@ -61,8 +66,8 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     // an out-of-domain predicate keeps nothing and returns empty
     val none = col("id") > 10000L
     assert(sameAnswer(t, none)._1 == 0)
-    assert(t.readColdWhere(none).count() == 0)
-    assert(t.readColdWhere(none).schema == t.readCold().schema)
+    assert(t.readCold().filter(none).count() == 0)
+    assert(t.readCold().filter(none).schema == t.readCold().schema)
   }
 
   test("footer row counts skip files under hidden paths, as Spark's reader does") {
@@ -165,7 +170,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     t.commitUpsert(Seq((1L, 99L)).toDF("k", "v").coalesce(1))
     val cond = col("v") < 15L
     sameAnswer(t, cond)
-    assert(t.readColdWhere(cond).count() == 0,
+    assert(t.readCold().filter(cond).count() == 0,
       "key 1 resolved to v=99, which fails the predicate")
   }
 
@@ -227,7 +232,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     // content preserved exactly
     assert(t.readCold().count() == 32 * 32)
     sameAnswer(t, col("x") < 8L && col("y") >= 24L)
-    assert(t.readColdWhere(col("x") === 3L && col("y") === 17L).count() == 1)
+    assert(t.readCold().filter(col("x") === 3L && col("y") === 17L).count() == 1)
   }
 
   test("bloom skipping prunes point lookups that min/max cannot") {
@@ -246,7 +251,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     assert(sameAnswer(t, col("name") === "u203")._1 == 1)
     // a value no file holds: usually 0 files (false positives allowed,
     // never false negatives — the answer stays exact)
-    val missing = t.readColdWhere(col("id") === 999999L)
+    val missing = t.readCold().filter(col("id") === 999999L)
     assert(missing.count() == 0)
     // IN-lists union the per-value verdicts
     val inProbe = col("id").isin(202L, 203L)
@@ -405,7 +410,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     } finally graft.plans.TieredCatalog.unregister("skipdb", "pt")
   }
 
-  test("partitioned API tables prune per root through readColdWhere") {
+  test("partitioned API tables prune per root through readCold") {
     val dir = Files.createTempDirectory("graft-ptw").toString
     val t = new TieredTable(spark, s"$dir/t", partitionBy = Seq("grp"))
     // four commits with disjoint id ranges, one file per partition each
@@ -424,7 +429,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     t.commitAppend(Seq(1L, 2L).toDF("id").coalesce(1))
     t.commitAppend(Seq((100L, "x")).toDF("id", "extra").coalesce(1))
     val cond = col("id") < 10L // prunes the only file carrying `extra`
-    val out = t.readColdWhere(cond)
+    val out = t.readCold().filter(cond)
     assert(out.schema == t.readCold().schema)
     assert(out.count() == 2)
     assert(out.filter(col("extra").isNull).count() == 2)

@@ -362,4 +362,19 @@ class MorSqlSpec extends AnyFunSuite with SparkSpec {
     // the answer itself is the arbiter
     assert(spark.sql(s"SELECT v FROM $sql").head().getString(0) == "b")
   }
+
+  test("ALTER TABLE ADD COLUMN: winners written before it read NULL in " +
+      "the new column, later writes carry it") {
+    val sql = ddlTable("t11")
+    spark.sql(s"INSERT INTO $sql VALUES (1, 'a', 10), (2, 'b', 20)")
+    spark.sql(s"INSERT INTO $sql VALUES (2, 'B', 200)")
+    spark.sql(s"ALTER TABLE $sql ADD COLUMN note STRING")
+    def rows() = spark.sql(s"SELECT id, v, note FROM $sql ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getString(1),
+        Option(r.getString(2)))).toSeq
+    assert(rows() == Seq((1L, "a", None), (2L, "B", None)))
+    spark.sql(s"INSERT INTO $sql VALUES (3, 'c', 30, 'n3'), (1, 'A', 100, 'n1')")
+    assert(rows() == Seq((1L, "A", Some("n1")), (2L, "B", None),
+      (3L, "c", Some("n3"))))
+  }
 }

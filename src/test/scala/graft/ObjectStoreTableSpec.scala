@@ -118,7 +118,7 @@ class ObjectStoreTableSpec extends AnyFunSuite with SparkSpec {
       .selectExpr("id", "CAST(id AS STRING) AS v").coalesce(1))
     t.commitAppend(spark.range(1000, 1100)
       .selectExpr("id", "CAST(id AS STRING) AS v").coalesce(1))
-    val got = t.readColdWhere(col("id").between(1040L, 1050L))
+    val got = t.readCold().filter(col("id").between(1040L, 1050L))
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == (1040L to 1050L))
   }

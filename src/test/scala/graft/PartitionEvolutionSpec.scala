@@ -315,7 +315,7 @@ class PartitionEvolutionSpec extends AnyFunSuite with SparkSpec {
     assert(t2.partitionEvolutions == Seq((1L, Seq("region"), Nil)))
     // the engine-facing reads agree
     assert(t2.readCold().count() == 4)
-    assert(t2.readColdWhere(col("region") === "eu")
+    assert(t2.readCold().filter(col("region") === "eu")
       .select("id").as[Long].collect().toSet == Set(1L, 3L))
   }
 

@@ -42,9 +42,9 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSpec {
     assert(asOf1.select("name").as[String].collect().toSet == Set("x", "y"))
     // file-skipping reads apply the mapping too: the old files' data
     // surfaces under the new name, and predicates on it match
-    assert(t.readColdWhere(col("id") === 1L).select("id", "name")
+    assert(t.readCold().filter(col("id") === 1L).select("id", "name")
       .as[(Long, String)].collect().toSeq == Seq((1L, "x")))
-    assert(t.readColdWhere(col("name") === "x").select("id").as[Long]
+    assert(t.readCold().filter(col("name") === "x").select("id").as[Long]
       .collect().toSeq == Seq(1L))
     // mixed vintages: files written AFTER the rename carry the new name
     // natively; one read coalesces both generations
@@ -55,7 +55,7 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSpec {
     // file skipping on the renamed column stays CORRECT (conservative:
     // old sidecars carry the old name, so old files are kept, never
     // wrongly pruned)
-    assert(t.readColdWhere(col("name") === "w").select("id").as[Long]
+    assert(t.readCold().filter(col("name") === "w").select("id").as[Long]
       .collect().toSeq == Seq(4L))
   }
 

@@ -35,6 +35,24 @@ class TieredTableSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("readHot with no hot tail: the union's schema with a later-added " +
+       "column, no job on repeat, and a clear refusal on an empty table") {
+    val t = tmpTable()
+    t.appendLog(Seq(1L, 2L).toDF("id"))
+    t.tier()
+    t.appendLog(Seq((3L, "x")).toDF("id", "extra"))
+    t.tier()
+    val hot = t.readHot()
+    assert(hot.columns.toSeq == Seq("id", "extra"))
+    assert(hot.schema == t.readUnion().schema)
+    assert(hot.count() == 0)
+    val (schema, m) = Measure(spark)(t.readHot().schema)
+    assert(schema.get == hot.schema)
+    assert(m.jobs == 0, s"a repeat readHot ran ${m.jobs} job(s)")
+    val e = intercept[IllegalStateException](tmpTable().readHot())
+    assert(e.getMessage.contains("empty table"), e.getMessage)
+  }
+
   test("cross-process commit CAS: loser fails loudly, LATEST uncorrupted, retry wins") {
     import java.nio.file.Paths
     val dir = Files.createTempDirectory("graft-cas").toString

@@ -54,7 +54,7 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
     // the payoff: a narrow range predicate opens one file, exactly
     val probe = bounds.head
     val counts = org.apache.spark.sql.GraftScanMetrics.of(
-      t.readColdWhere(col("k").between(probe._1, probe._2)))
+      t.readCold().filter(col("k").between(probe._1, probe._2)))
     val (kept, total) = (counts("files_kept"), counts("files_total"))
     assert(total == bounds.size && kept == 1,
       s"expected 1/$total files kept, got $kept/$total")
