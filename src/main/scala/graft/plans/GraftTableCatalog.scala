@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.storage.{SessionMemo, TieredTable}
+import graft.storage.{FileStats, SessionMemo, TieredTable}
 
 /** A DataSource-V2 [[TableCatalog]] exposing tiered tables under a
   * three-level namespace (the reference's `catalog.database.table`,
@@ -208,29 +208,18 @@ class GraftTableCatalog extends TableCatalog
         // IS that partition, without scanning it.
         val partAgg = scala.collection.mutable.LinkedHashMap
           .empty[String, (Long, Long, Long)]
-        t.currentSnapshot.map(_.files).getOrElse(Nil).foreach { root =>
+        val layout = TieredSqlTable.layoutCols(t)
+        val roots = t.currentSnapshot.map(_.files).getOrElse(Nil)
+        roots.zip(FileStats.entries(roots, layout)).foreach { case (root, es) =>
           // a kept `col=value` SUBDIR reference (partition-scoped
-          // overwrite) carries no sidecar of its own — the sidecar
-          // lives at its snap-N parent; resolve there and scope the
-          // entries to the subdir's relative prefix
-          val base = graft.storage.PartitionPaths
-            .base(root, t.partitionBy)
-          val sub = root.stripSuffix("/").stripPrefix(base)
-            .stripPrefix("/")
-          val sizes = graft.storage.TableFs.forPath(root).listFiles(root)
-            .map { case (p, sz) =>
-              p.stripPrefix(base).stripPrefix("/") -> sz }.toMap
-          graft.storage.FileStats.readSidecar(base)
-            .filter { case (file, _) =>
-              sub.isEmpty || file.startsWith(sub + "/") }
-            .foreach { case (file, cols) =>
-              val partVal = file.split('/').dropRight(1)
-                .filter(_.contains("=")).mkString("/")
-              val rows = cols.values.map(_.rows).find(_ >= 0).getOrElse(0L)
-              val bytes = sizes.getOrElse(file, 0L)
-              val (f0, r0, b0) = partAgg.getOrElse(partVal, (0L, 0L, 0L))
-              partAgg(partVal) = (f0 + 1, r0 + rows, b0 + bytes)
-            }
+          // overwrite) reads the sidecar of its snap-N parent
+          val base = graft.storage.PartitionPaths.base(root, layout)
+          es.foreach { e =>
+            val partVal = e.path.stripPrefix(base).split('/').dropRight(1)
+              .filter(_.contains("=")).mkString("/")
+            val (f0, r0, b0) = partAgg.getOrElse(partVal, (0L, 0L, 0L))
+            partAgg(partVal) = (f0 + 1, r0 + math.max(e.rows, 0L), b0 + e.bytes)
+          }
         }
         new PartitionsTable(ident.toString, partAgg.toSeq.map {
           case (p, (f, r, b)) => PartitionsTable.Row(p, f, r, b)
@@ -239,12 +228,11 @@ class GraftTableCatalog extends TableCatalog
         // the skipping sidecars as a queryable relation (Iceberg $files'
         // bounds columns): one row per (file, column) with the exact
         // min/max/null accounting scan planning prunes by
-        val rows = t.unionPaths.flatMap { root =>
-          graft.storage.FileStats.readSidecar(root).toSeq.flatMap {
-            case (file, cols) => cols.toSeq.map { case (c, s) =>
-              StatsTable.Row(s"$root/$file", c, s.tag,
-                s.min.orNull, s.max.orNull, s.nulls, s.rows)
-            }
+        val layout = TieredSqlTable.layoutCols(t)
+        val rows = FileStats.entries(t.unionPaths, layout).flatten.flatMap { e =>
+          e.cols.toSeq.sortBy(_._1).map { case (c, s) =>
+            StatsTable.Row(e.path, c, s.tag,
+              s.min.orNull, s.max.orNull, s.nulls, e.rows)
           }
         }
         new StatsTable(ident.toString, rows)
@@ -1087,18 +1075,22 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
       // file skipping (footer-stats sidecars prune the file list at
       // scan build)
       new org.apache.spark.sql.GraftSkippingScanBuilder(spark, tableName,
-        paths, schema(), readOpts, inner.newScanBuilder(options),
+        () => FileStats.entries(paths, Nil).flatten, schema(), readOpts,
+        inner.newScanBuilder(options),
         streamFactory = Some(_ => logTailStream(options)))
     else {
       // partitioned: per-root scans (each root is its own partition-
       // discovery base path), EACH wrapped with stats skipping —
       // directory pruning handles the partition column, the sidecars
       // prune by every other column; basePath keeps partition-column
-      // discovery alive when a root's scan is rebuilt over a file list
+      // discovery alive when a root's scan is rebuilt over a file list.
+      // One listing serves every root, so kept subdirs of one snapshot
+      // dir parse its sidecars once.
+      lazy val perRoot = FileStats.entries(paths, layoutCols)
       val wrapped = paths.zip(partRoots).zipWithIndex.map {
         case ((root, tbl), i) =>
           new org.apache.spark.sql.GraftSkippingScanBuilder(spark,
-            s"$tableName#$i", Seq(root), schema(), rootOpts(root),
+            s"$tableName#$i", () => perRoot(i), schema(), rootOpts(root),
             tbl.newScanBuilder(options), layoutCols,
             streamFactory = Some(_ => logTailStream(options)))
       }
@@ -1107,7 +1099,7 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
         // no committed roots yet — still present the streaming face so
         // a consumer can start tailing before the first append
         new org.apache.spark.sql.GraftSkippingScanBuilder(spark, tableName,
-          Nil, schema(), readOpts, inner.newScanBuilder(options),
+          () => Nil, schema(), readOpts, inner.newScanBuilder(options),
           layoutCols, streamFactory = Some(_ => logTailStream(options)))
       else new org.apache.spark.sql.GraftCompositeScanBuilder(wrapped,
         streamFactory = Some(_ => logTailStream(options)))

@@ -393,13 +393,15 @@ object Lakehouse {
     * balance sums separating the `-U` before-image from the `+U`
     * after-image. The oracle recomputes all four accounting rows
     * relationally from the raw fixture, so a wrong op, a missed pair,
-    * or a double-published file hash-mismatches.
+    * or a double-published file hash-mismatches. The change dirs are
+    * read as the explicit list the table commits (recovering any
+    * interrupted publication first), not as a glob.
     */
   def q21ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val t = demoCdfTable(spark, dir)
     spark.read.option("mergeSchema", "true")
-      .parquet(s"${t.tablePath}/changes/snap-*")
+      .parquet(t.committedChangeIds().map(t.changeDirPath): _*)
       .groupBy(col("op"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("k")).cast("long").as("key_sum"),

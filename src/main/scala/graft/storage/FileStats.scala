@@ -1,5 +1,6 @@
 package graft.storage
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 
 import scala.jdk.CollectionConverters._
@@ -8,22 +9,40 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.sources._
 
-/** Per-file column min/max/null statistics — the manifest-level data-
-  * skipping layer (what Iceberg keeps in its manifest entries:
-  * `lower_bounds`/`upper_bounds`/`null_value_counts` per data file).
+/** The one per-file record of table data: row count, and per column
+  * the parquet physical type, value and null counts and min/max — what
+  * Iceberg keeps in its manifest entries (`record_count`,
+  * `value_counts`, `null_value_counts`, `lower_bounds`/`upper_bounds`).
   *
-  * Collection reads only parquet FOOTERS of just-written files (a
-  * driver-side metadata read at demo scale; on a cluster the same
-  * numbers come back from the writer tasks' commit messages, exactly
-  * as Iceberg collects them). The sidecar `_graft_stats` lives INSIDE
-  * the data directory — underscore-prefixed so every Spark scan
-  * ignores it, and it travels/dies with the directory through
-  * tier/compact/vacuum with no extra bookkeeping.
+  * This is the only module that opens parquet footers of table data
+  * ([[footerOpens]] counts them). The write seam collects each new
+  * directory's footers once, right after the write, into the
+  * `_graft_stats` sidecar (a driver-side metadata read at demo scale;
+  * on a cluster the same numbers come back from the writer tasks'
+  * commit messages, exactly as Iceberg collects them). The sidecar
+  * lives INSIDE the data directory — underscore-prefixed so every Spark
+  * scan ignores it — and travels and dies with the directory through
+  * tier/compact/vacuum with no extra bookkeeping. Every consumer reads
+  * it through [[entries]]: the skipping scan, `t$partitions` and
+  * `t$stats`, and the Iceberg export, which transcribes it into its
+  * manifests.
+  *
+  * Sidecar format, one tab-separated line per file and per (file,
+  * column), paths relative to the directory, bounds base64:
+  * {{{
+  * v2
+  * <file>  <rows>
+  * <file>  <column>  <tag>  <physical type>  <min>  <max>  <nulls>  <values>
+  * }}}
+  * A `v1` sidecar (older tables) is read as no record: its files keep
+  * under every filter, and the export upgrades it once
+  * ([[exportEntries]]).
   *
   * Pruning is strictly conservative: a file is skipped only when a
   * pushed predicate is provably false for every row it holds. Missing
@@ -37,15 +56,30 @@ object FileStats {
 
   val SidecarName = "_graft_stats"
 
-  /** Parquet files under `dir` (recursive) via the [[TableFs]] facade
-    * — local nio or the object-store FS, resolved per path. Files under
-    * a hidden segment are skipped, as Spark's file index skips them: a
-    * leftover `_temporary` attempt is not table data.
+  /** Parquet footers opened by this module over the JVM's lifetime —
+    * how specs prove that a path opens none.
     */
-  private def parquetFiles(dir: String): Seq[String] =
-    TableFs.forPath(dir).listFiles(dir).collect {
-      case (p, _) if p.endsWith(".parquet") &&
-          !relTo(dir, p).split('/').exists(hidden) => p
+  private[graft] val footerOpens = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The one footer reader. */
+  private def footer(conf: Configuration, path: String): ParquetMetadata = {
+    footerOpens.incrementAndGet()
+    val r = ParquetFileReader.open(conf, new HadoopPath(path))
+    try r.getFooter finally r.close()
+  }
+
+  private def footerRows(conf: Configuration, path: String): Long =
+    footer(conf, path).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** Parquet files under `dir` (recursive) with their byte sizes, via
+    * the [[TableFs]] facade — local nio or the object-store FS,
+    * resolved per path. Files under a hidden segment are skipped, as
+    * Spark's file index skips them: a leftover `_temporary` attempt is
+    * not table data.
+    */
+  private def parquetFiles(dir: String): Seq[(String, Long)] =
+    TableFs.forPath(dir).listFiles(dir).filter { case (p, _) =>
+      p.endsWith(".parquet") && !relTo(dir, p).split('/').exists(hidden)
     }
 
   /** Spark's hidden-path rule: `.x`, and `_x` unless it is a
@@ -79,13 +113,26 @@ object FileStats {
     }
   }
 
-  /** Stats for one column of one file. `tag` fixes the comparison
-    * domain: long | double | string | date | ts | decimal:<scale> |
-    * none (= unusable, always keep). min/max are canonical strings in
-    * that domain; None = unknown. nulls/rows: -1 = unknown.
+  /** Stats for one column of one file. `tag` fixes the pruning
+    * comparison domain: long | double | string | date | ts | tsn |
+    * decimal:<scale> | none (= unusable, always keep). `phys` is the
+    * parquet physical type (INT32, INT64, FLOAT, DOUBLE, BINARY, …),
+    * which sets an exported bound's width.
+    * min/max are canonical strings in the tag's domain — a decimal's
+    * unscaled value, a date's epoch day, a timestamp's micros — and
+    * None when unknown; a string bound may be non-ASCII, which pruning
+    * ignores. nulls/values: -1 = unknown.
     */
-  case class ColStat(tag: String, min: Option[String], max: Option[String],
-                     nulls: Long, rows: Long)
+  case class ColStat(tag: String, phys: String, min: Option[String],
+                     max: Option[String], nulls: Long, values: Long)
+
+  /** One data file's record: absolute path, exact row count (-1 = the
+    * sidecar has no line for the file), byte size from the listing,
+    * per-column stats and blooms.
+    */
+  case class FileEntry(path: String, rows: Long, bytes: Long,
+                       cols: Map[String, ColStat],
+                       blooms: Map[String, java.util.BitSet])
 
   // ---- collection (footer read) ----
 
@@ -122,9 +169,8 @@ object FileStats {
   private def isAscii(s: String): Boolean = s.forall(c => c >= 0x20 && c < 0x7f)
 
   /** Canonical string for a footer min/max value in the tag's domain;
-    * None = value unusable (e.g. non-ASCII string — parquet orders
-    * UTF8 bytes unsigned, java Strings by UTF-16 unit; they agree only
-    * on ASCII, so anything else must not drive a skip decision).
+    * None = value unusable (a NaN bound, a string bound that is not
+    * valid UTF-8).
     */
   private def canon(tag: String, v: AnyRef): Option[String] = (tag, v) match {
     case (_, null) => None
@@ -136,9 +182,11 @@ object FileStats {
       // a NaN bound (nonconforming writer) can't order → unusable
       val d = n.doubleValue
       if (d.isNaN) None else Some(d.toString)
+    // a STRING may hold bytes that are not UTF-8; decoding replaces
+    // them, which would move the bound, so keep only a lossless one
     case ("string", b: Binary) =>
       val s = b.toStringUsingUTF8
-      if (isAscii(s)) Some(s) else None
+      if (java.util.Arrays.equals(s.getBytes(UTF_8), b.getBytes)) Some(s) else None
     case _ => None
   }
 
@@ -179,15 +227,8 @@ object FileStats {
     }
     leafFiles(df.queryExecution.analyzed).flatMap { files =>
       val conf = df.sparkSession.sessionState.newHadoopConf()
-      try {
-        var rows = 0L
-        files.foreach { f =>
-          val r = ParquetFileReader.open(conf, new HadoopPath(f))
-          try rows += r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally r.close()
-        }
-        Some(rows)
-      } catch { case NonFatal(_) => None }
+      try Some(files.map(footerRows(conf, _)).sum)
+      catch { case NonFatal(_) => None }
     }
   }
 
@@ -226,9 +267,7 @@ object FileStats {
                 try {
                   val p = new HadoopPath(f)
                   bytes += p.getFileSystem(conf).getFileStatus(p).getLen
-                  val r = ParquetFileReader.open(conf, p)
-                  try rows += r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-                  finally r.close()
+                  rows += footerRows(conf, f)
                 } catch { case NonFatal(_) => /* keep the partial sum */ }
               }
               if (sample.length == files.length || bytes == 0L) Some(rows)
@@ -247,71 +286,54 @@ object FileStats {
     }
   }
 
-  /** Footer stats of every `*.parquet` under `dir` (recursive —
+  /** Footer record of every `*.parquet` under `dir` (recursive —
     * partitioned layouts nest files under `col=value/` subdirs), keyed
-    * by path RELATIVE to `dir`, each with the file's row count; None for
-    * a file whose footer cannot be read.
+    * by path RELATIVE to `dir`: the file's row count and its columns'
+    * stats; None for a file whose footer cannot be read.
     */
   private def collect(dir: String): Seq[(String, Option[(Long, Map[String, ColStat])])] = {
     val conf = new Configuration(TableFs.hadoopConf)
-    parquetFiles(dir).map { f =>
+    parquetFiles(dir).map { case (f, _) =>
       relTo(dir, f) -> (try {
-        val reader = ParquetFileReader.open(conf, new HadoopPath(f.toString))
-        try {
-          val footer = reader.getFooter
-          val blocks = footer.getBlocks.asScala.toSeq
-          val rows = blocks.map(_.getRowCount).sum
-          // accumulate (tag, min, max, nulls, statsOk) per column path
-          var acc = Map.empty[String, (String, Option[String], Option[String], Long, Boolean)]
-          for (b <- blocks; c <- b.getColumns.asScala) {
-            val name = c.getPath.toDotString
-            val tag = tagOf(c.getPrimitiveType)
-            val st = c.getStatistics
-            val (mn, mx, nl, ok) =
-              if (st == null || tag == "none") (None, None, -1L, false)
-              else {
-                val nulls = if (st.isNumNullsSet) st.getNumNulls else -1L
-                if (!st.hasNonNullValue) (None, None, nulls, true)
-                else (canon(tag, st.genericGetMin.asInstanceOf[AnyRef]),
-                  canon(tag, st.genericGetMax.asInstanceOf[AnyRef]),
-                  nulls, true)
-              }
-            acc.get(name) match {
-              case None => acc += name -> (tag, mn, mx, nl, ok)
-              case Some((t0, mn0, mx0, nl0, ok0)) =>
-                // merge chunks: a chunk with unusable stats poisons the
-                // column (its rows are unbounded); null counts add
-                val mergedMin = mergeBound(tag, mn0, mn, takeMin = true)
-                val mergedMax = mergeBound(tag, mx0, mx, takeMin = false)
-                val mergedNl = if (nl0 < 0 || nl < 0) -1L else nl0 + nl
-                acc += name -> (t0, mergedMin, mergedMax, mergedNl, ok0 && ok)
-            }
-          }
-          Some(rows -> acc.map { case (col, (tag, mn, mx, nl, ok)) =>
-            col -> (if (ok) ColStat(tag, mn, mx, nl, rows)
-                    else ColStat("none", None, None, -1L, rows))
-          })
-        } finally reader.close()
-      } catch { case NonFatal(_) => None }) // unreadable footer → no stats
+        val blocks = footer(conf, f).getBlocks.asScala.toSeq
+        Some(blocks.map(_.getRowCount).sum ->
+          blocks.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
+            .map { case (col, chunks) => col -> colStat(chunks) })
+      } catch { case NonFatal(_) => None }) // unreadable footer → no record
     }
   }
 
-  /** min/max merge across row-group chunks. A chunk whose bound is
-    * unknown makes the file bound unknown (the chunk's rows could lie
-    * anywhere).
+  /** One column's stats from its row-group chunks. Value and null
+    * counts add (nulls unknown when any chunk lacks them). An all-null
+    * chunk adds no bound; a chunk with values but no min/max (no stats,
+    * or a parquet writer that dropped an oversized bound) makes the
+    * file's bounds unknown, since its rows could lie anywhere. Bounds
+    * merge in the column's own parquet order (unsigned bytes for
+    * strings, as Spark compares them).
     */
-  private def mergeBound(tag: String, a: Option[String], b: Option[String],
-                         takeMin: Boolean): Option[String] = (a, b) match {
-    case (Some(x), Some(y)) =>
-      val cmp = compareCanon(tag, x, y)
-      Some(if ((cmp <= 0) == takeMin) x else y)
-    case _ => None
-  }
-
-  private def compareCanon(tag: String, a: String, b: String): Int = tag match {
-    case "double" => java.lang.Double.compare(a.toDouble, b.toDouble)
-    case "string" => a.compareTo(b)
-    case _ => java.lang.Long.compare(a.toLong, b.toLong) // long/date/ts/decimal
+  private def colStat(chunks: Seq[ColumnChunkMetaData]): ColStat = {
+    val pt = chunks.head.getPrimitiveType
+    val tag = tagOf(pt)
+    val values = chunks.map(_.getValueCount).sum
+    val nulls =
+      if (chunks.forall(c => c.getStatistics != null && c.getStatistics.isNumNullsSet))
+        chunks.map(_.getStatistics.getNumNulls).sum
+      else -1L
+    val valued = chunks.filterNot { c =>
+      val st = c.getStatistics
+      st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount
+    }.map(_.getStatistics)
+    val (mn, mx) =
+      if (tag == "none" || valued.isEmpty ||
+          valued.exists(st => st == null || !st.hasNonNullValue)) (None, None)
+      else {
+        val ord = pt.comparator().asInstanceOf[java.util.Comparator[AnyRef]]
+        def pick(vs: Seq[AnyRef], takeMin: Boolean) =
+          canon(tag, vs.reduce((a, b) => if ((ord.compare(a, b) <= 0) == takeMin) a else b))
+        (pick(valued.map(_.genericGetMin.asInstanceOf[AnyRef]), takeMin = true),
+          pick(valued.map(_.genericGetMax.asInstanceOf[AnyRef]), takeMin = false))
+      }
+    ColStat(tag, pt.getPrimitiveTypeName.name, mn, mx, nulls, values)
   }
 
   // ---- sidecar io ----
@@ -322,64 +344,109 @@ object FileStats {
   private def dec(s: String): Option[String] =
     if (s == "-") None else Some(new String(Base64.getDecoder.decode(s), "UTF-8"))
 
-  /** Collect footer stats for `dir` and write its `_graft_stats`
-    * sidecar. Called from the single write seam right after the
-    * parquet write, BEFORE any atomic rename publishes the directory —
-    * so data and stats commit together. Returns the dir's EXACT row
-    * count from the same footers (0 for a dir with no parquet file);
-    * None when any footer failed to read — never a partial sum.
+  /** Collect the footer record of every file under `dir` and write its
+    * `_graft_stats` sidecar. Called from the single write seam right
+    * after the parquet write, BEFORE any atomic rename publishes the
+    * directory — so data and stats commit together — and by
+    * [[exportEntries]] to upgrade an older dir in place (locally
+    * through a rename, so a concurrent reader sees the old sidecar or
+    * the new one). Returns the dir's EXACT row count from the same
+    * footers (0 for a dir with no parquet file); None when any footer
+    * failed to read — never a partial sum.
     */
   def writeSidecar(dir: String): Option[Long] = {
     val stats = collect(dir).sortBy(_._1)
-    val body = new StringBuilder("v1\n")
-    for ((file, Some((_, cols))) <- stats; (col, s) <- cols.toSeq.sortBy(_._1)) {
-      body.append(Seq(file, col, s.tag, enc(s.min), enc(s.max),
-        s.nulls.toString, s.rows.toString).mkString("\t")).append('\n')
+    val body = new StringBuilder("v2\n")
+    for ((file, Some((rows, cols))) <- stats) {
+      body.append(s"$file\t$rows\n")
+      for ((col, s) <- cols.toSeq.sortBy(_._1))
+        body.append(Seq(file, col, s.tag, s.phys, enc(s.min), enc(s.max),
+          s.nulls.toString, s.values.toString).mkString("\t")).append('\n')
     }
-    TableFs.forPath(dir).writeString(s"$dir/$SidecarName", body.toString)
+    val fs = TableFs.forPath(dir)
+    if (fs eq LocalTableFs) {
+      val tmp = s"$dir/.$SidecarName.${java.util.UUID.randomUUID}.tmp"
+      fs.writeString(tmp, body.toString)
+      fs.move(tmp, s"$dir/$SidecarName")
+    } else fs.writeString(s"$dir/$SidecarName", body.toString)
     val rows = stats.flatMap(_._2.map(_._1))
     if (rows.size == stats.size) Some(rows.sum) else None
   }
 
-  /** Load a directory's sidecar; empty map when absent (pre-stats dirs
-    * — every file is kept).
+  /** A parsed sidecar: its format version (0 = absent), and per file
+    * (relative path) the row count and column stats.
     */
-  def readSidecar(dir: String): Map[String, Map[String, ColStat]] = {
+  private case class Sidecar(version: Int, rows: Map[String, Long],
+                             cols: Map[String, Map[String, ColStat]])
+
+  private def readSidecar(dir: String): Sidecar =
     TableFs.forPath(dir).readString(s"$dir/$SidecarName") match {
-      case None => Map.empty
-      case Some(bodyText) => bodyText.linesIterator.drop(1).filter(_.nonEmpty).map { l =>
-        val parts = l.split("\t", -1)
-        (parts(0), parts(1),
-          ColStat(parts(2), dec(parts(3)), dec(parts(4)),
-            parts(5).toLong, parts(6).toLong))
-      }.toSeq.groupBy(_._1).map { case (f, rowsOfFile) =>
-        f -> rowsOfFile.map(r => r._2 -> r._3).toMap
-      }
+      case None => Sidecar(0, Map.empty, Map.empty)
+      case Some(body) if !body.startsWith("v2\n") => Sidecar(1, Map.empty, Map.empty)
+      case Some(body) =>
+        val parts = body.linesIterator.drop(1).filter(_.nonEmpty)
+          .map(_.split("\t", -1)).toSeq
+        Sidecar(2, parts.filter(_.length == 2).map(p => p(0) -> p(1).toLong).toMap,
+          parts.filter(_.length > 2).groupBy(_(0)).map { case (f, ls) =>
+            f -> ls.map(p => p(1) -> ColStat(p(2), p(3), dec(p(4)), dec(p(5)),
+              p(6).toLong, p(7).toLong)).toMap })
+    }
+
+  /** The one reader of per-file records: for each root, every data file
+    * under it (one listing) with its sidecar record and blooms, sorted
+    * by path. A kept `col=value` subdir reference (a partition-scoped
+    * overwrite keeps untouched partitions by reference; `layout` names
+    * the table's Hive layout columns) reads the sidecars of the
+    * snapshot dir it lives in, parsed once for all the roots given. A
+    * file the sidecar lacks has rows -1 and no stats, so every pruning
+    * decision keeps it.
+    */
+  def entries(roots: Seq[String], layout: Seq[String]): Seq[Seq[FileEntry]] =
+    load(roots, layout).map(_._2)
+
+  /** [[entries]], each root with whether its sidecar is the current
+    * format.
+    */
+  private def load(roots: Seq[String],
+                   layout: Seq[String]): Seq[(Boolean, Seq[FileEntry])] = {
+    val bases = roots.map(PartitionPaths.base(_, layout))
+    val sidecars = bases.distinct.map(b => b -> (readSidecar(b), readBloomSidecar(b))).toMap
+    roots.zip(bases).map { case (root, base) =>
+      val (side, blooms) = sidecars(base)
+      (side.version == 2, parquetFiles(root).sortBy(_._1).map { case (p, bytes) =>
+        val rel = relTo(base, p)
+        FileEntry(p, side.rows.getOrElse(rel, -1L), bytes,
+          side.cols.getOrElse(rel, Map.empty), blooms.getOrElse(rel, Map.empty))
+      })
     }
   }
 
-  // ---- pruning ----
-
-  /** One entry per data file: (absolute path, range stats, blooms). */
-  type FileEntry = (String, Map[String, ColStat], Map[String, java.util.BitSet])
-
-  /** Every data file under `roots` with its stats AND bloom sidecar
-    * content — ONE filesystem walk + sidecar parse, which the skipping
-    * scan builder shares across its pushdown hooks.
+  /** [[entries]] with a current record for every file, as the Iceberg
+    * export transcribes them. A dir whose sidecar is older than v2, or
+    * lacks a listed file, is re-collected once through [[writeSidecar]]
+    * — a one-way upgrade — and a file still unrecorded (its footer
+    * cannot be read) fails.
     */
-  def listWithSidecars(roots: Seq[String]): Seq[FileEntry] =
-    roots.flatMap { r =>
-      if (!TableFs.forPath(r).exists(r)) Nil
-      else {
-        val side = readSidecar(r)
-        val bloom = readBloomSidecar(r)
-        parquetFiles(r).map { p =>
-          val rel = relTo(r, p)
-          (p, side.getOrElse(rel, Map.empty[String, ColStat]),
-            bloom.getOrElse(rel, Map.empty[String, java.util.BitSet]))
-        }
-      }
+  def exportEntries(roots: Seq[String], layout: Seq[String]): Seq[Seq[FileEntry]] = {
+    val loaded = load(roots, layout)
+    val stale = roots.zip(loaded).collect {
+      case (root, (current, es)) if !current || es.exists(_.rows < 0) =>
+        PartitionPaths.base(root, layout)
+    }.distinct
+    if (stale.isEmpty) loaded.map(_._2)
+    else {
+      stale.foreach(writeSidecar)
+      val after = entries(roots, layout)
+      after.flatten.find(_.rows < 0).foreach(e => throw new IllegalStateException(
+        s"no footer record for ${e.path}: its footer cannot be read"))
+      after
     }
+  }
+
+  /** The data files under `dir`, by the listing rule [[entries]] uses. */
+  def dataFiles(dir: String): Seq[String] = parquetFiles(dir).map(_._1)
+
+  // ---- pruning ----
 
   /** Can any row of a file with these stats satisfy the filter?
     * (false ⇒ the file is provably irrelevant and safe to skip).
@@ -474,10 +541,22 @@ object FileStats {
       }
     }
 
+  /** A column's (tag, min, max) when pruning may compare with them:
+    * both bounds known, a typed domain, and ASCII strings only (parquet
+    * orders UTF-8 bytes unsigned, java Strings by UTF-16 unit; they
+    * agree only on ASCII).
+    */
+  private def usableBounds(stats: Map[String, ColStat],
+                           a: String): Option[(String, String, String)] =
+    stats.get(a).collect {
+      case ColStat(tag, _, Some(mn), Some(mx), _, _) if tag != "none" &&
+          (tag != "string" || (isAscii(mn) && isAscii(mx))) => (tag, mn, mx)
+    }
+
   private def withBounds(stats: Map[String, ColStat], a: String, v: Any)
                         (f: (String, String, String, Any) => Boolean): Boolean =
-    stats.get(a) match {
-      case Some(ColStat(tag, Some(mn), Some(mx), _, _)) if tag != "none" =>
+    usableBounds(stats, a) match {
+      case Some((tag, mn, mx)) =>
         literal(tag, v) match {
           case Some(l) => f(tag, mn, mx, l)
           case None => true
@@ -487,8 +566,8 @@ object FileStats {
 
   private def prefixMayMatch(stats: Map[String, ColStat], a: String,
                              p: String): Boolean =
-    stats.get(a) match {
-      case Some(ColStat("string", Some(mn), Some(mx), _, _)) if isAscii(p) =>
+    usableBounds(stats, a) match {
+      case Some(("string", mn, mx)) if isAscii(p) =>
         // strings with prefix p live in [p, p + U+FFFF): skip when the
         // file's whole range is below p or above every p-prefixed string
         mx.compareTo(p) >= 0 && mn.compareTo(p + "￿") <= 0
@@ -580,7 +659,7 @@ object FileStats {
     } catch { case NonFatal(_) => name.stripPrefix("file:") }
 
   /** file(relative) -> col -> bitset; empty when the sidecar is absent. */
-  def readBloomSidecar(dir: String): Map[String, Map[String, java.util.BitSet]] =
+  private def readBloomSidecar(dir: String): Map[String, Map[String, java.util.BitSet]] =
     TableFs.forPath(dir).readString(s"$dir/$BloomSidecarName") match {
       case None => Map.empty
       case Some(bodyText) =>
@@ -643,7 +722,7 @@ object FileStats {
 
   private def mayHaveNonNull(stats: Map[String, ColStat], a: String): Boolean =
     stats.get(a) match {
-      case Some(s) if s.nulls >= 0 && s.rows >= 0 => s.nulls < s.rows
+      case Some(s) if s.nulls >= 0 && s.values >= 0 => s.nulls < s.values
       case _ => true
     }
 }

@@ -10,10 +10,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -78,19 +74,19 @@ import graft.plans.TieredSqlTable
   * live files — export with no deletes.
   *
   * Scale: for copy-on-write tables export is a METADATA-ONLY pass — it
-  * lists the snapshot's files and reads parquet footers for record
-  * counts (the same numbers a cluster writer returns in task commit
-  * messages); no data file is read or rewritten. Merge-on-read adds
-  * one column-pruned PK scan per NEW delta dir (delete files are
-  * written once per dir, keyed by sequence) — O(|delta| PK cells),
-  * the cost a Flink upsert writer pays inline. Re-export after new
-  * commits is O(Δ), not O(history × files): per-dir footer stats and
-  * per-snapshot schemas persist in sidecar caches (`dir-stats.json`,
-  * `export-state.json`), and already-written manifest/list Avro files
-  * are REUSED byte-for-byte while the exported history prefix is
-  * untouched — only the new snapshots' footers are opened and only
-  * their manifests written, so per-commit auto-export
-  * (`icebergExport = true`) has flat commit latency as history grows.
+  * lists each snapshot dir and transcribes the per-file records the
+  * commit already wrote ([[FileStats.exportEntries]]: record counts,
+  * value and null counts, bounds — the numbers a cluster writer
+  * returns in task commit messages); no data file or footer is opened.
+  * Merge-on-read adds one column-pruned PK scan per NEW delta dir
+  * (delete files are written once per dir, keyed by sequence) —
+  * O(|delta| PK cells), the cost a Flink upsert writer pays inline.
+  * Re-export after new commits writes only the new snapshots'
+  * manifests: per-snapshot schemas persist in `export-state.json`, and
+  * already-written manifest/list Avro files are REUSED byte-for-byte
+  * while the exported history prefix is untouched, so per-commit
+  * auto-export (`icebergExport = true`) has flat Avro work as history
+  * grows.
   * All metadata IO rides [[TableFs]], so a `graftos://` table exports
   * its chain INTO the bucket (each Avro/json artifact buffered and
   * written in one PUT; eqdel dirs publish via `_DONE` markers instead
@@ -347,115 +343,26 @@ object IcebergExport {
       s"unrenderable JSON value: $other (${other.getClass})")
   }
 
-  /** Per-column footer stats of one part file, Iceberg-shaped:
-    * (valueCount, nullCount, lower/upper as single-value binary).
-    * Bounds use Iceberg's single-value serialization — LITTLE-endian
-    * fixed-width for int/long/float/double (and date as int days),
-    * raw UTF-8 for strings; columns whose footer stats are missing in
-    * ANY row group export counts only (a partial bound is wrong, no
-    * bound is merely less prunable).
+  /** Iceberg's single-value serialization of one canonical sidecar
+    * bound ([[FileStats.ColStat]]): little-endian at the parquet
+    * physical width for int/long/float/double (a date is its epoch day
+    * as an int), a decimal as its unscaled value in the fewest
+    * big-endian two's-complement bytes, a string as its UTF-8 bytes.
+    * None for the domains not bounded here (timestamps, untagged
+    * columns) — omission is spec-legal, the counts still export.
     */
-  private case class ColStats(valueCount: Long, nullCount: Long,
-                              lower: Option[Array[Byte]],
-                              upper: Option[Array[Byte]])
-
-  /** Encode one typed bound. Returns None for types we don't bound
-    * (decimals, timestamps — omission is spec-legal; counts still
-    * export).
-    */
-  private def encodeBound(pt: org.apache.parquet.schema.PrimitiveType,
-                          v: AnyRef): Option[Array[Byte]] = {
+  private def encodeBound(s: FileStats.ColStat, v: String): Option[Array[Byte]] = {
     import java.nio.{ByteBuffer, ByteOrder}
-    import org.apache.parquet.schema.LogicalTypeAnnotation
     def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    val logical = pt.getLogicalTypeAnnotation
-    (pt.getPrimitiveTypeName, v) match {
-      case (PrimitiveTypeName.INT64, l: java.lang.Long)
-        // timestamps also land in INT64 — only plain/int64 logical
-        if logical == null ||
-          logical.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-        Some(le(8).putLong(l).array())
-      case (PrimitiveTypeName.INT32, i: java.lang.Integer) =>
-        // covers plain ints and DATE (days since epoch — same int)
-        Some(le(4).putInt(i).array())
-      case (PrimitiveTypeName.DOUBLE, d: java.lang.Double) =>
-        Some(le(8).putDouble(d).array())
-      case (PrimitiveTypeName.FLOAT, f: java.lang.Float) =>
-        Some(le(4).putFloat(f).array())
-      case (PrimitiveTypeName.BINARY, b: org.apache.parquet.io.api.Binary)
-        if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-        Some(b.getBytes.clone())
+    (s.tag, s.phys) match {
+      case (t, _) if t.startsWith("decimal:") =>
+        Some(java.math.BigInteger.valueOf(v.toLong).toByteArray)
+      case ("long" | "date", "INT32") => Some(le(4).putInt(v.toInt).array())
+      case ("long", "INT64") => Some(le(8).putLong(v.toLong).array())
+      case ("double", "FLOAT") => Some(le(4).putFloat(v.toDouble.toFloat).array())
+      case ("double", "DOUBLE") => Some(le(8).putDouble(v.toDouble).array())
+      case ("string", _) => Some(v.getBytes(StandardCharsets.UTF_8))
       case _ => None
-    }
-  }
-
-  /** One part file's manifest accounting: (path, rows, bytes,
-    * per-column footer stats).
-    */
-  private type FileStat = (String, Long, Long, Map[String, ColStats])
-
-  /** Test instrumentation: parquet footers opened by [[partFiles]]
-    * over the JVM's lifetime — how IcebergExportSpec proves the
-    * incremental claim (a re-export after one append opens only the
-    * NEW dir's footers; prior dirs are served from `dir-stats.json`).
-    */
-  private[graft] val footerOpens = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Parquet part files under a snapshot data dir, with per-file
-    * (rows, bytes, per-column stats) from the footer — the manifest
-    * entry's accounting and pruning metadata.
-    */
-  private def partFiles(dir: String): Seq[FileStat] = {
-    val conf = new Configuration(TableFs.hadoopConf)
-    val files = TableFs.forPath(dir).listFiles(dir)
-      .filter(_._1.endsWith(".parquet")).sortBy(_._1)
-    files.map { case (f, fileBytes) =>
-      footerOpens.incrementAndGet()
-      val reader = ParquetFileReader.open(conf, new HadoopPath(f))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        // merge chunk stats per column path; a chunk without usable
-        // stats poisons that column's bounds (rows could lie anywhere)
-        var acc = Map.empty[String, (org.apache.parquet.schema.PrimitiveType,
-          Long, Long, Option[AnyRef], Option[AnyRef], Boolean)]
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val name = c.getPath.toDotString
-          if (!name.contains(".")) { // top-level primitives only
-            val st = c.getStatistics
-            val ok = st != null && st.isNumNullsSet
-            val (nulls, mn, mx) =
-              if (!ok) (0L, None, None)
-              else if (!st.hasNonNullValue)
-                (st.getNumNulls, None, None)
-              else (st.getNumNulls,
-                Option(st.genericGetMin.asInstanceOf[AnyRef]),
-                Option(st.genericGetMax.asInstanceOf[AnyRef]))
-            acc.get(name) match {
-              case None =>
-                acc += name -> (c.getPrimitiveType, c.getValueCount, nulls, mn, mx, ok)
-              case Some((pt, vc0, nl0, mn0, mx0, ok0)) =>
-                val cmp = pt.comparator()
-                  .asInstanceOf[java.util.Comparator[AnyRef]]
-                def pick(a: Option[AnyRef], b: Option[AnyRef], lo: Boolean) =
-                  (a, b) match {
-                    case (Some(x), Some(y)) =>
-                      Some(if ((cmp.compare(x, y) < 0) == lo) x else y)
-                    case (x, y) => x.orElse(y)
-                  }
-                acc += name -> (pt, vc0 + c.getValueCount, nl0 + nulls,
-                  pick(mn0, mn, lo = true), pick(mx0, mx, lo = false),
-                  ok0 && ok)
-            }
-          }
-        }
-        val stats = acc.flatMap { case (name, (pt, vc, nl, mn, mx, ok)) =>
-          if (!ok) None
-          else Some(name -> ColStats(vc, nl,
-            mn.flatMap(encodeBound(pt, _)), mx.flatMap(encodeBound(pt, _))))
-        }
-        (f, rows, fileBytes, stats)
-      } finally reader.close()
     }
   }
 
@@ -586,25 +493,16 @@ object IcebergExport {
     dvPath
   }
 
-  // ---- incremental-export sidecars ----
+  // ---- incremental-export sidecar ----
   //
-  // Two cache files under metadata/ make re-export O(Δ) instead of
-  // O(history × files):
-  //  - dir-stats.json    per-dir footer stats. Data dirs are immutable
-  //                      once committed, so a dir's stats never change;
-  //                      re-export reads footers only for dirs it has
-  //                      never seen.
-  //  - export-state.json the export watermark: last exported head id,
-  //                      the retained snapshot ids it saw, and each
-  //                      snapshot's raw schema DDL (files are immutable,
-  //                      so a snapshot's physical schema never changes —
-  //                      caching it skips the per-snapshot parquet
-  //                      schema-inference job).
-  // Both are CACHES, not sources of truth: losing or corrupting either
-  // just makes the next export recompute from footers.
-
-  private def b64(b: Array[Byte]): String =
-    java.util.Base64.getEncoder.encodeToString(b)
+  // export-state.json under metadata/ is the export watermark: last
+  // exported head id, the retained snapshot ids it saw, and each
+  // snapshot's raw schema DDL (files are immutable, so a snapshot's
+  // physical schema never changes — caching it skips the per-snapshot
+  // parquet schema-inference job). It is a CACHE, not a source of
+  // truth: losing or corrupting it just makes the next export
+  // recompute. Per-file stats are not cached here: each data dir's
+  // `_graft_stats` sidecar is their one record.
 
   private case class ExportState(head: Long, retained: Seq[Long],
                                  schemas: Map[Long, String],
@@ -637,50 +535,6 @@ object IcebergExport {
       "schemas" -> st.schemas.map { case (k, v) => k.toString -> v },
       "format-version" -> st.formatVersion
     )))
-
-  /** `{dir: [[path, rows, bytes, {col: [vc, nc, lo?, hi?]}], …]}` with
-    * bounds base64-encoded; positional arrays keep the file compact.
-    */
-  private def loadDirStats(mdir: String): Map[String, Seq[FileStat]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val body = TableFs.forPath(mdir).readString(s"$mdir/dir-stats.json")
-      .getOrElse(return Map.empty)
-    def ob(v: JValue): Option[Array[Byte]] = v match {
-      case JString(s) => Some(java.util.Base64.getDecoder.decode(s))
-      case _ => None
-    }
-    try {
-      JsonMethods.parse(body).asInstanceOf[JObject].obj.map {
-        case (dir, JArray(files)) =>
-          dir -> files.map { fo =>
-            val JArray(List(JString(path), rows, bytes, JObject(cols))) =
-              fo: @unchecked
-            val colStats = cols.map {
-              case (name, JArray(List(vc, nc, lo, hi))) =>
-                name -> ColStats(jLong(vc), jLong(nc), ob(lo), ob(hi))
-              case (name, other) =>
-                throw new IllegalStateException(s"$name -> $other")
-            }.toMap
-            (path, jLong(rows), jLong(bytes), colStats)
-          }
-        case (dir, other) =>
-          throw new IllegalStateException(s"$dir -> $other")
-      }.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
-
-  private def saveDirStats(mdir: String, m: Map[String, Seq[FileStat]]): Unit = {
-    val obj: Map[String, Any] = m.map { case (dir, files) =>
-      dir -> files.map { case (p, r, b, cols) =>
-        Seq[Any](p, r, b, cols.map { case (n, cs) =>
-          n -> Seq[Any](cs.valueCount, cs.nullCount,
-            cs.lower.map(b64).orNull, cs.upper.map(b64).orNull)
-        })
-      }
-    }
-    TableFs.forPath(mdir).writeString(s"$mdir/dir-stats.json", toJson(obj))
-  }
 
   /** Export the table's retained snapshot history as an Iceberg v2
     * table rooted at the graft table path. Idempotent per call; each
@@ -826,8 +680,8 @@ object IcebergExport {
     // its schema id (distinct-schema order is first-occurrence), so
     // the bytes this export would write for a prefix snapshot equal
     // the bytes already on disk. Expiry since the last export breaks
-    // the condition → full manifest rewrite (rare; the footer-stat
-    // cache still makes it cheap).
+    // the condition → full manifest rewrite (rare, and still footer-
+    // free: the entries come from the data dirs' sidecars).
     val state = loadExportState(mdir)
     val prevHead = state.map(_.head).getOrElse(0L)
     // reuse also requires the SAME format version: a v2-exported
@@ -835,11 +689,6 @@ object IcebergExport {
     val prefixStable = state.exists(st =>
       st.formatVersion == formatVersion &&
         snaps.map(_.id).filter(_ <= st.head).toSet == st.retained.toSet)
-    val statsCache = scala.collection.mutable.Map[String, Seq[FileStat]](
-      loadDirStats(mdir).toSeq: _*)
-    def partFilesCached(dir: String): Seq[FileStat] =
-      statsCache.getOrElseUpdate(dir, partFiles(dir))
-
     // A RENAME whose old name still lives in head data files cannot be
     // exported: our data files carry no Iceberg field-ids, so external
     // readers match columns BY NAME — un-converged files would surface
@@ -1153,7 +1002,8 @@ object IcebergExport {
             // scope via SHADOW partition columns (`__p_<col>=value/`
             // dirs): the spec requires delete-file rows to physically
             // contain every equality column, and a plain partitionBy
-            // would strip them from the pages
+            // would strip them from the pages. The dir's stats sidecar
+            // is written before it publishes, as the write seam does.
             def write(target: String): Unit = {
               val w =
                 if (table.partitionBy.isEmpty) keys.write
@@ -1161,6 +1011,7 @@ object IcebergExport {
                   .foldLeft(keys)((d, c) => d.withColumn(s"__p_$c", col(c)))
                   .write.partitionBy(table.partitionBy.map("__p_" + _): _*)
               w.mode("overwrite").parquet(target)
+              FileStats.writeSidecar(target)
             }
             if (table.remote) {
               write(out)
@@ -1171,9 +1022,9 @@ object IcebergExport {
               metaFs.move(tmp, out)
             }
           }
-          dir -> partFilesCached(out).map { case (p, rows, bytes, _) =>
-            (p, rows, bytes,
-              partitionValuesOf(p, out, table.partitionBy.map("__p_" + _)))
+          val shadowCols = table.partitionBy.map("__p_" + _)
+          dir -> FileStats.exportEntries(Seq(out), shadowCols).flatten.map { e =>
+            (e.path, e.rows, e.bytes, partitionValuesOf(e.path, out, shadowCols))
           }
         }.toMap
       }
@@ -1211,8 +1062,7 @@ object IcebergExport {
       // file_path rendering (how external readers link them); the scan
       // yields the Hadoop-Path URI form — map back via the same
       // encoding, driver-side, bounded by file count
-      val rawByUri: Map[String, String] = dirs.flatMap(d =>
-        partFilesCached(d).map(_._1)).map { p =>
+      val rawByUri: Map[String, String] = dirs.flatMap(FileStats.dataFiles).map { p =>
         new org.apache.hadoop.fs.Path(p).toUri.toString
           .replaceFirst("^file:/+", "/") -> p
       }.toMap
@@ -1302,8 +1152,7 @@ object IcebergExport {
         import org.apache.spark.sql.expressions.Window
         session.sparkContext.setJobDescription(
           s"export: DV build snaps ${pending.head.id}..${pending.last.id}")
-        val rawByUri: Map[String, String] = lastDirs.flatMap(d =>
-          partFilesCached(d).map(_._1)).map { p =>
+        val rawByUri: Map[String, String] = lastDirs.flatMap(FileStats.dataFiles).map { p =>
           new org.apache.hadoop.fs.Path(p).toUri.toString
             .replaceFirst("^file:/+", "/") -> p
         }.toMap
@@ -1390,24 +1239,38 @@ object IcebergExport {
       }
     }
 
+    def delDirsOf(s: TieredTable#Snapshot): Seq[String] = {
+      val minSeq = s.files.map(seqOfDir).minOption.getOrElse(s.id)
+      s.files.filter(d => seqOfDir(d) > minSeq).sortBy(seqOfDir)
+    }
+    // Reuse: under a stable prefix (see above) an already-exported
+    // snapshot's manifest, delete manifest, and manifest list are
+    // byte-for-byte what this export would write — skip its entries and
+    // the Avro writes entirely.
+    val reusable: Set[Long] = snaps.filter { s =>
+      val id = "%06d".format(s.id)
+      evolutions.isEmpty && prefixStable && s.id <= prevHead &&
+        metaFs.exists(s"$mdir/manifest-$id.avro") &&
+        metaFs.exists(s"$mdir/snap-$id-manifest-list.avro") &&
+        (!isMor || delDirsOf(s).isEmpty ||
+          metaFs.exists(s"$mdir/manifest-del-$id.avro"))
+    }.map(_.id).toSet
+    // the per-file records of every dir a written manifest lists, read
+    // once per export from the dirs' stats sidecars
+    val entriesOf: Map[String, Seq[FileStats.FileEntry]] = {
+      val dirs = snaps.filterNot(s => reusable(s.id)).flatMap(_.files).distinct
+      dirs.zip(FileStats.exportEntries(dirs, layout)).toMap
+    }
+
     val snapshotObjs = snaps.map { s =>
       val snapSchema = rawSchemaOf(s.id)
       val fieldIds: Map[String, Int] = fieldIdsOf(snapSchema)
       val manifestPath = s"$mdir/manifest-${"%06d".format(s.id)}.avro"
       val delPath = s"$mdir/manifest-del-${"%06d".format(s.id)}.avro"
       val listPath = s"$mdir/snap-${"%06d".format(s.id)}-manifest-list.avro"
-      val minSeq = s.files.map(seqOfDir).minOption.getOrElse(s.id)
-      val delDirs = s.files.filter(d => seqOfDir(d) > minSeq).sortBy(seqOfDir)
+      val delDirs = delDirsOf(s)
       val needsDel = isMor && delDirs.nonEmpty
-      // Reuse: under a stable prefix (see above) an already-exported
-      // snapshot's manifest, delete manifest, and manifest list are
-      // byte-for-byte what this export would write — skip the footer
-      // walk and the Avro writes entirely.
-      val reusable = evolutions.isEmpty &&
-        prefixStable && s.id <= prevHead &&
-        metaFs.exists(manifestPath) && metaFs.exists(listPath) &&
-        (!needsDel || metaFs.exists(delPath))
-      if (!reusable) {
+      if (!reusable(s.id)) {
       // one DATA manifest per (snapshot, partition spec): every dir is
       // listed under the spec it was WRITTEN under (specOfDir), with
       // that spec's partition struct and spec-id — single-spec tables
@@ -1419,7 +1282,7 @@ object IcebergExport {
                      dirCols: Seq[String]): Seq[GenericRecord] =
         dirs.flatMap { dir =>
         val addedIn = seqOfDir(dir)
-        partFilesCached(dir).map { case (path, rows, bytes, colStats) =>
+        entriesOf(dir).map { f =>
           val e = new GenericData.Record(eSchema)
           e.put("status", if (addedIn == s.id) 1 else 0) // ADDED / EXISTING
           e.put("snapshot_id", addedIn)
@@ -1428,46 +1291,47 @@ object IcebergExport {
           val df = new GenericData.Record(
             eSchema.getField("data_file").schema())
           df.put("content", 0)                    // DATA
-          df.put("file_path", path)
+          df.put("file_path", f.path)
           df.put("file_format", "PARQUET")
           val partRec = new GenericData.Record(
             df.getSchema.getField("partition").schema())
           if (pt.nonEmpty) {
-            val vals = partitionValuesOf(path, dir, dirCols)
+            val vals = partitionValuesOf(f.path, dir, dirCols)
             pt.zip(vals).foreach { case ((c, dt), ov) =>
               partRec.put(c, ov.map(typedPartValue(_, dt)).orNull)
             }
           }
           df.put("partition", partRec)
-          df.put("record_count", rows)
-          df.put("file_size_in_bytes", bytes)
-          // the stats maps, keyed by schema field id
-          def kvList(field: String,
-                     value: (String, ColStats) => Option[Any]): java.util.List[GenericRecord] = {
+          df.put("record_count", f.rows)
+          df.put("file_size_in_bytes", f.bytes)
+          // the stats maps, keyed by schema field id: the top-level
+          // columns whose null count every row group recorded
+          val counted = f.cols.toSeq.sortBy(_._1).flatMap { case (name, cs) =>
+            if (cs.nulls < 0) None else fieldIds.get(name).map(_ -> cs)
+          }
+          def kvList(field: String, value: FileStats.ColStat => Option[Any])
+              : java.util.List[GenericRecord] = {
             val arrSchema = df.getSchema.getField(field).schema()
               .getTypes.get(1) // ["null", array]
             val itemSchema = arrSchema.getElementType
             val out = new java.util.ArrayList[GenericRecord]()
-            colStats.toSeq.sortBy(_._1).foreach { case (name, cs) =>
-              fieldIds.get(name).foreach { fid =>
-                value(name, cs).foreach { v =>
-                  val kv = new GenericData.Record(itemSchema)
-                  kv.put("key", fid)
-                  kv.put("value", v)
-                  out.add(kv)
-                }
+            counted.foreach { case (fid, cs) =>
+              value(cs).foreach { v =>
+                val kv = new GenericData.Record(itemSchema)
+                kv.put("key", fid)
+                kv.put("value", v)
+                out.add(kv)
               }
             }
             out
           }
-          df.put("value_counts",
-            kvList("value_counts", (_, cs) => Some(cs.valueCount)))
+          def bound(v: Option[String], cs: FileStats.ColStat) =
+            v.flatMap(encodeBound(cs, _)).map(java.nio.ByteBuffer.wrap)
+          df.put("value_counts", kvList("value_counts", cs => Some(cs.values)))
           df.put("null_value_counts",
-            kvList("null_value_counts", (_, cs) => Some(cs.nullCount)))
-          df.put("lower_bounds", kvList("lower_bounds",
-            (_, cs) => cs.lower.map(java.nio.ByteBuffer.wrap)))
-          df.put("upper_bounds", kvList("upper_bounds",
-            (_, cs) => cs.upper.map(java.nio.ByteBuffer.wrap)))
+            kvList("null_value_counts", cs => Some(cs.nulls)))
+          df.put("lower_bounds", kvList("lower_bounds", cs => bound(cs.min, cs)))
+          df.put("upper_bounds", kvList("upper_bounds", cs => bound(cs.max, cs)))
           e.put("data_file", df)
           e
         }
@@ -1762,11 +1626,6 @@ object IcebergExport {
       val keptLines = body.linesIterator.filter(liveDirs).toSeq
       metaFs.writeString(markerFile, keptLines.sorted.mkString("\n"))
     }
-    // persist the incremental-export sidecars, pruned with the GC —
-    // stats of dead data dirs / eqdel dirs go with their files
-    val liveStatDirs: Set[String] = snaps.flatMap(_.files).toSet ++
-      retainedSeqs.map(q => s"$mdir/eqdel-${"%06d".format(q)}")
-    saveDirStats(mdir, statsCache.toMap.filter { case (k, _) => liveStatDirs(k) })
     saveExportState(mdir, ExportState(head.id, snaps.map(_.id),
       snaps.map(s => s.id -> rawSchemaOf(s.id).toDDL).toMap,
       formatVersion))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.storage.FileStats
-import graft.storage.FileStats.ColStat
+import graft.storage.FileStats.FileEntry
 
 /** Scan builder adding MANIFEST-LEVEL FILE SKIPPING to a tiered
   * table's reads — SQL scans through the catalog and every
@@ -36,7 +36,7 @@ import graft.storage.FileStats.ColStat
   * read per directory.
   */
 class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
-                               roots: Seq[String], fullSchema: StructType,
+                               files: () => Seq[FileEntry], fullSchema: StructType,
                                options: CaseInsensitiveStringMap,
                                inner: ScanBuilder,
                                partitionCols: Seq[String] = Nil,
@@ -54,11 +54,11 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
   /** ONE filesystem walk + sidecar parse per scan build: Spark calls
     * this builder through several pushdown hooks (supportComplete →
     * pushAggregation → build), and the roots are pinned at table load,
-    * so the listing is computed once and shared — per-plan cost stays
-    * O(1 walk), the number the 100 TB planning story depends on.
+    * so the listing (`files`, [[FileStats.entries]] of the roots) is
+    * computed once and shared — per-plan cost stays O(1 walk), the
+    * number the 100 TB planning story depends on.
     */
-  private lazy val listed = FileStats.listWithSidecars(roots)
-  private lazy val listedStats = listed.map(e => (e._1, e._2))
+  private lazy val listed = files()
 
   /** METADATA-ONLY AGGREGATES: an unfiltered, ungrouped COUNT(*) /
     * COUNT(col) / MIN / MAX is answered entirely from the stats
@@ -86,19 +86,17 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
   private def planMetadataAgg(agg: Aggregation)
       : Option[(StructType, Seq[Any])] = {
     if (agg.groupByExpressions.nonEmpty || pushedExprs.nonEmpty) return None
-    val files = listedStats
+    val files = listed
     if (files.isEmpty) return planOverEmpty(agg)
-    // every file must carry a sidecar (rows known) — a statless file
-    // makes every count/bound unknown
-    if (files.exists(_._2.isEmpty)) return None
-    def rowsOf(stats: Map[String, ColStat]): Long = stats.head._2.rows
-    if (files.exists(f => rowsOf(f._2) < 0)) return None
+    // every file must carry a sidecar record (rows known) — a statless
+    // file makes every count/bound unknown
+    if (files.exists(_.rows < 0)) return None
     val fields = scala.collection.mutable.ArrayBuffer.empty[StructField]
     val values = scala.collection.mutable.ArrayBuffer.empty[Any]
     agg.aggregateExpressions.foreach {
       case _: CountStar =>
         fields += StructField(s"agg_${fields.size}", LongType, nullable = false)
-        values += files.map(f => rowsOf(f._2)).sum
+        values += files.map(_.rows).sum
       case c: Count if !c.isDistinct =>
         val name = col1(c.column).getOrElse(return None)
         // partition-column values live in DIRECTORY names, invisible to
@@ -107,10 +105,10 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
         // per file: rows − nulls; a file without the column (schema
         // evolution) reads as all-null there → contributes 0
         var total = 0L
-        files.foreach { case (_, stats) =>
-          stats.get(name) match {
+        files.foreach { f =>
+          f.cols.get(name) match {
             case Some(s) => if (s.nulls < 0) return None
-              else total += rowsOf(stats) - s.nulls
+              else total += f.rows - s.nulls
             case None => // column absent from this file → all null → +0
           }
         }
@@ -169,7 +167,7 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
     * the column contribute nothing; all-null files have no bound but
     * don't block others (MIN/MAX ignore nulls).
     */
-  private def boundOf(files: Seq[(String, Map[String, ColStat])],
+  private def boundOf(files: Seq[FileEntry],
                       name: String, takeMin: Boolean)
       : Option[(DataType, Any)] = {
     val dt = sparkTypeOf(name).getOrElse(return None)
@@ -181,8 +179,8 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
       case _ => return None
     }
     var best: Option[Long] = None
-    files.foreach { case (_, stats) =>
-      stats.get(name) match {
+    files.foreach { f =>
+      f.cols.get(name) match {
         case None => // column absent here → contributes nothing
         case Some(s) if s.tag != expectedTag => return None
         case Some(s) =>
@@ -193,7 +191,7 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
                 if (takeMin) math.min(b, v) else math.max(b, v)))
             case _ =>
               // bounds unknown: only safe if the file is ALL nulls
-              if (!(s.nulls >= 0 && s.rows >= 0 && s.nulls == s.rows))
+              if (!(s.nulls >= 0 && s.nulls == f.rows))
                 return None
           }
       }
@@ -245,7 +243,7 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
       listed.filter(GraftSkippingScanBuilder.mayHold(_, sourceFilters, Nil))
     val staticScan =
       if (keptEntries.size == listed.size) inner.build()
-      else buildOver(keptEntries.map(_._1))
+      else buildOver(keptEntries.map(_.path))
     new GraftRuntimeScan(spark, tableName, options, fullSchema,
       listed.size, keptEntries, staticScan, pushedExprs, required, partitionCols,
       buildOver, streamFactory)
@@ -280,11 +278,11 @@ object GraftSkippingScanBuilder {
   /** May the file hold a row matching every filter? Its stats, blooms
     * and `partitionCols` path segments decide; unknown keeps it.
     */
-  def mayHold(e: FileStats.FileEntry, filters: Seq[sources.Filter],
+  def mayHold(e: FileEntry, filters: Seq[sources.Filter],
               partitionCols: Seq[String]): Boolean =
-    filters.forall(f => FileStats.mayMatch(e._2, f) &&
-      FileStats.bloomMayMatch(e._3, f) &&
-      GraftPartitionPathFilter.mayMatch(e._1, partitionCols, f))
+    filters.forall(f => FileStats.mayMatch(e.cols, f) &&
+      FileStats.bloomMayMatch(e.blooms, f) &&
+      GraftPartitionPathFilter.mayMatch(e.path, partitionCols, f))
 }
 
 /** The scan a [[GraftSkippingScanBuilder]] actually returns: the
@@ -317,7 +315,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
                        options: CaseInsensitiveStringMap,
                        fullSchema: StructType,
                        filesTotal: Int,
-                       keptEntries: Seq[FileStats.FileEntry],
+                       keptEntries: Seq[FileEntry],
                        staticScan: Scan,
                        pushedExprs: Seq[Expression],
                        required: Option[StructType],
@@ -338,8 +336,8 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
       throw new UnsupportedOperationException(
         s"$tableName: micro-batch scan is not supported"))
 
-  @volatile private var runtimeEntries: Option[Seq[FileStats.FileEntry]] = None
-  @volatile private var effective: (Option[Seq[FileStats.FileEntry]], Scan) =
+  @volatile private var runtimeEntries: Option[Seq[FileEntry]] = None
+  @volatile private var effective: (Option[Seq[FileEntry]], Scan) =
     (None, staticScan)
 
   override def readSchema(): StructType = staticScan.readSchema()
@@ -356,16 +354,8 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
     * None when any file lacks one (then the file scan's byte-based
     * estimate stands alone).
     */
-  private def sidecarRows(entries: Seq[FileStats.FileEntry]): Option[Long] = {
-    var total = 0L
-    entries.foreach { case (_, stats, _) =>
-      if (stats.isEmpty) return None
-      val r = stats.head._2.rows
-      if (r < 0) return None
-      total += r
-    }
-    Some(total)
-  }
+  private def sidecarRows(entries: Seq[FileEntry]): Option[Long] =
+    if (entries.exists(_.rows < 0)) None else Some(entries.map(_.rows).sum)
 
   override def estimateStatistics(): Statistics = {
     val entries = runtimeEntries.getOrElse(keptEntries)
@@ -398,7 +388,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
   override def filterAttributes(): Array[NamedReference] = {
     val visible = readSchema().fieldNames.toSet
     val statCols = keptEntries.iterator
-      .flatMap(e => e._2.keysIterator ++ e._3.keysIterator).toSet
+      .flatMap(e => e.cols.keysIterator ++ e.blooms.keysIterator).toSet
     (partitionCols ++ statCols).distinct.filter(visible)
       .map(c => FieldReference.column(c): NamedReference).toArray
   }
@@ -423,7 +413,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
       val s = runtimeEntries match {
         case Some(e) if e.isEmpty =>
           new GraftEmptyScan(tableName, staticScan.readSchema())
-        case Some(e) => rebuild(e.map(_._1))
+        case Some(e) => rebuild(e.map(_.path))
         case None => staticScan
       }
       effective = (want, s)
@@ -461,8 +451,8 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
     * `col=value` segments ([[InternalRow]] has no value equality); None
     * when any file can't prove its typed key.
     */
-  private def keyCount(entries: Seq[FileStats.FileEntry]): Option[Int] = {
-    val raws = entries.map(e => rawKey(e._1)).distinct
+  private def keyCount(entries: Seq[FileEntry]): Option[Int] = {
+    val raws = entries.map(e => rawKey(e.path)).distinct
     if (raws.forall(_.flatMap(GraftPartitionKeys.typedKey(_, partitionCols,
         fullSchema)).isDefined)) Some(raws.size)
     else None

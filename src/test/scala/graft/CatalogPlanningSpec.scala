@@ -159,7 +159,7 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
         .toDF("id", "k").repartition(6))
     TieredCatalog.register("plandb", "keyed", t.tablePath, partitionBy = Seq("k"))
     try {
-      val files = FileStats.listWithSidecars(t.unionPaths).map(_._1)
+      val files = FileStats.entries(t.unionPaths, Seq("k")).flatten.map(_.path)
       assert(files.size > 4)
       assertKeyedSplits(v2Scan("keyed"), files)
 
@@ -188,8 +188,7 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
       override def createReaderFactory(): PartitionReaderFactory =
         throw new UnsupportedOperationException
     }
-    val entries = files.map(f => (f, Map.empty[String, FileStats.ColStat],
-      Map.empty[String, java.util.BitSet]))
+    val entries = files.map(f => FileStats.FileEntry(f, -1L, 0L, Map.empty, Map.empty))
     val scan = new GraftRuntimeScan(spark, "mixed", CaseInsensitiveStringMap.empty(),
       mixed.readSchema(), entries.size, entries, mixed, Nil, None, Seq("k"),
       _ => fail("no per-key scan is built"))

@@ -424,6 +424,47 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
     assert(sameAnswer(t, col("grp") === "a" && col("id") < 1000L)._1 == 2)
   }
 
+  test("kept partition subdirs of a partition overwrite prune, count and " +
+       "list by their snapshot dir's sidecars") {
+    val dir = Files.createTempDirectory("graft-po").toString
+    val t = new TieredTable(spark, s"$dir/t", partitionBy = Seq("grp"))
+    def rows(from: Long) = (from until from + 100).map(i =>
+      (i, if (i % 2 == 0) "a" else "b")).toDF("id", "grp")
+    t.commitAppend(rows(0))
+    t.commitAppend(rows(1000))
+    // grp=b is replaced; both grp=a dirs stay as kept `snap-N/grp=a` refs
+    t.commitOverwritePartitions((5000L until 5010L).map(i => (i, "b"))
+      .toDF("id", "grp"), Seq("grp" -> "b"))
+    val kept = t.currentSnapshot.get.files.filter(_.endsWith("/grp=a"))
+    assert(kept.size == 2, t.currentSnapshot.get.files.toString)
+    // only the new grp=b file holds ids >= 5000: both kept files prune
+    assert(sameAnswer(t, col("id") >= 5000L) == (1L, 3L))
+    graft.plans.TieredCatalog.register("skipdb", "po", t.tablePath,
+      partitionBy = Seq("grp"))
+    try {
+      val listed = spark.sql(
+        "SELECT file_path, row_count FROM graft.skipdb.po__stats WHERE column = 'id'")
+        .as[(String, Long)].collect()
+      assert(listed.count(r => kept.exists(k => r._1.startsWith(k + "/"))) == 2 &&
+        listed.map(_._2).sorted.toSeq == Seq(10L, 50L, 50L), listed.toSeq)
+    } finally graft.plans.TieredCatalog.unregister("skipdb", "po")
+
+    // a table whose only root is a kept subdir answers COUNT(*) from its
+    // snapshot dir's sidecar
+    val one = new TieredTable(spark, s"$dir/one", partitionBy = Seq("grp"))
+    one.commitAppend(rows(0))
+    one.commitOverwritePartitions(Seq.empty[(Long, String)].toDF("id", "grp"),
+      Seq("grp" -> "b"))
+    assert(one.currentSnapshot.get.files.map(_.split('/').last) == Seq("grp=a"))
+    graft.plans.TieredCatalog.register("skipdb", "po1", one.tablePath,
+      partitionBy = Seq("grp"))
+    try {
+      val c = spark.sql("SELECT COUNT(*) AS c FROM graft.skipdb.po1")
+      assert(c.queryExecution.executedPlan.toString.contains("GraftMetadataAggScan"))
+      assert(c.head().getLong(0) == 50L)
+    } finally graft.plans.TieredCatalog.unregister("skipdb", "po1")
+  }
+
   test("schema evolution: pruned-away late column comes back as typed null") {
     val t = tmpTable()
     t.commitAppend(Seq(1L, 2L).toDF("id").coalesce(1))

@@ -61,6 +61,16 @@ class ForeignReaderSpec extends AnyFunSuite with SparkSpec {
     assert(r("rows") == 3 && r("match") == true, r.toString)
   }
 
+  test("--stats: every exported record count, value and null count and " +
+       "bound agrees with DuckDB's own read of the parquet metadata") {
+    assume(pythonOk, "driver-side python3+duckdb unavailable")
+    val dir = Files.createTempDirectory("graft-foreign-stats").toString
+    val t = AllTypesExport(spark, dir)
+    val r = runReader(Seq(t.tablePath, "--stats",
+      "--compare", dump(t.readCold(), s"$dir/expected")))
+    assert(r("stats_ok") == true && r("match") == true && r("rows") == 3, r.toString)
+  }
+
   test("merge-on-read: v2 equality-delete sequence rules resolve " +
        "last-write-wins in the foreign engine") {
     assume(pythonOk, "driver-side python3+duckdb unavailable")

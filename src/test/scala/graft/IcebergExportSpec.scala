@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.storage.{IcebergExport, TieredTable}
+import graft.storage.{FileStats, IcebergExport, TieredTable}
 
 /** The Iceberg-v2 export contract: spec-shaped artifacts (reserved
   * field-ids, required Avro file metadata, version-hint protocol) and
@@ -465,16 +465,16 @@ class IcebergExportSpec extends AnyFunSuite with SparkSpec {
     val mdir = Paths.get(t.tablePath, "metadata")
     val m1 = Files.readAllBytes(mdir.resolve("manifest-000001.avro"))
     val l1 = Files.readAllBytes(mdir.resolve("snap-000001-manifest-list.avro"))
-    assert(Files.exists(mdir.resolve("dir-stats.json")))
     assert(Files.exists(mdir.resolve("export-state.json")))
 
     t.commitAppend(Seq((6L, "f")).toDF("id", "v").coalesce(1)) // snapshot 3
-    val before = IcebergExport.footerOpens.get()
+    val before = FileStats.footerOpens.get()
     IcebergExport.export(t)
-    val opened = IcebergExport.footerOpens.get() - before
-    assert(opened == 1,
-      s"re-export after one single-file append must open exactly that " +
-        s"file's footer (opened $opened) — prior dirs come from dir-stats.json")
+    val opened = FileStats.footerOpens.get() - before
+    assert(opened == 0,
+      s"re-export must transcribe the commits' stats sidecars and open " +
+        s"no footer (opened $opened)")
+    assert(!Files.exists(mdir.resolve("dir-stats.json")))
     // Avro files embed a random sync marker, so byte-identity proves
     // the prefix manifests were REUSED, not deterministically rewritten
     assert(java.util.Arrays.equals(
@@ -487,13 +487,204 @@ class IcebergExportSpec extends AnyFunSuite with SparkSpec {
     assert(IcebergExport.readTable(spark, t.tablePath)
       .select("id").as[Long].collect().sorted.toSeq == (1L to 6L))
 
-    // losing the caches is safe: next export recomputes and still reads
-    Files.delete(mdir.resolve("dir-stats.json"))
-    Files.delete(mdir.resolve("export-state.json"))
+    // a dir without its sidecar (a table written before sidecars carried
+    // every file) is re-collected once — exactly its own footers — and
+    // exports the same entries
+    val oldDir = t.snapshot(1).get.files.head
+    val oldFiles = Files.list(Paths.get(oldDir)).iterator().asScala
+      .count(_.toString.endsWith(".parquet"))
+    Files.delete(Paths.get(oldDir, FileStats.SidecarName))
     t.commitAppend(Seq((7L, "g")).toDF("id", "v").coalesce(1)) // snapshot 4
+    val before4 = FileStats.footerOpens.get()
     IcebergExport.export(t)
+    assert(FileStats.footerOpens.get() - before4 == oldFiles)
+    assert(Files.exists(Paths.get(oldDir, FileStats.SidecarName)))
+    def dataFiles(id: Int): Map[String, Any] =
+      IcebergExport.readAvro(mdir.resolve(f"manifest-$id%06d.avro").toString)._1
+        .map(_.get("data_file").asInstanceOf[
+          org.apache.avro.generic.GenericRecord])
+        .map(df => df.get("file_path").toString -> df).toMap
+    val (m3, m4) = (dataFiles(3), dataFiles(4))
+    assert(m3.nonEmpty && m3.forall { case (p, df) => m4.get(p).contains(df) },
+      "the re-collected dir must export the entries it exported before")
     assert(IcebergExport.readTable(spark, t.tablePath)
       .select("id").as[Long].collect().sorted.toSeq == (1L to 7L))
+
+    // losing the export state is safe: next export recomputes and still
+    // reads
+    Files.delete(mdir.resolve("export-state.json"))
+    t.commitAppend(Seq((8L, "h")).toDF("id", "v").coalesce(1)) // snapshot 5
+    IcebergExport.export(t)
+    assert(IcebergExport.readTable(spark, t.tablePath)
+      .select("id").as[Long].collect().sorted.toSeq == (1L to 8L))
+  }
+
+  /** A table exported once with every column domain (AllTypesExport). */
+  private lazy val allTypes: TieredTable =
+    AllTypesExport(spark, Files.createTempDirectory("graft-ice-types").toString)
+
+  /** The head snapshot's data-manifest entries, by file path, and the
+    * manifest schema's field id of each top-level column, by name.
+    */
+  private def headEntries(t: TieredTable)
+      : (Map[String, org.apache.avro.generic.GenericRecord], Map[String, Int]) = {
+    val (es, meta) = IcebergExport.readAvro(
+      f"${t.tablePath}/metadata/manifest-${t.currentSnapshot.get.id}%06d.avro")
+    val fields = org.json4s.jackson.JsonMethods.parse(meta("schema")) \ "fields"
+    val ids = fields.children.map(f =>
+      (f \ "name").values.toString -> (f \ "id").values.toString.toInt).toMap
+    (es.map(_.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord])
+      .map(df => df.get("file_path").toString -> df).toMap, ids)
+  }
+
+  /** An entry's stats map (value_counts, lower_bounds, …) by field id. */
+  private def statMap(df: org.apache.avro.generic.GenericRecord,
+                      field: String): Map[Int, Any] =
+    Option(df.get(field)).map(_.asInstanceOf[java.util.List[
+      org.apache.avro.generic.GenericRecord]].asScala.map { kv =>
+      kv.get("key").asInstanceOf[Int] -> (kv.get("value") match {
+        case b: java.nio.ByteBuffer =>
+          val a = new Array[Byte](b.remaining); b.duplicate().get(a); a.toSeq
+        case v => v
+      })
+    }.toMap).getOrElse(Map.empty)
+
+  /** One top-level column of one file as the export derived it before
+    * the stats sidecar carried it.
+    */
+  private case class RefCol(values: Long, nulls: Long,
+                            lower: Option[Seq[Byte]], upper: Option[Seq[Byte]])
+
+  /** The footer-derived reference: every footer of `dir` read again,
+    * row-group stats merged per top-level primitive column, and bounds
+    * encoded from the footer's own values — the exporter's footer pass
+    * as it was before it transcribed the sidecar, including its
+    * decimal encoding (an INT32 decimal as a little-endian int, an INT64
+    * decimal unbounded). path → (rows, bytes, column → stats).
+    */
+  private def footerReference(dir: String): Map[String, (Long, Long, Map[String, RefCol])] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    def le(n: Int) = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def encode(pt: org.apache.parquet.schema.PrimitiveType, v: AnyRef): Option[Seq[Byte]] = {
+      val logical = pt.getLogicalTypeAnnotation
+      ((pt.getPrimitiveTypeName, v) match {
+        case (PrimitiveTypeName.INT64, l: java.lang.Long) if logical == null ||
+            logical.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
+          Some(le(8).putLong(l).array())
+        case (PrimitiveTypeName.INT32, i: java.lang.Integer) => Some(le(4).putInt(i).array())
+        case (PrimitiveTypeName.DOUBLE, d: java.lang.Double) => Some(le(8).putDouble(d).array())
+        case (PrimitiveTypeName.FLOAT, f: java.lang.Float) => Some(le(4).putFloat(f).array())
+        case (PrimitiveTypeName.BINARY, b: org.apache.parquet.io.api.Binary)
+            if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+          Some(b.getBytes.clone())
+        case _ => None
+      }).map(_.toSeq)
+    }
+    Files.list(Paths.get(dir)).iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.hadoop.conf.Configuration(),
+          new org.apache.hadoop.fs.Path(f))
+        try {
+          val blocks = r.getFooter.getBlocks.asScala.toSeq
+          val cols = blocks.flatMap(_.getColumns.asScala)
+            .filterNot(_.getPath.toDotString.contains("."))
+            .groupBy(_.getPath.toDotString).flatMap { case (name, chunks) =>
+              val stats = chunks.map(_.getStatistics)
+              if (!stats.forall(st => st != null && st.isNumNullsSet)) None
+              else {
+                val pt = chunks.head.getPrimitiveType
+                val cmp = pt.comparator().asInstanceOf[java.util.Comparator[AnyRef]]
+                val withValues = stats.filter(_.hasNonNullValue)
+                def pick(vs: Seq[AnyRef], lo: Boolean): Option[AnyRef] =
+                  vs.reduceOption((a, b) => if ((cmp.compare(a, b) < 0) == lo) a else b)
+                val mn = pick(withValues.map(_.genericGetMin.asInstanceOf[AnyRef]), lo = true)
+                val mx = pick(withValues.map(_.genericGetMax.asInstanceOf[AnyRef]), lo = false)
+                Some(name -> RefCol(chunks.map(_.getValueCount).sum,
+                  stats.map(_.getNumNulls).sum, mn.flatMap(encode(pt, _)),
+                  mx.flatMap(encode(pt, _))))
+              }
+            }
+          f -> (blocks.map(_.getRowCount).sum, Files.size(Paths.get(f)), cols)
+        } finally r.close()
+      }.toMap
+  }
+
+  test("exported entries transcribe the stats sidecar: every count and " +
+       "bound equals the footer-derived reference, decimals aside") {
+    val t = allTypes
+    val (entries, fieldOf) = headEntries(t)
+    val ref = t.currentSnapshot.get.files.flatMap(footerReference).toMap
+    val decimals = Set(fieldOf("p7"), fieldOf("p15"))
+    assert(entries.keySet == ref.keySet)
+    assert(entries.values.count(_.get("record_count") == 0L) == 1,
+      "the zero-row file is an entry")
+    for ((path, df) <- entries) {
+      val (rows, bytes, cols) = ref(path)
+      assert(df.get("record_count") == rows && df.get("file_size_in_bytes") == bytes)
+      Seq[(String, RefCol => Option[Any])](
+        "value_counts" -> (c => Some(c.values)),
+        "null_value_counts" -> (c => Some(c.nulls)),
+        "lower_bounds" -> (_.lower), "upper_bounds" -> (_.upper)
+      ).foreach { case (field, get) =>
+        val want = cols.flatMap { case (name, c) => get(c).map(fieldOf(name) -> _) }
+        val got = statMap(df, field)
+        if (field.endsWith("counts")) assert(got == want, s"$field of $path")
+        else assert(got -- decimals == want -- decimals, s"$field of $path")
+      }
+    }
+    // what the entries bound: every typed column but the timestamp and
+    // the all-null column; strings in full, non-ASCII included
+    val first = entries.values.find(_.get("record_count") == 2L).get
+    assert(statMap(first, "lower_bounds").keySet ==
+      Set("id", "i", "f", "d", "day", "s", "u", "p7", "p15").map(fieldOf))
+    assert(statMap(first, "lower_bounds")(fieldOf("u")) ==
+      "éclair".getBytes("UTF-8").toSeq)
+    assert(statMap(first, "null_value_counts")(fieldOf("nul")) == 2L)
+  }
+
+  test("a string bound that is not valid UTF-8 is left out of the " +
+       "export, never replaced by a decoded one") {
+    val dir = Files.createTempDirectory("graft-ice-utf8").toString
+    val t = TieredTable(spark, s"$dir/t")
+    // C3 28 is not UTF-8; by unsigned bytes it sorts above 'zz', so it
+    // is the first file's max and both bounds of the second
+    t.commitAppend(spark.sql("SELECT * FROM VALUES (1L, 'zz'), " +
+      "(2L, CAST(X'C328' AS STRING)) AS v(id, s)").coalesce(1))
+    t.commitAppend(spark.sql("SELECT 3L AS id, CAST(X'C328' AS STRING) AS s"))
+    IcebergExport.export(t)
+    val (entries, fieldOf) = headEntries(t)
+    val s = fieldOf("s")
+    val byRows = entries.values.map(df => df.get("record_count") -> df).toMap
+    val (two, one) = (byRows(2L), byRows(1L))
+    assert(statMap(two, "lower_bounds").get(s).contains("zz".getBytes("UTF-8").toSeq))
+    assert(!statMap(two, "upper_bounds").contains(s))
+    assert(!statMap(one, "lower_bounds").contains(s) &&
+      !statMap(one, "upper_bounds").contains(s))
+    assert(statMap(one, "value_counts").get(s).contains(1L))
+    // the footer holds the raw bytes; decoding them would have
+    // exported EF BF BD 28, above the file's real minimum
+    val ref = t.currentSnapshot.get.files.flatMap(footerReference).toMap
+    val (_, _, refCols) = ref(entries.find(_._2 eq one).get._1)
+    assert(refCols("s").lower.contains(Seq(0xC3, 0x28).map(_.toByte)))
+    assert(t.readCold().filter(col("s") === "zz").count() == 1)
+  }
+
+  test("decimal bounds export as Iceberg's big-endian unscaled bytes, " +
+       "for INT32 and INT64 decimals alike") {
+    val t = allTypes
+    val (entries, fieldOf) = headEntries(t)
+    val first = entries.values.find(_.get("record_count") == 2L).get
+    def decode(field: String, col: String): String = {
+      val b = statMap(first, field)(fieldOf(col)).asInstanceOf[Seq[Byte]]
+      new java.math.BigDecimal(new java.math.BigInteger(b.toArray), 2).toPlainString
+    }
+    assert((decode("lower_bounds", "p7"), decode("upper_bounds", "p7")) == AllTypesExport.P7)
+    assert((decode("lower_bounds", "p15"), decode("upper_bounds", "p15")) == AllTypesExport.P15)
+    // the fewest bytes that hold the unscaled value
+    val lo7 = statMap(first, "lower_bounds")(fieldOf("p7")).asInstanceOf[Seq[Byte]]
+    assert(lo7 == java.math.BigInteger.valueOf(-1234567L).toByteArray.toSeq && lo7.size == 3)
   }
 
   test("readTable plan shape: ONE data scan + a broadcast metadata " +

@@ -41,10 +41,8 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
 
     val root = t.currentSnapshot.get.files.head
-    val bounds = FileStats.readSidecar(root).toSeq.flatMap {
-      case (_, cols) => cols.get("k").map(s =>
-        (s.min.get.toLong, s.max.get.toLong))
-    }.sortBy(_._1)
+    val bounds = FileStats.entries(Seq(root), Nil).flatten.flatMap(_.cols.get("k").map(s =>
+      (s.min.get.toLong, s.max.get.toLong))).sortBy(_._1)
     assert(bounds.size > 1, "the global sort must still write in parallel")
     bounds.sliding(2).foreach {
       case Seq((_, hi), (lo2, _)) =>
@@ -86,10 +84,8 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
     * sorted.
     */
   private def boxes(t: TieredTable, c: String): Seq[(Long, Long)] =
-    FileStats.readSidecar(t.currentSnapshot.get.files.head).toSeq.flatMap {
-      case (_, cols) => cols.get(c).map(s =>
-        (s.min.get.toLong, s.max.get.toLong))
-    }.sorted
+    FileStats.entries(t.currentSnapshot.get.files.take(1), Nil).flatten.flatMap(
+      _.cols.get(c).map(s => (s.min.get.toLong, s.max.get.toLong))).sorted
 
   private def assertDisjoint(bounds: Seq[(Long, Long)]): Unit =
     bounds.sliding(2).foreach {
@@ -137,7 +133,7 @@ class WriteSortOrderSpec extends AnyFunSuite with SparkSpec {
 
     Seq(sorted, plain).foreach(_.compactZOrder(Seq("k", "x"), nFiles = 8))
     def zBoxes(t: TieredTable) =
-      FileStats.readSidecar(t.currentSnapshot.get.files.head).values.toSeq
+      FileStats.entries(t.currentSnapshot.get.files.take(1), Nil).flatten.map(_.cols)
         .map { cols =>
           def mm(c: String) = (cols(c).min.get.toLong, cols(c).max.get.toLong)
           (mm("k"), mm("x"))

@@ -14,7 +14,8 @@ assigns to a separate engine: if this reader and the engine agree,
 the export really is Iceberg, not a private format.
 
 Usage:
-  python3 tools/iceberg_reader.py <table_path> [--compare <parquet_glob>]
+  python3 tools/iceberg_reader.py <table_path> [--compare <parquet_glob>] \
+      [--stats]
   python3 tools/iceberg_reader.py --rest <catalog_url> <ns> <table> \
       [--compare <parquet_glob>]
 
@@ -26,7 +27,17 @@ knows a URL and a name, never a path.
 Prints one JSON line: {"rows": N, "files": n, "deletes": m,
 "hash": "<md5 of canonicalized rows>"} plus, with --compare,
 "match": true|false against the expected parquet read the same way.
+
+--stats decodes every live data entry's record count, file size, value
+and null counts and lower/upper bounds (Iceberg's single-value
+serialization, by the snapshot schema's column types) and checks each
+against DuckDB's parquet_metadata() of the data file itself; it adds
+"stats_ok": true|false, "stats_checked" (the number of values compared)
+and, on a mismatch, "stats_errors".
 """
+import datetime
+import decimal
+import os
 import hashlib
 import io
 import json
@@ -404,6 +415,117 @@ def scan(md):
     return con, len(data), len(deletes) + len(pos_deletes) + n_dv, names
 
 
+# ------------------------------------------------- manifest statistics
+
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+def _bound(raw, typ):
+    """Iceberg single-value binary → a comparable Python value; None for
+    a type this check does not decode."""
+    if typ in ("int", "date"):
+        return struct.unpack("<i", raw)[0]
+    if typ == "long":
+        return struct.unpack("<q", raw)[0]
+    if typ == "float":
+        return struct.unpack("<f", raw)[0]
+    if typ == "double":
+        return struct.unpack("<d", raw)[0]
+    if typ == "string":
+        return raw.decode("utf-8")
+    if typ.startswith("decimal("):  # unscaled, big-endian two's complement
+        return int.from_bytes(raw, "big", signed=True)
+    return None
+
+
+def _footer_value(text, typ):
+    """DuckDB's rendering of a parquet min/max → the same domain as
+    _bound (code-point order of str is UTF-8 byte order)."""
+    if typ in ("int", "long"):
+        return int(text)
+    if typ == "date":
+        return (datetime.date.fromisoformat(text) - _EPOCH).days
+    if typ == "float":  # the nearest float32, as the bound stores it
+        return struct.unpack("<f", struct.pack("<f", float(text)))[0]
+    if typ == "double":
+        return float(text)
+    if typ == "string":
+        return text
+    if typ.startswith("decimal("):
+        scale = int(typ[len("decimal("):-1].split(",")[1])
+        return int(decimal.Decimal(text).scaleb(scale))
+    return None
+
+
+def check_stats(md):
+    """Compare every live data entry of the current snapshot with the
+    parquet metadata of its file. Returns (values compared, errors)."""
+    import duckdb
+    current = md["current-snapshot-id"]
+    snap = next(s for s in md["snapshots"] if s["snapshot-id"] == current)
+    schema = next(s for s in md["schemas"]
+                  if s["schema-id"] == snap["schema-id"])
+    types = {f["id"]: (f["name"], f["type"]) for f in schema["fields"]
+             if isinstance(f["type"], str)}
+    con = duckdb.connect()
+    checked, errors = 0, []
+
+    def expect(what, got, want):
+        nonlocal checked
+        checked += 1
+        if got != want:
+            errors.append(f"{what}: manifest {got!r}, parquet {want!r}")
+
+    mf_list, _ = read_avro(_read_file(snap["manifest-list"]))
+    for mf in mf_list:
+        if mf["content"] != 0:
+            continue
+        entries, _ = read_avro(_read_file(mf["manifest_path"]))
+        for e in entries:
+            if e["status"] == 2:
+                continue
+            df = e["data_file"]
+            path = df["file_path"]
+            rows = con.execute(
+                "SELECT num_rows FROM parquet_file_metadata(?)",
+                [path]).fetchone()[0]
+            expect(f"{path} record_count", df["record_count"], rows)
+            expect(f"{path} file_size_in_bytes", df["file_size_in_bytes"],
+                   os.path.getsize(path))
+            chunks = {}
+            for name, nv, nulls, lo, hi in con.execute(
+                    "SELECT path_in_schema, num_values, stats_null_count, "
+                    "stats_min_value, stats_max_value "
+                    "FROM parquet_metadata(?)", [path]).fetchall():
+                chunks.setdefault(name, []).append((nv, nulls, lo, hi))
+            stats = {k: {kv["key"]: kv["value"] for kv in (df.get(k) or [])}
+                     for k in ("value_counts", "null_value_counts",
+                               "lower_bounds", "upper_bounds")}
+            for fid, (name, typ) in types.items():
+                cs = chunks.get(name)
+                if cs is None:  # column absent from this file
+                    continue
+                what = f"{path} {name}"
+                if all(c[1] is not None for c in cs):
+                    expect(f"{what} value_count",
+                           stats["value_counts"].get(fid),
+                           sum(c[0] for c in cs))
+                    expect(f"{what} null_value_count",
+                           stats["null_value_counts"].get(fid),
+                           sum(c[1] for c in cs))
+                for key, pick, col in (("lower_bounds", min, 2),
+                                       ("upper_bounds", max, 3)):
+                    raw = stats[key].get(fid)
+                    if raw is None or _bound(raw, typ) is None:
+                        continue  # omission is spec-legal
+                    # an all-null row group has no min/max to hold
+                    vals = [c[col] for c in cs if c[1] is None or c[1] < c[0]]
+                    want = (None if not vals or None in vals else
+                            pick(_footer_value(v, typ) for v in vals))
+                    expect(f"{what} {key}", _bound(raw, typ), want)
+    return checked, errors
+
+
 def canonical_hash(con, relation, names):
     """md5 over rows canonicalized engine-independently: columns sorted
     by name, rows sorted, every value rendered by DuckDB as VARCHAR."""
@@ -452,8 +574,15 @@ def main():
             "SELECT COUNT(*) FROM expected").fetchone()[0]
         out["match"] = (out["hash"] ==
                         canonical_hash(con, "expected", names))
+    if "--stats" in sys.argv:
+        checked, errors = check_stats(md)
+        out["stats_checked"] = checked
+        out["stats_ok"] = checked > 0 and not errors
+        if errors:
+            out["stats_errors"] = errors[:10]
     print(json.dumps(out))
-    sys.exit(0 if out.get("match", True) else 1)
+    sys.exit(0 if out.get("match", True) and out.get("stats_ok", True)
+             else 1)
 
 
 if __name__ == "__main__":
