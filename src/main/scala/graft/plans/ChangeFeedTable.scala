@@ -270,13 +270,11 @@ class LogTailStream(tableName: String, t: TieredTable,
   override def deserializeOffset(json: String): Offset =
     LogTailOffset(json.trim.toLong)
 
-  /** PER-SEGMENT planning, partitions concatenated as plain file
-    * partitions: the reader factory below is one segment's parquet
-    * factory (schema + conf — file paths and partition values ride
-    * inside each planned partition), so partitions from any id range
-    * pair with it. A multi-root composite scan here would break that
-    * pairing — its factory expects child-tagged partitions whose
-    * indices shift with the batch's id range.
+  /** One scan over the batch's segment dirs (one file index over all
+    * their files), whose partitions are plain file partitions: the
+    * reader factory below is the oldest segment's parquet factory
+    * (schema + conf — file paths and partition values ride inside each
+    * planned partition), so partitions from any id range pair with it.
     */
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -297,8 +295,7 @@ class LogTailStream(tableName: String, t: TieredTable,
           "read (spark.read.table)")
     }
     val ids = listed.filter(id => id > s && id <= e)
-    ids.toArray.flatMap(id =>
-      scanOver(Seq(t.segmentDirPath(id))).toBatch.planInputPartitions())
+    scanOver(ids.map(t.segmentDirPath)).toBatch.planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

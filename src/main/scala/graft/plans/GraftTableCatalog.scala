@@ -13,8 +13,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.GraftFileIndex
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -396,8 +395,8 @@ class GraftTableCatalog extends TableCatalog
     else 0
 
   /** A committed snapshot's `files` (time travel, `$cold`) as a
-    * read-only relation: the base table's scan over those files — per-
-    * root planning on a partitioned table, file skipping, scan metrics,
+    * read-only relation: the base table's scan over those files — one
+    * scan over every root, file skipping, scan metrics,
     * the memoized file schema merged over every file — and no write,
     * delete or row-level verb, which would reach the live table.
     */
@@ -886,12 +885,6 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
   /** LAYOUT columns of the on-disk Hive dirs ([[TieredSqlTable.layoutCols]]). */
   private val layoutCols: Seq[String] = TieredSqlTable.layoutCols(t)
 
-  /** Read options of one root of a PARTITIONED table: its own
-    * partition-discovery base ([[TieredSqlTable.rootOptions]]).
-    */
-  private def rootOpts(p: String): CaseInsensitiveStringMap =
-    TieredSqlTable.options(TieredSqlTable.rootOptions(p, layoutCols))
-
   /** The schema every parquet table below reads with: the declared one,
     * else the files' own, inferred once per state of the read roots
     * ([[TieredSqlTable.fileSchema]]) — so planning a repeat read never
@@ -902,21 +895,6 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
       s"empty table $tableName has no persisted schema")
     TieredSqlTable.fileSchema(spark, paths, layoutCols)
   }
-
-  private lazy val inner =
-    ParquetTable(tableName, spark, readOpts, paths,
-      if (paths.isEmpty) declared else Some(readSchema),
-      classOf[ParquetFileFormat])
-
-  /** Per-root parquet tables for PARTITIONED tables: Spark cannot run
-    * partition discovery over several Hive-layout roots in one scan
-    * ("conflicting directory structures"), so each snapshot/segment dir
-    * becomes its own child table and scans are concatenated by
-    * [[org.apache.spark.sql.GraftCompositeScanBuilder]].
-    */
-  private lazy val partRoots = paths.map(p =>
-    ParquetTable(tableName, spark, rootOpts(p), Seq(p), Some(readSchema),
-      classOf[ParquetFileFormat]))
 
   override def name(): String = tableName
 
@@ -1026,27 +1004,14 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
   }
 
   /** Scan over a set of committed log-segment dirs with the table
-    * schema. Partitioned tables write Hive layout INSIDE each segment,
-    * and Spark can't run partition discovery over several such roots
-    * in one scan — so each segment is its own child anchored at its
-    * own basePath, concatenated by [[org.apache.spark.sql.GraftCompositeScan]].
+    * schema: one file index over every segment's files, whatever its
+    * Hive layout inside the segment.
     */
   private def segmentScan(dirs: Seq[String])
-      : org.apache.spark.sql.connector.read.Scan = {
-    val s = schema()
-    val scans = dirs.map { d =>
-      val opts = TieredSqlTable.options(
-        TieredSqlTable.ReadOpts + ("basePath" -> d))
-      ParquetTable(tableName, spark, opts, Seq(d), Some(s),
-        classOf[ParquetFileFormat])
-        .newScanBuilder(opts).build()
-    }
-    scans match {
-      case Nil => new org.apache.spark.sql.GraftEmptyScan(tableName, s)
-      case Seq(one) => one
-      case many => new org.apache.spark.sql.GraftCompositeScan(many)
-    }
-  }
+      : org.apache.spark.sql.connector.read.Scan =
+    if (dirs.isEmpty) new org.apache.spark.sql.GraftEmptyScan(tableName, schema())
+    else GraftFileIndex.table(spark, tableName, TieredSqlTable.listing(dirs, layoutCols),
+      layoutCols, Some(schema()), readOpts).newScanBuilder(readOpts).build()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (entry.mergeOnRead)
@@ -1070,39 +1035,24 @@ class TieredSqlTable(tableName: String, spark: SparkSession,
             logTailStream(options)
         }
       }
-    else if (layoutCols.isEmpty)
-      // unpartitioned: stock parquet scan wrapped with manifest-level
-      // file skipping (footer-stats sidecars prune the file list at
-      // scan build)
-      new org.apache.spark.sql.GraftSkippingScanBuilder(spark, tableName,
-        () => FileStats.entries(paths, Nil).flatten, schema(), readOpts,
-        inner.newScanBuilder(options),
-        streamFactory = Some(_ => logTailStream(options)))
     else {
-      // partitioned: per-root scans (each root is its own partition-
-      // discovery base path), EACH wrapped with stats skipping —
-      // directory pruning handles the partition column, the sidecars
-      // prune by every other column; basePath keeps partition-column
-      // discovery alive when a root's scan is rebuilt over a file list.
-      // One listing serves every root, so kept subdirs of one snapshot
-      // dir parse its sidecars once.
-      lazy val perRoot = FileStats.entries(paths, layoutCols)
-      val wrapped = paths.zip(partRoots).zipWithIndex.map {
-        case ((root, tbl), i) =>
-          new org.apache.spark.sql.GraftSkippingScanBuilder(spark,
-            s"$tableName#$i", () => perRoot(i), schema(), rootOpts(root),
-            tbl.newScanBuilder(options), layoutCols,
-            streamFactory = Some(_ => logTailStream(options)))
+      // one parquet scan over one listing of every root, wrapped with
+      // file skipping (footer-stats sidecars prune the file list at
+      // scan build); a table whose roots lie in several Hive layouts
+      // (partition-spec evolution) plans one such scan per layout
+      val opts = TieredSqlTable.options(
+        TieredSqlTable.ReadOpts ++ options.asCaseSensitiveMap.asScala)
+      val stream = Some((_: String) => logTailStream(options))
+      def scan(name: String, roots: Seq[(String, Seq[FileStats.FileEntry])],
+               cols: Seq[String]) =
+        new org.apache.spark.sql.GraftSkippingScanBuilder(spark, name, roots,
+          schema(), opts, cols, stream)
+      TieredSqlTable.byLayout(TieredSqlTable.listing(paths, layoutCols), layoutCols) match {
+        case Seq((cols, roots)) => scan(tableName, roots, cols)
+        case layouts => new org.apache.spark.sql.GraftCompositeScanBuilder(
+          layouts.zipWithIndex.map { case ((cols, roots), i) =>
+            scan(s"$tableName#$i", roots, cols) }, stream)
       }
-      if (wrapped.lengthCompare(1) <= 0 && wrapped.nonEmpty) wrapped.head
-      else if (wrapped.isEmpty)
-        // no committed roots yet — still present the streaming face so
-        // a consumer can start tailing before the first append
-        new org.apache.spark.sql.GraftSkippingScanBuilder(spark, tableName,
-          () => Nil, schema(), readOpts, inner.newScanBuilder(options),
-          layoutCols, streamFactory = Some(_ => logTailStream(options)))
-      else new org.apache.spark.sql.GraftCompositeScanBuilder(wrapped,
-        streamFactory = Some(_ => logTailStream(options)))
     }
 
   /** `DELETE FROM graft.<db>.<t> WHERE …` — filters that translate to
@@ -1277,43 +1227,61 @@ object TieredSqlTable {
     * bucket column for a bucketed merge-on-read layout
     * ('write.bucket-by'), else every column that was EVER a partition
     * column — a DROP PARTITION FIELD leaves live pre-drop hive dirs
-    * whose values exist only in `col=value` names, and per-root
-    * discovery (and subdir-ref base stripping) must still recognize
-    * them even when the current spec is narrower or empty.
+    * whose values exist only in `col=value` names, and the read's
+    * partition values (and subdir-ref base stripping) must still
+    * recognize them even when the current spec is narrower or empty.
     */
   def layoutCols(t: TieredTable): Seq[String] =
     if (t.bucketBy > 0) Seq(t.BucketCol) else t.historicalPartitionCols
 
-  /** Read options of one root of a Hive-layout table: the root is its
-    * own partition-discovery base, except a `col=value` SUBDIR entry
-    * (kept partition of a partition-scoped overwrite), which anchors at
-    * its snapshot root so the bound partition columns still surface.
+  /** `roots` with the files listed under each ([[FileStats.entries]]);
+    * a root that does not exist fails, as Spark's own listing does.
     */
-  def rootOptions(root: String, layout: Seq[String]): Map[String, String] =
-    ReadOpts + ("basePath" -> graft.storage.PartitionPaths.base(root, layout))
+  def listing(roots: Seq[String], layout: Seq[String])
+      : Seq[(String, Seq[FileStats.FileEntry])] = {
+    val listed = roots.zip(FileStats.entries(roots, layout))
+    listed.collectFirst {
+      case (r, Seq()) if !graft.storage.TableFs.forPath(r).exists(r) => r
+    }.foreach(r => throw new java.io.FileNotFoundException(
+      s"table root $r does not exist"))
+    listed
+  }
 
-  /** The file schema of parquet `roots` as the catalog reads them, with
-    * `layout` their Hive layout columns: all footers merged for a flat
-    * table; for a Hive layout each root discovered from its own base
-    * and the roots merged by name in root order, so a column only some
-    * roots carry still surfaces (as nulls in the others). Each
-    * inference is a footer job; it runs once per state of its roots
-    * and read options ([[SessionMemo]]), and its result is what the
-    * catalog's parquet tables take as their user-specified schema.
+  /** `listed` split by Hive layout: the `layout` columns each file's
+    * `col=value` segments name, in order. Every read but a
+    * partition-evolved table's has one layout, and then the listing
+    * stays whole; otherwise each layout keeps its roots' files in it.
     */
-  def fileSchema(spark: SparkSession, roots: Seq[String],
-                 layout: Seq[String]): StructType = {
-    def infer(rs: Seq[String], opts: Map[String, String]): StructType =
-      SessionMemo(spark, "schema",
-        rs ++ opts.toSeq.sorted.map { case (k, v) => s"$k=$v" }, rs) {
-        ParquetTable(rs.mkString(","), spark, options(opts), rs, None,
-          classOf[ParquetFileFormat]).schema
-      }
-    if (layout.isEmpty) infer(roots, ReadOpts)
-    else roots.map(r => infer(Seq(r), rootOptions(r, layout))).reduce { (a, b) =>
-      StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))
+  def byLayout(listed: Seq[(String, Seq[FileStats.FileEntry])], layout: Seq[String])
+      : Seq[(Seq[String], Seq[(String, Seq[FileStats.FileEntry])])] = {
+    def cols(f: FileStats.FileEntry): Seq[String] =
+      graft.storage.PartitionPaths.segments(f.path, layout).map(s => s.take(s.indexOf('=')))
+    listed.flatMap(_._2).map(cols).distinct match {
+      case Seq() => Seq(Nil -> listed)
+      case Seq(one) => Seq(one -> listed)
+      case many => many.map(c => c -> listed.map { case (r, fs) =>
+        r -> fs.filter(cols(_) == c) }.filter(_._2.nonEmpty))
     }
   }
+
+  /** The file schema of parquet `roots` as the catalog reads them, with
+    * `layout` their Hive layout columns: every footer merged, and the
+    * partition columns typed from their values, over one file index per
+    * Hive layout — a column only some layouts carry still surfaces (as
+    * nulls in the others). The inference is a footer job; it runs once
+    * per state of the roots ([[SessionMemo]]), and its result is what
+    * the catalog's parquet tables take as their user-specified schema.
+    */
+  def fileSchema(spark: SparkSession, roots: Seq[String],
+                 layout: Seq[String]): StructType =
+    SessionMemo(spark, "schema", roots ++ layout.map(c => s"layout=$c"), roots) {
+      byLayout(listing(roots, layout), layout).map { case (cols, files) =>
+        GraftFileIndex.table(spark, roots.mkString(","), files, cols, None,
+          options(ReadOpts)).schema
+      }.reduce { (a, b) =>
+        StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))
+      }
+    }
 
   /** Snapshot or segment `files` of `t` through the same DSv2 scan as
     * SQL reads, with their memoized file schema ([[fileSchema]]) — the

@@ -54,10 +54,10 @@ object PartitionEvolution {
   }
 
   /** The table's declared schema, persisting it to `meta/SCHEMA` if
-    * this evolution is the first: mixed-vintage roots infer DIFFERENT
-    * column orders (hive appends partition columns last), and the
-    * composite SQL scan needs one authoritative shape to reconcile
-    * them by name.
+    * this evolution is the first: the layouts of a mixed-vintage table
+    * infer DIFFERENT column orders (partition columns from dirs come
+    * last), and the composite SQL scan, one scan per layout, needs one
+    * authoritative shape to reconcile them by name.
     */
   private def ensureSchema(dbTable: String, verb: String,
                            e: TieredCatalog.Entry,

@@ -21,6 +21,16 @@ object PartitionPaths {
     b
   }
 
+  /** The raw `col=value` segments (declared partition columns only)
+    * between `file`'s partition-discovery base and its name, outermost
+    * first.
+    */
+  def segments(file: String, partitionBy: Seq[String]): Seq[String] = {
+    val dir = file.substring(0, file.lastIndexOf('/') max 0)
+    val b = base(dir, partitionBy)
+    if (b.length >= dir.length) Nil else dir.substring(b.length + 1).split('/').toSeq
+  }
+
   /** Hive escapes special path chars as %XX; undo that (hex pairs
     * only — malformed sequences stay literal).
     */

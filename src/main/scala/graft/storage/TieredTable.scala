@@ -2176,9 +2176,10 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * at or below the boundary keep their physical layout (identity
     * partition values live in their data PAGES, exactly where an
     * unevolved write put them); snapshots above it hive-partition by
-    * the new spec. Reads need no marker (the per-root discovery union
-    * in [[readParquet]] aligns both vintages by name, and partition
-    * pruning conservatively keeps dirs lacking a `col=` segment);
+    * the new spec. Reads need no marker (the catalog scan behind
+    * [[readParquet]] reads each vintage's files through one file index
+    * per Hive layout and aligns the layouts by name, and partition
+    * pruning conservatively keeps files lacking a `col=` segment);
     * the marker exists so Iceberg EXPORT can describe each vintage
     * under ITS OWN spec (multi-spec export: one data manifest per
     * (snapshot, spec), per-manifest `partition_spec_id`) and so
@@ -2211,8 +2212,8 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
 
   /** Every column that has EVER been a partition column — the current
     * spec plus both sides of every recorded evolution. This is the set
-    * path-segment parsing and per-root discovery must recognize: after
-    * a DROP PARTITION FIELD, live pre-drop dirs still carry
+    * path-segment parsing and the read's partition values must
+    * recognize: after a DROP PARTITION FIELD, live pre-drop dirs still carry
     * `col=value` segments for a column the CURRENT spec no longer
     * lists (their values live only in the dir names), and a kept
     * partition-subdir reference must still strip to its snapshot root.
@@ -2313,7 +2314,7 @@ class TieredTable(spark: SparkSession, rawTablePath: String,
     * surface nulls there) and the column mapping presenting everything
     * through the current declared names ([[applyColumnMap]]). Filters
     * push below the mapping into the scan, so every API read prunes
-    * files by stats and blooms — per root on a Hive layout — and reports
+    * files by stats and blooms — every root in one scan — and reports
     * `files_total` / `files_kept` on its scan node, as SQL reads do.
     * Snapshot/segment dirs are immutable once committed, so the frame is
     * memoized ([[SessionMemo]]): the schema job and the analysis happen

@@ -7,18 +7,17 @@ import org.apache.spark.sql.connector.read._
 
 import org.apache.spark.sql.types.StructType
 
-/** DSv2 scan over SEVERAL partitioned parquet roots as one relation.
-  *
-  * Spark's file sources cannot run partition discovery over multiple
-  * roots in a single scan ("conflicting directory structures" — the
-  * error itself says "load them separately and then union them"). A
-  * partitioned [[graft.storage.TieredTable]] is exactly that shape:
-  * each snapshot/log-segment directory is an independent Hive-layout
-  * root. This builder applies the SAME column pruning and filter
-  * pushdown to a per-root `ParquetScanBuilder` and concatenates the
-  * resulting batches — so every root keeps its own partition pruning
-  * (`PartitionFilters` per child scan) and vectorized read, and the
-  * union costs plan width, not data movement.
+/** DSv2 scan over a table whose files lie in SEVERAL Hive layouts —
+  * the one shape a single file index cannot serve. A partitioned
+  * [[graft.storage.TieredTable]] reads every root through one index
+  * (one layout, one scan); only after partition-spec evolution (ADD,
+  * DROP or REPLACE PARTITION FIELD) do its roots carry different
+  * `col=value` segment sets, and one index cannot give a file two
+  * partition schemas. The catalog then plans one scan per layout, and
+  * this builder applies the SAME column pruning and filter pushdown to
+  * each and concatenates the resulting batches — every layout keeps its
+  * own partition pruning and vectorized read, and the union costs plan
+  * width, not data movement.
   *
   * Lives in `org.apache.spark.sql` because filter pushdown for file
   * sources flows through the `private[sql]`
@@ -33,8 +32,7 @@ class GraftCompositeScanBuilder(builders: Seq[ScanBuilder],
     with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
   require(builders.nonEmpty, "need at least one child scan builder")
   // children are addressed through the pushdown INTERFACES, not a
-  // concrete builder class — so stock per-root ParquetScanBuilders and
-  // wrapping builders (e.g. GraftSkippingScanBuilder) both compose
+  // concrete builder class
   private val children = builders
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -44,9 +42,8 @@ class GraftCompositeScanBuilder(builders: Seq[ScanBuilder],
     }
 
   /** Forward every filter to every child, and report the UNION of the
-    * children's residual (post-scan) sets: after partition-spec
-    * evolution the roots have different layouts, so each child may
-    * claim a different subset of the filters.
+    * children's residual (post-scan) sets: the layouts differ, so each
+    * child may claim a different subset of the filters.
     */
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     val residuals = children.map {
@@ -54,10 +51,9 @@ class GraftCompositeScanBuilder(builders: Seq[ScanBuilder],
         c.pushFilters(filters)
       case _ => filters
     }
-    // UNION of the children's residuals, not the first child's: after
-    // partition-spec evolution the roots have DIFFERENT layouts — a
-    // hive-vintage root claims a partition filter exactly (directory
-    // pruning), while a page-vintage root must keep it post-scan.
+    // UNION of the children's residuals, not the first child's: a
+    // hive-vintage layout claims a partition filter exactly (directory
+    // pruning), while a page-vintage layout must keep it post-scan.
     // Reporting only child 0's set silently dropped the filter for the
     // other vintage (Spark then pruned the filter column from the
     // projection, and the parquet-level pushdown over the missing
@@ -80,11 +76,11 @@ class GraftCompositeScanBuilder(builders: Seq[ScanBuilder],
   * the children's, tagged with the child index so the reader factory
   * can dispatch. Row/columnar decisions delegate per partition.
   *
-  * Reports SUMMED statistics (a multi-root tiered table must still be
+  * Reports SUMMED statistics (a multi-layout tiered table must still be
   * eligible as a join's broadcast side — without this the relation
   * falls back to `defaultSizeInBytes` and never broadcasts) and
   * forwards runtime filters to every child that can act on them, so
-  * dynamic partition pruning crosses the hot∪cold union intact.
+  * dynamic partition pruning crosses the layouts intact.
   * `batches` is a def, not a cached val: a runtime `filter` narrows
   * the children's file lists, and partition planning after it must
   * observe the narrowed state.
@@ -93,45 +89,9 @@ class GraftCompositeScan(children: Seq[Scan],
     streamFactory: Option[String =>
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None)
     extends Scan with Batch with GraftFileCounts
-    with SupportsReportStatistics with SupportsRuntimeV2Filtering
-    with SupportsReportPartitioning {
+    with SupportsReportStatistics with SupportsRuntimeV2Filtering {
   override def readSchema(): StructType = children.head.readSchema()
   override def toBatch: Batch = this
-
-  /** Storage-partitioned joins across the union: when EVERY root
-    * reports the same key-grouped partitioning (each file split
-    * carries its typed key), the concatenation is itself key-grouped —
-    * a key's rows may span several roots, which Spark's partition
-    * grouping merges by key value. One root declining (unknown
-    * partitioning) declines for the union: a single unkeyed split
-    * would silently break the join's co-location.
-    */
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    val reported = children.map {
-      case s: SupportsReportPartitioning => s.outputPartitioning()
-      case _ => return new org.apache.spark.sql.connector.read.partitioning
-        .UnknownPartitioning(0)
-    }
-    reported.head match {
-      case k: org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
-          if reported.forall {
-            case k2: org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning =>
-              k2.keys.toSeq == k.keys.toSeq
-            case _ => false
-          } =>
-        // numPartitions is advisory (the physical plan regroups from
-        // the actual partitions); the sum over-counts shared keys,
-        // which is the safe direction
-        new org.apache.spark.sql.connector.read.partitioning
-          .KeyGroupedPartitioning(k.keys, reported.map {
-            case k2: org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning =>
-              k2.numPartitions
-          }.sum)
-      case _ => new org.apache.spark.sql.connector.read.partitioning
-        .UnknownPartitioning(0)
-    }
-  }
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -141,19 +101,13 @@ class GraftCompositeScan(children: Seq[Scan],
   private def batches = children.map(_.toBatch)
   override def planInputPartitions(): Array[InputPartition] =
     batches.zipWithIndex.flatMap { case (b, i) =>
-      b.planInputPartitions().map {
-        // keep the child's partition key visible on the wrapper — the
-        // SPJ grouping above only engages if every concatenated split
-        // still answers HasPartitionKey
-        case hk: HasPartitionKey => GraftCompositeKeyedPartition(i, hk)
-        case p => GraftCompositePartition(i, p)
-      }
+      b.planInputPartitions().map(GraftCompositePartition(i, _))
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
     // children may present DIFFERENT column orders for the same column
     // set: Spark's file scans put hive-discovered partition columns
-    // LAST, so after partition-spec evolution a pre-evolution root
-    // (partition column still in its data pages, no discovery) orders
+    // LAST, so a pre-evolution layout (partition column still in its
+    // data pages, no partition values from dirs) orders
     // differently than its evolved siblings. The factory permutes each
     // child's output to this scan's declared order by NAME — without
     // it the concatenated batches misalign positionally (wrong values,
@@ -161,7 +115,7 @@ class GraftCompositeScan(children: Seq[Scan],
     GraftCompositeReaderFactory(batches.map(_.createReaderFactory()),
       children.map(_.readSchema()), readSchema())
   override def description(): String =
-    s"GraftCompositeScan(${children.size} roots)"
+    s"GraftCompositeScan(${children.size} layouts)"
 
   /** Sum of the children's estimates; unknown as soon as any child
     * can't say (a partial sum would UNDERestimate, and a too-small
@@ -194,7 +148,7 @@ class GraftCompositeScan(children: Seq[Scan],
   /** Union of the children's filterable attributes: a child that can't
     * act on a given attribute just keeps all its files — runtime
     * pruning is advisory, so over-claiming is safe and under-claiming
-    * would disable pruning for every root.
+    * would disable pruning for every layout.
     */
   override def filterAttributes(): Array[NamedReference] =
     children.flatMap {
@@ -208,7 +162,7 @@ class GraftCompositeScan(children: Seq[Scan],
       case _ =>
     }
 
-  /** The children's per-root file counts, summed. */
+  /** The children's per-layout file counts, summed. */
   def fileCounts: Seq[Long] = GraftScanMetrics.sum(children)
 }
 
@@ -217,31 +171,19 @@ case class GraftCompositePartition(child: Int, inner: InputPartition)
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** Same, for a child split that knows its partition key — the wrapper
-  * must keep answering [[HasPartitionKey]] or the union loses its
-  * storage-partitioned-join eligibility.
-  */
-case class GraftCompositeKeyedPartition(child: Int,
-                                        inner: InputPartition with HasPartitionKey)
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow =
-    inner.partitionKey()
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
 case class GraftCompositeReaderFactory(factories: Seq[PartitionReaderFactory],
                                        childSchemas: Seq[StructType],
                                        target: StructType)
     extends PartitionReaderFactory {
-  private def parts(p: InputPartition): (Int, InputPartition) = p match {
-    case GraftCompositePartition(i, inner) => (i, inner)
-    case GraftCompositeKeyedPartition(i, inner) => (i, inner)
+  private def parts(p: InputPartition): (Int, InputPartition) = {
+    val GraftCompositePartition(i, inner) = p
+    (i, inner)
   }
 
   /** target-position → child-position, or None when the child already
     * matches. Same column SET is a construction invariant (all
     * children scan the same declared table schema); order may differ
-    * per root (hive discovery reorders partition columns last).
+    * per layout (partition columns from dirs come last).
     */
   private def permutation(i: Int): Option[Array[Int]] = {
     val child = childSchemas(i)

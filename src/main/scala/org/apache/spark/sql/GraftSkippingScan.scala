@@ -9,13 +9,11 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, Cus
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.DataSourceStrategy
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, GraftFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.storage.FileStats
 import graft.storage.FileStats.FileEntry
@@ -31,14 +29,19 @@ import graft.storage.FileStats.FileEntry
   * pruning — over fewer files; correctness never depends on the skip
   * (the pushed predicates are still evaluated).
   *
+  * `roots` is the read's one listing ([[FileStats.entries]]): every
+  * root with the files under it, all in the Hive layout
+  * `partitionCols`. One file index ([[GraftFileIndex]]) covers them
+  * all, so a partitioned table's snapshot dirs, log segments and kept
+  * partition subdirs plan as one parquet scan.
+  *
   * This is the engine's one file-pruning path — Iceberg's planFiles()
   * bounds-filtering step, done at scan build time from one sidecar
   * read per directory.
   */
 class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
-                               files: () => Seq[FileEntry], fullSchema: StructType,
+                               roots: Seq[(String, Seq[FileEntry])], fullSchema: StructType,
                                options: CaseInsensitiveStringMap,
-                               inner: ScanBuilder,
                                partitionCols: Seq[String] = Nil,
                                streamFactory: Option[String =>
                                  org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None)
@@ -51,14 +54,18 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
   private var required: Option[StructType] = None
   private var aggResult: Option[(StructType, Seq[Any])] = None
 
-  /** ONE filesystem walk + sidecar parse per scan build: Spark calls
-    * this builder through several pushdown hooks (supportComplete →
-    * pushAggregation → build), and the roots are pinned at table load,
-    * so the listing (`files`, [[FileStats.entries]] of the roots) is
-    * computed once and shared — per-plan cost stays O(1 walk), the
-    * number the 100 TB planning story depends on.
+  private val listed = roots.flatMap(_._2)
+
+  /** A parquet scan builder over `files` by root. The FULL table schema
+    * is the user-specified schema, so a column whose only carrier file
+    * was pruned still resolves (as nulls) instead of vanishing.
     */
-  private lazy val listed = files()
+  private def parquetOver(files: Seq[(String, Seq[FileEntry])]): ScanBuilder =
+    GraftFileIndex.table(spark, tableName, files, partitionCols, Some(fullSchema), options)
+      .newScanBuilder(options)
+
+  /** The scan over every listed file, which takes the pushdown first. */
+  private lazy val inner = parquetOver(roots)
 
   /** METADATA-ONLY AGGREGATES: an unfiltered, ungrouped COUNT(*) /
     * COUNT(col) / MIN / MAX is answered entirely from the stats
@@ -242,25 +249,19 @@ class GraftSkippingScanBuilder(spark: SparkSession, tableName: String,
     val keptEntries =
       listed.filter(GraftSkippingScanBuilder.mayHold(_, sourceFilters, Nil))
     val staticScan =
-      if (keptEntries.size == listed.size) inner.build()
-      else buildOver(keptEntries.map(_.path))
+      if (keptEntries.isEmpty) new GraftEmptyScan(tableName, inner.build().readSchema())
+      else if (keptEntries.size == listed.size) inner.build()
+      else buildOver(keptEntries)
     new GraftRuntimeScan(spark, tableName, options, fullSchema,
       listed.size, keptEntries, staticScan, pushedExprs, required, partitionCols,
       buildOver, streamFactory)
   }
 
-  /** Rebuild the scan over an explicit surviving-file list. The FULL
-    * table schema is passed as the user-specified schema so a column
-    * whose only carrier file was pruned still resolves (as nulls)
-    * instead of vanishing from the scan output. For a Hive-partitioned
-    * root the caller supplies basePath in `options`, so partition-
-    * column discovery from the dir names survives the switch to a file
-    * list.
+  /** The scan over an explicit surviving-file list, each file its own
+    * root, with this builder's pushdown.
     */
-  private def buildOver(files: Seq[String]): Scan = {
-    val pruned = ParquetTable(tableName, spark, options, files,
-      Some(fullSchema), classOf[ParquetFileFormat])
-    val b = pruned.newScanBuilder(options)
+  private def buildOver(files: Seq[FileEntry]): Scan = {
+    val b = parquetOver(files.map(f => f.path -> Seq(f)))
     b match {
       case c: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters =>
         c.pushFilters(pushedExprs)
@@ -320,7 +321,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
                        pushedExprs: Seq[Expression],
                        required: Option[StructType],
                        partitionCols: Seq[String],
-                       rebuild: Seq[String] => Scan,
+                       rebuild: Seq[FileEntry] => Scan,
                        streamFactory: Option[String =>
                          org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None)
     extends Scan with Batch with GraftFileCounts
@@ -413,7 +414,7 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
       val s = runtimeEntries match {
         case Some(e) if e.isEmpty =>
           new GraftEmptyScan(tableName, staticScan.readSchema())
-        case Some(e) => rebuild(e.map(_.path))
+        case Some(e) => rebuild(e)
         case None => staticScan
       }
       effective = (want, s)
@@ -433,11 +434,8 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
     * at 100 TB (both sides already live partitioned on the key; the
     * join should cost zero data movement).
     *
-    * Gated on Spark's own `spark.sql.sources.v2.bucketing.enabled` AND
-    * on every file of the scan yielding a typed key from its
-    * `col=value` path segments (a single unkeyable file → report
-    * [[UnknownPartitioning]]; correctness never depends on the claim).
-    * Only claimed when every partition column survives column pruning —
+    * Gated on Spark's own `spark.sql.sources.v2.bucketing.enabled`, and
+    * only claimed when every partition column survives column pruning —
     * the planner resolves the claimed keys against the scan output.
     */
   private def spjUsable: Boolean =
@@ -447,41 +445,28 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
         partitionCols.forall(visible)
       }
 
-  /** Distinct partition keys among the entries, told apart by their raw
-    * `col=value` segments ([[InternalRow]] has no value equality); None
-    * when any file can't prove its typed key.
-    */
-  private def keyCount(entries: Seq[FileEntry]): Option[Int] = {
-    val raws = entries.map(e => rawKey(e.path)).distinct
-    if (raws.forall(_.flatMap(GraftPartitionKeys.typedKey(_, partitionCols,
-        fullSchema)).isDefined)) Some(raws.size)
-    else None
-  }
+  /** The file's `col=value` segments, which tell its key apart. */
+  private def rawKey(path: String): Seq[String] =
+    graft.storage.PartitionPaths.segments(path, partitionCols)
 
-  /** The file's `col=value` segment per partition column, in order. */
-  private def rawKey(path: String): Option[Seq[String]] = {
-    val segs = partitionCols.map(GraftPartitionPathFilter.segmentOf(path, _))
-    if (segs.forall(_.isDefined)) Some(segs.flatten) else None
+  override def outputPartitioning(): Partitioning = {
+    val keys = keptEntries.map(e => rawKey(e.path)).distinct.size
+    if (spjUsable && keys > 0)
+      new KeyGroupedPartitioning(
+        partitionCols.map(c => Expressions.identity(c):
+          org.apache.spark.sql.connector.expressions.Expression).toArray,
+        keys)
+    else new UnknownPartitioning(0)
   }
-
-  override def outputPartitioning(): Partitioning =
-    if (spjUsable) keyCount(keptEntries) match {
-      case Some(n) if n > 0 =>
-        new KeyGroupedPartitioning(
-          partitionCols.map(c => Expressions.identity(c):
-            org.apache.spark.sql.connector.expressions.Expression).toArray,
-          n)
-      case _ => new UnknownPartitioning(0)
-    } else new UnknownPartitioning(0)
 
   override def toBatch: Batch = this
 
   /** The current scan's own splits. Key-grouped (SPJ): each file split
     * is cut by partition key, so every split holds one key's files and
-    * carries that key's typed value for Spark's partition grouping — no
-    * per-key scan is built, and the current scan's reader factory
-    * serves every split ([[GraftKeyedReaderFactory]] unwraps the key).
-    * A file whose key can't be proved leaves the splits unkeyed.
+    * carries that key's typed value — the partition values the file
+    * index gave the file — for Spark's partition grouping; no per-key
+    * scan is built, and the current scan's reader factory serves every
+    * split ([[GraftKeyedReaderFactory]] unwraps the key).
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val splits = currentScan.toBatch.planInputPartitions()
@@ -489,15 +474,11 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
     val keyed = splits.toSeq.flatMap {
       case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
         val raws = fp.files.toSeq.map(f => rawKey(f.toPath.toString))
-        raws.distinct.map { raw =>
-          val key = raw.flatMap(GraftPartitionKeys.typedKey(_, partitionCols,
-            fullSchema)).getOrElse(return splits)
-          (key, fp.files.toSeq.zip(raws).collect { case (f, `raw`) => f })
-        }
+        raws.distinct.map(raw => fp.files.toSeq.zip(raws).collect { case (f, `raw`) => f })
       case _ => return splits
     }
-    keyed.zipWithIndex.map { case ((key, files), i) =>
-      GraftKeyedPartition(key,
+    keyed.zipWithIndex.map { case (files, i) =>
+      GraftKeyedPartition(files.head.partitionValues,
         org.apache.spark.sql.execution.datasources.FilePartition(i, files.toArray))
     }.toArray
   }
@@ -518,43 +499,6 @@ class GraftRuntimeScan(spark: SparkSession, tableName: String,
       factory = (s, f)
       f
     }
-  }
-}
-
-/** Typed partition-key decoding from Hive `col=value` path segments —
-  * the values [[HasPartitionKey]] hands Spark must match the partition
-  * columns' declared Spark types exactly (they are compared across both
-  * join sides). Types with an unambiguous round-trip only; anything
-  * else declines and the scan reports unknown partitioning.
-  */
-object GraftPartitionKeys {
-  private val HiveNull = "__HIVE_DEFAULT_PARTITION__"
-
-  def typedKey(raw: Seq[String], cols: Seq[String], schema: StructType)
-      : Option[InternalRow] = {
-    val vals = new Array[Any](cols.length)
-    var i = 0
-    while (i < cols.length) {
-      val seg = raw(i)
-      if (seg == HiveNull) vals(i) = null
-      else {
-        val dt = schema.fields.find(_.name == cols(i))
-          .map(_.dataType).getOrElse(return None)
-        val v: Any = try dt match {
-          case StringType => UTF8String.fromString(seg)
-          case IntegerType => seg.toInt
-          case LongType => seg.toLong
-          case ShortType => seg.toShort
-          case ByteType => seg.toByte
-          case BooleanType => seg.toBoolean
-          case DateType => java.time.LocalDate.parse(seg).toEpochDay.toInt
-          case _ => return None
-        } catch { case _: RuntimeException => return None }
-        vals(i) = v
-      }
-      i += 1
-    }
-    Some(new GenericInternalRow(vals))
   }
 }
 
@@ -615,7 +559,7 @@ object GraftPartitionPathFilter {
 
   private val HiveNull = "__HIVE_DEFAULT_PARTITION__"
 
-  private[sql] def segmentOf(path: String, col: String): Option[String] = {
+  private def segmentOf(path: String, col: String): Option[String] = {
     val prefix = col + "="
     path.split('/').collectFirst {
       case seg if seg.startsWith(prefix) =>

@@ -89,7 +89,7 @@ class BucketedMorSpec extends AnyFunSuite with SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     // the PK predicate sits BELOW the resolution window (directly over
     // the scan), so only the key's bucket rows feed the window — the
-    // composite scan's description doesn't render PushedFilters, so
+    // scan's description doesn't render PushedFilters, so
     // assert the structural position instead
     val winAt = plan.indexOf("Window [")
     val fltAt = plan.indexOf("Filter (isnotnull(id")

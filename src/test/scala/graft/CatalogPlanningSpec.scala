@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, GraftCompositeKeyedPartition, GraftKeyedPartition,
-  GraftRuntimeScan, GraftScanMetrics, GraftTestV2, Row}
+import org.apache.spark.sql.{DataFrame, GraftKeyedPartition, GraftRuntimeScan,
+  GraftScanMetrics, GraftTestV2, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, TableCatalog}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory,
@@ -20,7 +20,7 @@ import graft.plans.TieredCatalog
 import graft.storage.{FileStats, SessionMemo, TieredTable}
 
 /** How the SQL catalog plans scans from what the session already knows:
-  * snapshot reads of a partitioned table plan per root; a repeat read of
+  * snapshot reads of a partitioned table plan one scan; a repeat read of
   * an unchanged table infers no file schema again (no footer job); and
   * key-grouped scans split their own file splits by key.
   */
@@ -127,12 +127,10 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
   /** (key, files) per split; fails on an unkeyed split. */
   private def keyedSplits(scan: Scan): Seq[(String, Seq[String])] =
     scan.toBatch.planInputPartitions().toSeq.map { p =>
-      def keyed(q: InputPartition): GraftKeyedPartition = q match {
+      val k = p match {
         case k: GraftKeyedPartition => k
-        case GraftCompositeKeyedPartition(_, inner) => keyed(inner)
         case other => fail(s"unkeyed split $other")
       }
-      val k = keyed(p)
       (k.partitionKey().getUTF8String(0).toString,
         k.inner.asInstanceOf[FilePartition].files.toSeq.map(f => local(f.toPath.toString)))
     }
@@ -162,6 +160,21 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
       val files = FileStats.entries(t.unionPaths, Seq("k")).flatten.map(_.path)
       assert(files.size > 4)
       assertKeyedSplits(v2Scan("keyed"), files)
+      // one scan holds both roots' splits of every key, and the planned
+      // scan groups them into one split per key
+      val roots = t.unionPaths.map(local)
+      assert(roots.size == 2)
+      keyedSplits(v2Scan("keyed")).groupBy(_._1).foreach { case (key, splits) =>
+        val held = splits.flatMap(_._2)
+        assert(roots.forall(r => held.exists(_.startsWith(r + "/"))),
+          s"key $key holds files of only some roots: $held")
+      }
+      val grouped = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(spark.table("graft.plandb.keyed").queryExecution.executedPlan) {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.inputRDD.getNumPartitions
+        }
+      assert(grouped == Seq(4), s"one split per key expected, got $grouped")
 
       val scan = v2Scan("keyed")
       scan.asInstanceOf[SupportsRuntimeV2Filtering].filter(Array(
@@ -177,7 +190,10 @@ class CatalogPlanningSpec extends AnyFunSuite with SparkSpec {
     // key its own split
     val files = Seq("k0", "k1", "k0", "k2").zipWithIndex.map { case (k, i) =>
       s"/t/snap-1/k=$k/part-$i.parquet" }
-    def pf(p: String) = PartitionedFile(InternalRow.empty,
+    // each file carries its key as its partition values, as the scan's
+    // file index gives them
+    def pf(p: String) = PartitionedFile(
+      InternalRow(UTF8String.fromString(p.split("/k=")(1).takeWhile(_ != '/'))),
       SparkPath.fromPathString(p), 0L, 10L, Array.empty[String], 0L, 10L)
     val mixed = new Scan with Batch {
       override def readSchema(): StructType = new StructType().add("k", StringType)

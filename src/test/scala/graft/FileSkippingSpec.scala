@@ -394,7 +394,7 @@ class FileSkippingSpec extends AnyFunSuite with SparkSpec {
         """SELECT COUNT(*) AS c FROM graft.skipdb.pt
           |WHERE grp = 'a' AND id >= 1000""".stripMargin)
       assert(rDf.collect().head.getLong(0) == 50L)
-      // the composite scan reports the sum over its per-root scans
+      // the one scan reports its counts over both roots
       val (kept, total) = skips(rDf)
       assert(kept < total,
         s"stats should prune the out-of-range commit's root, got $kept/$total")

@@ -48,8 +48,12 @@ class PartitionEvolutionSpec extends AnyFunSuite with SparkSpec {
     assert(layouts.contains(true) && layouts.contains(false),
       s"expected one dir per vintage, got $layouts for $dirs")
 
-    // one relation, all four rows, region served by both vintages
-    val got = spark.table(name)
+    // one relation, all four rows, region served by both vintages:
+    // one scan per Hive layout, concatenated by the composite
+    val read = spark.table(name)
+    assert(read.queryExecution.executedPlan.toString
+      .contains("GraftCompositeScan(2 layouts)"), read.queryExecution.executedPlan)
+    val got = read
       .select("id", "region", "amt").as[(Long, String, Long)]
       .collect().toSet
     assert(got == Set((1L, "eu", 10L), (2L, "us", 20L),

@@ -62,8 +62,8 @@ class StoragePartitionedJoinSpec extends AnyFunSuite with SparkSpec {
     val t = TieredTable(spark, s"$dir/$name", partitionBy = Seq("grp"))
     val df = rows.toDF("id", "grp", "v")
     if (twoRoots) {
-      // snapshot root + hot log segment → the composite (multi-root)
-      // scan must keep the keys visible across the union
+      // snapshot root + hot log segment → the one scan over both
+      // roots must keep the keys visible across the union
       t.appendLog(df.filter($"id" % 2 === 0))
       t.tier()
       t.appendLog(df.filter($"id" % 2 === 1))
